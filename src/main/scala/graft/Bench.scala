@@ -88,10 +88,13 @@ object Bench {
     // ticks across the WHOLE leg pins that drift in the artifact: a delta
     // whose raw ratio tracks (100-steal_prev)/(100-steal_now) is the
     // host, not the plans. Linux-only; absent keys mean the probe failed.
+    // The total sums user..steal only: guest and guest_nice (fields 9-10)
+    // are already counted inside user and nice.
     def cpuTicks(): Option[(Long, Long)] = scala.util.Try {
-      val l = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1).map(_.toLong)
-      (l.lift(7).getOrElse(0L), l.sum)
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val line = try src.getLines().find(_.startsWith("cpu ")).get finally src.close()
+      val l = line.trim.split("\\s+").drop(1).map(_.toLong)
+      (l.lift(7).getOrElse(0L), l.take(8).sum)
     }.toOption
     val ticks0 = cpuTicks()
     rulerPass() // JIT warmup, untimed

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.enrich.Enrich
@@ -87,29 +91,64 @@ object SocialPipeline {
         sum(CoreOps.cents(col("Negative"), 6)).as("sum_neg_u"),
         sum(CoreOps.cents(col("claimScore"), 6)).as("sum_claim_u"))
 
-  /** Full daily batch: returns (cleanPosts, cleanComments, vertices, edges)
-    * and writes graph + rollup tables under `outDir`.
+  /** Full daily batch for one `topic`/`dataload` partition: scans, cleans and
+    * enriches posts, comments and tweets, then writes the graph tables
+    * (`vertices`, `edges`) and the two rollups (`engagement_by_subreddit`,
+    * `sentiment_by_topic`) as parquet under `outDir`. The three
+    * scan → clean → enrich chains are built concurrently (each scan infers
+    * its schema with a Spark job). The enriched facts are cached only for the
+    * duration of the call and the four sinks are written concurrently from
+    * them ([[writeSinks]]), so every clean row is scored once.
     */
   def runDaily(spark: SparkSession, postsRoot: String, commentsRoot: String,
                tweetsRoot: String, topic: String, dataload: String,
                outDir: String, blacklist: Seq[String],
                scorer: Enrich.TextScorer): Unit = {
-    val posts = enrich(
-      cleanPosts(scanPartition(spark, postsRoot, topic, dataload), blacklist),
-      "content", scorer)
-    val comments = enrich(
-      cleanComments(scanPartition(spark, commentsRoot, topic, dataload), blacklist),
-      "content", scorer)
-    val tweets = enrich(
-      cleanComments(scanPartition(spark, tweetsRoot, topic, dataload), blacklist),
-      "content", scorer)
-    val vertices = GraphBuilder.vertices(posts, comments, tweets)
-    val edges = GraphBuilder.edges(posts, comments, tweets)
-    GraphBuilder.write(vertices, edges, outDir)
-    engagementBySubreddit(posts).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/engagement_by_subreddit.parquet")
-    sentimentByTopic(posts.unionByName(comments.drop("post_id", "parent_id"), allowMissingColumns = true)
-        .unionByName(tweets, allowMissingColumns = true))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/sentiment_by_topic.parquet")
+    def fact(root: String, clean: DataFrame => DataFrame): () => DataFrame =
+      () => enrich(clean(scanPartition(spark, root, topic, dataload)), "content", scorer)
+    val Seq(posts, comments, tweets) = inParallel(Seq(
+      fact(postsRoot, cleanPosts(_, blacklist)),
+      fact(commentsRoot, cleanComments(_, blacklist)),
+      fact(tweetsRoot, cleanComments(_, blacklist))))
+    val all = posts.unionByName(comments.drop("post_id", "parent_id"), allowMissingColumns = true)
+      .unionByName(tweets, allowMissingColumns = true)
+    def overwrite(df: DataFrame, name: String): () => Unit =
+      () => df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
+    writeSinks(Seq(posts, comments, tweets), Seq(
+      overwrite(GraphBuilder.vertices(posts, comments, tweets), "vertices"),
+      overwrite(GraphBuilder.edges(posts, comments, tweets), "edges"),
+      overwrite(engagementBySubreddit(posts), "engagement_by_subreddit"),
+      overwrite(sentimentByTopic(all), "sentiment_by_topic")))
+  }
+
+  /** Writes several sinks built from the same `facts` while computing the
+    * facts once. Every Spark action re-plans and re-runs its whole input
+    * chain, so without the cache each sink would rescan, reclean and rescore
+    * every row. The facts are persisted at the
+    * default storage level, which Spark recomputes from lineage if an
+    * executor is lost; the sinks run concurrently, one pool thread each; the
+    * facts are unpersisted once every sink has finished. The first failing
+    * sink's own exception is rethrown.
+    */
+  def writeSinks(facts: Seq[DataFrame], sinks: Seq[() => Unit]): Unit = {
+    facts.foreach(_.persist())
+    try inParallel(sinks)
+    finally facts.foreach(_.unpersist())
+  }
+
+  /** Runs `tasks` concurrently, one pool thread each, and returns their
+    * results in order once all have finished; a failure rethrows its cause,
+    * not the `ExecutionException` around it. Pool threads are created by
+    * the calling thread, so they inherit its Spark local properties (job
+    * group, SQL execution id).
+    */
+  private def inParallel[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(tasks.size,
+      (r: Runnable) => new Thread(r, "social-pipeline-pool"))
+    try {
+      pool.invokeAll(tasks.map(t => (() => t()): Callable[T]).asJava).asScala.toSeq.map { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdownNow()
   }
 }

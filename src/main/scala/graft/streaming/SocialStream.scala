@@ -359,11 +359,13 @@ object SocialStream {
       .start()
 
   /** The full §3 lifecycle as one streaming job: JSON landing → clean →
-    * enrich → graph-as-tables, via foreachBatch. Each micro-batch appends
-    * its nodes/edges; `dropDuplicates` on the merge keys inside the batch
-    * keeps writes idempotent-shaped exactly like the Cypher MERGE the
-    * reference issues per record (`glue/twitter_glue.py:74-105`) — but as
-    * one distributed plan per batch, not per-row transactions.
+    * enrich → graph-as-tables, via foreachBatch. Each micro-batch enriches
+    * its posts once and appends them and its nodes/edges concurrently
+    * ([[graft.pipeline.SocialPipeline.writeSinks]]); `dropDuplicates` on
+    * the merge keys inside the batch keeps writes idempotent-shaped exactly
+    * like the Cypher MERGE the reference issues per record
+    * (`glue/twitter_glue.py:74-105`) — but as one distributed plan per
+    * batch, not per-row transactions.
     */
   def runPipeline(spark: SparkSession, postsLanding: String, outDir: String,
                   blacklist: Seq[String], scorer: graft.enrich.Enrich.TextScorer,
@@ -377,15 +379,15 @@ object SocialStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val enriched = SocialPipeline.enrich(
           SocialPipeline.cleanPosts(batch, blacklist), "content", scorer)
-        enriched.write.mode("append").parquet(s"$outDir/posts_enriched.parquet")
         val empty = (df: DataFrame) => df.limit(0)
         val v = graft.graph.GraphBuilder.vertices(
           enriched, empty(enriched.withColumn("post_id", col("id"))), emptyTweets(spark))
         val e = graft.graph.GraphBuilder.edges(
           enriched, empty(enriched.withColumn("post_id", col("id"))), emptyTweets(spark))
-        v.write.mode("append").parquet(s"$outDir/vertices.parquet")
-        e.write.mode("append").parquet(s"$outDir/edges.parquet")
-        ()
+        def append(df: DataFrame, name: String): () => Unit =
+          () => df.write.mode("append").parquet(s"$outDir/$name.parquet")
+        SocialPipeline.writeSinks(Seq(enriched), Seq(
+          append(enriched, "posts_enriched"), append(v, "vertices"), append(e, "edges")))
       }
       .start()
   }

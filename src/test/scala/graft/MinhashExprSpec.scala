@@ -32,16 +32,20 @@ class MinhashExprSpec extends AnyFunSuite {
 
   test("minhash_band_keys_from_hashes(shingle_hashes(t)) == minhash_band_keys(t)") {
     // The r18 one-kernel-pass form must be bit-identical to the text form
-    // for every edge doc (empty text, empty tokens, short docs, dups).
+    // for every edge doc (empty text, empty tokens, short docs, dups), at
+    // every band count q260 uses.
     org.apache.spark.sql.GraftFunctions.register(spark)
-    val both = docs.select(col("doc_id"),
-      call_function("minhash_band_keys", col("text"), lit(3), lit(16), lit(4)).as("a"),
-      call_function("minhash_band_keys_from_hashes",
-        call_function("shingle_hashes", col("text"), lit(3)), lit(16), lit(4)).as("b"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2),
-        s"band keys diverge for doc ${r.getLong(0)}")
+    for (bands <- Seq(2, 4, 8)) {
+      val both = docs.select(col("doc_id"),
+        call_function("minhash_band_keys", col("text"), lit(3), lit(16), lit(bands)).as("a"),
+        call_function("minhash_band_keys_from_hashes",
+          call_function("shingle_hashes", col("text"), lit(3)), lit(16), lit(bands)).as("b"))
+        .collect()
+      both.foreach { r =>
+        assert(r.getSeq[Long](1).size == bands)
+        assert(r.getSeq[Long](1) == r.getSeq[Long](2),
+          s"band keys diverge for doc ${r.getLong(0)} at $bands bands")
+      }
     }
     // nullable-element input rejected at analysis, same as the other
     // array<long> kernels

@@ -1,9 +1,29 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enrich
 import graft.pipeline.SocialPipeline
+
+/** Lexicon scorer that counts the texts it scores and fails on a sentinel
+  * text. The counter is a JVM static, so in local mode the executors' copies
+  * of the scorer all add to it.
+  */
+class CountingScorer(failOn: String = null) extends Enrich.TextScorer {
+  private val inner = new Enrich.LexiconScorer(Set("good"), Set("bad"))
+  def fieldNames: Seq[String] = inner.fieldNames
+  def scoreBatch(texts: Seq[String]): Seq[Seq[Double]] = {
+    if (texts.contains(failOn)) throw new IllegalStateException(s"scorer failed on '$failOn'")
+    CountingScorer.rows.addAndGet(texts.size)
+    inner.scoreBatch(texts)
+  }
+}
+
+object CountingScorer {
+  val rows = new AtomicLong
+}
 
 class SocialPipelineSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -84,8 +104,13 @@ class SocialPipelineSpec extends AnyFunSuite {
   test("runDaily materializes graph + rollup tables from one distributed plan") {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
     val out = java.nio.file.Files.createTempDirectory("graft-out").toString
+    CountingScorer.rows.set(0L)
     SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
-      "ukraine war", "25-03-2023", out, blacklist, scorer)
+      "ukraine war", "25-03-2023", out, blacklist, new CountingScorer)
+    // p1, c1 and the tweet pass clean; each is scored once for all four
+    // sinks, and the facts are cached only during the call
+    assert(CountingScorer.rows.get == 3L)
+    assert(spark.sharedState.cacheManager.isEmpty)
     val v = spark.read.parquet(s"$out/vertices.parquet")
     val e = spark.read.parquet(s"$out/edges.parquet")
     // p1 + c1 + tweet + users(alice, frank, grace) + subreddit(worldnews)
@@ -97,5 +122,24 @@ class SocialPipelineSpec extends AnyFunSuite {
     assert(eng.filter($"subreddit" === "worldnews").head().getAs[Long]("sum_score") == 10L)
     val sent = spark.read.parquet(s"$out/sentiment_by_topic.parquet")
     assert(sent.filter($"topic" === "ukraine war").head().getAs[Long]("n") == 3L)
+  }
+
+  test("runDaily rethrows a failing sink's own exception and cleans up") {
+    val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
+    val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val ex = intercept[Exception] {
+      SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
+        "ukraine war", "25-03-2023", out, blacklist, new CountingScorer(failOn = "good tweet"))
+    }
+    assert(!ex.isInstanceOf[java.util.concurrent.ExecutionException])
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(ex).exists(t => Option(t.getMessage).exists(_.contains("scorer failed on 'good tweet'"))),
+      s"sentinel failure missing from the cause chain of $ex")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == "social-pipeline-pool" && t.isAlive)
+    val deadline = System.nanoTime() + 10000000000L
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(poolThreads.isEmpty, s"${poolThreads.length} pool threads still running")
   }
 }

@@ -186,11 +186,17 @@ class SocialStreamSpec extends AnyFunSuite {
     val f2 = new java.io.PrintWriter(s"$landing/b2.json"); f2.write(rows.tail.mkString("\n") + "\n"); f2.close()
 
     val blacklist = Seq("badterm")
-    val scorer = new graft.enrich.Enrich.LexiconScorer(Set("good"), Set("bad"))
+    val scorer = new CountingScorer
+    CountingScorer.rows.set(0L)
     val q = graft.streaming.SocialStream.runPipeline(spark, landing, s"$tmp/out",
       blacklist, scorer, s"$tmp/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination(120000)
+    // each micro-batch scores its clean rows (p1; p3) once, across all three
+    // sinks, and leaves nothing cached
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(CountingScorer.rows.get == 2L)
+    assert(spark.sharedState.cacheManager.isEmpty)
 
     // batch reference over the identical landing files
     val batchEnriched = SocialPipeline.enrich(
