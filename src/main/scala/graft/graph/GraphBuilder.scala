@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph-as-tables builders (SURVEY.md §2.12 K3): the reference's Neo4j
@@ -8,49 +8,54 @@ import org.apache.spark.sql.functions._
   * `glue/twitter_glue.py:74-105`) re-expressed as `vertices`/`edges`
   * DataFrames in GraphFrames convention (`id`, `label` + attrs; `src`,
   * `dst`, `rel`). Cypher MERGE = dedup-on-key, so every node table is a
-  * `dropDuplicates` on the merge key and every edge table a projection of
-  * the fact tables — idempotent, distributable, no per-row transactions.
+  * `dropDuplicates` on the merge key. Each fact table is read once: one
+  * generator fans every fact row out to the nodes and edges its MERGEs
+  * touch, and one dedup per table replaces the MERGEs — idempotent,
+  * distributable, no per-row transactions.
   */
 object GraphBuilder {
 
-  /** Node tables from posts/comments/tweets:
-    * Post, Comment, Tweet facts; User and Subreddit dims via distinct.
+  /** Node tables from posts/comments/tweets. Like the reference's per-row
+    * MERGEs, each fact row fans out in one pass to its own node and its dim
+    * nodes: Post + User + Subreddit, Comment + User, Tweet + User.
     */
-  def vertices(posts: DataFrame, comments: DataFrame, tweets: DataFrame): DataFrame = {
-    val postV = posts.select(col("id").cast("string").as("id"), lit("Post").as("label"))
-    val commentV = comments.select(col("id").cast("string").as("id"), lit("Comment").as("label"))
-    val tweetV = tweets.select(col("id").cast("string").as("id"), lit("Tweet").as("label"))
-    val userV = posts.select(col("username"))
-      .unionByName(comments.select(col("username")))
-      .unionByName(tweets.select(col("username")))
-      .filter(col("username").isNotNull).distinct()
-      .select(col("username").as("id"), lit("User").as("label"))
-    val subV = posts.select(col("subreddit")).filter(col("subreddit").isNotNull)
-      .distinct().select(col("subreddit").as("id"), lit("Subreddit").as("label"))
-    postV.unionByName(commentV).unionByName(tweetV).unionByName(userV).unionByName(subV)
+  def vertices(posts: DataFrame, comments: DataFrame, tweets: DataFrame): DataFrame =
+    postNodes(posts).unionByName(nodes(comments, "Comment", "User" -> col("username")))
+      .unionByName(nodes(tweets, "Tweet", "User" -> col("username")))
       .dropDuplicates("id", "label")
-  }
 
   /** Edge tables: POSTED_IN, POSTED_BY, COMMENTED_ON, COMMENTED_BY, MENTIONS
-    * (`glue/reddit_glue.py:70-98`, `glue/twitter_glue.py:74-97`).
+    * (`glue/reddit_glue.py:70-98`, `glue/twitter_glue.py:74-97`), one pass
+    * per fact table.
     */
-  def edges(posts: DataFrame, comments: DataFrame, tweets: DataFrame): DataFrame = {
-    val postedIn = posts.select(col("id").cast("string").as("src"),
-      col("subreddit").as("dst"), lit("POSTED_IN").as("rel"))
-    val postedBy = posts.select(col("id").cast("string").as("src"),
-      col("username").as("dst"), lit("POSTED_BY").as("rel"))
-    val commentedOn = comments.select(col("id").cast("string").as("src"),
-      col("post_id").cast("string").as("dst"), lit("COMMENTED_ON").as("rel"))
-    val commentedBy = comments.select(col("id").cast("string").as("src"),
-      col("username").as("dst"), lit("COMMENTED_BY").as("rel"))
-    val mentions = graft.ops.SocialOps.mentionEdges(tweets)
-      .select(col("id").cast("string").as("src"), col("mentioned").as("dst"),
-        lit("MENTIONS").as("rel"))
-    postedIn.unionByName(postedBy).unionByName(commentedOn).unionByName(commentedBy)
-      .unionByName(mentions)
-      .filter(col("dst").isNotNull)
+  def edges(posts: DataFrame, comments: DataFrame, tweets: DataFrame): DataFrame =
+    postRels(posts)
+      .unionByName(rels(comments, "COMMENTED_ON" -> col("post_id"), "COMMENTED_BY" -> col("username")))
+      .unionByName(graft.ops.SocialOps.mentionEdges(tweets).select(col("id").cast("string").as("src"),
+        col("mentioned").as("dst"), lit("MENTIONS").as("rel")))
       .dropDuplicates("src", "dst", "rel")
-  }
+
+  /** [[vertices]] and [[edges]] of posts alone (no comments, no tweets). */
+  def postVertices(posts: DataFrame): DataFrame = postNodes(posts).dropDuplicates("id", "label")
+  def postEdges(posts: DataFrame): DataFrame = postRels(posts).dropDuplicates("src", "dst", "rel")
+
+  private def postNodes(posts: DataFrame): DataFrame =
+    nodes(posts, "Post", "User" -> col("username"), "Subreddit" -> col("subreddit"))
+  private def postRels(posts: DataFrame): DataFrame =
+    rels(posts, "POSTED_IN" -> col("subreddit"), "POSTED_BY" -> col("username"))
+
+  /** One string (`id`, `label`) row per node a fact row MERGEs, from one generator:
+    * the fact node, kept even with a null id, and each non-null dim node. */
+  private def nodes(df: DataFrame, fact: String, dims: (String, Column)*): DataFrame =
+    df.select(inline(array(((fact -> col("id")) +: dims).map { case (label, c) =>
+      struct(c.cast("string").as("id"), lit(label).as("label")) }: _*)))
+      .filter(col("id").isNotNull || col("label") === fact)
+
+  /** One string (`src`, `dst`, `rel`) row per non-null `dst` of a fact row, from one generator. */
+  private def rels(df: DataFrame, dsts: (String, Column)*): DataFrame =
+    df.select(col("id").cast("string").as("src"), inline(array(dsts.map { case (rel, c) =>
+      struct(c.cast("string").as("dst"), lit(rel).as("rel")) }: _*)))
+      .filter(col("dst").isNotNull)
 
   /** Dev-path user↔user tweet graph
     * (`neo4j_insert/neo4j_twitter_insert.py:6-41,60-82`): edges between

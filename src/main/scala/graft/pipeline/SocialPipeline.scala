@@ -142,7 +142,7 @@ object SocialPipeline {
     * the calling thread, so they inherit its Spark local properties (job
     * group, SQL execution id).
     */
-  private def inParallel[T](tasks: Seq[() => T]): Seq[T] = {
+  private def inParallel[T](tasks: Seq[() => T]): Seq[T] = if (tasks.isEmpty) Nil else {
     val pool = Executors.newFixedThreadPool(tasks.size,
       (r: Runnable) => new Thread(r, "social-pipeline-pool"))
     try {

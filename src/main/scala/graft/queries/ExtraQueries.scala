@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.ops.{BloomJoin, CoreOps}
 import graft.enrich.Enrich
@@ -771,9 +772,8 @@ object ExtraQueries {
         .filter(col("event_id") < 100)
         .select(col("event_id"),
           to_json(struct(col("event_type").as("t"), col("user_id").as("u"))).as("doc"))
-        .withColumn("t_back", get_json_object(col("doc"), "$.t"))
-        .withColumn("u_back", get_json_object(col("doc"), "$.u").cast("long"))
-        .select(col("event_id"), col("doc"), col("t_back"), col("u_back"))
+        .withColumn("back", from_json(col("doc"), StructType.fromDDL("t STRING, u BIGINT")))
+        .select(col("event_id"), col("doc"), col("back.t").as("t_back"), col("back.u").as("u_back"))
         .orderBy(col("event_id"))
     }),
 

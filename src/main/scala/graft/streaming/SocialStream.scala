@@ -360,7 +360,9 @@ object SocialStream {
 
   /** The full §3 lifecycle as one streaming job: JSON landing → clean →
     * enrich → graph-as-tables, via foreachBatch. Each micro-batch enriches
-    * its posts once and appends them and its nodes/edges concurrently
+    * its posts once and appends them and their posts-only graph
+    * ([[graft.graph.GraphBuilder.postVertices]],
+    * [[graft.graph.GraphBuilder.postEdges]]) concurrently
     * ([[graft.pipeline.SocialPipeline.writeSinks]]); `dropDuplicates` on
     * the merge keys inside the batch keeps writes idempotent-shaped exactly
     * like the Cypher MERGE the reference issues per record
@@ -379,25 +381,13 @@ object SocialStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val enriched = SocialPipeline.enrich(
           SocialPipeline.cleanPosts(batch, blacklist), "content", scorer)
-        val empty = (df: DataFrame) => df.limit(0)
-        val v = graft.graph.GraphBuilder.vertices(
-          enriched, empty(enriched.withColumn("post_id", col("id"))), emptyTweets(spark))
-        val e = graft.graph.GraphBuilder.edges(
-          enriched, empty(enriched.withColumn("post_id", col("id"))), emptyTweets(spark))
+        val v = graft.graph.GraphBuilder.postVertices(enriched)
+        val e = graft.graph.GraphBuilder.postEdges(enriched)
         def append(df: DataFrame, name: String): () => Unit =
           () => df.write.mode("append").parquet(s"$outDir/$name.parquet")
         SocialPipeline.writeSinks(Seq(enriched), Seq(
           append(enriched, "posts_enriched"), append(v, "vertices"), append(e, "edges")))
       }
       .start()
-  }
-
-  private def emptyTweets(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("username", StringType),
-        StructField("mentionedUsers", StringType))))
   }
 }

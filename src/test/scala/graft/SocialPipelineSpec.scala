@@ -124,6 +124,11 @@ class SocialPipelineSpec extends AnyFunSuite {
     assert(sent.filter($"topic" === "ukraine war").head().getAs[Long]("n") == 3L)
   }
 
+  test("writeSinks with no sinks is a no-op") {
+    SocialPipeline.writeSinks(Seq(spark.range(3).toDF()), Nil)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("runDaily rethrows a failing sink's own exception and cleans up") {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
     val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
