@@ -1,35 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      // Session artifact isolation (Spark 4 default) keys the codegen
-      // cache on a per-session/query classloader, so every STREAMING
-      // query start recompiled all its generated classes (~14 Janino
-      // compiles, ~0.4-0.6 s per invocation). No runtime artifacts are
-      // ever added here; disable it so the cache hits across queries.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISO", "false"))
-      // Generated-class cache sized to the workload (r18): the default
-      // spark.sql.codegen.cache.maxEntries=100 holds ~100 codegen units,
-      // but this session runs 307 distinct queries (~thousands of
-      // whole-stage/projection fragments) round-robin — every pass
-      // evicted everything and re-ran Janino on each fragment (~20-100 ms
-      // apiece), measured as a systematic gap between in-bench timings
-      // and single-query reruns (q116: 1.48 s in-bench vs 0.74 s
-      // isolated). Not local-specific: any long-lived multi-query driver
-      // wants the cache to cover its working set; ~30 KB/class keeps
-      // 8192 entries under ~250 MB of the 8 GiB heap.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY (QueryFilter) narrows the set for exploratory
+    // runs; when set, BENCH_LOCAL/BENCH_DELTA are NOT written so a
+    // partial run can never poison the regression baseline.
+    val qFilter = QueryFilter.fromEnv
+    val queries = SparkEntry.queries.filter { case (n, _) => qFilter.forall(_.contains(n)) }
+    val spark = GraftSession()
     // Untimed warmup pass: JIT + codegen + parquet-footer caches. Then
     // THREE timed passes, reporting the per-query MEDIAN — the session-
     // to-session host-noise band (73-100 s totals on identical code) was
@@ -37,16 +15,6 @@ object Bench {
     // is robust to a one-off stall in either direction, where min-of-2
     // still tracked the noise floor. Total wall (including warmup) is
     // reported separately so throughput is still visible.
-    // SPARK_GRAFT_QUERY_FILTER (comma-separated name substrings) narrows
-    // the set for exploratory runs; when set, BENCH_LOCAL/BENCH_DELTA are
-    // NOT written so a partial run can never poison the regression
-    // baseline. The driver never sets it.
-    val qFilter = sys.env.get("SPARK_GRAFT_QUERY_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val queries = qFilter match {
-      case Some(subs) => SparkEntry.queries.filter { case (n, _) => subs.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
     // Idle marker (VERDICT r7 item 7): the 1-min load average BEFORE any
     // Spark work starts. A hot host inflates every query ~uniformly
     // (r7's driver leg ran 1.15x vs the idle 3-pass median and cost a

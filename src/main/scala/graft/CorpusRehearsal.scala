@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** 100×-shape rehearsal of the end-to-end corpus build (q242) at the
   * largest local scale (VERDICT r11 item 7): runs the composed pipeline
@@ -22,13 +21,7 @@ import org.apache.spark.sql.SparkSession
 object CorpusRehearsal {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class St(id: Int, tasks: Int, durMs: Long, inMB: Double,
                   swMB: Double, srMB: Double, swRec: Long, name: String)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.EntityResolution
@@ -66,13 +66,7 @@ object FixpointLossRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8, 3]") // 8 threads, task maxFailures = 3
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus = 8, taskMaxFailures = 3)
     spark.sparkContext.setLogLevel("ERROR") // planted failures log loudly at WARN
     import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
@@ -38,13 +38,7 @@ object IncrementalRehearsal {
     val load1Launch = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val dir = args.headOption.getOrElse("/root/repo/testdata_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class St(id: Int, tasks: Int, durMs: Long, inMB: Double,
                   swMB: Double, srMB: Double, swRec: Long)

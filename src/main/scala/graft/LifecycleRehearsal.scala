@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** SURVEY §3 lifecycle, end to end, as ONE committed artifact (VERDICT r12
@@ -26,13 +26,7 @@ object LifecycleRehearsal {
     // sample is self-inflated by this process's own fixture generation.
     val load1Launch = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class St(id: Int, tasks: Int, durMs: Long, inMB: Double,
                   swMB: Double, srMB: Double)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial SKEW rehearsal (VERDICT r13 item 8): every other rehearsal
@@ -42,13 +42,7 @@ object SkewRehearsal {
     // size where n²/2 pairs on one task finishes at all. Two dirs.
     val dir = args.headOption.getOrElse("/root/repo/testdata_sf10")
     val docsDir = args.drop(1).headOption.getOrElse("/root/repo/testdata_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val tasks = scala.collection.mutable.ArrayBuffer[Task]()
     val stageNames = scala.collection.mutable.Map[Int, String]()

@@ -1,28 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** Local replica of the driver's t1 smoke: SparkEntry.entry rows > 0. */
+/** The t1 smoke check: SparkEntry.entry rows > 0.
+  * A FAIL exits 1, so no script can read an empty entry as green. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      // Session artifact isolation (Spark 4 default) keys the codegen
-      // cache on a per-session/query classloader, so every STREAMING
-      // query start recompiled all its generated classes (~14 Janino
-      // compiles, ~0.4-0.6 s per invocation). No runtime artifacts are
-      // ever added here; disable it so the cache hits across queries.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, false)
     println(s"SMOKE rows=$n ${if (n > 0) "PASS" else "FAIL"}")
     spark.stop()
+    if (n == 0) sys.exit(1)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,13 +80,8 @@ object StreamLossRehearsal {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8, 3]") // task maxFailures 3: phase B's death must retry
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // task maxFailures 3: phase B's death must retry
+    val spark = GraftSession(cpus = 8, taskMaxFailures = 3)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,44 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      // Session artifact isolation (Spark 4 default) keys the codegen
-      // cache on a per-session/query classloader, so every STREAMING
-      // query start recompiled all its generated classes (~14 Janino
-      // compiles, ~0.4-0.6 s per invocation). No runtime artifacts are
-      // ever added here; disable it so the cache hits across queries.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // generated-class cache sized to the 307-query workload (r18,
-      // see Bench.scala): the default 100 entries thrashes across passes
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY (QueryFilter) restricts the run (and the dumped
+    // oracle map) to the named queries. Contract runs never set it, so the
+    // contract run is always the full suite — and a leaked filter is made
+    // detectable: a loud stderr banner plus a RESTRICTED_RUN.txt marker in
+    // the output dir, so a narrowed run can never masquerade as full-suite
+    // coverage in the artifacts.
+    val only = QueryFilter.fromEnv.map(_.toSet)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Queries run on a small thread pool: Spark schedules concurrent jobs
     // from one context fine, and the per-query fixed costs (planning, small
     // stages, streaming micro-batch lifecycles) overlap — cuts t2
     // wall-clock roughly in half across the full query suite.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(10)
-    // Builder-local iteration aid: SPARK_GRAFT_ONLY=q01_x,q02_y restricts
-    // the run (and the dumped oracle map) to those queries. The driver
-    // never sets it, so the contract run is always the full suite — and a
-    // leaked filter is made detectable: a loud stderr banner plus a
-    // RESTRICTED_RUN.txt marker in the output dir, so a narrowed run can
-    // never masquerade as full-suite coverage in the artifacts.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only match {
       case Some(names) =>
         System.err.println(

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * depends on are ASSERTED here, so a plan regression (lost pushdown, a
   * dim that stops broadcasting, a partial-agg that disappears, an exchange
   * that stops being reused) fails `sbt test` instead of silently landing.
-  * `graft.PlanAudit` (the runMain) stays as the human-readable dump.
+  * `runMain graft.Profile plan <sfDir> <query…>` is the human-readable dump.
   */
 class PlanAuditSpec extends AnyFunSuite {
   private val spark = TestSpark.spark

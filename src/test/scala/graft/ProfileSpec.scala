@@ -1,0 +1,61 @@
+package graft
+
+import java.io.{ByteArrayOutputStream, PrintStream}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Each `graft.Profile` mode, driven through the shared test session on
+  * the smallest fixture: the lines a human reads must carry their fields. */
+class ProfileSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  private def run(mode: String, names: String*): Seq[String] = {
+    val buf = new ByteArrayOutputStream()
+    val out = new PrintStream(buf, true, "UTF-8")
+    Profile.modes(mode)(spark, dir, names, out)
+    out.flush()
+    buf.toString("UTF-8").linesIterator.toSeq
+  }
+
+  private val jobs = """jobs=\s*(\d+)""".r.unanchored
+
+  test("layers: a warm run and 2 reps, each with jobs and the Catalyst phases") {
+    val lines = run("layers", "q02_filter_revenue").filter(_.startsWith("PROFILE "))
+    assert(lines.map(_.split("\\s+")(2)) == Seq("warm", "rep1", "rep2"), lines.mkString("\n"))
+    for (l <- lines) {
+      val jobs(n) = l
+      assert(n.toInt >= 1, l)
+      for (phase <- Seq("analysis=", "optimization=", "planning="))
+        assert(l.contains(phase), s"$phase missing: $l")
+    }
+  }
+
+  test("stages: the layers lines, plus per-stage lines only above 200 ms of task time") {
+    val lines = run("stages", "q02_filter_revenue")
+    assert(lines.count(_.startsWith("PROFILE ")) == 3)
+    val taskTime = """taskTime=\s*([0-9.]+) s""".r.unanchored
+    for (l <- lines if l.startsWith("STAGE ")) {
+      val taskTime(s) = l
+      assert(s.toDouble > 0.2, l)
+    }
+  }
+
+  test("plan: the formatted initial plan, the AQE-final plan and one counts line") {
+    val text = run("plan", "q02_filter_revenue").mkString("\n")
+    assert(text.contains("--- explain(formatted), initial plan ---"))
+    assert(text.contains("--- executed plan (AQE final) ---"))
+    assert(text.contains("== Final Plan =="), text)
+    assert("""AUDIT q02_filter_revenue broadcastJoins=\d+ smj=\d+ shj=\d+ exchanges=\d+ reused=\d+ hashAgg=[1-9]\d*""".r
+      .findFirstIn(text).nonEmpty, text)
+  }
+
+  test("stream: a stream query's start, its batches with rows and durationMs, and its stop") {
+    val lines = run("stream", "q66_stream_tumbling")
+    assert(lines.exists(_.startsWith("STREAM q66_stream_tumbling start ")), lines.mkString("\n"))
+    val batches = lines.filter(_.matches("""STREAM q66_stream_tumbling batch=\d+ .*rows=\d+ .*durationMs\[.*triggerExecution=\d+.*\]"""))
+    assert(batches.nonEmpty, lines.mkString("\n"))
+    assert(lines.exists(_.startsWith("STREAM q66_stream_tumbling stop ")), lines.mkString("\n"))
+    assert(lines.last.matches("""STREAM q66_stream_tumbling total=.* rows=[1-9]\d*"""), lines.last)
+  }
+}

@@ -2,26 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM), built with
+  * the same engine configuration as the mains. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      // Session artifact isolation (Spark 4 default) keys the codegen
-      // cache on a per-session/query classloader, so every STREAMING
-      // query start recompiled all its generated classes (~14 Janino
-      // compiles, ~0.4-0.6 s per invocation). No runtime artifacts are
-      // ever added here; disable it so the cache hits across queries.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cpus = 4)
 }
