@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `cpus` is the local width and the shuffle partition count
   * (`SPARK_GRAFT_CPUS`, else every available core). `taskMaxFailures` > 1
-  * lets a failed task retry, for the fault rehearsals that kill tasks on
-  * purpose; everything else runs Spark's local default of no retry.
+  * lets a failed task retry, for the `faults` test group that kills tasks
+  * on purpose; everything else runs Spark's local default of no retry.
   */
 object GraftSession {
   private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)

@@ -12,14 +12,28 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftSessionSpec extends AnyFunSuite {
 
+  private val sources = {
+    val s = Files.walk(Paths.get("src/main/scala"))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq finally s.close()
+  }
+
   test("src/main builds a SparkSession in exactly one place: GraftSession.scala") {
-    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
     def hits(p: Path) = Files.readAllLines(p).asScala.count(_.contains("SparkSession.builder"))
     val builders = sources.filter(hits(_) > 0)
     assert(builders.map(_.getFileName.toString) == Seq("GraftSession.scala"),
       s"SparkSession.builder outside the factory: ${builders.mkString(", ")}")
     assert(hits(builders.head) == 1)
+  }
+
+  test("src/main has four mains: Bench, Verify, Smoke and Profile") {
+    // a one-off instrument is a spec or a Profile mode, not another main
+    val mains = sources.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      "def main\\(".r.findAllMatchIn(text).map { m =>
+        "object (\\w+)".r.findAllMatchIn(text.take(m.start)).map(_.group(1)).toSeq.last
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "Profile", "Smoke", "Verify"), s"mains: ${mains.sorted}")
   }
 
   test("the test session runs GraftSession's engine configuration") {
