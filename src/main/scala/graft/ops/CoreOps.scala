@@ -166,17 +166,6 @@ object CoreOps {
   def cents(c: Column, scale: Int = 2): Column =
     round(c * pow(lit(10.0), lit(scale)), 0).cast(LongType)
 
-  /** A4 — engagement/measure rollup per key: count + exact sums + avg derived
-    * from exact sums (score/commentCount rollups by subreddit/user/topic/day,
-    * SURVEY.md §2.5).
-    */
-  def measureRollup(df: DataFrame, keys: Seq[Column], measure: Column): DataFrame =
-    df.groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(cents(measure)).as("sum_cents"),
-        (sum(cents(measure)).cast("double") / lit(100.0) / count(lit(1))).as("avg_value"))
-
   /** Skew-resistant two-phase aggregation (SURVEY.md §4 salting): phase 1
     * pre-aggregates on (keys, salt) so a hot key spreads over `saltBuckets`
     * reducers; phase 2 combines the partials on the keys alone. Correct for

@@ -479,15 +479,14 @@ object DedupQueries {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The UNBOUNDED-query-set brute-force path (completes the distributed
-    // prober bench family with q177/q178 — VERDICT r7 item 8): query
-    // vectors never reach the driver; scoring flows through the joined
-    // plan. Must land on exactly the rows q35's broadcast path produces —
-    // same oracle, same hash.
+    // q35 with the shuffle path forced (`maxQueryBatch = 0`): the query
+    // side is tiled against the corpus by a cartesian product instead of
+    // broadcast, so the large-query-set path stays under the oracle and
+    // bench gates. Must land on exactly q35's rows — same oracle, same hash.
     "q227_ann_brute_dist" -> ((s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      Similarity.bruteForceTopKDistributed(e, e.filter(col("vec_id") < 5),
-          "vec_id", "embedding", 3)
+      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5),
+          "vec_id", "embedding", 3, maxQueryBatch = 0)
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -791,25 +790,26 @@ object DedupQueries {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The UNBOUNDED-query-set PQ path (VERDICT r6 item 3): query ADC
-    // tables built by a distributed kernel (never collected), scoring
-    // through a joined plan. Must land on exactly the rows q160's
-    // broadcast path produces — same oracle, same hash.
+    // q160 with the shuffle path forced (`maxQueryBatch = 0`): query ADC
+    // tables built on the executors (never collected), scored through a
+    // cross join with the corpus codes. Must land on exactly q160's rows —
+    // same oracle, same hash.
     "q177_pq_adc_dist" -> ((s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      Similarity.pqTopKDistributed(e, e.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10)
+      Similarity.pqTopK(e, e.filter(col("vec_id") < 5),
+          "vec_id", "embedding", k = 10, maxQueryBatch = 0)
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The unbounded-query-set IVF+PQ path: probe state distributed,
-    // candidates meet probers through an equi-join on the coarse cell —
-    // the shuffle key a cell-partitioned serving layout uses at scale.
-    // Same oracle, same hash as q176.
+    // q176 with the shuffle path forced (`maxQueryBatch = 0`): probe
+    // tables built on the executors, candidates meet probers through an
+    // equi-join on the coarse cell — the shuffle key a cell-partitioned
+    // serving layout uses at scale. Same oracle, same hash as q176.
     "q178_ivfpq_dist" -> ((s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      Similarity.ivfPqTopKDistributed(e, e.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, nCells = 16, nProbe = 4)
+      Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 5),
+          "vec_id", "embedding", k = 10, nCells = 16, nProbe = 4,
+          maxQueryBatch = 0)
         .orderBy(col("query_id"), col("rank"))
     }),
 

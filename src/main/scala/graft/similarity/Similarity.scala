@@ -1,16 +1,20 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
-  * Baseline: brute-force cosine top-k — one broadcast of the (small) query
-  * set against the corpus. Scale path: sign-LSH bucketing (and the IVF-style
-  * variant in `ivfTopK`) so the candidate set per query is a bucket, not the
-  * corpus.
+  * Every top-k here is ONE filter-and-verify operator: a candidate
+  * generator (all pairs, sign buckets, IVF cells, PQ codes, IVF+PQ
+  * postings) feeding one shared verify-and-rank tail — exact cosine
+  * ranked by (sim desc, corpus_id asc), or integer ADC sums ranked by the
+  * k-bounded partial top-k. Where the query side could be broadcast, the
+  * operator chooses itself: a limit-bounded probe of the query set takes
+  * the broadcast path up to `maxQueryBatch` rows and the shuffle path
+  * above it, and both paths return the same rows.
   *
   * Vector math runs in per-partition JVM kernels (`mapPartitions`), not
   * column higher-order functions: HOFs evaluate interpreted outside
@@ -132,89 +136,103 @@ object Similarity {
     }(enc)
   }
 
-  // ------------------------------------------------------------- queries
+  // ------------------------------------------------ filter-and-verify top-k
 
-  /** Brute-force cosine top-k: for each query vector (small set — gets
-    * broadcast), the k nearest corpus vectors. One broadcast-nested-loop of
-    * |queries| × |corpus| scored rows, then a per-query top-k window (partial
-    * top-k map-side). At 1000 executors this scales linearly in corpus size.
+  /** Driver-side switch point between the two query-side paths of the
+    * ANN operators: a query set of at most this many rows is broadcast
+    * (for the PQ family: collected into per-query tables, then broadcast);
+    * a larger one takes the shuffle path, where the operator neither
+    * collects nor broadcasts the query side. The probe that decides is
+    * limit-bounded, so an oversized set never reaches the driver; 0 always
+    * takes the shuffle path, with no probe.
+    */
+  val DefaultMaxQueryBatch: Int = 250000
+
+  /** Whether `queries` takes the broadcast path (a limit-bounded count). */
+  private def fitsBroadcast(queries: DataFrame, maxQueryBatch: Int): Boolean =
+    maxQueryBatch > 0 && queries.limit(maxQueryBatch + 1).count() <= maxQueryBatch
+
+  /** One side of a cosine join: [[bucketNorm]]'s (bucket, id, v, nrm)
+    * renamed to (corpus_id, cv, cnorm) or (query_id, qv, qnorm) for
+    * `side` = "corpus" or "query", plus `label` as c_label or q_label.
+    * `bucket` is kept only when there are planes to bucket by.
+    */
+  private def cosSide(df: DataFrame, idCol: String, vecCol: String,
+                      planes: Int, dim: Int, side: String,
+                      label: Option[String] = None): DataFrame = {
+    val p = side.take(1)
+    bucketNorm(df, idCol, vecCol, planes, dim, label.toSeq).select(
+      (if (planes > 0) Seq(col("bucket")) else Nil) ++
+        Seq(col("id").as(s"${side}_id"), col("v").as(s"${p}v"),
+          col("nrm").as(s"${p}norm")) ++
+        label.map(l => col(l).as(s"${p}_label")): _*)
+  }
+
+  /** Verify: drop self pairs from joined (corpus, query) candidate rows
+    * and append each remaining pair's exact cosine as `sim`.
+    */
+  private def verify(cands: DataFrame): DataFrame =
+    appendCosine(cands.filter(col("corpus_id") =!= col("query_id")),
+      "cv", "qv", "cnorm", "qnorm", "sim")
+
+  /** A query's verified candidates in rank order: sim desc, corpus_id asc. */
+  private def byScore: WindowSpec = Window.partitionBy(col("query_id"))
+    .orderBy(col("sim").desc, col("corpus_id").asc)
+
+  /** Rank: each query's first `k` verified candidates in [[byScore]]
+    * order (partial top-k map-side).
+    */
+  private def rankTopK(scored: DataFrame, k: Int,
+                       out: Seq[Column] = Seq("query_id", "rank", "corpus_id", "sim")
+                         .map(col)): DataFrame =
+    scored.withColumn("rank", row_number().over(byScore))
+      .filter(col("rank") <= k)
+      .select(out: _*)
+
+  /** All-pairs candidates, verified: every corpus vector against every
+    * query vector, minus self pairs and, with `label`, same-label pairs.
+    * A query set within `maxQueryBatch` is broadcast (one
+    * broadcast-nested-loop, corpus linear across executors); a larger one
+    * is tiled against the corpus by a cartesian product, so no executor
+    * ever holds the whole query set.
+    */
+  private def allPairs(corpus: DataFrame, queries: DataFrame, idCol: String,
+                       vecCol: String, dim: Int, maxQueryBatch: Int,
+                       label: Option[String] = None): DataFrame = {
+    val c = cosSide(corpus, idCol, vecCol, 0, dim, "corpus", label)
+    val q = cosSide(queries, idCol, vecCol, 0, dim, "query", label)
+    val keep = label.fold(lit(true))(_ => col("c_label") =!= col("q_label"))
+    verify(c.join(
+      if (fitsBroadcast(queries, maxQueryBatch)) broadcast(q)
+      else q.hint("shuffle_replicate_nl"),
+      keep))
+  }
+
+  /** Brute-force cosine top-k: for each query vector, the k nearest
+    * corpus vectors — all-pairs candidates, verified and ranked. At 1000
+    * executors this scales linearly in corpus size.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      dim: Int = 64,
-                     maxQueryBatch: Int = DefaultMaxQueryBatch): DataFrame = {
-    // The query side is broadcast (executor memory, not driver) — still a
-    // bounded-serving-batch contract: an unbounded evaluation set would
-    // OOM every executor at once. Count is cheap (no data movement).
-    val nq = queries.limit(maxQueryBatch + 1).count()
-    require(nq <= maxQueryBatch,
-      s"query batch exceeds maxQueryBatch=$maxQueryBatch — the broadcast " +
-        "nested-loop path ships every query to every executor; use " +
-        "bruteForceTopKDistributed for large query sets")
-    bruteForceScored(corpus, broadcast(bruteForceQ(queries, idCol, vecCol, dim)),
-      idCol, vecCol, k, dim)
-  }
-
-  /** [[bruteForceTopK]] for UNBOUNDED query sets: same |Q|×|C| scoring,
-    * but as a non-broadcast join (Spark picks a cartesian product whose
-    * tasks tile both sides) — no single executor ever holds the whole
-    * query set. Output is identical (shared scoring/ranking tail).
-    */
-  def bruteForceTopKDistributed(corpus: DataFrame, queries: DataFrame,
-                                idCol: String, vecCol: String, k: Int,
-                                dim: Int = 64): DataFrame =
-    bruteForceScored(corpus, bruteForceQ(queries, idCol, vecCol, dim),
-      idCol, vecCol, k, dim)
-
-  private def bruteForceQ(queries: DataFrame, idCol: String, vecCol: String,
-                          dim: Int): DataFrame =
-    bucketNorm(queries, idCol, vecCol, 0, dim)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnorm"))
-
-  private def bruteForceScored(corpus: DataFrame, q: DataFrame, idCol: String,
-                               vecCol: String, k: Int, dim: Int): DataFrame = {
-    val c = bucketNorm(corpus, idCol, vecCol, 0, dim)
-      .select(col("id").as("corpus_id"), col("v").as("cv"), col("nrm").as("cnorm"))
-    val scored = appendCosine(
-      c.join(q, col("corpus_id") =!= col("query_id")),
-      "cv", "qv", "cnorm", "qnorm", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "corpus_id", "sim")
-  }
+                     maxQueryBatch: Int = DefaultMaxQueryBatch): DataFrame =
+    rankTopK(allPairs(corpus, queries, idCol, vecCol, dim, maxQueryBatch), k)
 
   /** Hard-negative mining for contrastive training: for each query vector,
     * the k most-similar corpus vectors with a DIFFERENT label (and a
     * different id) — "looks like the positive but isn't" is exactly what a
-    * retrieval model needs in its denominator. Same broadcast-nested-loop +
-    * per-query top-k shape as [[bruteForceTopK]] (the query set is small;
-    * corpus scales linearly across executors); the label rides the
-    * [[bucketNorm]] kernel as a pass-through column, so no second join
-    * against the corpus to recover it.
+    * retrieval model needs in its denominator. The all-pairs operator of
+    * [[bruteForceTopK]] with the label predicate in the join; the label
+    * rides the [[bucketNorm]] kernel as a pass-through column, so no
+    * second join against the corpus to recover it.
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
                     idCol: String, vecCol: String, labelCol: String, k: Int,
-                    dim: Int = 64): DataFrame = {
-    val c = bucketNorm(corpus, idCol, vecCol, 0, dim, Seq(labelCol))
-      .select(col("id").as("corpus_id"), col("v").as("cv"),
-        col("nrm").as("cnorm"), col(labelCol).as("c_label"))
-    val q = bucketNorm(queries, idCol, vecCol, 0, dim, Seq(labelCol))
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnorm"), col(labelCol).as("q_label"))
-    val scored = appendCosine(
-      c.join(broadcast(q),
-        col("corpus_id") =!= col("query_id") &&
-          col("c_label") =!= col("q_label")),
-      "cv", "qv", "cnorm", "qnorm", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        col("c_label").as("neg_label"), col("sim"))
-  }
+                    dim: Int = 64): DataFrame =
+    rankTopK(allPairs(corpus, queries, idCol, vecCol, dim,
+        DefaultMaxQueryBatch, Some(labelCol)), k,
+      Seq(col("query_id"), col("rank"), col("corpus_id"),
+        col("c_label").as("neg_label"), col("sim")))
 
   /** Label-coherence audit over an embedding corpus — the mislabel /
     * outlier sweep before contrastive training: per label, every
@@ -262,105 +280,41 @@ object Similarity {
         max(col("cos")).as("max_cos"))
   }
 
-  /** Multi-probe sign-LSH top-k (Lv et al. 2007, deterministic probe
-    * order): each query scores its own bucket PLUS the buckets at
-    * Hamming distance 1 on planes 0..nProbe−2 — recall recovered not by
-    * adding tables/planes but by probing near buckets, so the corpus is
-    * hashed ONCE and the extra cost is per-query. Candidate sets are
-    * nested in nProbe by construction, which is what makes the recall
-    * curve structurally monotone.
+  /** Sign-bucket candidates, verified (multi-probe, Lv et al. 2007,
+    * deterministic probe order): each query probes its own bucket PLUS
+    * the buckets at Hamming distance 1 on planes 0..nProbe−2, numbered by
+    * probe index `rn` (1 = its own bucket). Recall is bought per query
+    * rather than with more tables or planes, so the corpus is hashed
+    * ONCE; candidate sets nest in nProbe by construction, which is what
+    * makes [[multiProbeRecallCurve]] structurally monotone.
     */
-  def multiProbeTopK(corpus: DataFrame, queries: DataFrame,
-                     idCol: String, vecCol: String, k: Int,
-                     planes: Int = 6, nProbe: Int = 1,
-                     dim: Int = 64): DataFrame = {
+  private def bucketCandidates(corpus: DataFrame, queries: DataFrame,
+                               idCol: String, vecCol: String, planes: Int,
+                               nProbe: Int, dim: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= planes + 1,
       s"nProbe must be in [1, planes + 1 = ${planes + 1}]")
-    val c = bucketNorm(corpus, idCol, vecCol, planes, dim)
-      .select(col("bucket"), col("id").as("corpus_id"),
-        col("v").as("cv"), col("nrm").as("cnorm"))
-    val q0 = bucketNorm(queries, idCol, vecCol, planes, dim)
-      .select(col("bucket").as("qb"), col("id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnorm"))
+    val c = cosSide(corpus, idCol, vecCol, planes, dim, "corpus")
     val probes = (0 until nProbe).map { i =>
-      if (i == 0) col("qb")
-      else col("qb").bitwiseXOR(lit(1L << (i - 1)))
+      if (i == 0) col("bucket")
+      else col("bucket").bitwiseXOR(lit(1L << (i - 1)))
     }
-    val q = q0.withColumn("bucket", explode(array(probes: _*)))
-    val scored = appendCosine(
-      c.join(q, Seq("bucket")).filter(col("corpus_id") =!= col("query_id")),
-      "cv", "qv", "cnorm", "qnorm", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "corpus_id", "sim")
+    val q = cosSide(queries, idCol, vecCol, planes, dim, "query")
+      .select(col("query_id"), col("qv"), col("qnorm"),
+        posexplode(array(probes: _*)).as(Seq("pos", "bucket")))
+      .withColumn("rn", col("pos") + 1)
+    verify(c.join(q, Seq("bucket")))
   }
 
-  /** Recall@k of [[multiProbeTopK]] against the brute-force ground
+  /** Recall@k of multi-probe sign-LSH against the brute-force ground
     * truth, per probe count — the probes-vs-recall tuning curve (the
-    * sign-LSH twin of [[ivfRecallCurve]]). Monotonicity is structural
-    * (nested candidate sets) and still gated.
+    * sign-LSH twin of [[ivfRecallCurve]]).
     */
   def multiProbeRecallCurve(corpus: DataFrame, queries: DataFrame,
                             idCol: String, vecCol: String, k: Int,
                             nProbes: Seq[Int], planes: Int = 6,
-                            dim: Int = 64): DataFrame = {
-    require(nProbes.nonEmpty && nProbes == nProbes.sorted && nProbes.distinct == nProbes,
-      "nProbes must be distinct and ascending")
-    val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k, dim)
-      .select(col("query_id"), col("corpus_id"))
-      .withColumn("hit", lit(1L))
-    // ONE hash/probe/score pass at max(nProbes) — the same nested-set
-    // collapse as [[ivfRecallCurve]] (r17): a candidate pair matches
-    // exactly one probe index rn (probed buckets are distinct), level
-    // p's top-k rank is the running count of rn ≤ p candidates in the
-    // shared (sim desc, corpus_id asc) window order, and all levels'
-    // hit counts come out of one conditional aggregate instead of one
-    // multiProbeTopK subplan (corpus re-hash + join + window) per level.
-    val maxP = nProbes.max
-    require(maxP >= 1 && maxP <= planes + 1,
-      s"nProbe must be in [1, planes + 1 = ${planes + 1}]")
-    val c = bucketNorm(corpus, idCol, vecCol, planes, dim)
-      .select(col("bucket"), col("id").as("corpus_id"),
-        col("v").as("cv"), col("nrm").as("cnorm"))
-    val q0 = bucketNorm(queries, idCol, vecCol, planes, dim)
-      .select(col("bucket").as("qb"), col("id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnorm"))
-    val probeCols = (0 until maxP).map { i =>
-      if (i == 0) col("qb")
-      else col("qb").bitwiseXOR(lit(1L << (i - 1)))
-    }
-    val q = q0.select(col("query_id"), col("qv"), col("qnorm"),
-        posexplode(array(probeCols: _*)).as(Seq("pos", "bucket")))
-      .withColumn("rn", col("pos") + 1)
-    val scored = appendCosine(
-      c.join(q, Seq("bucket")).filter(col("corpus_id") =!= col("query_id")),
-      "cv", "qv", "cnorm", "qnorm", "sim")
-    val wOrd = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = nProbes.foldLeft(scored) { (df, p) =>
-      df.withColumn(s"__rk_$p",
-        sum(when(col("rn") <= p, 1L).otherwise(0L)).over(wOrd))
-    }
-    val hitsRow = ranked
-      .join(broadcast(exact), Seq("query_id", "corpus_id"), "left")
-      .agg(nProbes.map(p =>
-        sum(when(col("rn") <= p && col(s"__rk_$p") <= k &&
-          col("hit").isNotNull, 1L).otherwise(0L)).as(s"__h_$p")).head,
-        nProbes.map(p =>
-          sum(when(col("rn") <= p && col(s"__rk_$p") <= k &&
-            col("hit").isNotNull, 1L).otherwise(0L)).as(s"__h_$p")).tail: _*)
-    val perProbe = hitsRow.select(explode(array(nProbes.map(p =>
-        struct(lit(p).as("n_probe"),
-          coalesce(col(s"__h_$p"), lit(0L)).as("n_hits"))): _*)).as("x"))
-      .select(col("x.n_probe").as("n_probe"), col("x.n_hits").as("n_hits"))
-    val w = Window.orderBy(col("n_probe"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    perProbe.withColumn("monotone_ok",
-      coalesce(col("n_hits") >= max(col("n_hits")).over(w), lit(true)))
-  }
+                            dim: Int = 64): DataFrame =
+    recallCurve(corpus, queries, idCol, vecCol, k, nProbes, dim)(
+      bucketCandidates(corpus, queries, idCol, vecCol, planes, _, dim))
 
   /** LSH-bucketed approximate top-k: queries only score corpus vectors in
     * their own sign-bucket. Trades recall for a |corpus|/2^planes candidate
@@ -369,20 +323,8 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int,
-              planes: Int = 6, dim: Int = 64): DataFrame = {
-    val c = bucketNorm(corpus, idCol, vecCol, planes, dim)
-      .select(col("bucket"), col("id").as("corpus_id"), col("v").as("cv"), col("nrm").as("cnorm"))
-    val q = bucketNorm(queries, idCol, vecCol, planes, dim)
-      .select(col("bucket"), col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnorm"))
-    val scored = appendCosine(
-      c.join(q, Seq("bucket")).filter(col("corpus_id") =!= col("query_id")),
-      "cv", "qv", "cnorm", "qnorm", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "corpus_id", "sim")
-  }
+              planes: Int = 6, dim: Int = 64): DataFrame =
+    rankTopK(bucketCandidates(corpus, queries, idCol, vecCol, planes, 1, dim), k)
 
   /** True IVF ANN: one deterministic k-means-lite pass.
     *
@@ -404,7 +346,7 @@ object Similarity {
               refinePasses: Int = 1): DataFrame = {
     val (assigned, centroidsN) =
       kmeansAssign(corpus, idCol, vecCol, nCells, dim, refinePasses)
-    ivfSearch(assigned, centroidsN, queries, idCol, vecCol, k, nProbe, dim)
+    rankTopK(ivfCandidates(assigned, centroidsN, queries, idCol, vecCol, nProbe, dim), k)
   }
 
   /** Deterministic k-means-lite clustering of an embedding corpus — steps
@@ -519,99 +461,82 @@ object Similarity {
     (assigned, centroidTable(cents))
   }
 
-  /** Probe + exact-rescore stage of [[ivfTopK]] over a prebuilt
-    * clustering from [[kmeansAssign]].
+  /** IVF cell candidates over a prebuilt clustering from [[kmeansAssign]],
+    * verified: each query probes its `nProbe` nearest centroids (csim
+    * desc, cell asc — probe index `rn`) and meets the corpus vectors
+    * assigned to those cells through a hash join on the cell key.
     */
-  private def ivfSearch(assigned: DataFrame, centroidsN: DataFrame,
-                        queries: DataFrame, idCol: String, vecCol: String,
-                        k: Int, nProbe: Int, dim: Int): DataFrame = {
-    // nProbe nearest centroids per query
-    val queriesN = bucketNorm(queries, idCol, vecCol, 0, dim)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnorm"))
+  private def ivfCandidates(assigned: DataFrame, centroidsN: DataFrame,
+                            queries: DataFrame, idCol: String, vecCol: String,
+                            nProbe: Int, dim: Int): DataFrame = {
     val queryX = appendCosine(
-      queriesN.join(broadcast(centroidsN), lit(true)),
+      cosSide(queries, idCol, vecCol, 0, dim, "query")
+        .join(broadcast(centroidsN), lit(true)),
       "qv", "cv", "qnorm", "cnrm", "csim")
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("csim").desc, col("cell").asc)
     val probes = queryX.withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nProbe)
-      .select(col("cell"), col("query_id"), col("qv"), col("qnorm"))
-
-    // exact cosine over probed cells only, then global top-k per query
-    val scored = appendCosine(
-      assigned.join(probes, Seq("cell")).filter(col("corpus_id") =!= col("query_id")),
-      "cv2", "qv", "cnorm2", "qnorm", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "corpus_id", "sim")
+      .select(col("cell"), col("query_id"), col("qv"), col("qnorm"), col("rn"))
+    verify(assigned.select(col("cell"), col("corpus_id"), col("cv2").as("cv"),
+        col("cnorm2").as("cnorm"))
+      .join(probes, Seq("cell")))
   }
 
   /** nProbe/recall tuning curve for the IVF index — the harness a real
     * ANN deployment reads before picking its probe budget: for each
     * `nProbes` value, total recall@k hits against the brute-force ground
-    * truth, summed over the query set. The clustering and the exact
-    * ranking are computed ONCE (pinned — both feed every probe level);
-    * only the cheap probe/rescore stage re-runs per level. `monotone_ok`
-    * is a structural guarantee, not luck: probing p+1 cells scans a
-    * strict superset of p cells' candidates, and any candidate outscoring
-    * an exact-top-k member would itself be exact-top-k (same tiebreak
-    * order) — so hits can never decrease in nProbe, and the gate pins
-    * exactly that.
+    * truth, summed over the query set. The clustering is computed ONCE
+    * (pinned) and feeds every probe level. `monotone_ok` is a structural
+    * guarantee, not luck: probing p+1 cells scans a strict superset of p
+    * cells' candidates, and any candidate outscoring an exact-top-k
+    * member would itself be exact-top-k (same tiebreak order) — so hits
+    * can never decrease in nProbe, and the gate pins exactly that.
     */
   def ivfRecallCurve(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      nProbes: Seq[Int], nCells: Int = 16, dim: Int = 64,
-                     refinePasses: Int = 1): DataFrame = {
+                     refinePasses: Int = 1): DataFrame =
+    recallCurve(corpus, queries, idCol, vecCol, k, nProbes, dim) { maxP =>
+      val (assigned, centroidsN) =
+        kmeansAssign(corpus, idCol, vecCol, nCells, dim, refinePasses)
+      ivfCandidates(assigned.localCheckpoint(), centroidsN, queries, idCol,
+        vecCol, maxP, dim)
+    }
+
+  /** Shared tail of the recall curves: recall@k hits per probe level out
+    * of ONE candidate pass at max(nProbes) (r17), instead of one
+    * generate/verify/rank subplan per level. `candidates(p)` returns
+    * verified pairs carrying their probe index `rn`; the candidate sets
+    * nest in rn (each pair matches exactly one probe), so level p's top-k
+    * rank is the running count of rn ≤ p candidates along [[byScore]] —
+    * row-for-row the per-level `row_number` ≤ k, same tiebreak. Every
+    * level's rank shares one window sort and one exchange, and all hit
+    * counts come out of one conditional aggregate against the
+    * brute-force ground truth.
+    */
+  private def recallCurve(corpus: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String, k: Int,
+                          nProbes: Seq[Int], dim: Int)(
+                          candidates: Int => DataFrame): DataFrame = {
     require(nProbes.nonEmpty && nProbes == nProbes.sorted && nProbes.distinct == nProbes,
       "nProbes must be distinct and ascending")
-    val (assigned0, centroidsN) =
-      kmeansAssign(corpus, idCol, vecCol, nCells, dim, refinePasses)
-    val assigned = assigned0.localCheckpoint()
+    val scored = candidates(nProbes.max)
     val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k, dim)
       .select(col("query_id"), col("corpus_id"))
       .withColumn("hit", lit(1L))
-    // ONE probe/score/rank pass at max(nProbes) instead of one ivfSearch
-    // subplan per level (r17): candidate sets are nested in the probe
-    // rank rn, so level p's top-k rank is a running count of rn ≤ p
-    // candidates along the SAME (sim desc, corpus_id asc) order the
-    // per-level window used — every level's rank column shares one
-    // window sort and one exchange, and the per-level join+agg towers
-    // (3× the plan, 3× the jobs, 3× the candidate shuffle) collapse
-    // into one conditional aggregate. Hit counts are row-for-row the
-    // old ones: rank_p ≤ k over rn ≤ p candidates IS the old
-    // row_number ≤ k over the p-cell candidate set, same tiebreak.
-    val maxP = nProbes.max
-    val queriesN = bucketNorm(queries, idCol, vecCol, 0, dim)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnorm"))
-    val queryX = appendCosine(
-      queriesN.join(broadcast(centroidsN), lit(true)),
-      "qv", "cv", "qnorm", "cnrm", "csim")
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = queryX.withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= maxP)
-      .select(col("cell"), col("query_id"), col("qv"), col("qnorm"), col("rn"))
-    val scored = appendCosine(
-      assigned.join(probes, Seq("cell")).filter(col("corpus_id") =!= col("query_id")),
-      "cv2", "qv", "cnorm2", "qnorm", "sim")
-    val wOrd = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("corpus_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val running = byScore.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = nProbes.foldLeft(scored) { (df, p) =>
       df.withColumn(s"__rk_$p",
-        sum(when(col("rn") <= p, 1L).otherwise(0L)).over(wOrd))
+        sum(when(col("rn") <= p, 1L).otherwise(0L)).over(running))
     }
-    val hitsRow = ranked
+    val hits = nProbes.map(p =>
+      sum(when(col("rn") <= p && col(s"__rk_$p") <= k &&
+        col("hit").isNotNull, 1L).otherwise(0L)).as(s"__h_$p"))
+    val perProbe = ranked
       .join(broadcast(exact), Seq("query_id", "corpus_id"), "left")
-      .agg(nProbes.map(p =>
-        sum(when(col("rn") <= p && col(s"__rk_$p") <= k &&
-          col("hit").isNotNull, 1L).otherwise(0L)).as(s"__h_$p")).head,
-        nProbes.map(p =>
-          sum(when(col("rn") <= p && col(s"__rk_$p") <= k &&
-            col("hit").isNotNull, 1L).otherwise(0L)).as(s"__h_$p")).tail: _*)
-    val perProbe = hitsRow.select(explode(array(nProbes.map(p =>
+      .agg(hits.head, hits.tail: _*)
+      .select(explode(array(nProbes.map(p =>
         struct(lit(p).as("n_probe"),
           coalesce(col(s"__h_$p"), lit(0L)).as("n_hits"))): _*)).as("x"))
       .select(col("x.n_probe").as("n_probe"), col("x.n_hits").as("n_hits"))
@@ -755,129 +680,31 @@ object Similarity {
     * and approximate distance = Σ_s table[s][code_s]. Integer end to end,
     * so ranks and distances gate exactly.
     *
-    * Scale shape: codebook + query tables broadcast (a bounded serving
-    * batch, like [[bruteForceTopK]]'s query side); encode + ADC run in ONE
-    * kernel pass over the corpus (no per-cell row amplification — the
-    * 16-way argmin happens in registers); per-query ranking is the
-    * k-bounded partial top-k aggregate, so each map task ships ≤ k
-    * candidates per query. The corpus is never broadcast, never joined
-    * all-pairs, and its vectors cross the wire as m nibbles, not dim
-    * floats — the memory form that makes billion-vector serving fit.
+    * Scale shape: the codebook is a broadcast artifact; the query side
+    * follows [[adcTopK]] (broadcast tables up to `maxQueryBatch` queries,
+    * a cross join of codes and executor-built tables above it). The
+    * corpus is never broadcast, and its vectors cross the wire as m
+    * nibbles, not dim floats — the memory form that makes billion-vector
+    * serving fit.
     *
     * @return (query_id, rank, corpus_id, adist) — adist in squared micros.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, m: Int = 8, dim: Int = 64,
              maxQueryBatch: Int = DefaultMaxQueryBatch): DataFrame = {
-    import graft.functions.TopKAgg
     val sub = dim / m
-    val spark = corpus.sparkSession
     val cb = collectCodebook(pqTrain(corpus, idCol, vecCol, m, dim), m, sub)
-    // query ADC tables — micros collected from the PLAN (same round() as
-    // the corpus; JVM math.round ties differ from SQL HALF_UP on .5).
-    // The collect is limit-bounded BEFORE it reaches the driver.
-    val qRows = boundedQueryBatch(queries, idCol, vecCol, maxQueryBatch,
-      "pqTopKDistributed")
-    val qTables = qRows.map { case (qid, q) => (qid, adcTableFlat(q, cb, sub)) }
-    val bc = spark.sparkContext.broadcast((cb, qTables))
-    implicit val enc = Encoders.row(pairSchema)
-    val corpusVm = corpus.select(col(idCol).cast("long").as("id"),
-      microsVec(vecCol).as("vm"))
-    val pairs = corpusVm
-      .repartition(graft.ops.CoreOps.adaptiveWidth(corpusVm))
-      .mapPartitions { it =>
-        val (cbv, qts) = bc.value
-        val mm = cbv.length
-        val subv = if (mm == 0) 0 else cbv(0).map(c => if (c == null) 0 else c.length).max
-        it.flatMap { r =>
-          val id = r.getLong(0)
-          val code = encodeSubspaces(r.getSeq[Long](1).toArray, cbv, subv)
-          qts.iterator.filter(_._1 != id).map { case (qid, t) =>
-            var ad = 0L
-            var s2 = 0
-            while (s2 < mm) { ad += t(s2 * 16 + code(s2)); s2 += 1 }
-            Row(qid, id, ad)
-          }
-        }
-      }(enc)
-    pairsTopK(pairs, k)
+    // one cell holds the whole corpus: every query probes it
+    val rows = corpus.select(col(idCol).cast("long").as("id"),
+      lit(0L).as("cell"), microsVec(vecCol).as("vm"))
+    adcTopK(rows.repartition(graft.ops.CoreOps.adaptiveWidth(rows)), queries,
+      idCol, vecCol, cb, sub, k, maxQueryBatch,
+      q => Seq(0 -> adcTable(q, cb, sub)),
+      (codes, tables) =>
+        adcVerify(codes.drop("cell").crossJoin(tables.drop("cell"))))
   }
 
-  /** [[pqTopK]] for UNBOUNDED query sets — evaluation sweeps, corpus-vs-
-    * corpus audits — where collecting per-query ADC tables on the driver
-    * (the broadcast path's serving-batch shape) would OOM it. The query
-    * tables are built by a distributed kernel and never leave the
-    * executors; scoring is the same |Q|×|C| work as the broadcast path,
-    * shuffled as a cross join instead of driver-held; ranking stays the
-    * k-bounded partial top-k. Output is bit-identical to [[pqTopK]]
-    * (shared codebook, encode, and ADC helpers — spec-pinned).
-    */
-  def pqTopKDistributed(corpus: DataFrame, queries: DataFrame, idCol: String,
-                        vecCol: String, k: Int, m: Int = 8,
-                        dim: Int = 64): DataFrame = {
-    val sub = dim / m
-    val spark = corpus.sparkSession
-    val cb = collectCodebook(pqTrain(corpus, idCol, vecCol, m, dim), m, sub)
-    val bcb = spark.sparkContext.broadcast(cb)
-    val codeSchema = StructType(Seq(
-      StructField("corpus_id", LongType, nullable = false),
-      StructField("code", ArrayType(IntegerType, containsNull = false))))
-    val codes = {
-      implicit val enc = Encoders.row(codeSchema)
-      val corpusVm = corpus.select(col(idCol).cast("long").as("id"),
-        microsVec(vecCol).as("vm"))
-      corpusVm
-        .repartition(graft.ops.CoreOps.adaptiveWidth(corpusVm))
-        .mapPartitions { it =>
-          val cbv = bcb.value
-          val subv = cbv(0).map(c => if (c == null) 0 else c.length).max
-          it.map { r =>
-            Row(r.getLong(0),
-              encodeSubspaces(r.getSeq[Long](1).toArray, cbv, subv).toSeq)
-          }
-        }(enc)
-    }
-    val tblSchema = StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("qt", ArrayType(LongType, containsNull = false))))
-    val tables = {
-      implicit val enc = Encoders.row(tblSchema)
-      queries.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
-        .mapPartitions { it =>
-          val cbv = bcb.value
-          val subv = cbv(0).map(c => if (c == null) 0 else c.length).max
-          it.map { r =>
-            Row(r.getLong(0),
-              adcTableFlat(r.getSeq[Long](1).toArray, cbv, subv).toSeq)
-          }
-        }(enc)
-    }
-    implicit val penc = Encoders.row(pairSchema)
-    val pairs = codes.crossJoin(tables).mapPartitions { it =>
-      it.flatMap { r =>
-        val cid = r.getLong(0)
-        val qid = r.getLong(2)
-        if (qid == cid) Iterator.empty
-        else {
-          val code = r.getSeq[Int](1)
-          val qt = r.getSeq[Long](3)
-          var ad = 0L
-          var s = 0
-          while (s < code.length) { ad += qt(s * 16 + code(s)); s += 1 }
-          Iterator(Row(qid, cid, ad))
-        }
-      }
-    }(penc)
-    pairsTopK(pairs, k)
-  }
-
-  /** Driver-side query-batch bound for the broadcast ANN paths: above
-    * this, the collect that builds per-query state is refused (the
-    * collect itself is limit-bounded, so the refusal happens BEFORE the
-    * driver holds the oversized batch) and the error names the
-    * distributed variant to use instead.
-    */
-  val DefaultMaxQueryBatch: Int = 250000
+  private type Codebook = Array[Array[Array[Long]]]
 
   private def microsVec(vecCol: String): Column =
     transform(col(vecCol), x => round(x.cast("double") * 1e6).cast("long"))
@@ -886,8 +713,7 @@ object Similarity {
     * [s][cell] = centroid-micros array form (null = empty seed cell) —
     * a bounded artifact: m·16·sub longs.
     */
-  private def collectCodebook(trained: DataFrame, m: Int,
-                              sub: Int): Array[Array[Array[Long]]] = {
+  private def collectCodebook(trained: DataFrame, m: Int, sub: Int): Codebook = {
     val cb = Array.fill(m, 16)(null: Array[Long])
     trained.collect().foreach { r =>
       val (s, cell, pos) = (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt)
@@ -897,57 +723,25 @@ object Similarity {
     cb
   }
 
-  /** Per-subspace argmin-L2 encode (tie → lower cell). Shared by the
-    * broadcast and distributed PQ paths so they cannot drift.
-    */
-  private def encodeSubspaces(v: Array[Long], cbv: Array[Array[Array[Long]]],
-                              sub: Int): Array[Int] = {
-    val mm = cbv.length
-    val code = new Array[Int](mm)
-    var s = 0
-    while (s < mm) {
-      var best = -1
-      var bestD = Long.MaxValue
-      var c = 0
-      while (c < 16) {
-        val cent = cbv(s)(c)
-        if (cent != null) {
-          var d = 0L
-          var j = 0
-          while (j < sub) {
-            val diff = v(s * sub + j) - cent(j); d += diff * diff; j += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-        }
-        c += 1
-      }
-      code(s) = best
-      s += 1
-    }
-    code
+  /** Squared L2 between a(off until off + n) and b(0 until n). */
+  private def sqDist(a: Array[Long], off: Int, b: Array[Long], n: Int): Long = {
+    var d = 0L
+    var j = 0
+    while (j < n) { val x = a(off + j) - b(j); d += x * x; j += 1 }
+    d
   }
 
-  /** Flat m·16 ADC table for one query (residual): entry s·16+c is the
-    * squared L2 between the query's subspace-s slice and centroid c
-    * (Long.MaxValue for empty cells). Shared by both PQ paths.
+  /** Flat m·16 ADC table of a vector (a query, or an IVF+PQ residual):
+    * entry s·16+c is the squared L2 between its subspace-s slice and
+    * centroid c (Long.MaxValue for an empty cell).
     */
-  private def adcTableFlat(q: Array[Long], cbv: Array[Array[Array[Long]]],
-                           sub: Int): Array[Long] = {
-    val mm = cbv.length
-    val t = Array.fill(mm * 16)(Long.MaxValue)
+  private def adcTable(v: Array[Long], cb: Codebook, sub: Int): Array[Long] = {
+    val t = Array.fill(cb.length * 16)(Long.MaxValue)
     var s = 0
-    while (s < mm) {
+    while (s < cb.length) {
       var c = 0
       while (c < 16) {
-        val cent = cbv(s)(c)
-        if (cent != null) {
-          var d = 0L
-          var j = 0
-          while (j < sub) {
-            val diff = q(s * sub + j) - cent(j); d += diff * diff; j += 1
-          }
-          t(s * 16 + c) = d
-        }
+        if (cb(s)(c) != null) t(s * 16 + c) = sqDist(v, s * sub, cb(s)(c), sub)
         c += 1
       }
       s += 1
@@ -955,10 +749,165 @@ object Similarity {
     t
   }
 
+  /** A vector's PQ code: per subspace, the argmin of its [[adcTable]]
+    * row (tie → lower cell).
+    */
+  private def encode(v: Array[Long], cb: Codebook, sub: Int): Array[Int] = {
+    val t = adcTable(v, cb, sub)
+    Array.tabulate(cb.length) { s =>
+      var best = -1
+      var bestD = Long.MaxValue
+      var c = 0
+      while (c < 16) {
+        val d = t(s * 16 + c)
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+  }
+
+  /** The asymmetric distance: Σ_s t(s·16 + code(s)). */
+  private def adcSum(t: Array[Long], code: Array[Int]): Long = {
+    var ad = 0L
+    var s = 0
+    while (s < code.length) { ad += t(s * 16 + code(s)); s += 1 }
+    ad
+  }
+
   private val pairSchema = StructType(Seq(
     StructField("query_id", LongType, nullable = false),
     StructField("corpus_id", LongType, nullable = false),
     StructField("adist", LongType, nullable = false)))
+
+  private val postingSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("corpus_id", LongType, nullable = false),
+    StructField("code", ArrayType(IntegerType, containsNull = false))))
+
+  private val probeSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("query_id", LongType, nullable = false),
+    StructField("qt", ArrayType(LongType, containsNull = false))))
+
+  /** Filter-and-verify over PQ codes. `rows` is the corpus as (id, cell,
+    * vm): vm in micros (the cell residual for IVF+PQ) and cell its coarse
+    * cell (0 for plain PQ); `probe(qv)` gives a query's probed cells,
+    * each with its ADC table.
+    *
+    * Within `maxQueryBatch` queries, the tables are built on the driver
+    * from a limit-bounded collect and broadcast, and ONE kernel pass
+    * encodes each corpus row and scores it against its cell's probers —
+    * the 16-way argmins run in registers and no code crosses the wire.
+    * Above it, the tables are built on the executors ([[probeFrame]]),
+    * the corpus is encoded as [[postings]], and `meet` pairs the two into
+    * verified (query_id, corpus_id, adist) rows. Either way the ranking
+    * is the k-bounded partial top-k, so each map task ships ≤ k
+    * candidates per query.
+    */
+  private def adcTopK(rows: DataFrame, queries: DataFrame, idCol: String,
+                      vecCol: String, cb: Codebook, sub: Int, k: Int,
+                      maxQueryBatch: Int,
+                      probe: Array[Long] => Seq[(Int, Array[Long])],
+                      meet: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val pairs = boundedQueryBatch(queries, idCol, vecCol, maxQueryBatch) match {
+      case Some(qs) =>
+        val probers = qs.toSeq
+          .flatMap { case (qid, qv) => probe(qv).map { case (c, t) => (c.toLong, (qid, t)) } }
+          .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
+        val bc = rows.sparkSession.sparkContext.broadcast((cb, probers))
+        implicit val enc = Encoders.row(pairSchema)
+        rows.mapPartitions { it =>
+          val (cbv, c2q) = bc.value
+          it.flatMap { r =>
+            val id = r.getLong(0)
+            val ps = c2q.getOrElse(r.getLong(1), Array.empty[(Long, Array[Long])])
+            if (ps.isEmpty) Iterator.empty
+            else {
+              val code = encode(r.getSeq[Long](2).toArray, cbv, sub)
+              ps.iterator.filter(_._1 != id).map { case (qid, t) =>
+                Row(qid, id, adcSum(t, code))
+              }
+            }
+          }
+        }(enc)
+      case None =>
+        meet(postings(rows, cb, sub), probeFrame(queries, idCol, vecCol, probe))
+    }
+    pairsTopK(pairs, k)
+  }
+
+  /** The query set as (id, micros) when it holds at most `maxQueryBatch`
+    * rows (the broadcast path); None above it, or when the bound is 0 or
+    * less (the shuffle path). The collect is limit-bounded, so an
+    * oversized set never reaches the driver.
+    */
+  private def boundedQueryBatch(queries: DataFrame, idCol: String,
+                                vecCol: String,
+                                maxQueryBatch: Int): Option[Array[(Long, Array[Long])]] =
+    if (maxQueryBatch <= 0) None
+    else {
+      val rows = queries
+        .select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
+        .limit(maxQueryBatch + 1).collect()
+      if (rows.length > maxQueryBatch) None
+      else Some(rows.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)))
+    }
+
+  /** Encode (id, cell, vm) rows as postings (cell, corpus_id, code) in one
+    * kernel pass — log2(nCells) bits + m nibbles per vector, the serving
+    * footprint.
+    */
+  private def postings(rows: DataFrame, cb: Codebook, sub: Int): DataFrame = {
+    val bcb = rows.sparkSession.sparkContext.broadcast(cb)
+    implicit val enc = Encoders.row(postingSchema)
+    rows.mapPartitions { it =>
+      val cbv = bcb.value
+      it.map { r =>
+        Row(r.getLong(1), r.getLong(0),
+          encode(r.getSeq[Long](2).toArray, cbv, sub).toSeq)
+      }
+    }(enc)
+  }
+
+  /** Probe tables built on the executors: one (cell, query_id, qt) row per
+    * probed cell of each query — the operator never collects the query set.
+    */
+  private def probeFrame(queries: DataFrame, idCol: String, vecCol: String,
+                         probe: Array[Long] => Seq[(Int, Array[Long])]): DataFrame = {
+    implicit val enc = Encoders.row(probeSchema)
+    queries.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
+      .mapPartitions { it =>
+        it.flatMap { r =>
+          val qid = r.getLong(0)
+          probe(r.getSeq[Long](1).toArray).iterator
+            .map { case (c, t) => Row(c.toLong, qid, t.toSeq) }
+        }
+      }(enc)
+  }
+
+  /** ADC verify over candidate rows carrying (corpus_id, code, query_id,
+    * qt) by name: drops self pairs, emits (query_id, corpus_id, adist).
+    */
+  private def adcVerify(cands: DataFrame): DataFrame = {
+    val Seq(ic, icode, iq, iqt) =
+      Seq("corpus_id", "code", "query_id", "qt").map(cands.schema.fieldIndex)
+    implicit val enc = Encoders.row(pairSchema)
+    cands.mapPartitions { it =>
+      it.flatMap { r =>
+        val (cid, qid) = (r.getLong(ic), r.getLong(iq))
+        if (qid == cid) Iterator.empty
+        else Iterator(Row(qid, cid,
+          adcSum(r.getSeq[Long](iqt).toArray, r.getSeq[Int](icode).toArray)))
+      }
+    }(enc)
+  }
+
+  /** Postings meet their probers through the coarse-cell equi-join — the
+    * shuffle key of a cell-partitioned serving layout — and are verified.
+    */
+  private def cellSearch(posts: DataFrame, probes: DataFrame): DataFrame =
+    adcVerify(posts.join(probes, "cell"))
 
   /** Shared (query_id, corpus_id, adist) → ranked top-k tail. */
   private def pairsTopK(pairs: DataFrame, k: Int): DataFrame = {
@@ -968,23 +917,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast(LongType).as("rank"),
         col("col.id").as("corpus_id"), (-col("col.v")).as("adist"))
-  }
-
-  /** Limit-bounded query-micros collect: refuses batches above
-    * `maxQueryBatch` BEFORE the driver holds them, naming the
-    * distributed variant in the error.
-    */
-  private def boundedQueryBatch(queries: DataFrame, idCol: String,
-                                vecCol: String, maxQueryBatch: Int,
-                                distributedVariant: String): Array[(Long, Array[Long])] = {
-    val rows = queries
-      .select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
-      .limit(maxQueryBatch + 1).collect()
-    require(rows.length <= maxQueryBatch,
-      s"query batch exceeds maxQueryBatch=$maxQueryBatch — the broadcast " +
-        s"path collects per-query state on the driver (a bounded serving " +
-        s"batch); use $distributedVariant for large query sets")
-    rows.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
   }
 
   /** IVF+PQ — the canonical billion-vector index (FAISS IVFPQ; Jégou et
@@ -999,118 +931,20 @@ object Similarity {
     *
     * Scale shape: centroids and codebooks are bounded collected
     * artifacts (nCells·dim + m·16·dim/m longs — broadcast-variable
-    * class); assignment+residual and encode+ADC each run as ONE kernel
-    * pass over the corpus; per-query work is nProbe cells' candidates,
-    * not the corpus; per-vector storage is log2(nCells) bits + m
-    * nibbles. Ranking is the k-bounded partial top-k.
+    * class); assignment+residual is ONE kernel pass over the corpus, and
+    * the query side follows [[adcTopK]] (broadcast per-cell probers up to
+    * `maxQueryBatch` queries, the [[cellSearch]] equi-join above it);
+    * per-query work is nProbe cells' candidates, not the corpus;
+    * per-vector storage is log2(nCells) bits + m nibbles.
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 4,
                 m: Int = 8, dim: Int = 64,
                 maxQueryBatch: Int = DefaultMaxQueryBatch): DataFrame = {
     val sub = dim / m
-    val spark = corpus.sparkSession
     val (cc, resid, cb) = buildIvfPqIndex(corpus, idCol, vecCol, nCells, m, dim)
-    // probes + per-probed-cell ADC tables, from the PLAN's micros; the
-    // collect is limit-bounded BEFORE it reaches the driver
-    val qRows = boundedQueryBatch(queries, idCol, vecCol, maxQueryBatch,
-      "ivfPqTopKDistributed")
-    val cellToQueries: Map[Int, Array[(Long, Array[Long])]] = qRows
-      .flatMap { case (qid, qv) =>
-        probeTables(qv, cc, cb, nCells, nProbe, dim, sub)
-          .map { case (c, t) => (c, (qid, t)) }
-      }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val bq = spark.sparkContext.broadcast((cb, cellToQueries))
-    implicit val penc = Encoders.row(pairSchema)
-    val pairs = resid.mapPartitions { it =>
-      val (cbv, c2q) = bq.value
-      val mm = cbv.length
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val probers = c2q.getOrElse(r.getLong(1).toInt,
-          Array.empty[(Long, Array[Long])])
-        if (probers.isEmpty) Iterator.empty
-        else {
-          val code = encodeSubspaces(r.getSeq[Long](2).toArray, cbv, sub)
-          probers.iterator.filter(_._1 != id).map { case (qid, t) =>
-            var ad = 0L
-            var s2 = 0
-            while (s2 < mm) { ad += t(s2 * 16 + code(s2)); s2 += 1 }
-            Row(qid, id, ad)
-          }
-        }
-      }
-    }(penc)
-    pairsTopK(pairs, k)
-  }
-
-  /** [[ivfPqTopK]] for UNBOUNDED query sets: per-query probe state is
-    * built by a distributed kernel (centroids + codebooks broadcast —
-    * they are the bounded artifacts; the QUERIES never leave the
-    * executors), and candidates meet their probers through an equi-join
-    * on the coarse cell — the shuffle key a cell-partitioned ANN serving
-    * layout would use at 100 TB. Output is bit-identical to the
-    * broadcast path (shared index build, probe, encode, and ADC helpers
-    * — spec-pinned).
-    */
-  def ivfPqTopKDistributed(corpus: DataFrame, queries: DataFrame,
-                           idCol: String, vecCol: String, k: Int,
-                           nCells: Int = 16, nProbe: Int = 4,
-                           m: Int = 8, dim: Int = 64): DataFrame = {
-    val sub = dim / m
-    val spark = corpus.sparkSession
-    val (cc, resid, cb) = buildIvfPqIndex(corpus, idCol, vecCol, nCells, m, dim)
-    val bIdx = spark.sparkContext.broadcast((cc, cb))
-    // corpus side: one encode pass over the residuals -> (cell, corpus_id, code)
-    val codeSchema = StructType(Seq(
-      StructField("cell", LongType, nullable = false),
-      StructField("corpus_id", LongType, nullable = false),
-      StructField("code", ArrayType(IntegerType, containsNull = false))))
-    val codes = {
-      implicit val enc = Encoders.row(codeSchema)
-      resid.mapPartitions { it =>
-        val cbv = bIdx.value._2
-        it.map { r =>
-          Row(r.getLong(1), r.getLong(0),
-            encodeSubspaces(r.getSeq[Long](2).toArray, cbv, sub).toSeq)
-        }
-      }(enc)
-    }
-    // query side: nProbe (cell, query_id, table) rows per query, distributed
-    val tblSchema = StructType(Seq(
-      StructField("cell", LongType, nullable = false),
-      StructField("query_id", LongType, nullable = false),
-      StructField("qt", ArrayType(LongType, containsNull = false))))
-    val probes = {
-      implicit val enc = Encoders.row(tblSchema)
-      queries.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
-        .mapPartitions { it =>
-          val (ccv, cbv) = bIdx.value
-          it.flatMap { r =>
-            val qid = r.getLong(0)
-            probeTables(r.getSeq[Long](1).toArray, ccv, cbv,
-                ccv.length, nProbe, ccv.filter(_ != null).head.length, sub)
-              .iterator.map { case (c, t) => Row(c.toLong, qid, t.toSeq) }
-          }
-        }(enc)
-    }
-    implicit val penc = Encoders.row(pairSchema)
-    val pairs = codes.join(probes, "cell").mapPartitions { it =>
-      it.flatMap { r =>
-        val cid = r.getLong(1)
-        val qid = r.getLong(3)
-        if (qid == cid) Iterator.empty
-        else {
-          val code = r.getSeq[Int](2)
-          val qt = r.getSeq[Long](4)
-          var ad = 0L
-          var s = 0
-          while (s < code.length) { ad += qt(s * 16 + code(s)); s += 1 }
-          Iterator(Row(qid, cid, ad))
-        }
-      }
-    }(penc)
-    pairsTopK(pairs, k)
+    adcTopK(resid, queries, idCol, vecCol, cb, sub, k, maxQueryBatch,
+      probeTables(_, cc, cb, nProbe, sub), cellSearch)
   }
 
   /** Persist a frozen IVF+PQ index as parquet state tables — the
@@ -1133,7 +967,6 @@ object Similarity {
   def writeIvfPqState(corpus: DataFrame, idCol: String, vecCol: String,
                       stateDir: String, nCells: Int = 16, m: Int = 8,
                       dim: Int = 64): Unit = {
-    val sub = dim / m
     val spark = corpus.sparkSession
     val (cc, resid, cb) = buildIvfPqIndex(corpus, idCol, vecCol, nCells, m, dim)
     spark.createDataFrame(
@@ -1153,35 +986,22 @@ object Similarity {
         StructField("cell", LongType, nullable = false),
         StructField("cu", ArrayType(LongType, containsNull = false)))))
       .repartition(1).write.mode("overwrite").parquet(stateDir + "/codebooks")
-    val bcb = spark.sparkContext.broadcast(cb)
-    implicit val enc = Encoders.row(postingSchema)
-    resid.mapPartitions { it =>
-      val cbv = bcb.value
-      it.map { r =>
-        Row(r.getLong(1), r.getLong(0),
-          encodeSubspaces(r.getSeq[Long](2).toArray, cbv, sub).toSeq)
-      }
-    }(enc).write.mode("overwrite").parquet(stateDir + "/postings")
+    postings(resid, cb, dim / m).write.mode("overwrite").parquet(stateDir + "/postings")
   }
 
-  private val postingSchema = StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("corpus_id", LongType, nullable = false),
-    StructField("code", ArrayType(IntegerType, containsNull = false))))
-
   /** Read the frozen index model back: (centroids by cell, codebook
-    * [s][cell], dim, sub) — bounded artifacts (nCells·dim + m·16·sub
-    * longs, the broadcast-variable class), collected once per caller.
+    * [s][cell], sub) — bounded artifacts (nCells·dim + m·16·sub longs,
+    * the broadcast-variable class), collected once per caller.
     *
     * Geometry (nCells, m, dim, sub) is DERIVED from the persisted rows,
-    * never trusted from the caller: a parameter smaller than what the
-    * state was written with used to surface as a raw
-    * ArrayIndexOutOfBounds deep in the kernel. Empty/missing state now
-    * fails fast with a named message instead of a kernel
-    * NoSuchElementException.
+    * never trusted from the caller, and checked against the caller's
+    * declared `m` and `dim`: a parameter smaller than what the state was
+    * written with used to surface as a raw ArrayIndexOutOfBounds deep in
+    * the kernel. Empty/missing state fails fast with a named message
+    * instead of a kernel NoSuchElementException.
     */
-  private def readIvfPqModel(spark: SparkSession, stateDir: String)
-      : (Array[Array[Long]], Array[Array[Array[Long]]], Int, Int) = {
+  private def readIvfPqModel(spark: SparkSession, stateDir: String, m: Int,
+                             dim: Int): (Array[Array[Long]], Codebook, Int) = {
     val centRows = spark.read.parquet(stateDir + "/centroids").collect()
     require(centRows.nonEmpty,
       s"ivfpq state at $stateDir/centroids is empty — index was never " +
@@ -1189,26 +1009,29 @@ object Similarity {
     val nCells = centRows.iterator.map(_.getLong(0).toInt).max + 1
     val cc = Array.fill(nCells)(null: Array[Long])
     centRows.foreach { r => cc(r.getLong(0).toInt) = r.getSeq[Long](1).toArray }
-    val dim = centRows.head.getSeq[Long](1).length
+    val dimS = centRows.head.getSeq[Long](1).length
     val cbRows = spark.read.parquet(stateDir + "/codebooks").collect()
     require(cbRows.nonEmpty,
       s"ivfpq state at $stateDir/codebooks is empty — index was never " +
         "written or the dir is wrong")
-    val m = cbRows.iterator.map(_.getLong(0).toInt).max + 1
-    val cb = Array.fill(m, 16)(null: Array[Long])
+    val mS = cbRows.iterator.map(_.getLong(0).toInt).max + 1
+    val cb = Array.fill(mS, 16)(null: Array[Long])
     cbRows.foreach { r =>
       cb(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getSeq[Long](2).toArray
     }
     val sub = cbRows.head.getSeq[Long](2).length
-    require(m * sub == dim,
-      s"ivfpq state at $stateDir inconsistent: m=$m subspaces of width " +
-        s"$sub != centroid dim $dim")
-    (cc, cb, dim, sub)
+    require(mS * sub == dimS,
+      s"ivfpq state at $stateDir inconsistent: m=$mS subspaces of width " +
+        s"$sub != centroid dim $dimS")
+    require(dimS == dim && mS == m,
+      s"caller declared dim=$dim m=$m but state at $stateDir was written " +
+        s"with dim=$dimS m=$mS")
+    (cc, cb, sub)
   }
 
   /** Assign + encode ONLY the new batch against the frozen state: one
-    * kernel pass over the batch (nearest frozen centroid → residual →
-    * per-subspace argmin codes), with the model broadcast. Returns new
+    * assignment pass over the batch (nearest frozen centroid → residual)
+    * and one encode pass, with the model broadcast. Returns new
     * postings rows (cell, corpus_id, code) — append them to
     * `stateDir/postings` (or pass straight to [[ivfPqSearchState]]); the
     * historical vectors are never touched. Parameters must match the
@@ -1217,42 +1040,16 @@ object Similarity {
   def ivfPqAssignToState(batch: DataFrame, stateDir: String, idCol: String,
                          vecCol: String, nCells: Int = 16, m: Int = 8,
                          dim: Int = 64): DataFrame = {
-    val spark = batch.sparkSession
-    val (cc, cb, dimS, sub) = readIvfPqModel(spark, stateDir)
-    require(dimS == dim && cb.length == m,
-      s"caller declared dim=$dim m=$m but state at $stateDir was written " +
-        s"with dim=$dimS m=${cb.length}")
-    val bm = spark.sparkContext.broadcast((cc, cb))
-    implicit val enc = Encoders.row(postingSchema)
-    batch.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
-      .mapPartitions { it =>
-        val (ccv, cbv) = bm.value
-        it.map { r =>
-          val v = r.getSeq[Long](1).toArray
-          var best = -1; var bestD = Long.MaxValue; var c = 0
-          while (c < ccv.length) {
-            if (ccv(c) != null) {
-              var d = 0L; var i = 0
-              while (i < v.length) { val x = v(i) - ccv(c)(i); d += x * x; i += 1 }
-              if (d < bestD) { bestD = d; best = c }
-            }
-            c += 1
-          }
-          val cent = ccv(best)
-          val rm = new Array[Long](v.length)
-          var i = 0
-          while (i < v.length) { rm(i) = v(i) - cent(i); i += 1 }
-          Row(best.toLong, r.getLong(0), encodeSubspaces(rm, cbv, sub).toSeq)
-        }
-      }(enc)
+    val (cc, cb, sub) = readIvfPqModel(batch.sparkSession, stateDir, m, dim)
+    postings(residuals(batch.select(col(idCol).cast("long").as("id"),
+      microsVec(vecCol).as("vm")), cc), cb, sub)
   }
 
   /** ADC top-k over the PERSISTED postings plus optionally a
     * just-ingested batch's postings — the serving read of the
-    * incremental index. Probe state is built by a distributed kernel
-    * from the frozen model (queries never leave the executors), and
-    * candidates meet probers through the coarse-cell equi-join, exactly
-    * the [[ivfPqTopKDistributed]] shape — but the corpus side is the m-
+    * incremental index. Probe tables are built on the executors from the
+    * frozen model, and candidates meet probers through [[cellSearch]],
+    * the shuffle path of [[ivfPqTopK]] — but the corpus side is the m-
     * nibble postings scan, so the plan provably reads batch vectors +
     * state tables and nothing else (plan-asserted in PlanAuditSpec).
     */
@@ -1262,47 +1059,11 @@ object Similarity {
                        nProbe: Int = 4, m: Int = 8,
                        dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val (cc, cb, dimS, sub) = readIvfPqModel(spark, stateDir)
-    require(dimS == dim && cb.length == m,
-      s"caller declared dim=$dim m=$m but state at $stateDir was written " +
-        s"with dim=$dimS m=${cb.length}")
-    val bm = spark.sparkContext.broadcast((cc, cb, dimS))
-    val postings = extraPostings.foldLeft(
+    val (cc, cb, sub) = readIvfPqModel(spark, stateDir, m, dim)
+    val posts = extraPostings.foldLeft(
       spark.read.parquet(stateDir + "/postings"))(_ unionByName _)
-    val tblSchema = StructType(Seq(
-      StructField("cell", LongType, nullable = false),
-      StructField("query_id", LongType, nullable = false),
-      StructField("qt", ArrayType(LongType, containsNull = false))))
-    val probes = {
-      implicit val enc = Encoders.row(tblSchema)
-      queries.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
-        .mapPartitions { it =>
-          val (ccv, cbv, dimv) = bm.value
-          it.flatMap { r =>
-            val qid = r.getLong(0)
-            probeTables(r.getSeq[Long](1).toArray, ccv, cbv,
-                ccv.length, nProbe, dimv, sub)
-              .iterator.map { case (c, t) => Row(c.toLong, qid, t.toSeq) }
-          }
-        }(enc)
-    }
-    implicit val penc = Encoders.row(pairSchema)
-    val pairs = postings.join(probes, "cell").mapPartitions { it =>
-      it.flatMap { r =>
-        val cid = r.getLong(1)
-        val qid = r.getLong(3)
-        if (qid == cid) Iterator.empty
-        else {
-          val code = r.getSeq[Int](2)
-          val qt = r.getSeq[Long](4)
-          var ad = 0L
-          var s = 0
-          while (s < code.length) { ad += qt(s * 16 + code(s)); s += 1 }
-          Iterator(Row(qid, cid, ad))
-        }
-      }
-    }(penc)
-    pairsTopK(pairs, k)
+    pairsTopK(cellSearch(posts, probeFrame(queries, idCol, vecCol,
+      probeTables(_, cc, cb, nProbe, sub))), k)
   }
 
   /** Shared IVF+PQ index build: coarse centroids (seeded by leading-dim
@@ -1316,12 +1077,10 @@ object Similarity {
     */
   private def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                               nCells: Int, m: Int, dim: Int):
-      (Array[Array[Long]], DataFrame, Array[Array[Array[Long]]]) = {
+      (Array[Array[Long]], DataFrame, Codebook) = {
     require(nCells > 1 && (nCells & (nCells - 1)) == 0, "nCells must be a power of 2")
     val cplanes = java.lang.Integer.numberOfTrailingZeros(nCells)
     require(cplanes <= dim, "more coarse planes than dims")
-    val sub = dim / m
-    val spark = corpus.sparkSession
     val base = corpus.select(col(idCol).cast("long").as("id"), microsVec(vecCol).as("vm"))
     // coarse seeds: leading-dim signs; centroids: truncating micro means
     val seedCell = (0 until cplanes).map { j =>
@@ -1338,59 +1097,63 @@ object Similarity {
         cc(cell)(r.getInt(1)) = r.getAs[Long]("cu")
       }
     // one Lloyd step: reassign to nearest centroid, keep residuals
-    val bcc = spark.sparkContext.broadcast(cc)
-    val residSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("cell", LongType, nullable = false),
-      StructField("vm", ArrayType(LongType))))
-    implicit val renc = Encoders.row(residSchema)
-    val resid = base.mapPartitions { it =>
-      val cents = bcc.value
-      def near(v: Array[Long]): Int = {
-        var best = -1; var bestD = Long.MaxValue; var c = 0
-        while (c < cents.length) {
-          if (cents(c) != null) {
-            var d = 0L; var i = 0
-            while (i < v.length) { val x = v(i) - cents(c)(i); d += x * x; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-          }
-          c += 1
-        }
-        best
-      }
-      it.map { r =>
-        val v = r.getSeq[Long](1).toArray
-        val cell = near(v)
-        val cent = cents(cell)
-        val rm = new Array[Long](v.length)
-        var i = 0
-        while (i < v.length) { rm(i) = v(i) - cent(i); i += 1 }
-        Row(r.getLong(0), cell.toLong, rm.toSeq)
-      }
-    }(renc).localCheckpoint() // codebook agg + encode both read it
+    val resid = residuals(base, cc).localCheckpoint() // codebook agg + encode both read it
     val cb = collectCodebook(
-      pqTrainMicros(resid.select(col("id"), col("vm")), m, dim), m, sub)
+      pqTrainMicros(resid.select(col("id"), col("vm")), m, dim), m, dim / m)
     (cc, resid, cb)
   }
 
-  /** A query's nProbe nearest non-empty cells (tie -> lower cell), each
-    * with the flat ADC table of the query's CELL-RELATIVE residual.
-    * Shared by the broadcast and distributed IVF+PQ paths.
+  private val residSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("cell", LongType, nullable = false),
+    StructField("vm", ArrayType(LongType))))
+
+  /** Assign each (id, vm) row to its [[nearestCell]] and keep the
+    * cell-relative residual: (id, cell, vm = residual micros), one kernel
+    * pass with the centroids broadcast.
     */
-  private def probeTables(qv: Array[Long], cc: Array[Array[Long]],
-                          cb: Array[Array[Array[Long]]], nCells: Int,
-                          nProbe: Int, dim: Int,
-                          sub: Int): Seq[(Int, Array[Long])] = {
-    require(nProbe >= 1 && nProbe <= nCells, "nProbe in [1, nCells]")
-    val byDist = (0 until nCells).filter(cc(_) != null).map { c =>
-      var d = 0L; var i = 0
-      while (i < dim) { val x = qv(i) - cc(c)(i); d += x * x; i += 1 }
-      (d, c)
-    }.sorted.take(nProbe)
-    byDist.map { case (_, c) =>
-      val qres = Array.tabulate(dim)(i => qv(i) - cc(c)(i))
-      (c, adcTableFlat(qres, cb, sub))
+  private def residuals(base: DataFrame, cc: Array[Array[Long]]): DataFrame = {
+    val bcc = base.sparkSession.sparkContext.broadcast(cc)
+    implicit val enc = Encoders.row(residSchema)
+    base.mapPartitions { it =>
+      val cents = bcc.value
+      it.map { r =>
+        val v = r.getSeq[Long](1).toArray
+        val cell = nearestCell(v, cents)
+        Row(r.getLong(0), cell.toLong,
+          Array.tabulate(v.length)(i => v(i) - cents(cell)(i)).toSeq)
+      }
+    }(enc)
+  }
+
+  /** The nearest non-empty coarse cell by integer L2 (tie → lower cell). */
+  private def nearestCell(v: Array[Long], cc: Array[Array[Long]]): Int = {
+    var best = -1
+    var bestD = Long.MaxValue
+    var c = 0
+    while (c < cc.length) {
+      if (cc(c) != null) {
+        val d = sqDist(v, 0, cc(c), v.length)
+        if (d < bestD) { bestD = d; best = c }
+      }
+      c += 1
     }
+    best
+  }
+
+  /** A query's nProbe nearest non-empty cells (tie -> lower cell), each
+    * with the ADC table of the query's CELL-RELATIVE residual. Shared by
+    * both query-side paths of [[ivfPqTopK]] and by [[ivfPqSearchState]].
+    */
+  private def probeTables(qv: Array[Long], cc: Array[Array[Long]], cb: Codebook,
+                          nProbe: Int, sub: Int): Seq[(Int, Array[Long])] = {
+    require(nProbe >= 1 && nProbe <= cc.length, "nProbe in [1, nCells]")
+    cc.indices.filter(cc(_) != null)
+      .map(c => (sqDist(qv, 0, cc(c), qv.length), c))
+      .sorted.take(nProbe)
+      .map { case (_, c) =>
+        (c, adcTable(Array.tabulate(qv.length)(i => qv(i) - cc(c)(i)), cb, sub))
+      }
   }
 
   /** Johnson–Lindenstrauss random projection to `outDims` dimensions with

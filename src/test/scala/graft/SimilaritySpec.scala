@@ -246,36 +246,49 @@ class SimilaritySpec extends AnyFunSuite {
     assert(s1 == Seq(-300000L, -400000L, -500000L, -600000L))
   }
 
-  test("distributed ANN variants match the broadcast paths bit-for-bit") {
-    // VERDICT r6 item 3: the broadcast paths collect/broadcast per-query
-    // state (a bounded serving batch); the distributed variants must
-    // produce IDENTICAL rankings through the joined plans.
-    val dim = 16
-    val vecs = (0L until 30L).map { i =>
-      (i, (0 until dim).map(d => math.sin(i * 31 + d * 7 + 2).toFloat))
+  private def sorted(d: org.apache.spark.sql.DataFrame) =
+    d.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+
+  private val vecs16 = (0L until 30L).map { i =>
+    (i, (0 until 16).map(d => math.sin(i * 31 + d * 7 + 2).toFloat))
+  }.toDF("vec_id", "embedding")
+
+  // One spec per index: the operator picks broadcast (default bound) or
+  // shuffle (maxQueryBatch = 0) for its query side, and both paths must
+  // return identical rows.
+  Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+    "bruteForceTopK" -> (b => Similarity.bruteForceTopK(vecs16,
+      vecs16.filter(col("vec_id") < 5), "vec_id", "embedding", k = 6,
+      dim = 16, maxQueryBatch = b)),
+    "pqTopK" -> (b => Similarity.pqTopK(vecs16,
+      vecs16.filter(col("vec_id") < 5), "vec_id", "embedding", k = 6, m = 4,
+      dim = 16, maxQueryBatch = b)),
+    "ivfPqTopK" -> (b => Similarity.ivfPqTopK(vecs16,
+      vecs16.filter(col("vec_id") < 5), "vec_id", "embedding", k = 6,
+      nCells = 4, nProbe = 2, m = 4, dim = 16, maxQueryBatch = b))
+  ).foreach { case (name, run) =>
+    test(s"$name: broadcast and shuffle query paths return identical rows") {
+      assert(sorted(run(0)) == sorted(run(Similarity.DefaultMaxQueryBatch)))
     }
-    val df = vecs.toDF("vec_id", "embedding")
-    val qs = df.filter(col("vec_id") < 5)
-    def sorted(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    assert(sorted(Similarity.pqTopKDistributed(df, qs, "vec_id", "embedding",
-        k = 6, m = 4, dim = dim)) ==
-      sorted(Similarity.pqTopK(df, qs, "vec_id", "embedding",
-        k = 6, m = 4, dim = dim)))
-    assert(sorted(Similarity.ivfPqTopKDistributed(df, qs, "vec_id", "embedding",
-        k = 6, nCells = 4, nProbe = 2, m = 4, dim = dim)) ==
-      sorted(Similarity.ivfPqTopK(df, qs, "vec_id", "embedding",
-        k = 6, nCells = 4, nProbe = 2, m = 4, dim = dim)))
-    assert(sorted(Similarity.bruteForceTopKDistributed(df, qs, "vec_id",
-        "embedding", k = 6, dim = dim)) ==
-      sorted(Similarity.bruteForceTopK(df, qs, "vec_id", "embedding",
-        k = 6, dim = dim)))
+  }
+
+  test("bruteForceTopK broadcasts a small query set and tiles it at maxQueryBatch = 0") {
+    val qs = vecs16.filter(col("vec_id") < 5)
+    def plan(b: Int) = {
+      val df = Similarity.bruteForceTopK(vecs16, qs, "vec_id", "embedding",
+        k = 3, dim = 16, maxQueryBatch = b)
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    assert(plan(Similarity.DefaultMaxQueryBatch).contains("BroadcastNestedLoopJoin"))
+    val shuffled = plan(0)
+    assert(!shuffled.contains("BroadcastNestedLoopJoin"), shuffled)
   }
 
   test("IVF+PQ state: persisted search == distributed path; ingest == build encode") {
     // Frozen-model invariants: (1) searching the persisted postings with
     // the persisted centroids/codebooks reproduces the in-memory
-    // distributed path bit-for-bit; (2) re-assigning the corpus against
+    // shuffle path bit-for-bit; (2) re-assigning the corpus against
     // its own frozen state reproduces the persisted postings exactly
     // (assign/encode is deterministic given the model) — so a batch
     // ingested tomorrow gets byte-identical treatment to one indexed at
@@ -289,13 +302,11 @@ class SimilaritySpec extends AnyFunSuite {
       .createTempDirectory("graft_ivfpq_state_").toString
     Similarity.writeIvfPqState(df, "vec_id", "embedding", stateDir,
       nCells = 4, m = 4, dim = dim)
-    def sorted(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(sorted(Similarity.ivfPqSearchState(qs, stateDir, None,
         "vec_id", "embedding", k = 6, nCells = 4, nProbe = 2, m = 4,
         dim = dim)) ==
-      sorted(Similarity.ivfPqTopKDistributed(df, qs, "vec_id", "embedding",
-        k = 6, nCells = 4, nProbe = 2, m = 4, dim = dim)))
+      sorted(Similarity.ivfPqTopK(df, qs, "vec_id", "embedding",
+        k = 6, nCells = 4, nProbe = 2, m = 4, dim = dim, maxQueryBatch = 0)))
     val re = Similarity.ivfPqAssignToState(df, stateDir, "vec_id",
         "embedding", nCells = 4, m = 4, dim = dim)
       .orderBy("corpus_id").collect().map(_.toSeq).toSeq
@@ -304,23 +315,24 @@ class SimilaritySpec extends AnyFunSuite {
     assert(re == persisted)
   }
 
-  test("broadcast ANN paths refuse an oversized query batch by name") {
+  test("above maxQueryBatch each ANN entry point returns its default-bound rows") {
     val dim = 8
     val df = (0L until 10L).map { i =>
       (i, (0 until dim).map(d => math.cos(i * 13 + d).toFloat))
     }.toDF("vec_id", "embedding")
-    // maxQueryBatch = 3 with 10 queries: all three broadcast paths must
-    // throw BEFORE holding the batch, naming the distributed variant
-    Seq(
-      () => Similarity.pqTopK(df, df, "vec_id", "embedding",
-        k = 2, m = 2, dim = dim, maxQueryBatch = 3),
-      () => Similarity.ivfPqTopK(df, df, "vec_id", "embedding",
-        k = 2, nCells = 2, nProbe = 1, m = 2, dim = dim, maxQueryBatch = 3),
-      () => Similarity.bruteForceTopK(df, df, "vec_id", "embedding",
-        k = 2, dim = dim, maxQueryBatch = 3)
+    // 10 queries against a bound of 3: the operator switches to the
+    // shuffle path instead of refusing the batch
+    Seq[Int => org.apache.spark.sql.DataFrame](
+      b => Similarity.pqTopK(df, df, "vec_id", "embedding",
+        k = 2, m = 2, dim = dim, maxQueryBatch = b),
+      b => Similarity.ivfPqTopK(df, df, "vec_id", "embedding",
+        k = 2, nCells = 2, nProbe = 1, m = 2, dim = dim, maxQueryBatch = b),
+      b => Similarity.bruteForceTopK(df, df, "vec_id", "embedding",
+        k = 2, dim = dim, maxQueryBatch = b)
     ).foreach { f =>
-      val e = intercept[IllegalArgumentException](f())
-      assert(e.getMessage.contains("Distributed"), e.getMessage)
+      val above = sorted(f(3))
+      assert(above.nonEmpty)
+      assert(above == sorted(f(Similarity.DefaultMaxQueryBatch)))
     }
   }
 
