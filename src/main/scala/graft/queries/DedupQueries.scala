@@ -831,10 +831,9 @@ object DedupQueries {
           d, nCells = 16, m = 8)
       }
       val newPosts = Similarity.ivfPqAssignToState(e.filter(isBatch), state,
-        "vec_id", "embedding", nCells = 16, m = 8)
+        "vec_id", "embedding", m = 8)
       Similarity.ivfPqSearchState(e.filter(col("vec_id") < 5), state,
-          Some(newPosts), "vec_id", "embedding", k = 10, nCells = 16,
-          nProbe = 4, m = 8)
+          Some(newPosts), "vec_id", "embedding", k = 10, nProbe = 4, m = 8)
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -852,7 +851,7 @@ object DedupQueries {
           d, nCells = 16, m = 8)
       }
       val newPosts = Similarity.ivfPqAssignToState(e.filter(isBatch), state,
-        "vec_id", "embedding", nCells = 16, m = 8)
+        "vec_id", "embedding", m = 8)
       s.read.parquet(state + "/postings").unionByName(newPosts)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"))

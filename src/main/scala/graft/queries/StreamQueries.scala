@@ -1,9 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.GraftSparkAccess
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -18,11 +20,18 @@ import graft.streaming.SocialStream
   * under test (q66/q67/q111), compacted parquet for the event-heavy
   * stateful fixtures), run a `SocialStream` operator over file-source
   * micro-batches (`maxFilesPerTrigger=1`, so multiple batches really
-  * happen), collect the sink, and return it as a DataFrame whose oracle
-  * is plain SQL over the SAME source table. Batch analogs (q11/q49)
-  * cover the window semantics; these cover the streaming CODE — source,
-  * watermark plumbing, state store, sink — none of which the batch path
-  * touches.
+  * happen — ProfileSpec counts them), drain it through [[drain]] and
+  * return the sink as a DataFrame whose oracle is plain SQL over the SAME
+  * source table. Batch analogs (q11/q49) cover the window semantics;
+  * these cover the streaming CODE — source, watermark plumbing, state
+  * store, sink — none of which the batch path touches.
+  *
+  * One drain serves every query: start, process all available input,
+  * stop, read back. The sink follows from the output mode (memory for
+  * complete, the checkpointed parquet file sink for append, foreachBatch
+  * parquet appends for update). Checkpoints, sink output and scratch all
+  * live under one per-JVM root in Spark's local dir, which Spark deletes
+  * at exit.
   *
   * Determinism: the file source does not guarantee batch order, so every
   * query here (a) reduces the sink to an order-insensitive final answer
@@ -37,25 +46,18 @@ object StreamQueries {
   /** Never-late watermark: keeps results independent of batch splits. */
   private val Horizon = "36500 days"
 
-  /** Dump `df` as an `n`-file JSON landing dir, once per (key, sf dir) —
-    * the landing zone is input fixture, not the operator under test. */
-  private def landing(key: String, sfDir: String, df: => DataFrame, n: Int,
-                      splitCol: String): String =
-    FixtureCache.dir(key, sfDir) { dir =>
-      df.repartition(n, col(splitCol)).write.mode("overwrite").json(dir)
-    }
-
-  /** Parquet twin of [[landing]] for the event-heavy fixtures: the timed
-    * passes re-read every landing file per invocation, and at sf0.1 the
-    * 100-200k-line JSON parse IS the query's wall time — fixture IO, not
-    * the stateful operator the gate exists for. The raw-JSON drop shape
-    * keeps dedicated coverage (q66/q67 landing zones, q111's byte-exact
-    * corrupt lines); everything else streams the compacted form.
+  /** Dump `df` as an `n`-file landing dir in `format`, once per (key, sf
+    * dir) — the landing zone is input fixture, not the operator under
+    * test. JSON keeps the raw drop shape where the decode is under test
+    * (q66/q67; q111 writes its byte-exact corrupt lines itself);
+    * everything else streams compacted parquet: the timed passes re-read
+    * every landing file per invocation, and at sf0.1 the 100-200k-line
+    * JSON parse IS the query's wall time.
     */
-  private def parquetLanding(key: String, sfDir: String, df: => DataFrame,
-                             n: Int, splitCol: String): String =
+  private def landing(format: String, key: String, sfDir: String,
+                      df: => DataFrame, n: Int, splitCol: String): String =
     FixtureCache.dir(key, sfDir) { dir =>
-      df.repartition(n, col(splitCol)).write.mode("overwrite").parquet(dir)
+      df.repartition(n, col(splitCol)).write.mode("overwrite").format(format).save(dir)
     }
 
   /** One-file landing with the sentinel rows folded INTO the data file:
@@ -76,58 +78,55 @@ object StreamQueries {
       df.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
-  private def uniq(prefix: String): String =
-    prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-
-  /** Drain an APPEND-mode stream through a parquet FILE sink and hand the
-    * committed result back as a distributed scan. The memory sink
-    * materializes every output row into driver heap — the right harness
-    * for the bounded-AGGREGATE gates (windows × types rows), but for the
-    * row-EMITTING streams (dedup, joins, sessions, corpus ingest) the
-    * output is data-sized, and a data-sized driver collection is exactly
-    * the reference's `toPandas` collapse this repo exists to avoid: the
-    * r14 sf10 probe OOM'd an 8 GiB driver serializing q68's 20M-row
-    * memory-sink readback. The file sink keeps the result distributed
-    * end to end; the readback scan honors the sink's _spark_metadata
-    * commit log, so it reads exactly the committed set. Output is
-    * DATA-sized, so it lands under [[sinkRoot]] (disk-backed, reaped by
-    * a shutdown hook) — NOT the tmpfs checkpoint root: tmpfs is capped
-    * at ~half RAM, and a multi-pass bench leg at sf10 stacks 4+ copies
-    * of 20M-row outputs, trading the old driver-heap OOM for ENOSPC.
-    * Readback passes the plan's schema explicitly: a zero-row stream
-    * commits only the _spark_metadata log, and schema inference on that
-    * throws where the memory sink used to hand back an empty table.
+  /** This JVM's stream root: every checkpoint, parquet sink output,
+    * ordered-landing scratch dir and q72 Derby shard lives under it. It
+    * sits in Spark's local dir (`spark.local.dir` / `SPARK_LOCAL_DIRS`),
+    * and Spark's shutdown hook deletes it recursively at exit. A
+    * deployment that wants tmpfs checkpoints points `spark.local.dir` at
+    * one.
     */
-  private def fileSink(df: DataFrame, tag: String): DataFrame = {
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get(sinkRoot), tag).toString
-    val q = df.writeStream.format("parquet").option("path", out)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.read.schema(df.schema).parquet(out)
-  }
+  private lazy val streamRoot: String = GraftSparkAccess.localTempDir("graft-stream")
 
-  /** Update-mode twin of [[fileSink]]: the file sink is append-only, so
-    * update-mode emissions drain through foreachBatch, appending each
-    * micro-batch's rows. Like the memory sink's update mode, the
-    * readback holds EVERY emission (task replays can only re-append —
-    * callers already reduce per key with max/latest-wins, which is what
-    * makes the update-mode gates replay-tolerant in the first place).
+  /** Process everything the query's sources hold — including the
+    * trailing no-data batch that applies the last watermark — then stop.
     */
-  private def fileSinkUpdate[T](ds: Dataset[T], tag: String): DataFrame = {
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get(sinkRoot), tag).toString
-    val df = ds.toDF()
-    val q = df.writeStream.outputMode("update")
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        b.write.mode("append").parquet(out)
-      }.start()
-    q.processAllAvailable()
-    q.stop()
-    // Explicit schema: an all-late-data run leaves the dir empty, and
-    // inference on an empty dir throws where this should read 0 rows.
-    ds.sparkSession.read.schema(df.schema).parquet(out)
+  private def runToEnd(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Run `df` to the end of its input and hand the sink back as a
+    * DataFrame. The sink follows from the output mode:
+    *  - complete: memory sink. Its output is bounded by the group count.
+    *  - append: the checkpointed parquet file sink
+    *    ([[SocialStream.toParquetSink]] at `writeStream`'s default
+    *    trigger). The readback honours its _spark_metadata commit log, so
+    *    it reads exactly the committed set.
+    *  - update: foreachBatch appends each micro-batch's rows to parquet
+    *    (the file sink is append-only). The readback holds EVERY emission;
+    *    callers reduce per key with max / latest-wins, which also absorbs
+    *    task replays.
+    * Row-emitting outputs are data-sized, so they stay on disk and
+    * distributed instead of in driver heap: the r14 sf10 probe OOM'd an
+    * 8 GiB driver serializing q68's 20M-row memory-sink readback. Parquet
+    * readbacks pass the plan's schema, because a zero-row stream writes
+    * no part file and schema inference on that throws where it should
+    * read 0 rows.
+    */
+  private def drain(df: DataFrame, mode: String): DataFrame = {
+    val name = "drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val out = s"$streamRoot/${name}_out"
+    runToEnd(mode match {
+      case "complete" =>
+        df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+      case "append" =>
+        SocialStream.toParquetSink(df, out, s"$streamRoot/$name", Trigger.ProcessingTime(0))
+      case "update" =>
+        df.writeStream.queryName(name).outputMode(mode)
+          .foreachBatch { (b: Dataset[Row], _: Long) =>
+            b.write.mode("append").parquet(out)
+          }.start()
+    })
+    if (mode == "complete") df.sparkSession.table(name)
+    else df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
   /** N-file landing with PINNED batch order: `slices(i)` becomes batch
@@ -141,13 +140,13 @@ object StreamQueries {
                              slices: Seq[() => DataFrame]): String =
     FixtureCache.dir(key, sfDir) { dir =>
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = Files.createTempDirectory("graft_ord_").toString
+        val tmp = Files.createTempDirectory(Paths.get(streamRoot), "ord_").toString
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .find(f => f.getName.startsWith("part-") &&
             f.getName.endsWith(".parquet"))
           .getOrElse(sys.error(s"no parquet part in $tmp"))
-        val dst = java.nio.file.Paths.get(dir, name)
+        val dst = Paths.get(dir, name)
         Files.move(part.toPath, dst): Unit
         if (!dst.toFile.setLastModified(mtime))
           sys.error(s"cannot set mtime on $dst")
@@ -158,117 +157,50 @@ object StreamQueries {
       }
     }
 
-  /** Memory-backed checkpoint root shared by every stream query in this
-    * JVM. A streaming query's fixed cost is dominated by checkpoint
-    * durability IO — offset-log, commit-log, and state-store files are
-    * all fsync'd per micro-batch — and for these gate/bench queries the
-    * checkpoint is pure scaffolding (each invocation starts fresh; the
-    * restart path is exercised deliberately in q119's spec with its own
-    * durable dir). tmpfs turns those fsyncs into memory writes. One root
-    * per process, one subdir per query name (names are uniq'd per
-    * invocation).
-    */
-  private lazy val ckptRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    val parent = if (base.isDirectory && base.canWrite) base.toPath
-                 else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    tempRootReapedOnExit(parent, "graft_stream_ckpt_")
-  }
-
-  /** Disk-backed root for data-sized SINK output (see [[fileSink]]) —
-    * deliberately NOT tmpfs. One root per process, one subdir per sink
-    * invocation; nothing inside is needed once the caller's readback
-    * scan is consumed, and the whole tree is reaped at JVM exit.
-    */
-  private lazy val sinkRoot: String = tempRootReapedOnExit(
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-    "graft_stream_sink_")
-
-  /** Temp root with a RECURSIVE-delete shutdown hook. `deleteOnExit()`
-    * is a trap here: it only removes EMPTY directories, so every prior
-    * session's checkpoint tree survived JVM exit and accumulated in
-    * tmpfs (18 GB of stale roots found in /dev/shm at round-15 start).
-    */
-  private def tempRootReapedOnExit(parent: java.nio.file.Path,
-                                   prefix: String): String = {
-    val d = Files.createTempDirectory(parent, prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(d.toFile)
-    }))
-    d.toString
-  }
-
   /** Clone of `s` (shared SparkContext, own SQLConf) with shuffle
     * partitions sized for the stream's keyspace, POOLED per parent
     * session: stream queries are invoked 4× per bench (warmup + three
     * timed passes) and concurrently by Verify's thread pool, and the
     * per-invocation session construction (SessionState, catalog,
     * listener registration) is pure fixed cost — one clone serves them
-    * all. Concurrent queries coexist in one session (uniq'd sink/query
-    * names). Stateful operators keep one state-store partition per
-    * shuffle partition PER micro-batch — at the bench's 32-core conf
-    * that is 32 tasks + 32 state files per batch for keyspaces of a few
-    * hundred keys. Production sizing goes the same way, just up: state
-    * partitions ~ keyspace/executor-memory, set independently of the
-    * batch side's shuffle width.
+    * all. Concurrent queries coexist in one session (each drain names
+    * its own query). Its checkpoint root is [[streamRoot]]: a query gets
+    * `streamRoot/<query name, else a UUID>`.
+    *
+    * Stateful operators keep one state-store partition per shuffle
+    * partition PER micro-batch, so the state width comes from the sizing
+    * rule (graft.streaming.StateSizing: partitions ~ keyspace·bytes / per-
+    * task budget, independent of batch shuffle width). Most gate
+    * fixtures' keyspaces are hundreds of keys → the 4-partition floor,
+    * the measured optimum of the r11 width A/B. Queries whose state is
+    * DATA-sized (q68's per-event dedup keys) pass their actual keyspace
+    * estimate, so the width grows with the data: at the gate SFs the
+    * estimate still lands on the floor, at the sf10 probe q68's ~20M keys
+    * derive 11 partitions. Pooled per (parent, width): same-width queries
+    * share one clone. The state store is Spark's HDFS-backed default:
+    * RocksDB measured strictly slower at these state sizes (NOTES round
+    * 11: q68 2.7 s vs 2.1 s at sf0.1, 20.1 s vs 8.1 s at sf1). Results do
+    * not depend on the width or the provider — SocialStreamSpec pins that
+    * at widths 4 and 32 under both providers.
     */
   private val sessionPool =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), SparkSession]()
   private def streamSession(s: SparkSession,
                             estimatedKeys: Long = 1024): SparkSession = {
-    // State width from the sizing rule (graft.streaming.StateSizing:
-    // partitions ~ keyspace·bytes / per-task budget, independent of
-    // batch shuffle width). Most gate fixtures' keyspaces are hundreds
-    // of keys → the 4-partition floor, the measured optimum of the
-    // r11 width A/B — every extra shuffle partition is one more
-    // state file fsync'd PER micro-batch per stateful operator. Queries
-    // whose state is DATA-sized (q68's per-event dedup keys) pass their
-    // actual keyspace estimate, so the width grows with the data: at
-    // the gate SFs the estimate still lands on the floor (zero change),
-    // at the sf10 probe q68's ~20M keys derive 11 partitions instead of
-    // riding the floor with 2.5 GB of state (the r14 probe survived
-    // that only because the driver got 24 g). Pooled per (parent,
-    // width): same-width queries share one clone.
-    // SPARK_GRAFT_STREAM_PARTS overrides for the width-robustness
-    // leg (VERDICT r10 item 8) — catches stream plans whose
-    // constants only look good at toy width. The driver never sets
-    // it.
-    val stateParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt)
-      .getOrElse(graft.streaming.StateSizing.statePartitionsLogged(
-        estimatedKeys = estimatedKeys,
-        batchShuffleWidth = s.sessionState.conf.numShufflePartitions))
+    val stateParts = graft.streaming.StateSizing.statePartitionsLogged(
+      estimatedKeys = estimatedKeys,
+      batchShuffleWidth = s.sessionState.conf.numShufflePartitions)
     sessionPool.computeIfAbsent((s, stateParts),
       new java.util.function.Function[(SparkSession, Int), SparkSession] {
         override def apply(k: (SparkSession, Int)): SparkSession = {
-          val base = k._1
-          val s2 = base.newSession()
+          val s2 = k._1.newSession()
           s2.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
           // AQE never applies inside micro-batch plans, and the session's
           // OTHER queries (memory-sink readbacks, 1-row sentinels) are
           // tiny — AQE's per-action query-stage materialization is pure
           // added latency (~0.15 s each, measured in Scratch2).
           s2.conf.set("spark.sql.adaptive.enabled", "false")
-          s2.conf.set("spark.sql.streaming.checkpointLocation", ckptRoot)
-          // State-store provider knob (A/B harness; unset = Spark's
-          // HDFS-backed default). RocksDB is the 100 TB answer when state
-          // outgrows executor heap (changelog checkpointing, no full
-          // in-memory map); measured HERE (hundreds of keys to ~2M dedup
-          // keys, tmpfs checkpoints) it is strictly slower — see NOTES
-          // round-11 (q68: 2.7 s vs 2.1 s at sf0.1, 20.1 s vs 8.1 s at
-          // sf1) — so the default stays HDFS-backed for the bench suite.
-          sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach {
-            case "rocksdb" => s2.conf.set(
-              "spark.sql.streaming.stateStore.providerClass",
-              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-            case other => s2.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", other)
-          }
+          s2.conf.set("spark.sql.streaming.checkpointLocation", streamRoot)
           // NOTE deliberately NOT disabling noDataMicroBatches: a
           // watermark computed from batch N's data only takes effect in
           // batch N+1, so the trailing no-data batch is where
@@ -337,7 +269,7 @@ object StreamQueries {
       // q66/q67/q111; here the operator under test is the KMV state, and
       // the JSON parse of the full events table was the invocation's
       // fixed cost at sf0.1.
-      val src = parquetLanding("events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
+      val src = landing("parquet", "events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
       val ss = streamSession(s)
       val stream = SocialStream
         .readParquetStream(ss, src, eventsFlatSchema, maxFilesPerTrigger = 1)
@@ -347,12 +279,7 @@ object StreamQueries {
       val agg = stream.withWatermark("ts", Horizon)
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(KmvAgg.kmv(128)(col("h")).as("sk"))
-      val sink = uniq("q173_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(agg, "complete")
         .select(unix_seconds(col("window.start")).as("bucket_start"),
           col("event_type"),
           size(col("sk")).cast("long").as("k_filled"),
@@ -373,7 +300,7 @@ object StreamQueries {
       import graft.functions.TopKAgg
       // Compacted landing (see q173) — the state-store top-k is the
       // operator under test, not the JSON drop parse.
-      val src = parquetLanding("events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
+      val src = landing("parquet", "events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
       val ss = streamSession(s)
       val stream = SocialStream
         .readParquetStream(ss, src, eventsFlatSchema, maxFilesPerTrigger = 1)
@@ -381,12 +308,7 @@ object StreamQueries {
       val agg = stream.withWatermark("ts", Horizon)
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(TopKAgg.topK(3, col("value_cents"), col("event_id")).as("top"))
-      val sink = uniq("q184_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(agg, "complete")
         .select(unix_seconds(col("window.start")).as("bucket_start"),
           col("event_type"), posexplode(col("top")))
         .select(col("bucket_start"), col("event_type"),
@@ -396,24 +318,19 @@ object StreamQueries {
     }),
 
     // §2.10 tumbling-window counts: landing JSON → file-source micro-batches
-    // → window(15 min) + watermark agg → complete-mode memory sink.
+    // → window(15 min) + watermark agg → complete-mode drain.
     // Two files → two genuine micro-batches: multi-batch semantics at the
     // minimum lifecycle cost (each extra batch is pure fixed overhead ×3
     // bench passes).
     "q66_stream_tumbling" -> ((s, dir) => {
-      val src = landing("events_x2", dir, eventsFlat(s, dir), 2, "event_id")
+      val src = landing("json", "events_x2", dir, eventsFlat(s, dir), 2, "event_id")
       val ss = streamSession(s)
       val stream = SocialStream
         .readJsonStream(ss, src, eventsFlatSchema, maxFilesPerTrigger = 1)
         .withColumn("ts", timestamp_micros(col("ts_us")))
       val agg = SocialStream.tumblingCounts(stream, "ts", Seq("event_type"),
         windowLen = "15 minutes", watermark = Horizon)
-      val sink = uniq("q66_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(agg, "complete")
         .select(unix_seconds(col("window_start")).as("bucket_start"),
           col("event_type"), col("n"))
         .orderBy(col("bucket_start"), col("event_type"))
@@ -425,19 +342,14 @@ object StreamQueries {
     // rolling live-dashboard shape. Complete-mode rollup is batch-split-
     // invariant; the oracle replays the k=0..3 replication arithmetic.
     "q236_stream_sliding" -> ((s, dir) => {
-      val src = parquetLanding("events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
+      val src = landing("parquet", "events_x2_pq", dir, eventsFlat(s, dir), 2, "event_id")
       val ss = streamSession(s)
       val stream = SocialStream
         .readParquetStream(ss, src, eventsFlatSchema, maxFilesPerTrigger = 1)
         .withColumn("ts", timestamp_micros(col("ts_us")))
       val agg = SocialStream.slidingCounts(stream, "ts", Seq("event_type"),
         windowLen = "1 day", slide = "6 hours", watermark = Horizon)
-      val sink = uniq("q236_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(agg, "complete")
         .select(unix_seconds(col("window_start")).as("w_start"),
           col("event_type"), col("n"))
         .orderBy(col("w_start"), col("event_type"))
@@ -483,12 +395,7 @@ object StreamQueries {
       val agg = stream.withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("sum_cents"))
-      val sink = uniq("q237_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(agg, "append")
         .filter(col("event_type") =!= "__sentinel")
         .select(unix_seconds(col("window.start")).as("w_start"),
           col("event_type"), col("n"), col("sum_cents"))
@@ -511,7 +418,7 @@ object StreamQueries {
     "q244_stream_corpus_ingest" -> ((s, dir) => {
       import graft.queries.{TextQueries => TQ}
       val ss = streamSession(s)
-      val src = parquetLanding("docs_x2_pq", dir,
+      val src = landing("parquet", "docs_x2_pq", dir,
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("text")), 2, "doc_id")
       val docsSchema = StructType(Seq(
@@ -532,7 +439,7 @@ object StreamQueries {
       val clean = graft.dedup.Dedup.overlapCount(stream, "text", 3, benchHashes)
         .filter(col("n_overlap") < 2)
         .dropDuplicates("lang", "text")
-      fileSink(clean.select(col("lang"), col("text")), "q244_sink_")
+      drain(clean.select(col("lang"), col("text")), "append")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " ")).cast("long")).as("n_toks"))
@@ -541,13 +448,13 @@ object StreamQueries {
 
     // §2.10 stateful latest-wins (flatMapGroupsWithState): the streaming
     // form of the 2-day re-crawl overwriting engagement counts
-    // (`reddit/lambda_function_aggregate.py:59-71`). Update-mode memory
-    // sink accumulates every state change; the newest emission per key is
+    // (`reddit/lambda_function_aggregate.py:59-71`). The update-mode
+    // drain keeps every state change; the newest emission per key is
     // the final state and is batch-split-invariant.
     "q67_stream_latest" -> ((s, dir) => {
       val ss = streamSession(s)
       import ss.implicits._
-      val src = landing("events_x2", dir, eventsFlat(s, dir), 2, "event_id")
+      val src = landing("json", "events_x2", dir, eventsFlat(s, dir), 2, "event_id")
       val stream = SocialStream
         .readJsonStream(ss, src, eventsFlatSchema, maxFilesPerTrigger = 1)
         .select(col("event_type").as("id"),
@@ -555,12 +462,7 @@ object StreamQueries {
           col("value_cents").cast("int").as("score"))
         .as[SocialStream.Engagement]
       val updates = SocialStream.latestWinsState(stream, watermark = Horizon)
-      val sink = uniq("q67_sink_")
-      val q = updates.writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(updates.toDF(), "update")
         .groupBy(col("id"))
         .agg(max(struct(col("ts"), col("score"))).as("best"))
         .select(col("id"), unix_micros(col("best.ts")).as("ts_us"),
@@ -574,7 +476,7 @@ object StreamQueries {
     // `glue/twitter_glue.py:76`).
     "q68_stream_dedup" -> ((s, dir) => {
       val flat = eventsFlat(s, dir)
-      val dir1 = parquetLanding("q68_landing_pq", dir, flat.unionAll(flat), 2, "event_id")
+      val dir1 = landing("parquet", "q68_landing_pq", dir, flat.unionAll(flat), 2, "event_id")
       // DATA-sized state: one dedup key per distinct event_id ⇒ keyspace
       // = the events row count. Gate SFs derive the 4-partition floor
       // (unchanged); the sf10 probe's ~20M keys derive a width that
@@ -585,7 +487,7 @@ object StreamQueries {
         .withColumn("ts", timestamp_micros(col("ts_us")))
       val deduped = SocialStream.dedupWithinWatermark(stream, "ts",
         Seq("event_id"), watermark = Horizon)
-      fileSink(deduped, "q68_sink_")
+      drain(deduped, "append")
         .select(col("event_id"), col("ts_us"), col("event_type"),
           col("value_cents"))
         .orderBy(col("event_id"))
@@ -620,7 +522,7 @@ object StreamQueries {
         .withColumn("ts", timestamp_micros(col("ts_us")))
       val sessions = SocialStream.sessionCounts(stream, "ts",
         Seq("user_id"), gap = "30 minutes", watermark = "0 seconds")
-      fileSink(sessions, "q104_sink_")
+      drain(sessions, "append")
         .filter(col("user_id") =!= -1L)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
@@ -634,7 +536,7 @@ object StreamQueries {
     // Complete-mode rollup per dim attribute is batch-split-invariant.
     "q118_stream_static" -> ((s, dir) => {
       val ss = streamSession(s)
-      val src = parquetLanding("events_uid_pq", dir,
+      val src = landing("parquet", "events_uid_pq", dir,
         Tables.load(s, dir, "events").select(
           col("event_id"), col("user_id"),
           round(col("value") * 100, 0).cast("long").as("value_cents")),
@@ -651,12 +553,7 @@ object StreamQueries {
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("sum_cents"))
-      val sink = uniq("q118_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink).orderBy(col("n_name"))
+      drain(agg, "complete").orderBy(col("n_name"))
     }),
 
     // §2.10 + decontamination composed: streaming LEFT ANTI join against
@@ -668,7 +565,7 @@ object StreamQueries {
     // construction. Survivors roll up complete-mode per type.
     "q157_stream_decontam" -> ((s, dir) => {
       val ss = streamSession(s)
-      val src = parquetLanding("events_uid_pq", dir,
+      val src = landing("parquet", "events_uid_pq", dir,
         Tables.load(s, dir, "events").select(
           col("event_id"), col("user_id"),
           round(col("value") * 100, 0).cast("long").as("value_cents")),
@@ -690,12 +587,7 @@ object StreamQueries {
         .withColumn("bucket", col("user_id") % 10)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("sum_cents"))
-      val sink = uniq("q157_sink_")
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink).orderBy(col("bucket"))
+      drain(agg, "complete").orderBy(col("bucket"))
     }),
 
     // Schema-drift quarantine ON THE STREAM: the landing writer drops a
@@ -724,12 +616,7 @@ object StreamQueries {
       val parsed = graft.sources.DriftIngest.readQuarantinedStream(
         ss, src, schema, maxFilesPerTrigger = 1)
       val summary = graft.sources.DriftIngest.quarantineSummary(parsed, "event_type")
-      val sink = uniq("q111_sink_")
-      val q = summary.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink).orderBy(col("bucket"))
+      drain(summary, "complete").orderBy(col("bucket"))
     }),
 
     // §2.10 stream-stream interval join: views and clicks land as two
@@ -740,7 +627,7 @@ object StreamQueries {
     "q98_stream_join" -> ((s, dir) => {
       val ss = streamSession(s)
       def side(t: String, key: String) = {
-        val src = parquetLanding(key + "_pq", dir,
+        val src = landing("parquet", key + "_pq", dir,
           Tables.load(s, dir, "events").filter(col("event_type") === t)
             .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
               col("user_id")),
@@ -759,7 +646,7 @@ object StreamQueries {
       val joined = SocialStream.intervalJoin(views, clicks,
         "v_user", "c_user", "v_ts", "c_ts",
         maxGap = "2 hours", watermark = Horizon)
-      fileSink(joined, "q98_sink_")
+      drain(joined, "append")
         .select(col("v_id"), col("c_id"), col("v_user").as("user_id"))
         .orderBy(col("v_id"), col("c_id"))
     }),
@@ -803,7 +690,7 @@ object StreamQueries {
         "v_user", "c_user", "v_ts", "c_ts",
         maxGap = "2 hours", watermark = "0 seconds",
         joinType = "left_outer")
-      fileSink(joined, "q126_sink_")
+      drain(joined, "append")
         .filter(col("v_user") =!= -1L)
         .select(col("v_id"), col("c_id"), col("v_user").as("user_id"))
         .orderBy(col("v_id"), col("c_id"))
@@ -861,14 +748,8 @@ object StreamQueries {
         .readParquetStream(ss, src, dailySchema, maxFilesPerTrigger = 1)
         .select(col("event_type").as("key"), col("day"), col("v"))
         .as[SocialStream.DailyVal]
-      val sink = uniq("q264_sink_")
       val h = mu.map { case (k, m) => k -> m / 4 }
-      val q = SocialStream.cusumState(stream, mu, h)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sink)
+      drain(SocialStream.cusumState(stream, mu, h).toDF(), "update")
         .groupBy(col("key"))
         .agg(max(struct(col("last_day"), col("days_seen"), col("n_alarms"),
           col("max_cusum"))).as("f"))
@@ -908,8 +789,7 @@ object StreamQueries {
       val stream = SocialStream
         .readParquetStream(ss, src, capSchema, maxFilesPerTrigger = 1)
         .as[SocialStream.CapEvent]
-      fileSinkUpdate(SocialStream.contributionCapState(stream, 10),
-        "q293_sink_")
+      drain(SocialStream.contributionCapState(stream, 10).toDF(), "update")
         .groupBy(col("user"))
         .agg(max(struct(col("nSeen"), col("nKept"), col("sumKeptCents")))
           .as("f"))
@@ -925,7 +805,7 @@ object StreamQueries {
 
     "q72_stream_upsert" -> ((s, dir) => {
       val flat = eventsFlat(s, dir).filter(col("event_id") % 7 === 0)
-      val src = parquetLanding("q72_landing_pq", dir, flat.unionAll(flat), 2, "event_id")
+      val src = landing("parquet", "q72_landing_pq", dir, flat.unionAll(flat), 2, "event_id")
       // SHARDED serving store (r16, the r15 weak item): one embedded Derby
       // database per key shard instead of one store for everything. A
       // single embedded engine serializes every MERGE through the
@@ -936,10 +816,10 @@ object StreamQueries {
       // re-MERGE into the same store) and the readback is a UNION of one
       // scan per shard — the 100 TB shape, where the serving layer is
       // partitioned by key range and each partition sees one writer.
-      // FILE-backed (temp dir per invocation): the in-memory storage
-      // factory has a known race class under concurrent batched MERGE
-      // (baseCC/_rowMakingMethod NPEs, seen at sf0.1) that the
-      // directory-backed store does not — same mitigation
+      // FILE-backed (a dir per invocation under the stream root): the
+      // in-memory storage factory has a known race class under concurrent
+      // batched MERGE (baseCC/_rowMakingMethod NPEs, seen at sf0.1) that
+      // the directory-backed store does not — same mitigation
       // JdbcUpsertSinkSpec documents. Left alive for the JVM's lifetime
       // because the returned frame reads it lazily.
       // Shard count FROM DATA (the q68 StateSizing pattern): ~75k merged
@@ -953,8 +833,7 @@ object StreamQueries {
       // — spec-pinned in JdbcUpsertSinkSpec (r17).
       val mergeRows = eventsRowCount(s, dir) / 7 * 2
       val nShards = math.max(1L, math.min(16L, (mergeRows + 74999) / 75000)).toInt
-      val dbRoot = Files.createTempDirectory(
-        java.nio.file.Paths.get(ckptRoot), "q72db_")
+      val dbRoot = Files.createTempDirectory(Paths.get(streamRoot), "q72db_")
       val urls: IndexedSeq[String] = (0 until nShards).map(i =>
         "jdbc:derby:" + dbRoot.resolve(s"shard$i").toAbsolutePath + ";create=true")
       val table = "events_serving"
@@ -967,19 +846,14 @@ object StreamQueries {
       }
       val stream = SocialStream
         .readParquetStream(streamSession(s), src, eventsFlatSchema, maxFilesPerTrigger = 1)
-      val ckpt = Files.createTempDirectory(
-        java.nio.file.Paths.get(ckptRoot), "q72_ckpt_").toString
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
+      runToEnd(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // 2000-row commit batches: commits are the store's log syncs;
           // 500 (the default) measured 1.7-2.3x slower at sf10.
           JdbcUpsertSink.upsertSharded(batch, nShards, urls(_),
             table, Seq("event_id"), batchSize = 2000)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
       urls.map { url =>
           s.read.format("jdbc")
             .option("url", url)

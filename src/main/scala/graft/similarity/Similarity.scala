@@ -700,8 +700,8 @@ object Similarity {
     adcTopK(rows.repartition(graft.ops.CoreOps.adaptiveWidth(rows)), queries,
       idCol, vecCol, cb, sub, k, maxQueryBatch,
       q => Seq(0 -> adcTable(q, cb, sub)),
-      (codes, tables) =>
-        adcVerify(codes.drop("cell").crossJoin(tables.drop("cell"))))
+      (codes, tables) => adcVerify(codes.drop("cell")
+        .crossJoin(tables.drop("cell").hint("shuffle_replicate_nl"))))
   }
 
   private type Codebook = Array[Array[Array[Long]]]
@@ -1034,12 +1034,12 @@ object Similarity {
     * and one encode pass, with the model broadcast. Returns new
     * postings rows (cell, corpus_id, code) — append them to
     * `stateDir/postings` (or pass straight to [[ivfPqSearchState]]); the
-    * historical vectors are never touched. Parameters must match the
-    * ones the state was written with.
+    * historical vectors are never touched. The cell count comes from the
+    * persisted centroids; `m` and `dim` must match the ones the state was
+    * written with.
     */
   def ivfPqAssignToState(batch: DataFrame, stateDir: String, idCol: String,
-                         vecCol: String, nCells: Int = 16, m: Int = 8,
-                         dim: Int = 64): DataFrame = {
+                         vecCol: String, m: Int = 8, dim: Int = 64): DataFrame = {
     val (cc, cb, sub) = readIvfPqModel(batch.sparkSession, stateDir, m, dim)
     postings(residuals(batch.select(col(idCol).cast("long").as("id"),
       microsVec(vecCol).as("vm")), cc), cb, sub)
@@ -1051,12 +1051,12 @@ object Similarity {
     * frozen model, and candidates meet probers through [[cellSearch]],
     * the shuffle path of [[ivfPqTopK]] — but the corpus side is the m-
     * nibble postings scan, so the plan provably reads batch vectors +
-    * state tables and nothing else (plan-asserted in PlanAuditSpec).
+    * state tables and nothing else (plan-asserted in PlanAuditSpec). The
+    * cell count comes from the persisted centroids.
     */
   def ivfPqSearchState(queries: DataFrame, stateDir: String,
                        extraPostings: Option[DataFrame], idCol: String,
-                       vecCol: String, k: Int, nCells: Int = 16,
-                       nProbe: Int = 4, m: Int = 8,
+                       vecCol: String, k: Int, nProbe: Int = 4, m: Int = 8,
                        dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
     val (cc, cb, sub) = readIvfPqModel(spark, stateDir, m, dim)

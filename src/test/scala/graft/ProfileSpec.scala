@@ -51,11 +51,20 @@ class ProfileSpec extends AnyFunSuite {
   }
 
   test("stream: a stream query's start, its batches with rows and durationMs, and its stop") {
-    val lines = run("stream", "q66_stream_tumbling")
-    assert(lines.exists(_.startsWith("STREAM q66_stream_tumbling start ")), lines.mkString("\n"))
-    val batches = lines.filter(_.matches("""STREAM q66_stream_tumbling batch=\d+ .*rows=\d+ .*durationMs\[.*triggerExecution=\d+.*\]"""))
-    assert(batches.nonEmpty, lines.mkString("\n"))
-    assert(lines.exists(_.startsWith("STREAM q66_stream_tumbling stop ")), lines.mkString("\n"))
-    assert(lines.last.matches("""STREAM q66_stream_tumbling total=.* rows=[1-9]\d*"""), lines.last)
+    // Every stream query. Their micro-batches must really happen: the
+    // fused one-file landings (q104, q126) feed one batch with rows,
+    // every other landing at least two.
+    val oneFile = Set("q104_stream_sessions", "q126_stream_outer_join")
+    val lines = run("stream", graft.queries.StreamQueries.all.keys.toSeq.sorted: _*)
+    val text = lines.mkString("\n")
+    for (name <- graft.queries.StreamQueries.all.keys) {
+      val mine = lines.filter(_.startsWith(s"STREAM $name "))
+      assert(mine.exists(_.startsWith(s"STREAM $name start ")), text)
+      assert(mine.exists(_.startsWith(s"STREAM $name stop ")), text)
+      val batches = mine.filter(_.matches(s"STREAM $name batch=\\d+ .*rows=\\d+ .*durationMs\\[.*triggerExecution=\\d+.*\\]"))
+      val withRows = batches.count(!_.contains(" rows=0 "))
+      assert(withRows >= (if (oneFile(name)) 1 else 2), s"$name: $withRows batches with rows\n$text")
+      assert(mine.last.matches(s"STREAM $name total=.* rows=[1-9]\\d*"), mine.last)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.similarity.Similarity
@@ -272,17 +273,28 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  private def executedPlan(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
+
   test("bruteForceTopK broadcasts a small query set and tiles it at maxQueryBatch = 0") {
     val qs = vecs16.filter(col("vec_id") < 5)
-    def plan(b: Int) = {
-      val df = Similarity.bruteForceTopK(vecs16, qs, "vec_id", "embedding",
-        k = 3, dim = 16, maxQueryBatch = b)
-      df.collect()
-      df.queryExecution.executedPlan.toString
-    }
+    def plan(b: Int) = executedPlan(Similarity.bruteForceTopK(vecs16, qs,
+      "vec_id", "embedding", k = 3, dim = 16, maxQueryBatch = b))
     assert(plan(Similarity.DefaultMaxQueryBatch).contains("BroadcastNestedLoopJoin"))
     val shuffled = plan(0)
     assert(!shuffled.contains("BroadcastNestedLoopJoin"), shuffled)
+  }
+
+  test("pqTopK tiles its ADC tables against the codes at maxQueryBatch = 0") {
+    // Without a join hint Spark's size-based choice broadcasts the small
+    // table side, collecting executor-built tables through the driver.
+    val shuffled = executedPlan(Similarity.pqTopK(vecs16,
+      vecs16.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3, m = 4,
+      dim = 16, maxQueryBatch = 0))
+    assert(!shuffled.contains("BroadcastNestedLoopJoin"), shuffled)
+    assert(shuffled.contains("CartesianProduct"), shuffled)
   }
 
   test("IVF+PQ state: persisted search == distributed path; ingest == build encode") {
@@ -303,12 +315,11 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.writeIvfPqState(df, "vec_id", "embedding", stateDir,
       nCells = 4, m = 4, dim = dim)
     assert(sorted(Similarity.ivfPqSearchState(qs, stateDir, None,
-        "vec_id", "embedding", k = 6, nCells = 4, nProbe = 2, m = 4,
-        dim = dim)) ==
+        "vec_id", "embedding", k = 6, nProbe = 2, m = 4, dim = dim)) ==
       sorted(Similarity.ivfPqTopK(df, qs, "vec_id", "embedding",
         k = 6, nCells = 4, nProbe = 2, m = 4, dim = dim, maxQueryBatch = 0)))
     val re = Similarity.ivfPqAssignToState(df, stateDir, "vec_id",
-        "embedding", nCells = 4, m = 4, dim = dim)
+        "embedding", m = 4, dim = dim)
       .orderBy("corpus_id").collect().map(_.toSeq).toSeq
     val persisted = spark.read.parquet(stateDir + "/postings")
       .orderBy("corpus_id").collect().map(_.toSeq).toSeq

@@ -400,4 +400,62 @@ class SocialStreamSpec extends AnyFunSuite {
       assert(windows(us("2024-01-12 00:00:00") / 1000000L) == 1L)
     } finally q.stop()
   }
+
+  test("dedup + interval join drain to the same rows at state widths 4 and 32, HDFS and RocksDB stores") {
+    // State width and state-store provider are sizing choices, never
+    // semantics: the same two-file landings drain to the same rows at
+    // every width (frozen into the checkpoint at first run) and in either
+    // store. Views are re-landed (ids 15-24 in both files) and must be
+    // deduped before they join the clicks within 2 hours.
+    import org.apache.spark.sql.types._
+    val root = org.apache.spark.GraftSparkAccess.localTempDir("graft-state-invariance")
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("user", LongType), StructField("sec", LongType)))
+    val t0 = 1704067200L // 2024-01-01: event times clear the epoch-floored watermark
+    val views = (0L until 40L).map(i => (i, i % 5, t0 + i * 600))
+    val clicks = (100L until 140L).map(i => (i, i % 7 % 5, t0 + (i - 100) * 600 + 1500))
+    def land(side: String, files: Seq[Seq[(Long, Long, Long)]]): Unit =
+      files.zipWithIndex.foreach { case (rows, i) =>
+        val f = new java.io.File(s"$root/$side/part$i.json")
+        f.getParentFile.mkdirs()
+        val w = new java.io.PrintWriter(f)
+        rows.foreach { case (id, u, t) => w.println(s"""{"id":$id,"user":$u,"sec":$t}""") }
+        w.close()
+        assert(f.setLastModified(System.currentTimeMillis() - 60000L * (2 - i)))
+      }
+    land("views", Seq(views.take(25), views.drop(15)))
+    land("clicks", Seq(clicks.take(20), clicks.drop(20)))
+    val expected = (for ((v, vu, vt) <- views; (c, cu, ct) <- clicks
+                         if vu == cu && ct >= vt && ct <= vt + 7200) yield (v, c)).sorted
+    val provider =
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    def drain(width: Int, rocksdb: Boolean): Seq[(Long, Long)] = {
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+      if (rocksdb) ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+      def side(name: String, p: String) =
+        SocialStream.readJsonStream(ss, s"$root/$name", schema, maxFilesPerTrigger = 1)
+          .select(col("id").as(s"${p}_id"), col("user").as(s"${p}_user"),
+            timestamp_seconds(col("sec")).as(s"${p}_ts"))
+      val deduped = SocialStream.dedupWithinWatermark(side("views", "v"), "v_ts",
+        Seq("v_id"), watermark = "36500 days")
+      val joined = SocialStream.intervalJoin(deduped, side("clicks", "c"),
+        "v_user", "c_user", "v_ts", "c_ts", maxGap = "2 hours", watermark = "36500 days")
+      val name = s"invariance_${width}_${if (rocksdb) "rocksdb" else "hdfs"}"
+      val ckpt = s"$root/ckpt_$name"
+      val q = joined.writeStream.format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 2, s"$name: one batch only")
+      // the setting took: one state partition dir per shuffle partition,
+      // and the provider is recorded in the first batch's offset metadata
+      assert(new java.io.File(s"$ckpt/state/0").list().count(_.forall(_.isDigit)) == width)
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$ckpt/offsets/0"))
+        .contains(provider) == rocksdb)
+      ss.table(name).select("v_id", "c_id").as[(Long, Long)].collect().sorted.toSeq
+    }
+    assert(expected.size > 40)
+    for (width <- Seq(4, 32); rocksdb <- Seq(false, true))
+      assert(drain(width, rocksdb) == expected, s"width $width rocksdb $rocksdb")
+  }
 }
