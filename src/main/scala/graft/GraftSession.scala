@@ -20,6 +20,10 @@ object GraftSession {
   def apply(cpus: Int = defaultCpus, taskMaxFailures: Int = 1): SparkSession = {
     val master =
       if (taskMaxFailures > 1) s"local[$cpus, $taskMaxFailures]" else s"local[$cpus]"
+    // The warehouse dir exists before the SparkContext (and so its local
+    // dir) does; Spark's shutdown hook still deletes it at JVM exit.
+    val warehouse = Files.createTempDirectory("graft-warehouse").toString
+    org.apache.spark.GraftSparkAccess.deleteAtExit(warehouse)
     val spark = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -43,8 +47,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

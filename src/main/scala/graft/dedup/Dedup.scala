@@ -94,15 +94,6 @@ object Dedup {
     aggregate(slice(sig, lit(from + 1), lit(len)), lit(0L),
       (acc, v) => (acc * lit(1000003L) + v) % lit(P))
 
-  /** MinHash + LSH banded near-dup candidate pairs.
-    *
-    * Signature rows are exploded into `bands` (band, bandHash) keys; docs
-    * sharing a band bucket become candidate pairs (self-join on the long
-    * band key — a hash shuffle on band values, never n²). Pairs are then
-    * verified with exact shingle-set Jaccard and filtered by `threshold`.
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, distinct.
-    */
   // ------------------------------------------------------- kernel helpers
 
   /** Scala-side charHash, identical arithmetic to [[charHash]]. */
@@ -113,14 +104,6 @@ object Dedup {
     acc
   }
 
-  /** Per-partition MinHash banding kernel: (id, text) → `bands` rows of
-    * (band, bh, id, sh). Same mod-prime arithmetic as the expression forms,
-    * but as a tight JVM loop — higher-order column functions evaluate
-    * interpreted (outside codegen) at ~100× the cost, which at 100 TB is the
-    * difference between 1 and 100 core-hours per billion docs. The input is
-    * repartitioned to the session default parallelism: small inputs arrive
-    * as one parquet split, and the exchange doubles as an optimizer barrier.
-    */
   /** Distinct shingle hashes of one doc's token stream (shared by the
     * banding and set kernels — identical arithmetic to [[shingleHashes]]).
     */
@@ -206,7 +189,10 @@ object Dedup {
 
   /** The mapPartitions form of [[minhashBands]] — retained as the
     * encoder-based reference implementation the parity specs pin the
-    * native expression against.
+    * native expression against: (id, text) → `bands` rows of (band, bh,
+    * id), the same mod-prime arithmetic as a tight JVM loop. The input is
+    * repartitioned to the session default parallelism (small inputs arrive
+    * as one parquet split).
     */
   def minhashBandsKernel(df: DataFrame, idCol: String, textCol: String,
                          shingleK: Int, numHashes: Int, bands: Int): DataFrame = {
@@ -287,19 +273,6 @@ object Dedup {
         "minhash_band_keys_from_hashes", col("sh"), lit(numHashes), lit(bands))))
       .select(col("pos").as("band"), col("col").as("bh"), col("id"))
 
-  /** Append an exact benchmark-overlap count per row, STATELESSLY: the
-    * bench shingle set rides a broadcast (a bounded model artifact, the
-    * same class as a centroid table — fingerprints only, no payload),
-    * and each row's distinct k-shingles are counted against it inside
-    * the scan. This is the streaming-safe decontamination form: no
-    * per-doc aggregation, so it composes with other stateful operators
-    * (Spark allows only restricted stateful chains per query).
-    *
-    * The fingerprints are sorted ONCE on the driver and probed with
-    * binary search per shingle — the earlier form shipped a raw array
-    * and rebuilt a hash Set per task (per micro-batch × partition in
-    * streaming), driver-bounded work repeated executor-side forever.
-    */
   /** Content-equality key for the overlap-broadcast intern table. */
   private final class LongArrayKey(val a: Array[Long]) {
     override val hashCode: Int = java.util.Arrays.hashCode(a)
@@ -313,6 +286,19 @@ object Dedup {
       org.apache.spark.broadcast.Broadcast[Array[Long]]]()
   private var overlapBroadcastsCtx: org.apache.spark.SparkContext = null
 
+  /** Append an exact benchmark-overlap count per row, STATELESSLY: the
+    * bench shingle set rides a broadcast (a bounded model artifact, the
+    * same class as a centroid table — fingerprints only, no payload),
+    * and each row's distinct k-shingles are counted against it inside
+    * the scan. This is the streaming-safe decontamination form: no
+    * per-doc aggregation, so it composes with other stateful operators
+    * (Spark allows only restricted stateful chains per query).
+    *
+    * The fingerprints are sorted ONCE on the driver and probed with
+    * binary search per shingle — the earlier form shipped a raw array
+    * and rebuilt a hash Set per task (per micro-batch × partition in
+    * streaming), driver-bounded work repeated executor-side forever.
+    */
   def overlapCount(df: DataFrame, textCol: String, shingleK: Int,
                    bench: Array[Long]): DataFrame = {
     val sorted = bench.clone()
@@ -367,275 +353,39 @@ object Dedup {
     }(enc)
   }
 
-  // ----------------------------------------------- skew-safe bucket pairs
-
-  /** The replicated sides of a tiled bucket self-join (exposed for the
-    * hot-bucket bound spec; use [[bucketedPairs]]). Rows of each bucket are
-    * hashed into T = ceil(n/cap) tiles; side A replicates a tile-t row to
-    * tile-pair keys (t, t..T-1), side B to (0..t, t), so every unordered
-    * in-bucket pair meets in exactly one (tl ≤ tr) group and no group holds
-    * more than ~cap rows per side. Unskewed buckets (n ≤ cap) have T = 1 —
-    * zero replication, the plain bucket join.
+  /** MinHash + LSH banded near-dup pairs: docs sharing a (band, bandHash)
+    * bucket become candidates through the tiled self-join
+    * ([[PairJoin.selfPairs]] — a hash shuffle on band keys, never n²), then
+    * exact shingle-set Jaccard ≥ `threshold` verifies them.
     *
-    * Only the HOT buckets (n > cap) are carried into the tiling machinery:
-    * the census is a partial-aggregated count (the exchange moves
-    * (key, partial-count) rows, not payloads) filtered to oversized buckets,
-    * which in any non-degenerate corpus is empty or tiny — at most n/cap
-    * rows (0.02% of input rows at the default cap) even when EVERY bucket is
-    * hot — so it broadcasts, and cold rows take a map-side "tile 0" stamp.
-    * The previous form sort-merge-joined every row against the full
-    * per-bucket size table, paying two extra sorts per side even on corpora
-    * with no hot bucket at all (the q131/q138 regression of VERDICT r6).
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, distinct.
     */
-  /** Occupancy-adaptive tile count for a hot bucket of `n` rows (null ⇒
-    * cold ⇒ handled by the caller's coalesce). T = ceil(n/cap) quantizes
-    * brutally just past the cap: a bucket at n = 1.2·cap gets T = 2 —
-    * three half-cap² pair groups on three tasks while every other task
-    * holds cold buckets (SKEW_r14 leg B measured 27× max/median task
-    * skew at cap 4096 vs 1.2× at cap 512, identical pair output, 1.5×
-    * faster wall). Hot buckets therefore tile at an EFFECTIVE width:
-    * enough tiles to spread over ~half the shuffle width, floored at
-    * [[minTileRows]] rows per tile (so a small overflow doesn't
-    * over-replicate), never wider than the caller's `cap` (explicit
-    * small caps — specs, adversarial callers — keep their bound). Pure
-    * per-row arithmetic on the broadcast census; the pair OUTPUT is
-    * tile-width-independent by construction, so results are identical
-    * at every cap.
-    */
-  private def adaptiveTiles(n: Column, cap: Int,
-                            spark: org.apache.spark.sql.SparkSession): Column = {
-    val minTiles = math.max(2, spark.sessionState.conf.numShufflePartitions / 2)
-    val capEff = least(lit(cap.toLong),
-      greatest(lit(minTileRows), ceil(n.cast("double") / minTiles)))
-    ceil(n.cast("double") / capEff).cast("int")
-  }
-  private val minTileRows = 256L
-
-  def bucketedPairSides(keyed: DataFrame, keyCols: Seq[String], idCol: String,
-                        cap: Int,
-                        checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
-    val payload = struct(keyed.columns.filterNot(keyCols.contains).map(col): _*)
-    // The banded table feeds THREE consumers (census + both replicated
-    // sides). Sharing the subtree via ReusedExchange is canonicalization-
-    // fragile: column pruning narrows the census's copy (it only needs the
-    // keys), the pruned subtree canonicalizes differently, and the reuse
-    // silently dies — observed live at sf1, where the banding kernel ran
-    // 4× and q31 regressed 7.6× while sf0.1 stayed flat (first()-pinning
-    // the payload does NOT survive, because the pins are themselves pruned
-    // above the census's key-only select). localCheckpoint materializes
-    // the banded rows ONCE — ids and band keys, a few bytes per row, the
-    // same rows the self-join must exchange anyway — and every consumer
-    // scans the materialized partitions. localCheckpoint lives in
-    // executor-local storage (lost with the executor); cluster callers
-    // pass `checkpointDir` for a reliable HDFS/S3 checkpoint instead.
-    // EXPLICIT partition count: without it AQE coalesces this small
-    // exchange (a few MB of banded keys) down to 1-2 partitions before
-    // the checkpoint, the checkpoint freezes that width, and the pair
-    // join — whose OUTPUT is the quadratic part, invisible to AQE's
-    // input-size heuristic — then runs its entire candidate expansion in
-    // 1-2 tasks (measured at sf1: a 21 s two-task stage emitting 12.6M
-    // pairs; 32-way it is ~1.5 s). An explicit count is exempt from AQE
-    // coalescing. Cheap at small SF (tiny tasks), mandatory at scale.
-    val banded0 = keyed.repartition(
-      keyed.sparkSession.sessionState.conf.numShufflePartitions,
-      keyCols.map(col): _*)
-    val keyedP = checkpointDir match {
-      case Some(d) =>
-        graft.ops.Checkpoints.ensureDir(banded0.sparkSession.sparkContext, d)
-        banded0.checkpoint()
-      // LAZY (r17): the hot-bucket census immediately below scans every
-      // partition and materializes the checkpoint in its own job — one
-      // fewer full pass over the banded table per call. Sharing semantics
-      // unchanged: all three consumers read the SAME checkpointed RDD
-      // (the canonicalization-fragility note above concerns ReusedExchange,
-      // not the checkpoint).
-      case None => banded0.localCheckpoint(eager = false)
-    }
-    val hot = broadcast(
-      keyedP.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_n"))
-        .filter(col("_n") > cap))
-    // Left join against the broadcast hot list: cold rows (no match) get
-    // T = 1, tile 0 with zero replication and zero shuffle for the stamp.
-    val tiled = keyedP.join(hot, keyCols, "left")
-      .withColumn("_nt",
-        coalesce(adaptiveTiles(col("_n"), cap, keyed.sparkSession), lit(1)))
-      .withColumn("_tile",
-        when(col("_n").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col(idCol)), col("_nt")).cast("int")))
-    val aSide = tiled
-      .withColumn("_tr", explode(sequence(col("_tile"), col("_nt") - 1)))
-      .select((keyCols.map(col) :+ col("_tile").as("_tl") :+ col("_tr") :+
-        payload.as("a")): _*)
-    val bSide = tiled
-      .withColumn("_tl", explode(sequence(lit(0), col("_tile"))))
-      .select((keyCols.map(col) :+ col("_tl") :+ col("_tile").as("_tr") :+
-        payload.as("b")): _*)
-    (aSide, bSide)
-  }
-
-  /** All unordered pairs of rows sharing a bucket key, skew-tiled.
-    *
-    * A plain self-join on the bucket key lands an n-row hot bucket's n²/2
-    * pairs on one reducer — with degenerate content (boilerplate, empty
-    * docs) that is the scale-killer of every LSH pipeline. Tiling bounds
-    * each join group at ~cap rows per side: the pair count is unchanged
-    * (it is inherent to the bucket), but the work spreads over T·(T+1)/2
-    * independent groups across the cluster, and per-task memory stays flat.
-    *
-    * Returns columns `a`, `b`: structs of the non-key input columns,
-    * normalized so a.<idCol> < b.<idCol>; same-tile groups emit both
-    * orientations, so callers must `distinct()` after projecting (they
-    * already must — a pair can share several bucket keys).
-    */
-  def bucketedPairs(keyed: DataFrame, keyCols: Seq[String], idCol: String,
-                    cap: Int = 4096,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val (aSide, bSide) = bucketedPairSides(keyed, keyCols, idCol, cap, checkpointDir)
-    val (ida, idb) = (col(s"a.$idCol"), col(s"b.$idCol"))
-    aSide.join(bSide, keyCols ++ Seq("_tl", "_tr"))
-      .filter(ida =!= idb)
-      .select(when(ida < idb, col("a")).otherwise(col("b")).as("a"),
-              when(ida < idb, col("b")).otherwise(col("a")).as("b"))
-  }
-
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5, bucketCap: Int = 4096): DataFrame = {
     org.apache.spark.sql.GraftFunctions.register(df.sparkSession)
     // ONE kernel pass (r18): the shingle-hash sets are materialized once
-    // as (id, sh) and every downstream consumer — band keys, set sizes,
-    // both verify join sides — derives from them. The previous shape ran
-    // the O(chars) shingle fold up to FOUR times per query: once inside
-    // minhash_band_keys, once for the banding projection's size(), and
-    // once per un-shared verify join side (profiled at sf0.1: the kernel
-    // passes were 3 of q131's 4 heavy stages). At cluster scale each
-    // re-run is a full corpus text pass; the checkpoint stores hashes
-    // only (the same rows the verify joins must exchange anyway) and the
-    // text never leaves the scan stage.
+    // as (id, sh) and every consumer — band keys, set sizes, both verify
+    // sides — derives from them; the old shape ran the O(chars) shingle
+    // fold up to four times per query (3 of q131's 4 heavy stages at sf0.1).
     val base = shingleBase(df, idCol, textCol, shingleK)
-    // Band rows carry the shingle-SET SIZE alongside the id (one long —
-    // r17): J(A,B) ≥ t forces |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥
-    // max(|A|,|B|), so any surviving pair satisfies
-    // min·10⁴ ≥ (t_bp−1)·max — the PPJoin length filter. Applied BEFORE
-    // the candidate distinct and the set join, it prunes the
-    // length-mismatched bulk of weak-band collisions (measured at sf0.1
-    // on q31's 2-row bands: 616k raw pairs for 255 true pairs) without
-    // touching the result: the bound is necessary for J ≥ t, and the
-    // 1 bp slack keeps the integer filter strictly weaker than the exact
-    // double compare downstream.
+    // Band rows carry the shingle-SET SIZE (r17) for the PPJoin length
+    // filter: J(A,B) ≥ t forces min·10⁴ ≥ (t_bp−1)·max. Applied before the
+    // candidate distinct, it prunes the length-mismatched bulk of weak-band
+    // collisions (sf0.1, q31's 2-row bands: 616k raw pairs for 255 true
+    // ones); the 1 bp slack keeps it strictly weaker than the exact compare.
     val banded = base
       .select(col("id"), size(col("sh")).cast("long").as("sz"),
         posexplode(call_function("minhash_band_keys_from_hashes",
           col("sh"), lit(numHashes), lit(bands))))
       .select(col("pos").as("band"), col("col").as("bh"), col("id"), col("sz"))
     val thrBp = math.round(threshold * 10000)
-    val cand = bucketedPairs(banded, Seq("band", "bh"), "id", bucketCap)
+    val cand = PairJoin.selfPairs(banded, Seq("band", "bh"), "id", bucketCap)
       .filter(lit(10000L) * least(col("a.sz"), col("b.sz")) >=
         lit(thrBp - 1) * greatest(col("a.sz"), col("b.sz")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    val withSets = cand
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    appendJaccard(withSets, "sh_a", "sh_b", "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Candidate (id_new, id_old) pairs from a TWO-SIDED band join, with
-    * hot history buckets explicitly tiled (exposed for the adversarial
-    * skew spec; used by [[incrementalNearDups]]).
-    *
-    * There is no n² blowup on a two-sided join — per-bucket cost is
-    * |batch ∩ bucket| × |history ∩ bucket| — but a degenerate hot bucket
-    * (boilerplate, empty docs: thousands of history rows sharing one
-    * (band, bh)) still lands that whole product on ONE reducer. Rather
-    * than trusting AQE skew-splitting (which keys off byte sizes of an
-    * ids-only exchange and is asserted, not guaranteed), the bound is
-    * structural: history rows of a bucket with n > cap rows hash into
-    * T = ⌈n/cap⌉ tiles; each batch row of that bucket replicates to all
-    * T tiles; the join key becomes (band, bh, tile). Every cross pair
-    * still meets exactly once, no reducer sees more than ~cap history
-    * rows per batch row, and unskewed buckets (T = 1, the overwhelming
-    * case) pay zero replication — the hot-bucket list is a broadcast
-    * census, so cold corpora pay only one partial-aggregated count.
-    */
-  /** The tiled sides of [[incrementalCandidates]], exposed for the
-    * hot-bucket bound spec: (batch side keyed `id_new`, history side
-    * keyed `id_old`), both carrying the (band, bh, _tile) join key.
-    */
-  def incrementalCandidateSides(nb: DataFrame, hb: DataFrame,
-                                bucketCap: Int,
-                                hotPre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    // HOT-bucket census only (VERDICT r6 item 1): a partial-aggregated
-    // count over the history band table — the exchange carries
-    // (band, bh, partial-count) rows, never ids — filtered to buckets
-    // whose size exceeds the cap. In any non-degenerate corpus this is
-    // empty or tiny (bounded by n/cap rows, 0.02% of band rows at the
-    // default cap, even when every bucket is hot), so it broadcasts and
-    // both sides stamp their tile map-side. The previous form computed a
-    // window count over the full sorted history band table and sort-
-    // merge-joined the batch against the full per-bucket size table even
-    // when no bucket was hot — two extra sorts plus a join that cold
-    // corpora paid for nothing (the 2.7x q138 regression).
-    // The census is a SEPARATE partial-agg branch over the banded
-    // history, NOT a shared explicit repartition: map-side combine means
-    // its exchange carries only (band, bh, partial-count) rows, and —
-    // decisive when the batch is small, the common incremental case —
-    // the main join stays free to broadcast the batch side and never
-    // exchange history at all. (Measured both ways on q138: a forced
-    // repartition(band, bh) to share one exchange re-adds a full shuffle
-    // of the history band table that AQE's broadcast plan never needed,
-    // and loses to the extra banding pass this branch costs.)
-    // first(id) pins the id column through the census agg so column
-    // pruning cannot narrow its copy of hb's subtree: when hb ends in an
-    // exchange (the in-plan form's shared RR repartition), a pruned copy
-    // canonicalizes differently and the ReusedExchange dies, re-running
-    // the banding kernel for the census (seen live on q138's plan). When
-    // hb is a parquet state scan the pin merely reads one extra column.
-    // `hotPre` (r14): the persisted-state path maintains the census AS
-    // state (writeNearDupState writes it next to the band table), because
-    // the in-plan census is the one exchange in this path sized by the
-    // STANDING CORPUS, not the batch — tolerable once per nightly batch,
-    // wrong once per streaming micro-batch (the streaming rehearsal
-    // measured 8x full-state census exchanges in 8 triggers). A
-    // state-maintained census is computed when the state changes, so the
-    // read path's exchanges are all batch/candidate-bounded.
-    val hot = broadcast(hotPre
-      .map(_.select(col("band"), col("bh"), col("_n")))
-      .getOrElse(
-        hb.groupBy(col("band"), col("bh"))
-          .agg(count(lit(1)).as("_n"), first(col("id")).as("_pin"))
-          .filter(col("_n") > bucketCap)
-          .select(col("band"), col("bh"), col("_n"))))
-    val nt = adaptiveTiles(col("_n"), bucketCap, nb.sparkSession)
-    val hTiled = hb.join(hot, Seq("band", "bh"), "left")
-      .select(col("band"), col("bh"),
-        when(col("_n").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col("id")), nt)).cast("int").as("_tile"),
-        col("id").as("id_old"))
-    // Batch rows of a hot bucket replicate to all T tiles; everything
-    // else passes through once with tile 0. Batch bands absent from
-    // history are dropped by the main (band, bh, _tile) inner join —
-    // the old eager-pruning join against the size table bought nothing
-    // once that join stopped being required for tiling.
-    val nTiled = nb.join(hot, Seq("band", "bh"), "left")
-      .select(col("band"), col("bh"),
-        explode(sequence(lit(0), coalesce(nt - 1, lit(0)))).as("_tile"),
-        col("id").as("id_new"))
-    (nTiled, hTiled)
-  }
-
-  def incrementalCandidates(nb: DataFrame, hb: DataFrame,
-                            bucketCap: Int = 4096,
-                            hotPre: Option[DataFrame] = None): DataFrame = {
-    val (nTiled, hTiled) = incrementalCandidateSides(nb, hb, bucketCap, hotPre)
-    nTiled.join(hTiled, Seq("band", "bh", "_tile"))
-      // A re-crawled doc whose id already stands in the corpus would meet
-      // ITSELF in every band; reporting (X, X, 1.0) would get X deleted as
-      // a duplicate of itself downstream. Same-id pairs are not dups.
-      .filter(col("id_new") =!= col("id_old"))
-      .select("id_new", "id_old").distinct()
+    PairJoin.verify(cand, "id_a", "id_b", base, base)(
+      PairJoin.jaccardAtLeast(threshold, "id_a", "id_b"))
   }
 
   /** Incremental NEAR-dup detection — the production shape of corpus
@@ -649,7 +399,7 @@ object Dedup {
     * candidate exchange is a two-sided equi-join on (band, bh) carrying
     * ids only (no text, no sets — the dominant-shuffle discipline of
     * [[minhashNearDups]]), hot history buckets tiled at `bucketCap`
-    * ([[incrementalCandidates]]). Batch-internal duplicates are
+    * ([[PairJoin.crossPairs]]). Batch-internal duplicates are
     * deliberately NOT reported — run [[minhashNearDups]] on the batch
     * alone for those.
     *
@@ -674,7 +424,9 @@ object Dedup {
       bandsFromBase(hbase, numHashes, bands), hbase, threshold, bucketCap)
   }
 
-  /** Shared candidate+verify tail of the incremental paths.
+  /** Shared candidate+verify tail of the incremental paths: batch bands
+    * `nb` against history bands `hb` ([[PairJoin.crossPairs]]), verified
+    * against the batch sets `ns` and history sets `hs`.
     *
     * The history SET state is Bloom-pruned before its exchange (r13): the
     * verify join needs sets for candidate `id_old`s only — a sliver of
@@ -692,7 +444,8 @@ object Dedup {
                                 threshold: Double,
                                 bucketCap: Int,
                                 hotPre: Option[DataFrame] = None): DataFrame = {
-    val cand = incrementalCandidates(nb, hb, bucketCap, hotPre).localCheckpoint()
+    val cand = PairJoin.crossPairs(nb, hb, Seq("band", "bh"), "id", bucketCap, hotPre)
+      .localCheckpoint()
     val nCand = math.max(cand.count(), 1L)
     // Two prune devices, selected by candidate count (r14 — the always-on
     // Bloom added two fixed driver jobs (sketch agg + serialization) that
@@ -715,13 +468,8 @@ object Dedup {
         val sketch = graft.ops.BloomJoin.buildSketch(cand, "id_old", nCand)
         hs.filter(graft.ops.BloomJoin.mightContain(hs, col("id"), sketch))
       }
-    val withSets = cand
-      .join(ns.select(col("id").as("id_new"), col("sh").as("sh_a")), "id_new")
-      .join(hsPruned.select(col("id").as("id_old"), col("sh").as("sh_b")),
-        "id_old")
-    appendJaccard(withSets, "sh_a", "sh_b", "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select("id_new", "id_old", "jaccard")
+    PairJoin.verify(cand, "id_new", "id_old", ns, hsPruned)(
+      PairJoin.jaccardAtLeast(threshold, "id_new", "id_old"))
   }
 
   /** Materialize the standing corpus's near-dup state: the (band, bh, id)
@@ -750,11 +498,10 @@ object Dedup {
     // state-write time (once per state change) frees EVERY read — nightly
     // batch or streaming micro-batch — from re-aggregating the
     // corpus-sized band table; the read path broadcasts this table
-    // instead ([[incrementalCandidateSides]] `hotPre`). Buckets at or
-    // below `bucketCap` are omitted: tiling them is a no-op.
-    history.sparkSession.read.parquet(stateDir + "/bands")
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > bucketCap)
+    // instead ([[PairJoin.crossPairs]] `hotPre`). Buckets at or below
+    // `bucketCap` are omitted: tiling them is a no-op.
+    PairJoin.hotKeys(history.sparkSession.read.parquet(stateDir + "/bands"),
+        Seq("band", "bh"), bucketCap)
       .write.mode("overwrite").parquet(stateDir + "/hot")
   }
 
@@ -1135,13 +882,10 @@ object Dedup {
                       bits: Int = 30, bands: Int = 3, maxHamming: Int = 6,
                       bucketCap: Int = 4096): DataFrame = {
     val banded = simhashBands(df, idCol, textCol, bits, bands)
-    // Unlike the minhash path, the signature rides through the band join —
-    // it is one long (8 bytes, not a set payload), and having it in-row
-    // lets the Hamming filter run BEFORE the distinct, so the dedup
-    // shuffle carries only surviving pairs. Hot (band, bh) buckets —
-    // guaranteed on real corpora (boilerplate, near-empty docs) — are
-    // tiled so no reducer sees more than ~cap² candidate combinations.
-    bucketedPairs(banded, Seq("band", "bh"), "id", bucketCap)
+    // The one verify that skips PairJoin.verify's join-back: the signature
+    // is one long, so it rides the candidate rows and the Hamming filter
+    // runs BEFORE the distinct — the dedup shuffle carries only survivors.
+    PairJoin.selfPairs(banded, Seq("band", "bh"), "id", bucketCap)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hamming(col("a.sig"), col("b.sig")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1157,7 +901,7 @@ object Dedup {
     * corpus. Minhash banding blocks on content instead: bucket population
     * is driven by actual similarity, and the one skew mode left (degenerate
     * near-identical content) is bounded by the tiled self-join
-    * ([[bucketedPairs]]). With numHashes=16 / bands=8 (2 rows per band) a
+    * ([[PairJoin.selfPairs]]). With numHashes=16 / bands=8 (2 rows per band) a
     * true Jaccard-0.7 pair is a candidate with p = 1-(1-0.7²)⁸ ≈ 0.996.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
@@ -1179,15 +923,13 @@ object Dedup {
     */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, planes: Int = 8, dim: Int = 64): DataFrame = {
-    import graft.similarity.Similarity.{appendCosine, bucketNorm}
-    val withB = bucketNorm(df, idCol, vecCol, planes, dim)
-    val a = withB.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a"))
-    val b = withB.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b"))
-    appendCosine(
-        a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b")),
-        "v_a", "v_b", "nrm_a", "nrm_b", "cosine")
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine").distinct()
+    // the bucket kernel feeds the bucket table and both verify sides: once
+    val withB = graft.similarity.Similarity.bucketNorm(df, idCol, vecCol, planes, dim)
+      .localCheckpoint(eager = false)
+    val cand = PairJoin.selfPairs(withB.select("bucket", "id"), Seq("bucket"), "id")
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val vecs = withB.select("id", "v", "nrm")
+    PairJoin.verify(cand, "id_a", "id_b", vecs, vecs)(PairJoin.cosineAtLeast(threshold))
   }
 
   /** Semantic (embedding-space) decontamination: flag every corpus row
@@ -1251,8 +993,9 @@ object Dedup {
     *
     * Scale shape: clustering is [[graft.similarity.Similarity.kmeansAssign]]
     * (integer-exact centroid means, per-row argmax kernel over the
-    * broadcast centroid array); the pair stage is an equi-join on `cell`,
-    * so work is Σ|cell|² — size nCells ≈ √n (SemDeDup's own regime) to
+    * broadcast centroid array); the pair stage is the tiled self-join on
+    * `cell` ([[PairJoin.selfPairs]]), so work is Σ|cell|² spread over
+    * bounded join groups — size nCells ≈ √n (SemDeDup's own regime) to
     * keep per-cell pair counts ~n. No all-pairs comparison anywhere; the
     * keep decision is a per-pair rule (lower id survives), not a
     * transitive closure, so no iteration.
@@ -1265,25 +1008,24 @@ object Dedup {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, nCells: Int = 16, dim: Int = 64,
                     refinePasses: Int = 1): DataFrame = {
-    import graft.similarity.Similarity.{appendCosine, kmeansAssign}
-    // The assignment feeds three consumers (both pair sides + the final
-    // keep join) and ends in a kernel, not an exchange — nothing for
-    // Spark to reuse. Pin it once so the corpus isn't re-scanned and
-    // re-assigned 3×.
-    val (assigned0, _) = kmeansAssign(df, idCol, vecCol, nCells, dim, refinePasses)
+    // The assignment feeds four consumers (the cell table, both verify
+    // sides, the final keep join) and ends in a kernel, not an exchange —
+    // nothing for Spark to reuse. Pin it once so the corpus isn't
+    // re-scanned and re-assigned per consumer.
+    val (assigned0, _) = graft.similarity.Similarity.kmeansAssign(
+      df, idCol, vecCol, nCells, dim, refinePasses)
     val assigned = assigned0.localCheckpoint()
-    val a = assigned.select(col("cell"), col("corpus_id").as("id_a"),
-      col("cv2").as("v_a"), col("cnorm2").as("nrm_a"))
-    val b = assigned.select(col("cell"), col("corpus_id").as("id_b"),
-      col("cv2").as("v_b"), col("cnorm2").as("nrm_b"))
-    val dropped = appendCosine(
-        a.join(b, Seq("cell")).filter(col("id_a") < col("id_b")),
-        "v_a", "v_b", "nrm_a", "nrm_b", "cosine")
-      .filter(col("cosine") >= threshold)
-      .select(col("cell"), col("id_b").as("id")).distinct()
+    val cand = PairJoin.selfPairs(
+        assigned.select(col("cell"), col("corpus_id").as("id")), Seq("cell"), "id")
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val vecs = assigned.select(col("corpus_id"), col("cv2").as("v"), col("cnorm2").as("nrm"))
+    // each doc sits in one cell, so the dropped ids join back on id alone
+    val dropped = PairJoin.verify(cand, "id_a", "id_b", vecs, vecs)(
+        PairJoin.cosineAtLeast(threshold))
+      .select(col("id_b").as("id")).distinct()
       .withColumn("is_dup", lit(true))
     assigned.select(col("corpus_id").as("id"), col("cell"))
-      .join(dropped, Seq("cell", "id"), "left")
+      .join(dropped, Seq("id"), "left")
       .select(col("id"), col("cell"), coalesce(!col("is_dup"), lit(true)).as("keep"))
   }
 }

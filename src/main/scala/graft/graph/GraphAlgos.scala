@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Checkpoints
+
 /** Iterative / combinatorial graph analytics over edge lists — the
   * ranking and structure queries the reference serves from its Neo4j
   * mention graph (`neo4j_insert/neo4j_twitter_insert.py:60-82` MENTIONS,
@@ -12,31 +14,6 @@ import org.apache.spark.sql.functions._
   * per key, nothing driver-side but the convergence counter.
   */
 object GraphAlgos {
-
-  /** Truncate lineage between iterative passes. `localCheckpoint` (the
-    * default) is executor-local and non-replicated — fastest, but an
-    * executor loss aborts the job mid-iteration. Passing a checkpoint
-    * dir switches to RELIABLE checkpoints under it (a distributed-FS
-    * path on a real cluster), the standard hardening for long iterative
-    * chains: a lost executor recomputes from the checkpoint, not from
-    * the start.
-    */
-  private def truncate(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(d) =>
-        graft.ops.Checkpoints.ensureDir(df.sparkSession.sparkContext, d)
-        df.checkpoint()
-      // LAZY local checkpoint (r17): the logical plan is truncated to a
-      // LogicalRDD immediately (bounded optimizer work per pass — the
-      // reason truncate exists), but materialization rides the NEXT
-      // action over the frame (every loop here follows a truncate with a
-      // convergence count/scalar, and fixed-pass loops chain into the
-      // caller's single action) instead of paying one dedicated job per
-      // pass. The partitions persist on first compute exactly as the
-      // eager form's did. The reliable-checkpoint path (cluster
-      // executor-loss contract, FIXPOINT_LOSS_r16) stays eager.
-      case None => df.localCheckpoint(eager = false)
-    }
 
   /** Per-node triangle participation counts over an undirected edge list.
     *
@@ -129,11 +106,11 @@ object GraphAlgos {
                tolMicros: Option[Long] = None,
                checkpointDir: Option[String] = None,
                personalization: Option[(DataFrame, String)] = None): DataFrame = {
-    val e = truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Checkpoints.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct().repartition(col("src")), // per-pass join key (r17)
       checkpointDir)
-    val nodes = truncate(e.select(col("src").as("node"))
+    val nodes = Checkpoints.materialize(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
     val nNodes = nodes.count()
     val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
@@ -156,7 +133,7 @@ object GraphAlgos {
     }
     // Rank table carries outdeg (and the seed flag) so each pass joins
     // once, not twice.
-    var r = truncate(seedFlagged.join(outdeg, Seq("node"), "left")
+    var r = Checkpoints.materialize(seedFlagged.join(outdeg, Seq("node"), "left")
       .select(col("node"), lit(1000000L).as("r"),
         coalesce(col("outdeg"), lit(0L)).as("outdeg"),
         coalesce(col("is_seed"), lit(false)).as("is_seed")), checkpointDir)
@@ -184,7 +161,7 @@ object GraphAlgos {
                 when(col("is_seed"), col("dshareAll")).otherwise(lit(0L))
               else col("dshareAll"))
         }
-      val next = truncate(withShare
+      val next = Checkpoints.materialize(withShare
         .select(col("node"),
           (baseCol + expr(
             s"($dampNum * (coalesce(s, CAST(0 AS BIGINT)) + dshare)) div 100")).as("r"),
@@ -219,11 +196,11 @@ object GraphAlgos {
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
     // pre-partitioned by the per-pass join key (r17, see Components)
-    val und = truncate(e.union(e.select(col("b").as("a"), col("a").as("b")))
+    val und = Checkpoints.materialize(e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().repartition(col("a")), checkpointDir)
     val nodes = und.select(col("a").as("node")).distinct()
     val seed = seeds.select(col(seedCol).as("node")).distinct()
-    var d = truncate(nodes.join(seed.withColumn("z", lit(0L)), Seq("node"), "left")
+    var d = Checkpoints.materialize(nodes.join(seed.withColumn("z", lit(0L)), Seq("node"), "left")
       .select(col("node"), col("z").as("depth")), checkpointDir)
     var changed = true
     var iter = 0
@@ -234,7 +211,7 @@ object GraphAlgos {
         .filter(col("depth").isNotNull)
         .select(col("b").as("node"), (col("depth") + 1).as("depth"),
           lit(null).cast("long").as("prev"))
-      val next = truncate(
+      val next = Checkpoints.materialize(
         d.select(col("node"), col("depth"), col("depth").as("prev"))
           .union(nbr)
           .groupBy(col("node"))
@@ -280,11 +257,11 @@ object GraphAlgos {
       "requireConverged needs earlyStop (fixed-pass runs do not track deltas)")
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val sym = truncate(
+    val sym = Checkpoints.materialize(
       e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
         .repartition(col("b")), // per-pass join key (r17, see Components)
       checkpointDir)
-    var lab = truncate(sym.select(col("a").as("node")).distinct()
+    var lab = Checkpoints.materialize(sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("lab")), checkpointDir)
     var iter = 0
     var converged = false
@@ -292,7 +269,7 @@ object GraphAlgos {
       val cnt = sym.join(lab, sym("b") === lab("node"))
         .groupBy(sym("a").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      val next = truncate(cnt.groupBy(col("node"))
+      val next = Checkpoints.materialize(cnt.groupBy(col("node"))
         .agg(max_by(col("lab"), struct(col("c"), -col("lab"))).as("lab")),
         checkpointDir)
       if (earlyStop) {
@@ -329,7 +306,7 @@ object GraphAlgos {
             maxIters: Int = 30,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    var e = truncate(edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
+    var e = Checkpoints.materialize(edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct(), checkpointDir)
@@ -345,7 +322,7 @@ object GraphAlgos {
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val next = truncate(
+      val next = Checkpoints.materialize(
         e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
           .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
           .select(col("a"), col("b")),
@@ -400,7 +377,7 @@ object GraphAlgos {
                                   maxInner: Int = 60, stride: Int = 2,
                                   checkpointDir: Option[String] = None): DataFrame = {
     require(stride >= 1, "stride must be >= 1")
-    def tc(df: DataFrame): DataFrame = truncate(df, checkpointDir)
+    def tc(df: DataFrame): DataFrame = Checkpoints.materialize(df, checkpointDir)
     var e = tc(edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
@@ -528,7 +505,7 @@ object GraphAlgos {
     for (hop <- 1 to maxHops) {
       val fromSucc = e.join(state, e("dst") === state("node"))
         .select(e("src").as("node"), col("sk"))
-      state = truncate(
+      state = Checkpoints.materialize(
         state.unionByName(fromSucc)
           .groupBy(col("node"))
           .agg(expr(s"slice(array_distinct(sort_array(flatten(collect_list(sk)))), 1, $k)")

@@ -1,9 +1,13 @@
 package graft.ops
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.Dataset
 
-/** Shared reliable-checkpoint configuration for iterative operators
-  * (Dedup.bucketedPairSides, TextOps.bpeTrain, GraphAlgos.truncate).
+/** The one materialization choice of the multi-consumer and iterative
+  * operators that take a `checkpointDir` ([[materialize]]: PairJoin.selfPairs,
+  * EntityResolution's prefix and containment joins, TextOps.bpeTrain and the
+  * GraphAlgos fixpoints), and the shared reliable-checkpoint configuration
+  * behind it.
   *
   * `SparkContext.setCheckpointDir` is global mutable state: two concurrent
   * library calls passing different dirs would race, and re-setting it per
@@ -14,6 +18,24 @@ import org.apache.spark.SparkContext
   * child to the configured path, so equality is prefix-based.)
   */
 object Checkpoints {
+
+  /** Materialize `ds` once. `Some(dir)`: a RELIABLE checkpoint under `dir`
+    * (a distributed-FS root on a cluster), written eagerly, so a lost
+    * executor recomputes from it instead of aborting the job (FIXPOINT_LOSS_r16,
+    * FixpointFaultSpec). `None`: a LAZY executor-local checkpoint — the plan
+    * is cut to a LogicalRDD at once (bounded optimizer work per fixpoint
+    * pass), but the partitions persist on the first action over it instead
+    * of in a dedicated job (r17): every caller follows it with a census,
+    * count or scan that reads every partition anyway. Executor-local
+    * storage is lost with its executor.
+    */
+  def materialize[T](ds: Dataset[T], checkpointDir: Option[String]): Dataset[T] =
+    checkpointDir match {
+      case Some(d) =>
+        ensureDir(ds.sparkSession.sparkContext, d)
+        ds.checkpoint()
+      case None => ds.localCheckpoint(eager = false)
+    }
 
   def ensureDir(sc: SparkContext, dir: String): Unit = synchronized {
     sc.getCheckpointDir match {

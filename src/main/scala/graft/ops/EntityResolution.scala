@@ -34,26 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object EntityResolution {
 
-  /** Repartition to full shuffle width and materialize once — local
-    * (executor-storage) by default, reliable when `checkpointDir` is
-    * given (the Dedup.bucketedPairSides contract: cluster callers whose
-    * executors can be lost mid-query pass an HDFS/S3 root).
-    */
-  private def materializedOnce(df: DataFrame,
-                               checkpointDir: Option[String]): DataFrame = {
-    val wide = df.repartition(
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    checkpointDir match {
-      case Some(d) =>
-        Checkpoints.ensureDir(wide.sparkSession.sparkContext, d)
-        wide.checkpoint()
-      // LAZY (r17): materialization rides the first consumer's scan
-      // (the frequency census / hot-bucket broadcast jobs scan every
-      // partition) instead of a dedicated job — at cluster scale that is
-      // one fewer full pass over the element-set table.
-      case None => wide.localCheckpoint(eager = false)
-    }
-  }
+  import graft.dedup.PairJoin
 
   /** The blocking key: (extra blocking columns…, first whitespace token,
     * length bucket). Length bucketing folds the cheap length filter into the
@@ -78,16 +59,11 @@ object EntityResolution {
     val recs = df.select(
       (Seq(col(idCol), substring(col(textCol), 1, prefixLen).as("__pre")) ++
         carryCols.map(col) ++ blockCols): _*)
-
-    // Block census: partial-aggregated count per block key — one narrow
-    // exchange over (blockCols), map-side combined. Purge oversized blocks
-    // BEFORE the pair join so no task ever materializes a hot block's pairs.
+    // Purge the blocks the hot-key census finds BEFORE the pair join, so no
+    // task ever materializes a hot block's pairs.
     val keyNames = extraBlockCols :+ "__bk"
-    val kept = recs.join(
-      recs.groupBy(keyNames.map(col): _*).agg(count(lit(1)).as("__bn"))
-        .filter(col("__bn") <= blockCap)
-        .select(keyNames.map(col): _*),
-      keyNames, "left_semi")
+    val kept = recs.join(broadcast(PairJoin.hotKeys(recs, keyNames, blockCap)),
+      keyNames, "left_anti")
 
     val a = kept.select(
       (Seq(col(idCol).as("id_a"), col("__pre").as("__pre_a")) ++
@@ -106,6 +82,92 @@ object EntityResolution {
       .filter(col("dist") >= 0)
       .drop("__pre_a", "__pre_b", "__bk")
   }
+
+  /** The frequency-ranked element table both set joins build once. `r` is
+    * (__id, __ts, carry…) with null elements dropped; `ranked` holds one
+    * row per (record, element): (__id, __sz, __p0, __t), where __p0 is the
+    * element's 0-based position in its record's list ordered by ascending
+    * global frequency, ties by element value — a total order both engines
+    * replay. The frequency census is one partial-aggregated count plus a
+    * keyed join, never a driver-side vocabulary.
+    *
+    * Both tables are materialized once at full shuffle width: the element
+    * sets (shingle hashing, an expensive scan-local kernel) feed the census,
+    * the candidate probes and the verify sides, and the explicit count is
+    * exempt from AQE coalescing, which would pin a local single-row-group
+    * scan to ~2 tasks. Rows are ids and longs, a bounded payload.
+    * array_compact: the token table (explode + equi-join) drops null
+    * elements while size(__ts) counts them; compacting up front makes every
+    * size, prefix and intersection see the same set. The production
+    * elemsCol (`shingle_hashes`) arrives sorted (r18) and array_compact
+    * keeps the order, so the verify kernel skips its per-pair sorts (no
+    * sort_array here: it is CodegenFallback and breaks whole-stage codegen,
+    * measured 1.3x worse).
+    */
+  private def rankedElements(df: DataFrame, idCol: String, elemsCol: Column,
+                             carryCols: Seq[String],
+                             checkpointDir: Option[String]): (DataFrame, DataFrame) = {
+    org.apache.spark.sql.GraftFunctions.register(df.sparkSession)
+    def wide(d: DataFrame) = Checkpoints.materialize(
+      d.repartition(d.sparkSession.sessionState.conf.numShufflePartitions), checkpointDir)
+    val r = wide(df.select((col(idCol).as("__id") +:
+      array_compact(elemsCol).as("__ts") +: carryCols.map(col)): _*))
+    val tok = r.select(col("__id"), explode(col("__ts")).as("__t"))
+    val freq = tok.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
+    val ranked = wide(tok.join(freq, "__t")
+      .groupBy(col("__id"))
+      .agg(sort_array(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
+      .select(col("__id"), size(col("__ord")).as("__sz"),
+        posexplode(expr("transform(__ord, x -> x.__t)")).as(Seq("__p0", "__t"))))
+    (r, ranked)
+  }
+
+  /** Prefix length p = s − ceil(t·s) + 1 ≥ 1 of a record of `sz` elements at
+    * t = tNum/tDen, in integer arithmetic: a pair reaching the threshold
+    * shares an element among the record's first p. */
+  private def prefixLen(sz: String, tNum: Int, tDen: Int): Column =
+    col(sz) - expr(s"($sz * $tNum + ${tDen - 1}) div $tDen") + 1
+
+  /** The candidate equi-join on element `__t`, at an EXPLICIT width (r17):
+    * AQE coalesces this exchange from its small INPUT bytes, but the join's
+    * OUTPUT — the candidate expansion — is the quadratic part, invisible to
+    * the input-size heuristic (sf0.1: the whole expansion ran in 3
+    * coalesced tasks). An explicit count is exempt from coalescing.
+    */
+  private def elementJoin(probe: DataFrame, postings: DataFrame): DataFrame = {
+    val w = probe.sparkSession.sessionState.conf.numShufflePartitions
+    probe.repartition(w, col("__t")).join(postings.repartition(w, col("__t")), Seq("__t"))
+  }
+
+  /** |A ∩ B| of the verify sides: the codegen'd `array_inter_size` for
+    * long element sets (the production shingle-hash path), the portable
+    * interpreted `array_intersect` for any other element type.
+    */
+  private def interSizeExpr(elemsType: org.apache.spark.sql.types.DataType): Column =
+    elemsType match {
+      // containsNull=false only (ADVICE r17): array_inter_size rejects
+      // nullable-element arrays at analysis; the array_compact upstream
+      // yields containsNull=false so the production path always lands here.
+      case org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType, false) =>
+        call_function("array_inter_size", col("__ts_a"), col("__ts_b"))
+      case _ =>
+        size(array_intersect(col("__ts_a"), col("__ts_b"))).cast("long")
+    }
+
+  /** The verify tail of both set joins ([[graft.dedup.PairJoin.verify]]):
+    * candidates join back to their element sets, and `keep` is the integer
+    * cross-multiplied threshold over `sz_a`, `sz_b` and `inter`. Returns
+    * (id_b, id_a, carry…, sz_a, sz_b, inter).
+    */
+  private def verifyOverlap(cand: DataFrame, r: DataFrame,
+                            carryCols: Seq[String])(keep: Column): DataFrame =
+    PairJoin.verify(cand, "id_a", "id_b", r, r, carryCols)(_
+      .withColumn("sz_a", size(col("__ts_a")).cast("long"))
+      .withColumn("sz_b", size(col("__ts_b")).cast("long"))
+      .withColumn("inter", interSizeExpr(r.schema("__ts").dataType))
+      .filter(keep)
+      .drop("__ts_a", "__ts_b"))
 
   /** AllPairs/PPJoin-style prefix-filtering set-similarity self-join
     * (Bayardo et al., "Scaling Up All Pairs Similarity Search", WWW 2007;
@@ -127,102 +189,30 @@ object EntityResolution {
     * the join's per-key fan-out is the prefix document frequency, which the
     * ordering minimizes by construction (the blocking twin of q31's
     * shingle buckets, but frequency-adaptive: hot elements are pushed out
-    * of prefixes instead of needing a purge). Verify is scan-local
-    * (`array_intersect` on the two carried sets) with the integer
-    * cross-multiplied Jaccard test, plus the length filter
+    * of prefixes instead of needing a purge). Verify ([[verifyOverlap]]) is
+    * the integer cross-multiplied Jaccard test, plus the length filter
     * (t·|A| ≤ |B| ≤ |A|/t) — implied by the threshold, so it prunes
     * without changing results.
     *
     * `elemsCol` must be a DISTINCT-element array column. Returns
     * `(id_a, id_b, inter, sz_a, sz_b)` plus `carryCols` from the left row.
     */
-  /** |A ∩ B| of the verify sides: the codegen'd `array_inter_size` for
-    * long element sets (the production shingle-hash path), the portable
-    * interpreted `array_intersect` for any other element type.
-    */
-  private def interSizeExpr(elemsType: org.apache.spark.sql.types.DataType): Column =
-    elemsType match {
-      // containsNull=false only (ADVICE r17): array_inter_size now rejects
-      // nullable-element arrays at analysis; the array_compact upstream
-      // yields containsNull=false so the production path always lands here.
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, false) =>
-        call_function("array_inter_size", col("__ts_a"), col("__ts_b"))
-      case _ =>
-        size(array_intersect(col("__ts_a"), col("__ts_b"))).cast("long")
-    }
-
   def prefixFilterPairs(df: DataFrame, idCol: String, elemsCol: Column,
                         tNum: Int, tDen: Int,
                         carryCols: Seq[String] = Nil,
                         checkpointDir: Option[String] = None): DataFrame = {
     require(tNum > 0 && tNum <= tDen, "threshold must be in (0, 1]")
-    // The element-set computation feeding this (shingle hashing, an
-    // expensive scan-local kernel) has THREE consumers here (frequency
-    // census, candidate prefixes, verify sides) — materialize it once at
-    // full shuffle width (explicit count: exempt from AQE coalescing; a
-    // local single-row-group scan otherwise pins everything to ~2
-    // tasks). Rows are (id, hashes, carry) — ids+longs, bounded payload.
-    // localCheckpoint lives in executor-local storage (lost with the
-    // executor); cluster callers pass `checkpointDir` for a reliable
-    // HDFS/S3 checkpoint instead — same contract as
-    // Dedup.bucketedPairSides.
-    // array_compact: null elements would silently disagree between the
-    // token-table paths (explode+equi-join drops nulls) and the verify
-    // filter's size(__ts) (counts them) — dropping nulls up front makes
-    // every size/prefix/intersect computation see the same set.
-    org.apache.spark.sql.GraftFunctions.register(df.sparkSession)
-    // The production elemsCol (shingle_hashes output) arrives sorted
-    // (r18), so the codegen'd verify kernel skips its per-PAIR sorts via
-    // ensureSorted's O(n) check; array_compact preserves order. No
-    // sort_array here: it is CodegenFallback and breaks the stage's
-    // whole-stage codegen (measured 1.3x worse).
-    val r = materializedOnce(df.select((col(idCol).as("__id") +:
-      array_compact(elemsCol).as("__ts") +: carryCols.map(col)): _*), checkpointDir)
-    val tok = r.select(col("__id"), explode(col("__ts")).as("__t"))
-    val freq = tok.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-
-    // Per-record frequency-sorted element list; prefix length from the
-    // integer ceil: p = s − ((tNum·s + tDen − 1) div tDen) + 1 ≥ 1.
-    val ordered = tok.join(freq, "__t")
-      .groupBy(col("__id"))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
-      .withColumn("__sz", size(col("__ord")))
-      .withColumn("__p",
-        col("__sz") - expr(s"(__sz * $tNum + ${tDen - 1}) div $tDen") + 1)
-      .select(col("__id"),
-        explode(expr("transform(slice(__ord, 1, int(__p)), x -> x.__t)")).as("__t"))
-
-    // EXPLICIT width on the candidate self-join (r17, the
-    // bucketedPairSides lesson): AQE coalesces this exchange from its
-    // small INPUT bytes (prefix tokens), but the join's OUTPUT — the
-    // candidate expansion — is the quadratic part, invisible to the
-    // input-size heuristic; measured at sf0.1 the whole expansion ran in
-    // 3 AQE-coalesced tasks. An explicit count is exempt from coalescing.
-    val wJoin = df.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = ordered.select(col("__id").as("id_a"), col("__t"))
-      .repartition(wJoin, col("__t"))
-      .join(ordered.select(col("__id").as("id_b"), col("__t"))
-        .repartition(wJoin, col("__t")), Seq("__t"))
+    val (r, ranked) = rankedElements(df, idCol, elemsCol, carryCols, checkpointDir)
+    val pre = ranked.filter(col("__p0") < prefixLen("__sz", tNum, tDen))
+    val cand = elementJoin(pre.select(col("__id").as("id_a"), col("__t")),
+        pre.select(col("__id").as("id_b"), col("__t")))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-
-    val left = r.select((col("__id").as("id_a") +: col("__ts").as("__ts_a") +:
-      carryCols.map(col)): _*)
-    val right = r.select(col("__id").as("id_b"), col("__ts").as("__ts_b"))
-    cand.join(left, "id_a").join(right, "id_b")
-      .withColumn("sz_a", size(col("__ts_a")).cast("long"))
-      .withColumn("sz_b", size(col("__ts_b")).cast("long"))
-      // Length filter: a pair failing t·|A| ≤ |B| can't pass Jaccard ≥ t.
-      .filter(col("sz_a") * tNum <= col("sz_b") * tDen &&
-        col("sz_b") * tNum <= col("sz_a") * tDen)
-      // codegen'd intersection size for long element sets (r17) —
-      // array_intersect is interpreted per pair; exact distinct-count
-      // parity spec-pinned. Non-long element types (spec fixtures) keep
-      // the portable form.
-      .withColumn("inter", interSizeExpr(r.schema("__ts").dataType))
-      .filter(col("inter") * tDen >= lit(tNum) * (col("sz_a") + col("sz_b") - col("inter")))
-      .drop("__ts_a", "__ts_b")
+    verifyOverlap(cand, r, carryCols)(
+      // length filter first: a pair failing t·|A| ≤ |B| can't pass Jaccard ≥ t
+      col("sz_a") * tNum <= col("sz_b") * tDen &&
+        col("sz_b") * tNum <= col("sz_a") * tDen &&
+        col("inter") * tDen >= lit(tNum) * (col("sz_a") + col("sz_b") - col("inter")))
   }
 
   /** ASYMMETRIC containment join — find (a, b) pairs where a's element
@@ -286,56 +276,27 @@ object EntityResolution {
                        carryCols: Seq[String] = Nil,
                        checkpointDir: Option[String] = None): DataFrame = {
     require(tNum > 0 && tNum <= tDen, "threshold must be in (0, 1]")
-    org.apache.spark.sql.GraftFunctions.register(df.sparkSession)
-    // The element-set computation feeding this (shingle hashing, an
-    // expensive scan-local kernel) has THREE consumers here (frequency
-    // census, candidate prefixes, verify sides) — materialize it once at
-    // full shuffle width (explicit count: exempt from AQE coalescing; a
-    // local single-row-group scan otherwise pins everything to ~2
-    // tasks). Rows are (id, hashes, carry) — ids+longs, bounded payload.
-    // Reliable-checkpoint contract as in [[prefixFilterPairs]].
-    // array_compact: the candidate-side __sz comes from the token table
-    // (explode+equi-join, which drops null elements) while verify uses
-    // size(__ts) — compacting up front makes both counts agree for
-    // arrays that contain nulls.
-    val r = materializedOnce(df.select((col(idCol).as("__id") +:
-      array_compact(elemsCol).as("__ts") +: carryCols.map(col)): _*), checkpointDir)
-    val tok = r.select(col("__id"), explode(col("__ts")).as("__t"))
-    val freq = tok.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    // Per-record frequency-ranked positions — ONE ranked token table
-    // feeds both join sides (A-prefix probe and B-full postings), so the
-    // rank groupBy runs once, not once per side. Token-stream-sized rows
-    // of (id, pos, size, element): bounded payload.
-    val posTok = materializedOnce(
-      tok.join(freq, "__t")
-        .groupBy(col("__id"))
-        .agg(sort_array(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
-        .select(col("__id"), size(col("__ord")).as("__sz"),
-          posexplode(expr("transform(__ord, x -> x.__t)")).as(Seq("__p0", "__t"))),
-      checkpointDir)
+    // ONE ranked token table feeds both join sides (A-prefix probe and
+    // B-full postings), so the rank groupBy runs once, not once per side.
+    val (r, ranked) = rankedElements(df, idCol, elemsCol, carryCols, checkpointDir)
 
     // k extra probe elements beyond the minimal prefix p: candidates must
     // share ≥ (probe − p + 1) of A's first probe elements (exact, see
     // scaladoc). k = 3 measured best at sf10 — k = 1 is the classic
     // prefix filter, which left 14.9M accidental candidates.
     val k = 3
-    val pl = col("__sz") - expr(s"(__sz * $tNum + ${tDen - 1}) div $tDen") + 1
-    val pA = posTok
-      .filter(col("__p0") + 1 <= least(pl + (k - 1), col("__sz")))
+    val pA = ranked
+      .filter(col("__p0") + 1 <= least(prefixLen("__sz", tNum, tDen) + (k - 1), col("__sz")))
       .select(col("__id").as("id_a"), col("__t"),
         (col("__p0") + 1).as("__ia"), col("__sz").as("__sa"))
-    val pB = posTok.select(col("__id").as("id_b"), col("__t"),
+    val pB = ranked.select(col("__id").as("id_b"), col("__t"),
       (col("__p0") + 1).as("__jb"), col("__sz").as("__sb"))
 
     // (i, j) packed into one long (i < 2³¹ always: it's a position in a
     // document's element list) so the earliest-match aggregate is a plain
     // long min — HashAggregate-able, where min(struct(i, j)) forces a
     // SortAggregate pair (two extra sorts on the candidate stream).
-    // explicit width: same candidate-expansion rationale as
-    // [[prefixFilterPairs]] (r17)
-    val wJoin = df.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = pA.repartition(wJoin, col("__t"))
-      .join(pB.repartition(wJoin, col("__t")), Seq("__t"))
+    val cand = elementJoin(pA, pB)
       .filter(col("__sa") < col("__sb") ||
         (col("__sa") === col("__sb") && col("id_a") < col("id_b")))
       .select(col("id_a"), col("id_b"), col("__sa"), col("__sb"),
@@ -353,20 +314,10 @@ object EntityResolution {
       // Extended-prefix pigeonhole: shared probe elements must reach
       // probe − p + 1 (both recomputed from |A|; __nm counts match rows,
       // one per shared probe element — elements are distinct per doc).
-      .withColumn("__pl",
-        col("__sa") - expr(s"(__sa * $tNum + ${tDen - 1}) div $tDen") + 1)
+      .withColumn("__pl", prefixLen("__sa", tNum, tDen))
       .filter(col("__nm") >=
         least(col("__pl") + (k - 1), col("__sa")) - col("__pl") + 1)
       .select(col("id_a"), col("id_b"))
-
-    val left = r.select((col("__id").as("id_a") +: col("__ts").as("__ts_a") +:
-      carryCols.map(col)): _*)
-    val right = r.select(col("__id").as("id_b"), col("__ts").as("__ts_b"))
-    cand.join(left, "id_a").join(right, "id_b")
-      .withColumn("sz_a", size(col("__ts_a")).cast("long"))
-      .withColumn("sz_b", size(col("__ts_b")).cast("long"))
-      .withColumn("inter", interSizeExpr(r.schema("__ts").dataType))
-      .filter(col("inter") * tDen >= lit(tNum) * col("sz_a"))
-      .drop("__ts_a", "__ts_b")
+    verifyOverlap(cand, r, carryCols)(col("inter") * tDen >= lit(tNum) * col("sz_a"))
   }
 }

@@ -703,19 +703,12 @@ object AnalyticsQueries {
       val itemSup = baskets.groupBy(col("item")).agg(count(lit(1)).as("sup"))
       val frequent = itemSup.filter(col("sup") >= 10)
       val fb = baskets.join(broadcast(frequent.select(col("item"))), Seq("item"), "left_semi")
-      // Exactly-once without a distinct exchange: a cross-tile pair
-      // (_tl < _tr) meets in ONE group in arbitrary orientation (keep,
-      // normalize via least/greatest); a same-tile pair (_tl = _tr)
-      // meets in both orientations (keep only a.item < b.item, which
-      // also drops same-tile self-pairs). Items are distinct per user,
-      // so each (user, i, j) contributes exactly 1 to support.
-      val (aS, bS) = graft.dedup.Dedup.bucketedPairSides(
-        fb.select(col("user_id"), col("item")), Seq("user_id"), "item",
-        cap = 256)
-      val pairs = aS.join(bS, Seq("user_id", "_tl", "_tr"))
-        .filter(col("_tl") < col("_tr") || col("a.item") < col("b.item"))
-        .select(least(col("a.item"), col("b.item")).as("i"),
-          greatest(col("a.item"), col("b.item")).as("j"))
+      // The tiled self-join emits each in-basket pair once, a.item <
+      // b.item, with no distinct exchange. Items are distinct per user, so
+      // each (user, i, j) contributes exactly 1 to support.
+      val pairs = graft.dedup.PairJoin.selfPairs(
+          fb.select(col("user_id"), col("item")), Seq("user_id"), "item", cap = 256)
+        .select(col("a.item").as("i"), col("b.item").as("j"))
         .groupBy(col("i"), col("j")).agg(count(lit(1)).as("support"))
       pairs
         .join(broadcast(frequent.select(col("item").as("i"), col("sup").as("sup_i"))), "i")

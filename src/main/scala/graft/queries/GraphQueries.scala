@@ -140,18 +140,15 @@ object GraphQueries {
 
     // Fixed-iteration PageRank in integer micro-units — bit-exact vs the
     // oracle's unrolled CTE chain (floor division both levels, no float
-    // summation anywhere). Dangling redistribution stays ON: this graph
-    // has no dangling nodes (every residue 0..49 sources an edge), so the
-    // conserving pass must reproduce the plain oracle exactly — the
-    // no-op case of the feature under the same gate q105 drives the
-    // active case through.
+    // summation anywhere). Plain PageRank: dangling nodes keep only the
+    // base term, as in the oracle, at every scale (sf0.001 has 35 of them;
+    // sf0.01 none). q105 and q117 gate the dangling redistribution.
     "q93_pagerank" -> ((s, dir) => {
       val e = Tables.load(s, dir, "events").select(
         (col("user_id") % 50).cast("long").as("src"),
         (((col("user_id") % 50) * 7 + col("event_id") % 11) % 50).cast("long").as("dst"))
         .filter(col("src") =!= col("dst"))
-      GraphAlgos.pageRank(e, "src", "dst", iters = 4,
-          redistributeDangling = true)
+      GraphAlgos.pageRank(e, "src", "dst", iters = 4)
         .orderBy(col("node"))
     }),
 

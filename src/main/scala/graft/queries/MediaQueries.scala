@@ -139,8 +139,8 @@ object MediaQueries {
           posexplode(array((0 until 4).map(b =>
             shiftright(col("ahash"), b * 15).bitwiseAND(lit(mask))): _*))
             .as(Seq("band", "bh")))
-      graft.dedup.Dedup
-        .bucketedPairs(banded, Seq("w", "h", "band", "bh"), "id")
+      graft.dedup.PairJoin
+        .selfPairs(banded, Seq("w", "h", "band", "bh"), "id")
         .select(col("a.wp").cast("long").as("w"),
           col("a.hp").cast("long").as("h"),
           col("a.id").as("id_a"), col("b.id").as("id_b"),

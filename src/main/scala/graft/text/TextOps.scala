@@ -657,22 +657,19 @@ object TextOps {
     require(nMerges >= 1, "need nMerges >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    checkpointDir.foreach(d =>
-      graft.ops.Checkpoints.ensureDir(spark.sparkContext, d))
-    // LAZY per-round truncation (r17): the next round's pair-count job is
-    // a full scan of `cur`, so it materializes the checkpoint — one job
-    // per round instead of checkpoint + count + re-scan.
-    def truncate(ds: org.apache.spark.sql.Dataset[(Long, IndexedSeq[String])]) =
-      if (checkpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint(eager = false)
-    // Explicit width before the first truncate: the checkpoint freezes
+    // Lineage is cut every round (Checkpoints.materialize): the next
+    // round's pair-count job is a full scan of `cur`, so it materializes a
+    // lazy local checkpoint — one job per round, not checkpoint + count +
+    // re-scan.
+    // Explicit width before the first checkpoint: it freezes
     // its partitioning for EVERY subsequent round's kernels, and a local
     // parquet scan yields ~2 splits — 5 rounds of 2-task merge kernels
     // (explicit count: exempt from AQE coalescing).
-    var cur = truncate(docs
+    var cur = graft.ops.Checkpoints.materialize(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(col(idCol).cast("long").as("id"),
         split(col(textCol), " ").as("toks"))
-      .as[(Long, IndexedSeq[String])])
+      .as[(Long, IndexedSeq[String])], checkpointDir)
     // `split` always yields >= 1 token, so after ANY number of merges
     // every doc keeps >= 1 token and per doc |pairs| = |toks| - 1; hence
     // corpus-wide  Σ|toks| = Σ n_pairs + n_docs . That identity lets each
@@ -720,10 +717,10 @@ object TextOps {
           // lineage truncation each doc is visited exactly once per round
           // (rounds × docs total); a broken checkpoint re-runs earlier
           // kernels and the count goes quadratic — asserted in PlanAuditSpec.
-          cur = truncate(cur.map { case (id, toks) =>
+          cur = graft.ops.Checkpoints.materialize(cur.map { case (id, toks) =>
             kernelCounter.foreach(_.add(1L))
             (id, greedyMerge(toks, l, r, sep))
-          })
+          }, checkpointDir)
           out += ((step, l, r, n, -1L))
           step += 1
       }

@@ -14,7 +14,7 @@ class BloomJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def onDisk(df: org.apache.spark.sql.DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_").toString
+    val dir = TestSpark.tempDir("graft_bloom_").toString
     df.write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, PairJoin}
 
 class DedupSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -178,19 +179,27 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.toSeq == Seq((1L, 2L))) // bigram Jaccard 6/8 = 0.75
   }
 
-  test("bucketedPairs: tiling preserves the exact pair set of a hot bucket") {
+  /** The tiler's two replicated self-join sides, driven directly. */
+  private def selfSides(keyed: DataFrame, keys: Seq[String], id: String, cap: Int) =
+    PairJoin.replicateSelf(
+      PairJoin.tile(keyed, keys, id, cap, PairJoin.hotKeys(keyed, keys, cap)),
+      keys, keyed.columns.filterNot(keys.contains).toSeq)
+
+  /** The tiled self-join's (a.id, b.id) pairs, with multiplicity, sorted. */
+  private def selfPairIds(keyed: DataFrame, keys: Seq[String], cap: Int): Seq[(Long, Long)] =
+    PairJoin.selfPairs(keyed, keys, "id", cap)
+      .select(col("a.id").cast("long"), col("b.id").cast("long"))
+      .as[(Long, Long)].collect().toSeq.sorted
+
+  test("selfPairs: tiling emits each pair of a hot bucket exactly once") {
     val n = 60
     val keyed = (1L to n).map(i => (0, 0L, i)).toDF("band", "bh", "id")
-    val pairs = Dedup.bucketedPairs(keyed, Seq("band", "bh"), "id", cap = 7)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = (for {
-      a <- 1L to n; b <- (a + 1) to n
-    } yield (a, b)).toSet
-    assert(pairs == expected) // all C(60,2) pairs, each normalized a < b
+    val pairs = selfPairIds(keyed, Seq("band", "bh"), cap = 7)
+    val expected = for { a <- 1L to n; b <- (a + 1) to n } yield (a, b)
+    assert(pairs == expected) // all C(60,2) pairs, once each, a < b
   }
 
-  test("bucketedPairs: no tile-pair join group exceeds the cap bound") {
+  test("selfPairs: no tile-pair join group exceeds the cap bound") {
     // One hot bucket of 200 ids + one cold bucket of 3: the hot bucket must
     // be split across tiles so no (key, tl, tr) group exceeds ~cap rows per
     // side; the cold bucket must stay un-replicated (T = 1).
@@ -198,7 +207,7 @@ class DedupSpec extends AnyFunSuite {
     val cold = (201L to 203L).map(i => (0, 8L, i))
     val keyed = (hot ++ cold).toDF("band", "bh", "id")
     val cap = 16
-    val (aSide, bSide) = Dedup.bucketedPairSides(keyed, Seq("band", "bh"), "id", cap)
+    val (aSide, bSide) = selfSides(keyed, Seq("band", "bh"), "id", cap)
     for (side <- Seq(aSide, bSide)) {
       val maxGroup = side.groupBy("band", "bh", "_tl", "_tr")
         .count().agg(max("count")).collect()(0).getLong(0)
@@ -209,12 +218,10 @@ class DedupSpec extends AnyFunSuite {
     val coldA = aSide.filter(col("bh") === 8L).count()
     assert(coldA == 3L)
     // and the tiled pair set is still exact
-    val pairs = Dedup.bucketedPairs(keyed, Seq("band", "bh"), "id", cap)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct().count()
-    assert(pairs == 200L * 199 / 2 + 3)
+    assert(selfPairIds(keyed, Seq("band", "bh"), cap).size == 200 * 199 / 2 + 3)
   }
 
-  test("bucketedPairs: occupancy-adaptive tiling fans a barely-hot bucket wide") {
+  test("selfPairs: occupancy-adaptive tiling fans a barely-hot bucket wide") {
     // SKEW_r14 leg B: T = ceil(n/cap) gives a bucket just over the cap
     // T = 2 — three half-cap² pair groups while the rest of the stage is
     // cold (27× task skew measured at sf1). The adaptive width must fan
@@ -227,15 +234,14 @@ class DedupSpec extends AnyFunSuite {
       val n = 1200L
       val keyed = (1L to n).map(i => (0, 0L, i)).toDF("band", "bh", "id")
       val cap = 1024 // n barely over cap: the old width would be T = 2
-      val (aSide, _) = Dedup.bucketedPairSides(keyed, Seq("band", "bh"), "id", cap)
+      val (aSide, _) = selfSides(keyed, Seq("band", "bh"), "id", cap)
       // capEff = min(1024, max(256, ceil(1200/16))) = 256 → T = 5
       val tiles = aSide.select("_tr").distinct().count()
       assert(tiles == 5L, s"expected 5 adaptive tiles, got $tiles")
       val maxGroup = aSide.groupBy("_tl", "_tr").count()
         .agg(max("count")).collect()(0).getLong(0)
       assert(maxGroup <= 3L * 256L, s"tile group of $maxGroup exceeds bound")
-      val pairs = Dedup.bucketedPairs(keyed, Seq("band", "bh"), "id", cap)
-        .select(col("a.id"), col("b.id")).distinct().count()
+      val pairs = PairJoin.selfPairs(keyed, Seq("band", "bh"), "id", cap).count()
       assert(pairs == n * (n - 1) / 2) // pair set is tile-width-independent
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
@@ -245,23 +251,20 @@ class DedupSpec extends AnyFunSuite {
     // items (>> cap) plus normal 3-item users. The tiled pair stage must
     // (a) keep every (user, tl, tr) join group at ~cap rows per side —
     // the bounded-fan-out guarantee VERDICT r9/r10 asked for — and
-    // (b) reproduce the plain self-join's per-pair support exactly under
-    // the exactly-once rule (cross-tile pairs surface once in arbitrary
-    // orientation → normalize; same-tile in both → keep a < b only).
+    // (b) reproduce the plain self-join's per-pair support exactly: each
+    // in-basket pair once, a.item < b.item.
     val power = (1L to 80L).map(i => (999L, i))
     val normal = for (u <- 1L to 10L; i <- 1L to 3L) yield (u, i)
     val fb = (power ++ normal).toDF("user_id", "item")
     val cap = 8
-    val (aS, bS) = Dedup.bucketedPairSides(fb, Seq("user_id"), "item", cap)
+    val (aS, bS) = selfSides(fb, Seq("user_id"), "item", cap)
     for (side <- Seq(aS, bS)) {
       val maxGroup = side.groupBy("user_id", "_tl", "_tr")
         .count().agg(max("count")).collect()(0).getLong(0)
       assert(maxGroup <= 3L * cap, s"group of $maxGroup exceeds bound")
     }
-    val support = aS.join(bS, Seq("user_id", "_tl", "_tr"))
-      .filter(col("_tl") < col("_tr") || col("a.item") < col("b.item"))
-      .select(least(col("a.item"), col("b.item")).as("i"),
-        greatest(col("a.item"), col("b.item")).as("j"))
+    val support = PairJoin.selfPairs(fb, Seq("user_id"), "item", cap)
+      .select(col("a.item").as("i"), col("b.item").as("j"))
       .groupBy("i", "j").count()
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     val expected = ((for { a <- 1L to 80L; b <- (a + 1) to 80L } yield (a, b))
@@ -269,6 +272,56 @@ class DedupSpec extends AnyFunSuite {
       (for { a <- 1L to 3L; b <- (a + 1) to 3L } yield ((a, b), 10L)))
       .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     assert(support == expected)
+  }
+
+  test("tiler: every self-pair keyed table gives the plain self-join's pairs at cap 2 and 4096") {
+    // Seeded fixture with one planted hot bucket per table: 12 identical
+    // docs / vectors / hashes / a 40-item basket. At cap 2 the hot bucket
+    // tiles 6 ways; at 4096 nothing tiles. Both must give the plain
+    // in-bucket self-join's pairs, each once per shared key.
+    val rng = new scala.util.Random(20261019L)
+    val words = (0 until 12).map(i => s"w$i")
+    val boiler = "subscribe like comment share follow today"
+    val docs = ((1L to 60L).map(i => (i, Seq.fill(8)(words(rng.nextInt(12))).mkString(" "))) ++
+      (101L to 112L).map(i => (i, boiler))).toDF("doc_id", "text")
+    val dim = 8
+    val hotVec = Seq.fill(dim)(rng.nextGaussian().toFloat)
+    val vecs = ((1L to 60L).map(i => (i, Seq.fill(dim)(rng.nextGaussian().toFloat))) ++
+      (101L to 112L).map(i => (i, hotVec))).toDF("vec_id", "embedding")
+    val hashes = (1L to 60L).map(i => (i, rng.nextLong() & ((1L << 60) - 1))) ++
+      (101L to 112L).map(i => (i, 0x0ABCDEF012345678L))
+    val mask = (1L << 15) - 1
+    val imageBands = hashes.toDF("id", "ahash")
+      .withColumn("w", lit(4)).withColumn("h", lit(3))
+      .select(col("id"), col("ahash"), col("w"), col("h"),
+        posexplode(array((0 until 4).map(b =>
+          shiftright(col("ahash"), b * 15).bitwiseAND(lit(mask))): _*)).as(Seq("band", "bh")))
+    val baskets = ((1L to 40L).map(i => (999L, i)) ++
+      (for (u <- 1L to 20L; i <- Seq.fill(3)(1L + rng.nextInt(30)).distinct) yield (u, i)))
+      .toDF("user_id", "id")
+    val tables: Seq[(String, DataFrame, Seq[String])] = Seq(
+      ("minhash bands", Dedup.minhashBands(docs, "doc_id", "text", 3, 16, 4), Seq("band", "bh")),
+      ("simhash bands", Dedup.simhashBands(docs, "doc_id", "text", 30, 3), Seq("band", "bh")),
+      ("embedding sign buckets", graft.similarity.Similarity
+        .bucketNorm(vecs, "vec_id", "embedding", 8, dim).select("bucket", "id"), Seq("bucket")),
+      ("semanticDedup cells", graft.similarity.Similarity
+        .kmeansAssign(vecs, "vec_id", "embedding", 2, dim)._1
+        .select(col("cell"), col("corpus_id").as("id")), Seq("cell")),
+      ("q241 image bands", imageBands, Seq("w", "h", "band", "bh")),
+      ("q202 baskets", baskets, Seq("user_id")))
+    for ((name, t0, keys) <- tables) {
+      val t = t0.localCheckpoint()
+      val maxBucket = t.groupBy(keys.map(col): _*).count()
+        .agg(max("count")).collect()(0).getLong(0)
+      assert(maxBucket >= 12, s"$name: no planted hot bucket ($maxBucket rows)")
+      val plain = t.as("x").join(t.as("y"), keys)
+        .filter(col("x.id") < col("y.id"))
+        .select(col("x.id").cast("long"), col("y.id").cast("long"))
+        .as[(Long, Long)].collect().toSeq.sorted
+      val at2 = selfPairIds(t, keys, cap = 2)
+      assert(at2.nonEmpty && at2 == plain, s"$name: cap 2 differs from the plain self-join")
+      assert(selfPairIds(t, keys, cap = 4096) == at2, s"$name: cap 4096 differs from cap 2")
+    }
   }
 
   test("simhashNearDups with a planted hot bucket stays exact under tiling") {
@@ -383,7 +436,10 @@ class DedupSpec extends AnyFunSuite {
     val cap = 16
     val nb = Dedup.minhashBands(batch, "doc_id", "text", 3, 16, 4)
     val hb = Dedup.minhashBands(history, "doc_id", "text", 3, 16, 4)
-    val (nTiled, hTiled) = Dedup.incrementalCandidateSides(nb, hb, cap)
+    val keys = Seq("band", "bh")
+    val hot = PairJoin.hotKeys(hb, keys, cap)
+    val hTiled = PairJoin.tile(hb, keys, "id", cap, hot)
+    val nTiled = PairJoin.replicateBatch(PairJoin.tile(nb, keys, "id", cap, hot), keys, "id", "id_new")
     // history side: no (band, bh, _tile) group exceeds the cap bound
     // (3x headroom: hash tiles balance in expectation, not exactly)
     val maxH = hTiled.groupBy("band", "bh", "_tile").count()
@@ -412,7 +468,7 @@ class DedupSpec extends AnyFunSuite {
     val history = Seq((1L, words), (2L, words + " tail alpha"),
       (3L, "completely different content lives here")).toDF("doc_id", "text")
     val batch = Seq((10L, words)).toDF("doc_id", "text")
-    val stateDir = java.nio.file.Files.createTempDirectory("dedup_state_").toString
+    val stateDir = TestSpark.tempDir("dedup_state_").toString
     Dedup.writeNearDupState(history, "doc_id", "text", stateDir,
       shingleK = 3, numHashes = 16, bands = 4)
     val out = Dedup.incrementalNearDupsFromState(batch, stateDir,
@@ -445,7 +501,7 @@ class DedupSpec extends AnyFunSuite {
     val history = ((1L to 120L).map(i => (i, boiler)) :+
       (500L, "entirely different vocabulary here appears once")).toDF("doc_id", "text")
     val batch = (1001L to 1003L).map(i => (i, boiler)).toDF("doc_id", "text")
-    val stateDir = java.nio.file.Files.createTempDirectory("dedup_census_").toString
+    val stateDir = TestSpark.tempDir("dedup_census_").toString
     Dedup.writeNearDupState(history, "doc_id", "text", stateDir,
       shingleK = 3, numHashes = 16, bands = 4, bucketCap = 16)
     // the census landed in the state: the boilerplate family's 4 band

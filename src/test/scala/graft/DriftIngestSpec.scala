@@ -12,7 +12,7 @@ class DriftIngestSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private val wide = StructType(Seq(
     StructField("id", LongType),

@@ -40,8 +40,8 @@ class FixpointFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = FaultSpark.requireFaultsGroup()
 
   // One reliable checkpoint root for the JVM: Checkpoints.ensureDir is set-once.
-  private lazy val ckptRoot = Files.createTempDirectory("fixpoint_ckpt_")
-  private lazy val srcRoot = Files.createTempDirectory("fixpoint_src_")
+  private lazy val ckptRoot = TestSpark.tempDir("fixpoint_ckpt_")
+  private lazy val srcRoot = TestSpark.tempDir("fixpoint_src_")
 
   // 3,000 seeded element-set docs, plus a twin of every 5th doc differing by
   // one appended element, so the symmetric (prefix) join has pairs to lose.

@@ -52,7 +52,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     * inspect.
     */
   private def onDisk(df: DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext_").toString
+    val dir = TestSpark.tempDir("graft_ext_").toString
     df.write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }

@@ -46,6 +46,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
+  test("the session's warehouse dir is deleted at JVM exit") {
+    val wh = new org.apache.hadoop.fs.Path(
+      TestSpark.spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    assert(Files.isDirectory(Paths.get(wh)), s"no warehouse dir at $wh")
+    assert(org.apache.spark.GraftSparkTestAccess.deletedAtExit(wh),
+      s"$wh is not registered with Spark's shutdown-delete hook")
+  }
+
   private val known = Set("q01_a", "q02_b", "q03_c")
 
   test("query filter: an unknown name is rejected and listed") {

@@ -121,7 +121,7 @@ class GraphAlgosSpec extends AnyFunSuite {
     // that root instead of requesting a fresh one (which would be refused).
     val dir = spark.sparkContext.getCheckpointDir match {
       case Some(existing) => new java.net.URI(existing).getPath
-      case None => java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+      case None => TestSpark.tempDir("graft_ckpt_").toString
     }
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
     val local = GraphAlgos.pageRank(edges, "src", "dst", iters = 3)

@@ -143,7 +143,7 @@ class GraphBuilderSpec extends AnyFunSuite {
   }
 
   test("graph write/read round-trips as parquet tables") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph").toString
+    val dir = TestSpark.tempDir("graft-graph").toString
     GraphBuilder.write(
       GraphBuilder.vertices(posts, comments, tweets),
       GraphBuilder.edges(posts, comments, tweets), dir)

@@ -21,8 +21,8 @@ class IncrementalSpec extends AnyFunSuite {
     }
 
   test("second run processes only partitions above the watermark") {
-    val landing = Files.createTempDirectory("inc_landing_").toString
-    val state = Files.createTempDirectory("inc_state_").toString
+    val landing = TestSpark.tempDir("inc_landing_").toString
+    val state = TestSpark.tempDir("inc_state_").toString
     // hive-style partition dirs surface dataload as a column on read
     Seq(("2023-03-01", 1L), ("2023-03-02", 2L)).toDF("dataload", "v")
       .write.partitionBy("dataload").mode("append").parquet(landing)
@@ -50,8 +50,8 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("a failed process does not advance the watermark; retry reprocesses") {
-    val landing = Files.createTempDirectory("inc_landing2_").toString
-    val state = Files.createTempDirectory("inc_state2_").toString
+    val landing = TestSpark.tempDir("inc_landing2_").toString
+    val state = TestSpark.tempDir("inc_state2_").toString
     Seq(("2023-04-01", 1L)).toDF("dataload", "v")
       .write.partitionBy("dataload").mode("append").parquet(landing)
 
@@ -69,8 +69,8 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("numeric partition ids advance the watermark numerically, not lexically") {
-    val landing = Files.createTempDirectory("inc_landing3_").toString
-    val state = Files.createTempDirectory("inc_state3_").toString
+    val landing = TestSpark.tempDir("inc_landing3_").toString
+    val state = TestSpark.tempDir("inc_state3_").toString
     Seq((2L, "a"), (10L, "b")).toDF("batch_id", "v")
       .write.partitionBy("batch_id").mode("append").parquet(landing)
     var n = -1L

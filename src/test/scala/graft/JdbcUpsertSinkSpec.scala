@@ -25,7 +25,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
   private var url: String = _
 
   private def withTable[A](ddlCols: String)(f: String => A): A = {
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-derby-").resolve("db")
+    val dbDir = TestSpark.tempDir("graft-derby-").resolve("db")
     url = s"jdbc:derby:${dbDir.toAbsolutePath};create=true"
     val table = "t" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val conn = DriverManager.getConnection(url)
@@ -218,7 +218,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
     // key→shard map is pure), the union must equal the logical upsert
     // result, and re-running a wave must change nothing.
     val nShards = 4
-    val root = java.nio.file.Files.createTempDirectory("graft-derby-sh-")
+    val root = TestSpark.tempDir("graft-derby-sh-")
     val urls = (0 until nShards).map(i =>
       s"jdbc:derby:${root.resolve(s"s$i").toAbsolutePath};create=true")
     val table = "tsh"
@@ -285,7 +285,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
   }
 
   test("shard manifest: stamped layout is enforced, mismatched N refused") {
-    val root = java.nio.file.Files.createTempDirectory("graft-derby-mf-")
+    val root = TestSpark.tempDir("graft-derby-mf-")
     val urls = (0 until 2).map(i =>
       s"jdbc:derby:${root.resolve(s"s$i").toAbsolutePath};create=true")
     val table = "tmf"
@@ -316,7 +316,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
   }
 
   test("reshard 2 -> 3: keys move to their new store, state is preserved") {
-    val root = java.nio.file.Files.createTempDirectory("graft-derby-rs-")
+    val root = TestSpark.tempDir("graft-derby-rs-")
     val table = "trs"
     def mkStores(n: Int, tag: String): IndexedSeq[String] = {
       val urls = (0 until n).map(i =>

@@ -23,9 +23,9 @@ class LayoutSpec extends AnyFunSuite {
     val df = (1L to 20000L).map(i => (i, i % 40, s"payload$i"))
       .toDF("event_id", "user_id", "payload")
 
-    val clustered = Files.createTempDirectory("layout_clustered_").toString
+    val clustered = TestSpark.tempDir("layout_clustered_").toString
     Layout.writeClustered(df, clustered, Seq("user_id", "event_id"), files = 8)
-    val smeared = Files.createTempDirectory("layout_smeared_").toString
+    val smeared = TestSpark.tempDir("layout_smeared_").toString
     df.repartition(8, $"event_id").write.mode("overwrite").parquet(smeared)
 
     // a range boundary can fall inside a key's run, so allow 2 adjacent
@@ -42,9 +42,9 @@ class LayoutSpec extends AnyFunSuite {
     val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
       .toDF("x", "y")
 
-    val zdir = Files.createTempDirectory("layout_z_").toString
+    val zdir = TestSpark.tempDir("layout_z_").toString
     Layout.writeZOrdered(grid, zdir, "x", "y", bits = 6, files = 16)
-    val lexdir = Files.createTempDirectory("layout_lex_").toString
+    val lexdir = TestSpark.tempDir("layout_lex_").toString
     Layout.writeClustered(grid, lexdir, Seq("x", "y"), files = 16)
 
     def hits(path: String, cond: org.apache.spark.sql.Column): Long =
@@ -72,7 +72,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("rows are sorted within each clustered file (monotone row groups)") {
     val df = (1L to 5000L).map(i => ((i * 7919) % 5000, i)).toDF("user_id", "event_id")
-    val dir = Files.createTempDirectory("layout_sorted_").toString
+    val dir = TestSpark.tempDir("layout_sorted_").toString
     Layout.writeClustered(df, dir, Seq("user_id"), files = 4)
     val violations = spark.read.parquet(dir)
       .withColumn("file", input_file_name())
@@ -85,8 +85,8 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compactBySize: many tiny files collapse into the target count, rows intact") {
     import graft.sources.Layout
-    val in = Files.createTempDirectory("layout_tiny_").toString
-    val out = Files.createTempDirectory("layout_compact_").toString
+    val in = TestSpark.tempDir("layout_tiny_").toString
+    val out = TestSpark.tempDir("layout_compact_").toString
     // 40 single-row files — the 15-minute-drop landing shape
     (1L to 40L).map(i => (i, s"payload$i")).toDF("id", "v")
       .repartition(40).write.mode("overwrite").parquet(in)
@@ -103,7 +103,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).as[(Long, String)].collect().toSet ==
       (1L to 40L).map(i => (i, s"payload$i")).toSet)
     // a target larger than the input collapses to one file
-    val out1 = Files.createTempDirectory("layout_one_").toString
+    val out1 = TestSpark.tempDir("layout_one_").toString
     assert(Layout.compactBySize(spark, in, out1, targetBytes = Long.MaxValue) == 1)
     assert(parquetFiles(out1) == 1)
     // in-place compaction is rejected: the parquet read is lazy, so an
@@ -119,8 +119,8 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compactClustered: one rewrite compacts, re-clusters, and republishes the manifest") {
     import graft.sources.{DataSkipping, Layout}
-    val in = Files.createTempDirectory("layout_cc_in_").toString
-    val out = Files.createTempDirectory("layout_cc_").toString + "/t"
+    val in = TestSpark.tempDir("layout_cc_in_").toString
+    val out = TestSpark.tempDir("layout_cc_").toString + "/t"
     val manifest = out + "_manifest"
     // 4096 rows over two uniform 0..63 dims, scattered across 32 files
     val rows = (0L until 4096L)
@@ -152,7 +152,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("bloom manifest prunes point lookups the min/max manifest cannot") {
     import graft.sources.{DataSkipping, Layout}
-    val out = Files.createTempDirectory("layout_bloom_").toString + "/t"
+    val out = TestSpark.tempDir("layout_bloom_").toString + "/t"
     // layout clusters on grp, so each file's id min/max spans ~everything
     val rows = (0L until 4096L).map(i => (i, i % 8))
     Layout.writeClustered(rows.toDF("id", "grp"), out, Seq("grp"), files = 8)
@@ -187,7 +187,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("updateManifest stats only NEW files and drops vanished ones") {
     import graft.sources.DataSkipping
-    val dir = Files.createTempDirectory("layout_incr_").toString
+    val dir = TestSpark.tempDir("layout_incr_").toString
     (0L until 100L).map(i => (i, i)).toDF("id", "v")
       .repartition(4).write.mode("overwrite").parquet(dir)
     val m0 = DataSkipping.buildManifest(spark, dir, "v")
@@ -223,7 +223,7 @@ class LayoutSpec extends AnyFunSuite {
     // Hive-partitioned layout: data files live in nested p=*/ dirs — a
     // flat listing sees zero files and would silently drop every manifest
     // row as "vanished" (ADVICE r6); the recursive listing must see them.
-    val dir = Files.createTempDirectory("layout_part_").toString
+    val dir = TestSpark.tempDir("layout_part_").toString
     (0L until 100L).map(i => (i, i, i % 3)).toDF("id", "v", "p")
       .write.partitionBy("p").mode("overwrite").parquet(dir)
     val m0 = DataSkipping.buildManifest(spark, dir, "v")
@@ -233,14 +233,14 @@ class LayoutSpec extends AnyFunSuite {
     assert(m1.count() == n0, "nested files mistaken for vanished")
     // an empty/wrong dir with a non-empty old manifest must fail loudly,
     // never return an emptied manifest
-    val emptyDir = Files.createTempDirectory("layout_empty_").toString
+    val emptyDir = TestSpark.tempDir("layout_empty_").toString
     intercept[IllegalArgumentException] {
       DataSkipping.updateManifest(spark, emptyDir, m0, "v")
     }
   }
 
   test("ORC sink/source roundtrip with predicate pushdown (format breadth)") {
-    val dir = Files.createTempDirectory("layout_orc_").toString
+    val dir = TestSpark.tempDir("layout_orc_").toString
     val df = (1L to 1000L).map(i => (i, s"name$i", i % 7)).toDF("id", "name", "grp")
     df.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)

@@ -58,8 +58,8 @@ class LifecycleSpec extends AnyFunSuite {
   }
 
   test("compactLatestWins: newest row per key survives; untouched partitions keep files") {
-    val landing = Files.createTempDirectory("lc_landing_").toString
-    val snapshot = Files.createTempDirectory("lc_snap_").toString
+    val landing = TestSpark.tempDir("lc_landing_").toString
+    val snapshot = TestSpark.tempDir("lc_snap_").toString
     Seq((1L, 10L, "a", 100L), (2L, 10L, "a", 200L), (3L, 10L, "b", 300L))
       .toDF("k", "v", "pt", "x").write.mode("overwrite").parquet(landing)
     // Re-land: key 1 updated at a later version.
@@ -137,9 +137,9 @@ class LifecycleSpec extends AnyFunSuite {
 
   test("compactWithManifest: pruned read over the fresh manifest stays exact") {
     import graft.sources.DataSkipping
-    val landing = Files.createTempDirectory("cm_landing_").toString
-    val snapshot = Files.createTempDirectory("cm_snap_").toString
-    val manifest = Files.createTempDirectory("cm_manifest_").toString + "/m"
+    val landing = TestSpark.tempDir("cm_landing_").toString
+    val snapshot = TestSpark.tempDir("cm_snap_").toString
+    val manifest = TestSpark.tempDir("cm_manifest_").toString + "/m"
     Seq((1L, 1L, 100L), (2L, 1L, 250L), (3L, 1L, 900L))
       .toDF("k", "v", "x").write.mode("overwrite").parquet(landing)
     Compaction.compactWithManifest(spark, landing, snapshot, manifest,
@@ -173,8 +173,8 @@ class LifecycleSpec extends AnyFunSuite {
 
   test("publishManifest: a concurrent publisher loses loudly; the pointer never dangles") {
     import graft.sources.DataSkipping
-    val data = Files.createTempDirectory("race_data_").toString
-    val manifest = Files.createTempDirectory("race_manifest_").toString + "/m"
+    val data = TestSpark.tempDir("race_data_").toString
+    val manifest = TestSpark.tempDir("race_manifest_").toString + "/m"
     Seq((1L, 100L), (2L, 200L)).toDF("k", "x")
       .write.mode("overwrite").parquet(data)
     DataSkipping.publishManifest(spark, data, manifest, "x")
@@ -208,8 +208,8 @@ class LifecycleSpec extends AnyFunSuite {
 
   test("time travel: readTableAsOf reproduces the pre-append snapshot exactly") {
     import graft.sources.DataSkipping
-    val data = Files.createTempDirectory("tt_data_").toString
-    val manifest = Files.createTempDirectory("tt_manifest_").toString + "/m"
+    val data = TestSpark.tempDir("tt_data_").toString
+    val manifest = TestSpark.tempDir("tt_manifest_").toString + "/m"
     Seq((1L, 10L), (2L, 20L)).toDF("k", "x")
       .write.mode("overwrite").parquet(data)
     val v1 = DataSkipping.publishManifest(spark, data, manifest, "x")

@@ -71,7 +71,7 @@ class MinhashExprSpec extends AnyFunSuite {
     // must run inside the scan stage, and the plan must contain NO exchange
     // at all below the banding output. (A local relation would be
     // constant-folded into a LocalTableScan, hiding the plan shape.)
-    val dir = java.nio.file.Files.createTempDirectory("mh_plan").toString
+    val dir = TestSpark.tempDir("mh_plan").toString
     docs.repartition(64).write.mode("overwrite").parquet(dir)
     val pq = spark.read.parquet(dir)
     val q = Dedup.minhashBands(pq, "doc_id", "text", 3, 16, 4)
@@ -89,7 +89,7 @@ class MinhashExprSpec extends AnyFunSuite {
   test("local path: narrow input widens for core-parallel hashing") {
     // Single-file input (files < cores): the widen fires so the hash loops
     // run core-parallel — the sf0.1 A/B showed 1.3–1.7× without it.
-    val dir = java.nio.file.Files.createTempDirectory("mh_plan1").toString
+    val dir = TestSpark.tempDir("mh_plan1").toString
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
     val pq = spark.read.parquet(dir)
     val q = Dedup.minhashBands(pq, "doc_id", "text", 3, 16, 4)

@@ -87,7 +87,7 @@ class PlanAuditSpec extends AnyFunSuite {
       val docs = (1L to 200L).map(i => (i, s"tok${i % 7} tok${i % 13} tok${i % 3} tail$i"))
         .toDF("doc_id", "text")
       val banded = graft.dedup.Dedup.minhashBands(docs, "doc_id", "text", 3, 16, 4)
-      val pairs = graft.dedup.Dedup.bucketedPairs(banded, Seq("band", "bh"), "id", 4096)
+      val pairs = graft.dedup.PairJoin.selfPairs(banded, Seq("band", "bh"), "id", 4096)
       val plan = planOf(pairs)
       assert(!plan.contains("minhash_band_keys"),
         "a consumer of the banded table recomputes the banding kernel " +
@@ -363,7 +363,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("partition-pruned scan reads only the selected partition") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pp_").toString
+    val root = TestSpark.tempDir("graft_pp_").toString
     (1 to 100).map(i => (i, s"t${i % 4}")).toDF("id", "topic")
       .write.partitionBy("topic").mode("overwrite").parquet(root)
     val df = spark.read.parquet(root).filter(col("topic") === "t1")

@@ -22,7 +22,7 @@ class ScrapeSourceSpec extends AnyFunSuite {
     * newest file = drop-20.json).
     */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("scrape_drops_")
+    val d = TestSpark.tempDir("scrape_drops_")
     (0 until 5).foreach { k =>
       val rows = (4 * k + 1 to 4 * k + 4).map(t =>
         s"""{"ts_u":$t,"event_id":${100 + t},"kind":"k${t % 3}","score":${t * 1.5}}""")

@@ -310,8 +310,7 @@ class SimilaritySpec extends AnyFunSuite {
       (i, (0 until dim).map(d => math.sin(i * 17 + d * 5 + 1).toFloat))
     }.toDF("vec_id", "embedding")
     val qs = df.filter(col("vec_id") < 4)
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_state_").toString
+    val stateDir = TestSpark.tempDir("graft_ivfpq_state_").toString
     Similarity.writeIvfPqState(df, "vec_id", "embedding", stateDir,
       nCells = 4, m = 4, dim = dim)
     assert(sorted(Similarity.ivfPqSearchState(qs, stateDir, None,

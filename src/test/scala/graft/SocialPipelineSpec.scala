@@ -33,7 +33,7 @@ class SocialPipelineSpec extends AnyFunSuite {
   private val scorer = new Enrich.LexiconScorer(Set("good"), Set("bad"))
 
   private def mkLanding(): (String, String, String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val tmp = TestSpark.tempDir("graft-pipe").toString
     val posts = Seq(
       ("p1", "2023-03-25 10:00:00", "title a", "good content here", "alice", 2, 10, "worldnews", "ukraine war", "25-03-2023"),
       ("p2", "2023-03-25 11:00:00", "title b", "[deleted]", "bob", 0, 1, "europe", "ukraine war", "25-03-2023"),
@@ -93,7 +93,7 @@ class SocialPipelineSpec extends AnyFunSuite {
 
   test("K2 csv snapshot sink round-trips with header") {
     val (postsRoot, _, _) = mkLanding()
-    val out = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/snap"
+    val out = TestSpark.tempDir("graft-csv").toString + "/snap"
     SocialPipeline.writeCsvSnapshot(
       SocialPipeline.scanPartition(spark, postsRoot, "ukraine war", "25-03-2023")
         .select("id", "username", "score"), out)
@@ -103,7 +103,7 @@ class SocialPipelineSpec extends AnyFunSuite {
 
   test("runDaily materializes graph + rollup tables from one distributed plan") {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
-    val out = java.nio.file.Files.createTempDirectory("graft-out").toString
+    val out = TestSpark.tempDir("graft-out").toString
     CountingScorer.rows.set(0L)
     SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
       "ukraine war", "25-03-2023", out, blacklist, new CountingScorer)
@@ -131,7 +131,7 @@ class SocialPipelineSpec extends AnyFunSuite {
 
   test("runDaily rethrows a failing sink's own exception and cleans up") {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
-    val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val out = TestSpark.tempDir("graft-fail").toString
     val ex = intercept[Exception] {
       SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
         "ukraine war", "25-03-2023", out, blacklist, new CountingScorer(failOn = "good tweet"))

@@ -174,7 +174,7 @@ class SocialStreamSpec extends AnyFunSuite {
   test("streaming pipeline output equals the batch pipeline on the same landing data") {
     import graft.pipeline.SocialPipeline
     import graft.schemas.Schemas
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sbatch").toString
+    val tmp = TestSpark.tempDir("graft-sbatch").toString
     val landing = s"$tmp/landing"
     new java.io.File(landing).mkdirs()
     val rows = Seq(
@@ -285,7 +285,7 @@ class SocialStreamSpec extends AnyFunSuite {
   }
 
   test("file-source micro-batches flow through a checkpointed parquet sink") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val tmp = TestSpark.tempDir("graft-stream").toString
     val landing = s"$tmp/landing"
     new java.io.File(landing).mkdirs()
     import graft.schemas.Schemas
@@ -309,7 +309,7 @@ class SocialStreamSpec extends AnyFunSuite {
     // checkpoint must process only files that landed after the first run —
     // already-committed drops are never re-emitted, new ones are never lost,
     // across process restarts.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val tmp = TestSpark.tempDir("graft-restart").toString
     val landing = s"$tmp/landing"
     new java.io.File(landing).mkdirs()
     import org.apache.spark.sql.types._
@@ -349,12 +349,12 @@ class SocialStreamSpec extends AnyFunSuite {
     // this proves WHO dropped it.
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-late").toString
+    val tmp = TestSpark.tempDir("graft-late").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("ts_us", LongType)))
     def us(s: String) = Timestamp.valueOf(s).getTime * 1000L
     def drop(name: String, mtime: Long, rows: Seq[(Long, Long)]): Unit = {
-      val d = java.nio.file.Files.createTempDirectory("graft-late-w").toString
+      val d = TestSpark.tempDir("graft-late-w").toString
       rows.toDF("id", "ts_us").coalesce(1).write.mode("overwrite").parquet(d)
       val part = new java.io.File(d).listFiles()
         .find(f => f.getName.endsWith(".parquet")).get

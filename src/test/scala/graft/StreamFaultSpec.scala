@@ -39,7 +39,7 @@ class StreamFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = FaultSpark.requireFaultsGroup()
 
-  private lazy val root = Files.createTempDirectory("stream_fault_")
+  private lazy val root = TestSpark.tempDir("stream_fault_")
 
   // 5 parquet files of 400 rows over 200 keys: heavy cross-file updates, so
   // latest-wins state changes in every micro-batch.

@@ -1,11 +1,22 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (forked test JVM), built with
   * the same engine configuration as the mains. */
 object TestSpark {
   lazy val spark: SparkSession = GraftSession(cpus = 4)
+
+  /** A fresh scratch dir in `java.io.tmpdir` that Spark's shutdown hook
+    * deletes at JVM exit. It keeps a short path on purpose: PlanAuditSpec
+    * finds scans by path in plan strings, which abbreviate at 100 chars. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    org.apache.spark.GraftSparkAccess.deleteAtExit(d.toString)
+    d
+  }
 }
 
 /** The `faults` group's session: `local[4, 3]`, so a task that dies on
