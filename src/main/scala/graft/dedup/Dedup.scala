@@ -3,6 +3,9 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.expressions.MinhashKernels
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup. Every variant is a
@@ -13,6 +16,14 @@ import org.apache.spark.sql.types._
   * deterministic, seedable, and expressible in any ANSI engine (no int64
   * wraparound, which engines like DuckDB reject), so every operator here is
   * oracle-checkable end to end.
+  *
+  * Every operator hashes with the native codegen'd expressions:
+  * [[charHash]] and the `graft.expressions` kernels (`shingle_hashes`,
+  * `minhash_band_keys*`, `simhash_sig`), which fold each token with
+  * `CharHash.hash`. The HOF column forms — [[charHashHof]] and the
+  * [[shingleHashes]], [[minhashSignature]], [[bandHash]], [[tokenHashes]]
+  * and [[simhash]] built on it — are the executable spec those are pinned
+  * to; no operator runs them.
   */
 object Dedup {
 
@@ -51,10 +62,21 @@ object Dedup {
   }
 
   /** Portable 30-bit rolling hash of a string: fold (acc*31 + code) mod P
-    * over the character stream. Pure column arithmetic, reproducible across
-    * engines and runs.
+    * over the character stream, reproducible across engines and runs. The
+    * one Column form production code hashes with: it builds the native
+    * [[graft.expressions.CharHash]] directly (codegen'd, no function
+    * registration needed).
     */
   def charHash(s: Column): Column =
+    org.apache.spark.sql.GraftFunctions.column(graft.expressions.CharHash(
+      org.apache.spark.sql.GraftFunctions.expression(s)))
+
+  /** The HOF reference fold of [[charHash]] — the executable spec the
+    * native expression and the HOF forms below are pinned to. Equal to
+    * [[charHash]] on BMP text: this folds per-character `ascii()` code
+    * points, the native form folds UTF-16 units.
+    */
+  def charHashHof(s: Column): Column =
     aggregate(split(s, ""), lit(0L),
       (acc, ch) => (acc * lit(31L) + coalesce(ascii(ch).cast(LongType), lit(0L))) % lit(P))
 
@@ -64,11 +86,11 @@ object Dedup {
   /** Distinct k-shingle hashes built by combining per-token hashes —
     * O(chars) char work per doc instead of O(k·chars): each token is
     * char-hashed once, then a shingle hash is a k-step fold over the token
-    * hashes. Higher-order functions evaluate interpreted (outside codegen),
-    * so constant factors here dominate the whole MinHash pipeline.
+    * hashes. The HOF reference of the `shingle_hashes` kernel
+    * ([[shingleHashSets]]).
     */
   def shingleHashes(text: Column, k: Int): Column = {
-    val th = transform(split(text, " "), t => charHash(t))
+    val th = transform(split(text, " "), t => charHashHof(t))
     val n = size(th)
     array_distinct(
       transform(sequence(lit(0), greatest(n - k, lit(0))), i =>
@@ -93,31 +115,6 @@ object Dedup {
   def bandHash(sig: Column, from: Int, len: Int): Column =
     aggregate(slice(sig, lit(from + 1), lit(len)), lit(0L),
       (acc, v) => (acc * lit(1000003L) + v) % lit(P))
-
-  // ------------------------------------------------------- kernel helpers
-
-  /** Scala-side charHash, identical arithmetic to [[charHash]]. */
-  def charHashStr(s: String): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < s.length) { acc = (acc * 31L + s.charAt(i).toLong) % P; i += 1 }
-    acc
-  }
-
-  /** Distinct shingle hashes of one doc's token stream (shared by the
-    * banding and set kernels — identical arithmetic to [[shingleHashes]]).
-    */
-  private def shingleHashArr(toks: Array[String], shingleK: Int): Array[Long] = {
-    val th = toks.map(charHashStr)
-    val nSh = math.max(toks.length - shingleK, 0)
-    Array.tabulate(nSh + 1) { i =>
-      var acc = 0L
-      var j = i
-      val end = math.min(i + shingleK, toks.length)
-      while (j < end) { acc = (acc * 1000003L + th(j)) % P; j += 1 }
-      acc
-    }.distinct
-  }
 
   /** Narrow-input widen for the hash kernels. Two regimes:
     *
@@ -172,8 +169,9 @@ object Dedup {
     * ([[graft.expressions.MinhashBandKeys]]): the per-doc work happens in
     * one static JVM call inside whole-stage codegen — no encoder
     * round-trip, no optimizer barrier — and `posexplode` fans the band
-    * array out to (band, bh, id) rows. Arithmetic identical to
-    * [[minhashBandsKernel]] (pinned by MinhashExprSpec) and the oracle.
+    * array out to (band, bh, id) rows. Arithmetic identical to the HOF
+    * [[shingleHashes]] → [[minhashSignature]] → [[bandHash]] chain (pinned
+    * by MinhashExprSpec) and the oracle.
     * On the scale path the band-key array is computed IN the scan stage
     * and no exchange exists below the band join (see [[widenNarrowInput]]).
     */
@@ -185,55 +183,6 @@ object Dedup {
       .select(col("id"), posexplode(call_function("minhash_band_keys",
         col("text"), lit(shingleK), lit(numHashes), lit(bands))))
       .select(col("pos").as("band"), col("col").as("bh"), col("id"))
-  }
-
-  /** The mapPartitions form of [[minhashBands]] — retained as the
-    * encoder-based reference implementation the parity specs pin the
-    * native expression against: (id, text) → `bands` rows of (band, bh,
-    * id), the same mod-prime arithmetic as a tight JVM loop. The input is
-    * repartitioned to the session default parallelism (small inputs arrive
-    * as one parquet split).
-    */
-  def minhashBandsKernel(df: DataFrame, idCol: String, textCol: String,
-                         shingleK: Int, numHashes: Int, bands: Int): DataFrame = {
-    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val idType = df.schema(idCol).dataType
-    // Band rows carry (band, bh, id) ONLY — the shingle-hash sets needed by
-    // the verify stage are joined back per candidate id later. Carrying the
-    // sets here would shuffle each doc's set `bands` times through the
-    // candidate exchange (the dominant shuffle of the whole pipeline).
-    val outSchema = StructType(Seq(
-      StructField("band", IntegerType, nullable = false),
-      StructField("bh", LongType, nullable = false),
-      StructField("id", idType)))
-    val rpb = numHashes / bands
-    val as = (0 until numHashes).map(hashA).toArray
-    val bs = (0 until numHashes).map(hashB).toArray
-    implicit val enc = Encoders.row(outSchema)
-    in.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.get(0)
-        val toks = Option(r.getString(1)).getOrElse("").split(" ", -1)
-        val sh = shingleHashArr(toks, shingleK)
-        val sig = Array.tabulate(numHashes) { i =>
-          var m = Long.MaxValue
-          var j = 0
-          while (j < sh.length) {
-            val v = (as(i) * sh(j) + bs(i)) % P
-            if (v < m) m = v
-            j += 1
-          }
-          m
-        }
-        (0 until bands).iterator.map { b =>
-          var acc = 0L
-          var r2 = 0
-          while (r2 < rpb) { acc = (acc * 1000003L + sig(b * rpb + r2)) % P; r2 += 1 }
-          Row(b, acc, id)
-        }
-      }
-    }(enc)
   }
 
   /** (id, distinct shingle-hash set) per doc — the verify-side table
@@ -326,29 +275,11 @@ object Dedup {
     df.mapPartitions { it =>
       val arr = bc.value
       it.map { r =>
-        val toks = Option(r.getString(idx)).getOrElse("").split(" ", -1)
+        val text = UTF8String.fromString(Option(r.getString(idx)).getOrElse(""))
         var n = 0L
-        shingleHashArr(toks, shingleK).foreach(h =>
+        MinhashKernels.shingleHashes(text, shingleK).foreach(h =>
           if (java.util.Arrays.binarySearch(arr, h) >= 0) n += 1)
         Row.fromSeq(r.toSeq :+ n)
-      }
-    }(enc)
-  }
-
-  /** mapPartitions reference form of [[shingleHashSets]] (parity specs). */
-  def shingleHashSetsKernel(df: DataFrame, idCol: String, textCol: String,
-                            shingleK: Int): DataFrame = {
-    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val idType = df.schema(idCol).dataType
-    val outSchema = StructType(Seq(
-      StructField("id", idType),
-      StructField("sh", ArrayType(LongType, containsNull = false))))
-    implicit val enc = Encoders.row(outSchema)
-    in.mapPartitions { it =>
-      it.map { r =>
-        val toks = Option(r.getString(1)).getOrElse("").split(" ", -1)
-        Row(r.get(0), shingleHashArr(toks, shingleK).toSeq)
       }
     }(enc)
   }
@@ -654,10 +585,9 @@ object Dedup {
     * texts) rows of 24 bytes, not the corpus.
     */
   def fingerprints(history: DataFrame, textCol: String): DataFrame = {
-    org.apache.spark.sql.GraftFunctions.register(history.sparkSession)
     history.select(length(col(textCol)).cast(LongType).as("fp_len"),
         xxhash64(col(textCol)).as("fp_x"),
-        call_function("char_hash", col(textCol)).as("fp_c"))
+        charHash(col(textCol)).as("fp_c"))
       .distinct()
   }
 
@@ -675,11 +605,10 @@ object Dedup {
   def dedupAgainstHistory(batch: DataFrame, historyFp: DataFrame,
                           textCol: String,
                           expectedHistory: Long): DataFrame = {
-    org.apache.spark.sql.GraftFunctions.register(batch.sparkSession)
     val b = batch
       .withColumn("fp_len", length(col(textCol)).cast(LongType))
       .withColumn("fp_x", xxhash64(col(textCol)))
-      .withColumn("fp_c", call_function("char_hash", col(textCol)))
+      .withColumn("fp_c", charHash(col(textCol)))
     val sketch = graft.ops.BloomJoin.buildSketch(historyFp, "fp_x",
       expectedHistory)
     val gate = graft.ops.BloomJoin.mightContain(b, col("fp_x"), sketch)
@@ -735,7 +664,7 @@ object Dedup {
   def tokenHashes(text: Column, seed: Int = 0): Column = {
     val (a, b) = if (seed == 0) (hashA(0), hashB(0)) else (wideA1, wideB1)
     transform(array_distinct(split(text, " ")),
-      t => (lit(a) * charHash(t) + lit(b)) % lit(P))
+      t => (lit(a) * charHashHof(t) + lit(b)) % lit(P))
   }
 
   /** SimHash: `bits`-bit signature where bit j is set when more than half of
@@ -799,7 +728,7 @@ object Dedup {
   /** SimHash banding via the native `simhash_sig` expression: one codegen'd
     * call computes the signature; band keys are plain bit arithmetic on the
     * long — no arrays, no encoder round-trip (see [[minhashBands]]).
-    * Output shape (band, bh, id, sig), identical to the kernel form.
+    * Output shape (band, bh, id, sig); the signature equals [[simhash]].
     */
   def simhashBands(df: DataFrame, idCol: String, textCol: String,
                    bits: Int, bands: Int): DataFrame = {
@@ -814,50 +743,6 @@ object Dedup {
           shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask))): _*))
           .as(Seq("band", "bh")))
       .select(col("band"), col("bh"), col("id"), col("sig"))
-  }
-
-  /** mapPartitions reference form of [[simhashBands]] (parity specs). */
-  def simhashBandsKernel(df: DataFrame, idCol: String, textCol: String,
-                         bits: Int, bands: Int): DataFrame = {
-    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val idType = df.schema(idCol).dataType
-    val outSchema = StructType(Seq(
-      StructField("band", IntegerType, nullable = false),
-      StructField("bh", LongType, nullable = false),
-      StructField("id", idType),
-      StructField("sig", LongType, nullable = false)))
-    val bandBits = bits / bands
-    val mask = (1L << bandBits) - 1
-    val a0 = hashA(0)
-    val b0 = hashB(0)
-    val a1 = wideA1
-    val b1 = wideB1
-    implicit val enc = Encoders.row(outSchema)
-    in.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.get(0)
-        val toks = Option(r.getString(1)).getOrElse("").split(" ", -1).distinct
-        val ch = toks.map(charHashStr)
-        val th = ch.map(h => (a0 * h + b0) % P)
-        val th2 = if (bits > 30) ch.map(h => (a1 * h + b1) % P) else null
-        val ntok = th.length
-        var sig = 0L
-        var j = 0
-        while (j < bits) {
-          val h = if (j < 30) th else th2
-          val jb = if (j < 30) j else j - 30
-          var ones = 0
-          var i = 0
-          while (i < ntok) { if (((h(i) >> jb) & 1L) == 1L) ones += 1; i += 1 }
-          if (2 * ones > ntok) sig |= (1L << j)
-          j += 1
-        }
-        (0 until bands).iterator.map { b =>
-          Row(b, (sig >> (b * bandBits)) & mask, id, sig)
-        }
-      }
-    }(enc)
   }
 
   /** SimHash near-dup pairs: candidates agree on one of `bands` contiguous

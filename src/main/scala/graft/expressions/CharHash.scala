@@ -7,9 +7,13 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the engine's portable rolling hash:
-  * fold (acc*31 + charCode) mod 1e9+7 over the string — the spec shared by
-  * `Dedup.charHash` (column HOF form), `Dedup.charHashStr` (kernel form)
-  * and the DuckDB oracle SQL.
+  * fold (acc*31 + unit) mod 1e9+7 over the string's UTF-16 units. Every
+  * production hash runs through it: `Dedup.charHash` constructs it as a
+  * Column, and the `shingle_hashes` / `simhash_sig` kernels fold each
+  * token with [[CharHash.hash]]. The two other bodies of the same fold
+  * are references: `Dedup.charHashHof` (the HOF executable spec the
+  * parity specs pin this against) and [[CharHash.duckdbSql]] (the DuckDB
+  * oracle's form).
   *
   * Why a custom expression (SURVEY.md §7.3): the HOF form
   * `aggregate(split(s,""), ...)` cannot participate in whole-stage codegen —
@@ -40,15 +44,28 @@ case class CharHash(child: Expression) extends UnaryExpression {
 }
 
 object CharHash {
-  /** Static entry point referenced from generated Java. UTF-16 unit fold —
-    * identical to Dedup.charHashStr; equal to the per-character ascii() fold
-    * for all BMP text.
+  val P = 1000000007L
+
+  /** The engine's one JVM char fold, over UTF-16 units: allocation-free,
+    * so the kernels call it once per token. Equal to the per-character
+    * `ascii()` fold of the HOF and DuckDB forms for all BMP text; a
+    * supplementary-plane character folds as its two surrogate units.
     */
-  def hash(s: UTF8String): Long = {
-    val str = s.toString
+  def hash(s: String): Long = {
     var acc = 0L
     var i = 0
-    while (i < str.length) { acc = (acc * 31L + str.charAt(i).toLong) % 1000000007L; i += 1 }
+    while (i < s.length) { acc = (acc * 31L + s.charAt(i).toLong) % P; i += 1 }
     acc
   }
+
+  /** Static entry point referenced from generated Java. */
+  def hash(s: UTF8String): Long = hash(s.toString)
+
+  /** The same fold as DuckDB SQL over the string expression `s` — the
+    * oracle's one copy.
+    */
+  def duckdbSql(s: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
+       |  (acc, c) -> (acc * 31 + c) % $P)""".stripMargin
 }

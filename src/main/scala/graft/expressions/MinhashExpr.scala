@@ -7,18 +7,17 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen'd forms of the MinHash pipeline's per-document work —
-  * the third implementation tier after the HOF expressions (portable,
-  * interpreted, ~100× cost) and the mapPartitions kernels (fast loops,
-  * but each pays an UnsafeRow↔Row encoder round-trip per row and breaks
-  * whole-stage codegen at both edges). These run as one static JVM call
-  * per row INSIDE generated code: no encoders, no optimizer barrier, and
-  * the downstream `posexplode` is the first non-codegen node.
+/** Native codegen'd forms of the MinHash pipeline's per-document work,
+  * run as one static JVM call per row INSIDE generated code: no encoders,
+  * no optimizer barrier, and the downstream `posexplode` is the first
+  * non-codegen node. Production code runs only these; the HOF column
+  * forms in `Dedup` (`shingleHashes`, `minhashSignature`, `bandHash`,
+  * `tokenHashes`, `simhash`) are the executable spec they are pinned to.
   *
-  * Arithmetic is bit-identical to `Dedup.shingleHashArr` /
-  * `Dedup.minhashBands` (and therefore to the DuckDB oracle SQL):
-  * per-token charHash fold, k-step shingle fold mod 1e9+7, seeded affine
-  * min-hash, 1000003-fold band keys. Parity is pinned by MinhashExprSpec.
+  * Arithmetic is bit-identical to those HOF forms (and therefore to the
+  * DuckDB oracle SQL): per-token [[CharHash.hash]] fold, k-step shingle
+  * fold mod 1e9+7, seeded affine min-hash, 1000003-fold band keys.
+  * Parity is pinned by MinhashExprSpec.
   */
 object MinhashKernels {
   private val P = 1000000007L
@@ -30,14 +29,7 @@ object MinhashKernels {
     val toks = text.split(" ", -1)
     val th = new Array[Long](toks.length)
     var t = 0
-    while (t < toks.length) {
-      val str = toks(t)
-      var acc = 0L
-      var i = 0
-      while (i < str.length) { acc = (acc * 31L + str.charAt(i).toLong) % P; i += 1 }
-      th(t) = acc
-      t += 1
-    }
+    while (t < toks.length) { th(t) = CharHash.hash(toks(t)); t += 1 }
     val nSh = math.max(toks.length - k, 0) + 1
     val out = new Array[Long](nSh)
     var i = 0
@@ -100,11 +92,9 @@ object MinhashKernels {
     while (t < toks.length) {
       val str = toks(t)
       if (seen.add(str)) {
-        var acc = 0L
-        var i = 0
-        while (i < str.length) { acc = (acc * 31L + str.charAt(i).toLong) % P; i += 1 }
-        hs(n) = (a0 * acc + b0) % P
-        if (wide) hs2(n) = (a1 * acc + b1) % P
+        val h = CharHash.hash(str)
+        hs(n) = (a0 * h + b0) % P
+        if (wide) hs2(n) = (a1 * h + b1) % P
         n += 1
       }
       t += 1
@@ -290,9 +280,9 @@ case class ArrayJaccard(left: Expression, right: Expression)
 
 /** `simhash_sig(text, bits)` — SimHash signature as one long: bit j set
   * when more than half of the distinct-token seeded hashes have bit j set.
-  * Same arithmetic as `Dedup.simhashFromHashes` (HOF form) and
-  * `Dedup.simhashBandsKernel`. Band keys are then plain bit arithmetic on
-  * the signature column — fully codegen'd, no arrays at all.
+  * Same arithmetic as `Dedup.simhash` (HOF form). Band keys are then
+  * plain bit arithmetic on the signature column — fully codegen'd, no
+  * arrays at all.
   */
 case class SimhashSig(child: Expression, bits: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =

@@ -25,13 +25,12 @@ object Multimodal {
 
   val P = 1000000007L
 
-  /** Rolling byte hash (== Dedup.charHashStr on ASCII payloads). */
-  def byteHash(bytes: Array[Byte]): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < bytes.length) { acc = (acc * 31L + (bytes(i) & 0xffL)) % P; i += 1 }
-    acc
-  }
+  /** Rolling byte hash: the engine's char fold over the payload bytes,
+    * each byte read as one unsigned unit (ISO-8859-1 decodes byte b to
+    * char b & 0xff) — equal to the text's char hash on ASCII payloads. */
+  def byteHash(bytes: Array[Byte]): Long =
+    graft.expressions.CharHash.hash(
+      new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1))
 
   /** STUB decode: deterministic pseudo-header from the payload hash. A real
     * implementation would parse the container format here (???-equivalent).

@@ -286,7 +286,6 @@ object CoreOps {
     * Returns (stratum, key) pairs; join back on the key for payloads.
     */
   def balancedSample(df: DataFrame, stratumCol: String, keyCol: String): DataFrame = {
-    org.apache.spark.sql.GraftFunctions.register(df.sparkSession)
     val nMin = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n"))
       .agg(min(col("n"))).head().getLong(0)
     // Affine-mixed hash, not the raw fold: charHash is monotone in the
@@ -298,7 +297,7 @@ object CoreOps {
     // of the key.
     val hashed = df.select(col(stratumCol).as("stratum"),
       graft.dedup.Dedup.seeded(
-        call_function("char_hash", col(keyCol).cast("string")), 0).as("h"),
+        graft.dedup.Dedup.charHash(col(keyCol).cast("string")), 0).as("h"),
       col(keyCol).as("k"))
     rangeRank(hashed, Seq("stratum"), Seq(col("h").desc, col("k").asc), "__rr")
       .filter(col("__rr") <= nMin)
@@ -310,7 +309,8 @@ object CoreOps {
     * at the number of strata: ntile by language = 2-way parallel forever)
     * and the k-bounded top-k aggregate (per-task buffers of k entries:
     * dies when k is "a billion rows per stratum"). Neither survives a
-    * 1000-executor corpus; this does:
+    * 1000-executor corpus; this does, as [[rangePrefixSums]] of a unit
+    * LONG weight:
     *
     *  1. range-repartition on (strata ++ order) — a distributed sort
     *     whose parallelism is the PARTITION count, with each stratum
@@ -319,8 +319,8 @@ object CoreOps {
     *     P × strata histogram collected to the driver (bounded artifact,
     *     like a centroid table);
     *  3. a per-partition counter pass: each row's rank = its partition's
-    *     per-stratum offset + local position. One extra column, no
-    *     per-row state beyond a long.
+    *     per-stratum offset + local position. One extra column (`rankCol`),
+    *     no per-row state beyond a long.
     *
     * Ranks are 1-based, dense within a stratum, and EXACTLY the rank the
     * window form would produce (ties impossible when `order` ends in a
@@ -336,64 +336,19 @@ object CoreOps {
   def rangeRank(df: DataFrame, strata: Seq[String], order: Seq[Column],
                 rankCol: String = "rank",
                 numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.StructField
-    val spark = df.sparkSession
-    // Adaptive width (r17): the per-row accumulator pass below runs at
-    // ~µs/row, so ~512 KB of narrow rows per task keeps every task's
-    // real work above its fixed cost; a grouped KB-scale input then runs
-    // width 1, where repartitionByRange(1, ...) plans NO sampling job
-    // and the offsets histogram below is skippable — two driver jobs
-    // gone per call. Real corpora still derive the full session width
-    // (the estimate is the optimizer's own, the same one AQE seeds from).
-    val nPart =
-      if (numPartitions > 0) numPartitions
-      else adaptiveWidth(df, targetBytesPerTask = 512L << 10)
-    val sortCols = strata.map(col) ++ order
-    val sorted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint()
-    val sIdx = strata.map(df.schema.fieldIndex)
-    def strataKey(r: Row): Seq[Any] = sIdx.map(r.get)
-    // P × strata histogram (tiny): how many rows of each stratum sit in
-    // each partition, so partition p starts stratum s at the sum of s's
-    // counts in partitions < p. Width 1 ⇒ every offset is 0 — skip the
-    // collect job outright.
-    val offsets: Map[(Int, Seq[Any]), Long] = if (nPart <= 1) Map.empty else {
-      val hist = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val m = scala.collection.mutable.LinkedHashMap[Seq[Any], Long]()
-        it.foreach { r => val k = strataKey(r); m(k) = m.getOrElse(k, 0L) + 1L }
-        m.iterator.map { case (k, n) => (pid, k, n) }
-      }.collect()
-      val byStratum = hist.groupBy(_._2)
-      (for {
-        (k, rows) <- byStratum.iterator
-        sortedRows = rows.sortBy(_._1)
-        (cum, (pid, _, n)) <- sortedRows
-          .scanLeft(0L)((acc, r) => acc + r._3).zip(sortedRows)
-      } yield (pid, k) -> cum).toMap
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(rankCol, LongType, nullable = false))
-    implicit val enc = Encoders.row(outSchema)
-    sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val counters = scala.collection.mutable.HashMap[Seq[Any], Long]()
-      it.map { r =>
-        val k = strataKey(r)
-        val next = counters.getOrElse(k, offsets.getOrElse((pid, k), 0L)) + 1L
-        counters(k) = next
-        Row.fromSeq(r.toSeq :+ next)
-      }
-    }(enc)
+    val unit = "__rank_unit"
+    rangePrefixSums(df.withColumn(unit, lit(1L)), strata, order, Seq(unit),
+        numPartitions)
+      .drop(unit)
+      .withColumnRenamed(unit + "_cum", rankCol)
   }
 
   /** Running (inclusive) per-stratum prefix SUMS of the long columns in
     * `weights` along `order` — [[rangeRank]] generalized from counting
-    * rows to accumulating measures, with the identical three-step shape
-    * (range repartition → P × strata mass histogram to the driver →
-    * per-partition accumulator pass). Output adds one `<w>_cum` long
-    * column per weight.
+    * rows to accumulating measures (rangeRank IS this over a unit weight),
+    * in the same three steps (range repartition → P × strata mass
+    * histogram to the driver → per-partition accumulator pass). Output
+    * adds one `<w>_cum` long column per weight.
     *
     * This is the distributed-CDF primitive: group the data by the order
     * key first (so the input here is one row per distinct key with
@@ -418,8 +373,13 @@ object CoreOps {
         s"weight column $w must be LONG, got ${df.schema(w).dataType.catalogString}")
     }
     val spark = df.sparkSession
-    // Adaptive width + width-1 short-circuits — same rationale as
-    // [[rangeRank]] (r17).
+    // Adaptive width (r17): the per-row accumulator pass below runs at
+    // ~µs/row, so ~512 KB of narrow rows per task keeps every task's
+    // real work above its fixed cost; a grouped KB-scale input then runs
+    // width 1, where repartitionByRange(1, ...) plans NO sampling job
+    // and the offsets histogram below is skippable — two driver jobs
+    // gone per call. Real corpora still derive the full session width
+    // (the estimate is the optimizer's own, the same one AQE seeds from).
     val nPart =
       if (numPartitions > 0) numPartitions
       else adaptiveWidth(df, targetBytesPerTask = 512L << 10)
@@ -614,20 +574,14 @@ object CoreOps {
 
   /** Hot-key detection for [[saltedJoin]]: a seeded sample of the fact
     * key column, counted per key; keys whose sampled count implies
-    * ≥ `hotThreshold` fact rows are returned, largest first, capped at
-    * `cap` (a bounded driver artifact, like a centroid table). The seed
-    * makes the plan deterministic; the CAP makes the literal list safe
-    * to inline into a codegen'd `isin`. Detection errors are harmless to
-    * CORRECTNESS — the join result is identical for ANY hot set — they
-    * only move keys between the salted and plain paths.
-    */
-  def hotKeys(fact: DataFrame, key: String, hotThreshold: Long,
-              sampleFraction: Double = 0.01, cap: Int = 1024): Array[Any] =
-    hotKeyCounts(fact, key, hotThreshold, sampleFraction, cap).map(_._1)
-
-  /** [[hotKeys]] plus each key's ESTIMATED fact-row count (sampled count
-    * scaled back by the sample fraction) — the input [[saltedJoin]] sizes
-    * each hot key's salt fan-out from.
+    * ≥ `hotThreshold` fact rows are returned with their ESTIMATED
+    * fact-row count (sampled count scaled back by the sample fraction —
+    * what [[saltedJoin]] sizes each hot key's salt fan-out from), largest
+    * first, capped at `cap` (a bounded driver artifact, like a centroid
+    * table). The seed makes the plan deterministic; the CAP makes the
+    * literal list safe to inline into a codegen'd `isin`. Detection errors
+    * are harmless to CORRECTNESS — the join result is identical for ANY
+    * hot set — they only move keys between the salted and plain paths.
     */
   def hotKeyCounts(fact: DataFrame, key: String, hotThreshold: Long,
                    sampleFraction: Double = 0.01,

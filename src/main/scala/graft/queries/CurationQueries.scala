@@ -7,6 +7,7 @@ import graft.Tables
 import graft.ops.{CoreOps, EntityResolution, Intervals}
 import graft.similarity.Similarity
 import graft.text.TextOps
+import graft.expressions.CharHash
 
 /** Wave 8 — corpus-curation operators: prefix-filtering set-similarity
   * join (the frequency-adaptive blocking family), CCNet-style sub-document
@@ -158,7 +159,7 @@ object CurationQueries {
           sum(col("n_chunks")).as("n_chunks"),
           sum(col("n_dropped")).as("n_dropped"),
           sum(when(col("new_text") === "", 1L).otherwise(0L)).as("n_emptied"),
-          sum(TextOps.fingerprint(col("new_text"))).as("sum_fp"))
+          sum(graft.dedup.Dedup.charHash(col("new_text"))).as("sum_fp"))
         .orderBy(col("source"))
     }),
 
@@ -347,7 +348,7 @@ object CurationQueries {
           sum(expr("size(toks)")).as("n_tokens"),
           sum(col("n_masked")).as("n_masked"),
           sum(col("n_spans")).as("n_spans"),
-          sum(TextOps.fingerprint(col("corrupted"))).as("sum_fp"))
+          sum(graft.dedup.Dedup.charHash(col("corrupted"))).as("sum_fp"))
         .orderBy(col("source"))
     }),
 
@@ -545,12 +546,6 @@ object CurationQueries {
         s"(${shift("d2", i)} & 1) * ${1L << (2 * i + 1)}"
     }.mkString(" + ")
 
-  /** q27's portable rolling-hash fingerprint as DuckDB SQL. */
-  private def fpSql(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % 1000000007)""".stripMargin
-
   val oracles: Map[String, String] = Map(
     "q301_compaction_bins" ->
       """WITH manifest AS (
@@ -659,7 +654,7 @@ object CurationQueries {
          |c AS (SELECT doc_id, source, ci,
          |        array_to_string(toks[(ci*10+1):(ci*10+10)], ' ') AS chunk
          |      FROM t, LATERAL (SELECT unnest(range(0, (len(toks)+9)//10)) AS ci) r),
-         |f AS (SELECT doc_id, source, ci, chunk, ${fpSql("chunk")} AS fp FROM c),
+         |f AS (SELECT doc_id, source, ci, chunk, ${CharHash.duckdbSql("chunk")} AS fp FROM c),
          |cnt AS (SELECT fp, count(DISTINCT doc_id) AS nd FROM f GROUP BY 1),
          |k AS (SELECT f.*, nd FROM f JOIN cnt USING (fp)),
          |rec AS (SELECT doc_id, any_value(source) AS source,
@@ -672,7 +667,7 @@ object CurationQueries {
          |  CAST(sum(n_chunks) AS BIGINT) AS n_chunks,
          |  CAST(sum(n_dropped) AS BIGINT) AS n_dropped,
          |  CAST(sum(CASE WHEN new_text = '' THEN 1 ELSE 0 END) AS BIGINT) AS n_emptied,
-         |  CAST(sum(${fpSql("new_text")}) AS BIGINT) AS sum_fp
+         |  CAST(sum(${CharHash.duckdbSql("new_text")}) AS BIGINT) AS sum_fp
          |FROM rec GROUP BY source ORDER BY source""".stripMargin,
 
 
@@ -751,10 +746,6 @@ object CurationQueries {
 
 
     "q223_span_corruption" -> {
-      val fp = (s: String) =>
-        s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-           |  (acc, c) -> (acc * 31 + c) % 1000000007)""".stripMargin
       s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
          |           FROM documents),
          |c AS (
@@ -771,7 +762,7 @@ object CurationQueries {
          |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
          |  CAST(sum(n_masked) AS BIGINT) AS n_masked,
          |  CAST(sum(n_spans) AS BIGINT) AS n_spans,
-         |  CAST(sum(${fp("corrupted")}) AS BIGINT) AS sum_fp
+         |  CAST(sum(${CharHash.duckdbSql("corrupted")}) AS BIGINT) AS sum_fp
          |FROM c GROUP BY source ORDER BY source""".stripMargin
     },
 

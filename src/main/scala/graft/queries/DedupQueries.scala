@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.similarity.Similarity
+import graft.expressions.CharHash
 
 /** Wave 3 — near-dup deduplication + similarity search (the training-data
   * operators, SURVEY.md §7.2 step 7). Every pipeline is mirrored 1:1 in a
@@ -430,14 +431,13 @@ object DedupQueries {
         .orderBy(col("component"))
     }),
 
-    // SimHash 30-bit signatures (deterministic, portable). Token hashes are
-    // materialized in their own projection so the char fold runs once per
-    // row, not once per signature bit.
+    // SimHash 30-bit signatures (deterministic, portable): the codegen'd
+    // simhash_sig expression, one call per row.
     "q33_simhash" -> ((s, dir) => {
+      org.apache.spark.sql.GraftFunctions.register(s)
       Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 50)
-        .select(col("doc_id"), Dedup.tokenHashes(col("text")).as("hs"))
-        .select(col("doc_id"), Dedup.simhashFromHashes(col("hs")).as("sig"))
+        .select(col("doc_id"), call_function("simhash_sig", col("text"), lit(30)).as("sig"))
         .orderBy(col("doc_id"))
     }),
 
@@ -629,7 +629,7 @@ object DedupQueries {
       // to the fixed shape, since plane p's hyperplane depends only on p
       // — and capped at 15 so 4 bands stay inside a 63-bit long (beyond
       // ~41M vectors the signature needs multi-long words; SCALE.md).
-      // The count is a bounded pre-pass (like CoreOps.hotKeys' sample);
+      // The count is a bounded pre-pass (like CoreOps.hotKeyCounts' sample);
       // the oracle mirrors the same integer bit-length arithmetic, so
       // both engines derive the same w from the same table.
       val nVecs = e.count()
@@ -860,12 +860,6 @@ object DedupQueries {
 
   // ---------------------------------------------------------------- oracles
 
-  /** charHash(s) as DuckDB SQL: fold (acc*31 + ascii) mod P over chars. */
-  private def chSql(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % $P)""".stripMargin
-
   /** Distinct 3-shingles of `text` (matches Dedup.shingles for k=3). */
   private val shingleSql =
     """list_distinct(list_transform(
@@ -892,7 +886,7 @@ object DedupQueries {
                                    from: String = "documents"): String =
     s"""tok AS (
        |  SELECT doc_id,$extraCols
-       |    list_transform(string_split(text, ' '), tk -> ${chSql("tk")}) AS th
+       |    list_transform(string_split(text, ' '), tk -> ${CharHash.duckdbSql("tk")}) AS th
        |  FROM $from),
        |h AS MATERIALIZED (
        |  SELECT doc_id,$extraCols
@@ -989,7 +983,7 @@ object DedupQueries {
     s"""SELECT doc_id, $bitTerms AS sig
        |FROM (
        |  SELECT doc_id, list_transform(list_distinct(string_split(text, ' ')),
-       |    t -> (${Dedup.hashA(0)} * ${chSql("t")} + ${Dedup.hashB(0)}) % $P) AS hs
+       |    t -> (${Dedup.hashA(0)} * ${CharHash.duckdbSql("t")} + ${Dedup.hashB(0)}) % $P) AS hs
        |  FROM $from)""".stripMargin
   }
 
@@ -1019,7 +1013,7 @@ object DedupQueries {
        |    list_transform(chl, h -> (${Dedup.wideA1} * h + ${Dedup.wideB1}) % $P) AS hs2
        |  FROM (
        |    SELECT doc_id, list_transform(list_distinct(string_split(text, ' ')),
-       |      t -> ${chSql("t")}) AS chl
+       |      t -> ${CharHash.duckdbSql("t")}) AS chl
        |    FROM $from))""".stripMargin
   }
 
@@ -1492,7 +1486,7 @@ object DedupQueries {
          |    CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
          |         ELSE 'test' END AS split
          |  FROM (SELECT doc_id,
-         |          ${chSql("CAST(rep AS VARCHAR)")} % 100 AS h FROM rep))
+         |          ${CharHash.duckdbSql("CAST(rep AS VARCHAR)")} % 100 AS h FROM rep))
          |SELECT split, count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS sum_ids
          |FROM assigned GROUP BY split ORDER BY split""".stripMargin,
 
@@ -1525,7 +1519,7 @@ object DedupQueries {
          |    CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
          |         ELSE 'test' END AS split
          |  FROM (SELECT doc_id,
-         |          ${chSql("CAST(rep AS VARCHAR)")} % 100 AS h FROM rep)),
+         |          ${CharHash.duckdbSql("CAST(rep AS VARCHAR)")} % 100 AS h FROM rep)),
          |counts AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs
          |           FROM assigned GROUP BY split),
          |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS t FROM counts)
@@ -1674,7 +1668,7 @@ object DedupQueries {
          |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
          |s AS MATERIALIZED (
          |  SELECT doc_id, lang, is_eval,
-         |    ${chSql("w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] || ' ' || " +
+         |    ${CharHash.duckdbSql("w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] || ' ' || " +
             "w[i + 3] || ' ' || w[i + 4]")} AS h
          |  FROM t, LATERAL (SELECT unnest(range(1, len(w) - 3)) AS i) r),
          |tv AS (SELECT DISTINCT h FROM s WHERE NOT is_eval),

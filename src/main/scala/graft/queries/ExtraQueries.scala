@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.ops.{BloomJoin, CoreOps}
 import graft.enrich.Enrich
+import graft.expressions.CharHash
 
 /** Wave 5 — grouping sets, exact percentiles, LSH ANN, the batch-25
   * enrichment protocol under the oracle gate, window frames, and pivot.
@@ -894,19 +895,13 @@ object ExtraQueries {
 
   private val C = "CAST(round(%s * 100) AS BIGINT)"
 
-  /** The engine's portable rolling hash in DuckDB (see CharHash.scala). */
-  private def chSql(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % 1000000007)""".stripMargin
-
   val oracles: Map[String, String] = Map(
     // Bottom-k of the same portable hash, replayed in plain SQL: sketches
     // via ORDER BY h LIMIT k over distinct hashes, estimates via the same
     // (k-1)·M // h_k integer arithmetic, intersection via the merged-k
     // Jaccard fraction. The ±25% booleans re-derive from the same exacts.
     "q158_kmv_setops" -> {
-      val h = chSql("concat(CAST(l_partkey AS VARCHAR), '#kmv')")
+      val h = CharHash.duckdbSql("concat(CAST(l_partkey AS VARCHAR), '#kmv')")
       s"""WITH hashed AS (
          |  SELECT l_partkey, l_returnflag, $h AS h
          |  FROM lineitem WHERE l_returnflag IN ('R', 'N')),

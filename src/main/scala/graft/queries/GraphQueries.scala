@@ -18,9 +18,12 @@ object GraphQueries {
   // One reliable-checkpoint root for the whole JVM session: the
   // SparkContext checkpoint dir is set-once global state
   // (graft.ops.Checkpoints), so a fresh temp dir per query invocation
-  // would be rejected on the second bench pass.
-  private lazy val prCkptRoot: String = java.nio.file.Files
-    .createTempDirectory("graft_pr_ckpt_").toString
+  // would be rejected on the second bench pass. Deleted at JVM exit.
+  private lazy val prCkptRoot: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_pr_ckpt_").toString
+    org.apache.spark.GraftSparkAccess.deleteAtExit(d)
+    d
+  }
 
   /** q94's depth cap, shared by the engine call (maxIters) and the
     * oracle's recursive-CTE bound so neither can silently truncate

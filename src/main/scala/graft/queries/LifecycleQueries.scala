@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftSparkAccess
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,6 +16,16 @@ import graft.pipeline.Compaction
   * and recursive comment-tree flatten (depth + root attribution).
   */
 object LifecycleQueries {
+
+  /** A fresh `java.io.tmpdir` dir for one query's output, deleted at JVM
+    * exit together with its `_manifest` sibling (where a query publishes
+    * one). */
+  private def scratchDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    GraftSparkAccess.deleteAtExit(d)
+    GraftSparkAccess.deleteAtExit(d + "_manifest")
+    d
+  }
 
   /** Events flattened to JSON-safe exact types (see StreamQueries). */
   private def eventsFlat(s: SparkSession, dir: String): DataFrame =
@@ -50,8 +61,8 @@ object LifecycleQueries {
           .withColumn("del", lit(false)))
       val merged = Compaction.merge(base, changes, Seq("k"),
         deleteCol = Some("del"))
-      val d1 = Files.createTempDirectory("graft_cdf_v1_").toString
-      val d2 = Files.createTempDirectory("graft_cdf_v2_").toString
+      val d1 = scratchDir("graft_cdf_v1_")
+      val d2 = scratchDir("graft_cdf_v2_")
       val mdir = d1 + "_manifest"
       base.write.mode("overwrite").parquet(d1)
       val v1 = DataSkipping.publishManifest(s, d1, mdir, "k")
@@ -98,7 +109,7 @@ object LifecycleQueries {
         flat.write.mode("overwrite").parquet(d)
         recrawl.write.mode("append").parquet(d)
       }
-      val snapshot = Files.createTempDirectory("graft_compact_out_").toString
+      val snapshot = scratchDir("graft_compact_out_")
       Compaction.compactLatestWins(s, landing, snapshot,
           keys = Seq("event_id"), order = Seq(col("ts_us")),
           partitionCols = Seq("event_type"))
@@ -121,7 +132,7 @@ object LifecycleQueries {
         flat.write.mode("overwrite").parquet(d)
         recrawl.write.mode("append").parquet(d)
       }
-      val snapshot = Files.createTempDirectory("graft_cm_snap_").toString
+      val snapshot = scratchDir("graft_cm_snap_")
       val manifestDir = snapshot + "_manifest"
       graft.pipeline.Compaction.compactWithManifest(s, landing, snapshot,
         manifestDir, keys = Seq("event_id"), order = Seq(col("ts_us")),
@@ -146,7 +157,7 @@ object LifecycleQueries {
       val flat = eventsFlat(s, dir)
       val early = flat.filter(col("event_id") % 3 =!= 0)
       val late = flat.filter(col("event_id") % 3 === 0)
-      val data = Files.createTempDirectory("graft_tt_data_").toString
+      val data = scratchDir("graft_tt_data_")
       val manifestDir = data + "_manifest"
       early.write.mode("overwrite").parquet(data)
       val v1 = DataSkipping.publishManifest(s, data, manifestDir, "event_id")
@@ -249,7 +260,7 @@ object LifecycleQueries {
           .repartition(40, col("event_id"))
           .write.mode("overwrite").parquet(d)
       }
-      val out = Files.createTempDirectory("graft_q129_out_").toString + "/t"
+      val out = scratchDir("graft_q129_out_") + "/t"
       val manifest = out + "_manifest"
       Layout.compactClustered(s, dirty, out, targetBytes = 256 * 1024,
         aCol = "event_id", bCol = "user_id", bits = 8,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.Multimodal
+import graft.expressions.CharHash
 
 /** Wave 4 — multimodal-column queries. The testdata has no binary table, so
   * payloads are the UTF-8 bytes of `documents.text` (cast to binary in the
@@ -250,11 +251,6 @@ object MediaQueries {
         .orderBy(col("source"))
     }))
 
-  private def chSql(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % $P)""".stripMargin
-
   // embedding element 0 constants: i = 0 in Multimodal.extractEmbedding
   private val a0 = (1L * 2654435761L) % P
   private val b0 = (1L * 1013904223L) % P
@@ -404,13 +400,13 @@ object MediaQueries {
          |  CAST(sum(h % 1024) AS BIGINT) AS sum_width,
          |  CAST(sum((h // 1024) % 1024) AS BIGINT) AS sum_height,
          |  CAST(sum(length(text)) AS BIGINT) AS sum_bytes
-         |FROM (SELECT source, text, ${chSql("text")} AS h FROM documents)
+         |FROM (SELECT source, text, ${CharHash.duckdbSql("text")} AS h FROM documents)
          |GROUP BY source ORDER BY source""".stripMargin,
 
     "q38_media_embedding" ->
       s"""SELECT lang, count(*) AS n,
          |  CAST(sum(CAST(round(CAST(CAST(CAST((($a0 * h + $b0) % $P) AS DOUBLE) / $P AS REAL) AS DOUBLE) * 1000000.0) AS BIGINT)) AS BIGINT) AS sum_e0_u
-         |FROM (SELECT lang, ${chSql("text")} AS h FROM documents)
+         |FROM (SELECT lang, ${CharHash.duckdbSql("text")} AS h FROM documents)
          |GROUP BY lang ORDER BY lang""".stripMargin,
 
     "q39_frame_count" ->

@@ -35,6 +35,7 @@ object SourceQueries {
 
   private def buildDropsInto(s: SparkSession, dir: String, out: String): Unit = {
     val staged = Files.createTempDirectory("graft_scrape_staged_").toString
+    org.apache.spark.GraftSparkAccess.deleteAtExit(staged)
     val seq = Window.orderBy(col("ts"), col("event_id"))
     val flat = Tables.load(s, dir, "events").select(
         col("event_id"),

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.sinks.JdbcUpsertSink
 import graft.streaming.SocialStream
+import graft.expressions.CharHash
 
 /** §2.10 Structured Streaming under the hard CORRECTNESS gate.
   *
@@ -246,12 +247,6 @@ object StreamQueries {
     StructField("ts_us", LongType),
     StructField("event_type", StringType),
     StructField("value_cents", LongType)))
-
-  /** charHash(s) in DuckDB (mirrors Dedup.charHash / CharHash.scala). */
-  private def chSql(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % 1000000007)""".stripMargin
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.10 ⊕ sketches: windowed DISTINCT inside the STREAMING
@@ -873,7 +868,7 @@ object StreamQueries {
     // invisible to the sketch (the buffer is a pure function of the
     // input SET), which is exactly what the gate pins.
     "q173_stream_distinct" -> {
-      val h = chSql("concat(CAST(value_cents AS VARCHAR), '#sd')")
+      val h = CharHash.duckdbSql("concat(CAST(value_cents AS VARCHAR), '#sd')")
       s"""WITH e AS (
          |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 21600000000) * 21600
          |      AS bucket_start,

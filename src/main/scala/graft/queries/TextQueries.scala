@@ -8,6 +8,7 @@ import graft.text.TextOps
 import graft.enrich.Enrich
 import graft.dedup.Dedup
 import graft.similarity.Similarity
+import graft.expressions.CharHash
 
 /** Wave 2 — text analysis, enrichment stand-ins, cleaning gates, and exact
   * dedup (SURVEY.md §2.2 F3/F4/F8, §2.11 U1-U3, plus the training-data text
@@ -436,7 +437,7 @@ object TextQueries {
     "q27_fingerprint" -> ((s, dir) => {
       Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 100)
-        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
+        .select(col("doc_id"), Dedup.charHash(col("text")).as("fp"))
         .orderBy(col("doc_id"))
     }),
 
@@ -886,9 +887,9 @@ object TextQueries {
         .orderBy(col("source"))
     }),
 
-    // Native Catalyst expression (codegen'd char_hash, registered at
-    // runtime): same spec as q27's HOF fold, proving expression == kernel
-    // == oracle. At scale this is the codegen path for fingerprinting.
+    // The native char_hash through its SQL registration (the path
+    // `spark.sql` users take): the same expression Dedup.charHash builds
+    // directly for q27, gated by the same oracle.
     "q40_charhash_native" -> ((s, dir) => {
       org.apache.spark.sql.GraftFunctions.register(s)
       Tables.load(s, dir, "documents")
@@ -1130,11 +1131,6 @@ object TextQueries {
       |    CASE WHEN istar IS NULL OR i < istar THEN c ELSE lvl END AS alloc
       |  FROM lvl)""".stripMargin
 
-  private def chSqlOf(s: String) =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(string_split($s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |  (acc, c) -> (acc * 31 + c) % 1000000007)""".stripMargin
-
   /** qualityScore as SQL (shared by q25/q57/q119/q125 oracles). */
   private[queries] val qualitySql =
     s"""least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.4
@@ -1358,7 +1354,7 @@ object TextQueries {
          |  SELECT lang, doc_id % 5 = 0 AS is_test, string_split(text, ' ') AS w
          |  FROM documents WHERE length(text) > 0),
          |b AS MATERIALIZED (
-         |  SELECT lang, is_test, ${chSqlOf("w[i] || ' ' || w[i + 1]")} AS bh
+         |  SELECT lang, is_test, ${CharHash.duckdbSql("w[i] || ' ' || w[i + 1]")} AS bh
          |  FROM t, LATERAL (SELECT unnest(range(1, len(w))) AS i) r),
          |tv AS (SELECT DISTINCT lang, bh FROM b WHERE NOT is_test)
          |SELECT b.lang, CAST(count(*) AS BIGINT) AS n_test_bigrams,
@@ -1452,7 +1448,7 @@ object TextQueries {
     // the half-sum of two ints — exact in binary); the majority lang is
     // the (count DESC, lang) window head.
     "q174_data_card" -> {
-      val fp = chSqlOf("text")
+      val fp = CharHash.duckdbSql("text")
       s"""WITH d AS (
          |  SELECT source, lang,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
@@ -1530,8 +1526,8 @@ object TextQueries {
     "q148_epoch_shuffle" ->
       s"""WITH t AS (
          |  SELECT doc_id,
-         |    ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
-         |    ${chSqlOf("concat(CAST(doc_id AS VARCHAR), '#e3')")} AS k
+         |    ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
+         |    ${CharHash.duckdbSql("concat(CAST(doc_id AS VARCHAR), '#e3')")} AS k
          |  FROM documents),
          |p AS (
          |  SELECT doc_id, shard,
@@ -1562,7 +1558,7 @@ object TextQueries {
          |kept AS (
          |  SELECT d.doc_id, d.source, d.toks, r.alloc
          |  FROM d JOIN rate r USING (source)
-         |  WHERE ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 10000 < r.rate_bp)
+         |  WHERE ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 10000 < r.rate_bp)
          |SELECT source, count(*) AS n_kept,
          |  CAST(sum(toks) AS BIGINT) AS kept_tokens,
          |  CAST(min(alloc) AS BIGINT) AS alloc_tokens
@@ -1586,7 +1582,7 @@ object TextQueries {
          |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
          |  CAST(sum(q_u) AS BIGINT) AS sum_q_u
          |FROM d
-         |WHERE (654435747 * (${chSqlOf("CAST(doc_id AS VARCHAR)")})
+         |WHERE (654435747 * (${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")})
          |    + 13904216) % 1000000007 % 1000000
          |  < least(greatest(q_u, 0), 1000000)
          |GROUP BY lang ORDER BY lang""".stripMargin,
@@ -1598,7 +1594,7 @@ object TextQueries {
          |  FROM documents),
          |k AS (
          |  SELECT lang, count(*) AS n_kept FROM d
-         |  WHERE (654435747 * (${chSqlOf("CAST(doc_id AS VARCHAR)")})
+         |  WHERE (654435747 * (${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")})
          |      + 13904216) % 1000000007 % 1000000
          |    < least(greatest(q_u, 0), 1000000)
          |  GROUP BY lang),
@@ -1634,7 +1630,7 @@ object TextQueries {
          |      FROM c, t)
          |SELECT mix_src, count(*) AS n_kept, CAST(sum(doc_id) AS BIGINT) AS sum_ids
          |FROM d JOIN r USING (mix_src)
-         |WHERE ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 10000 < rate_bp
+         |WHERE ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 10000 < rate_bp
          |GROUP BY mix_src ORDER BY mix_src""".stripMargin,
 
     "q119_curriculum" ->
@@ -1688,7 +1684,7 @@ object TextQueries {
          |m AS (SELECT min(n) AS k FROM c),
          |r AS (SELECT lang AS stratum, doc_id,
          |        row_number() OVER (PARTITION BY lang
-         |          ORDER BY (654435747 * (${chSqlOf("CAST(doc_id AS VARCHAR)")})
+         |          ORDER BY (654435747 * (${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")})
          |            + 13904216) % 1000000007 DESC, doc_id)
          |          AS rn
          |      FROM documents)
@@ -1855,7 +1851,7 @@ object TextQueries {
       s"""WITH r AS (
          |  SELECT lang, doc_id, n_chars,
          |    row_number() OVER (PARTITION BY lang
-         |      ORDER BY (654435747 * (${chSqlOf("CAST(doc_id AS VARCHAR)")})
+         |      ORDER BY (654435747 * (${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")})
          |        + 13904216) % 1000000007, doc_id) AS r
          |  FROM documents),
          |t AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
@@ -1921,7 +1917,7 @@ object TextQueries {
     "q78_stratified_sample" ->
       s"""SELECT lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_ids
          |FROM documents
-         |WHERE ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 100 <
+         |WHERE ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 100 <
          |  (CASE lang WHEN 'en' THEN 20 WHEN 'de' THEN 100
          |             WHEN 'fr' THEN 100 WHEN 'es' THEN 50 ELSE 10 END)
          |GROUP BY lang ORDER BY lang""".stripMargin,
@@ -2047,17 +2043,13 @@ object TextQueries {
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
 
     "q27_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
+      s"""SELECT doc_id, ${CharHash.duckdbSql("text")} AS fp
+         |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
 
     "q56_hash_sample" ->
       s"""SELECT lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_ids
          |FROM documents
-         |WHERE ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 100 < 30
+         |WHERE ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 100 < 30
          |GROUP BY lang ORDER BY lang""".stripMargin,
 
     "q57_training_prep" ->
@@ -2070,7 +2062,7 @@ object TextQueries {
          |dedup AS (
          |  SELECT text, min(doc_id) AS doc_id, min(lang) AS lang FROM quality GROUP BY text),
          |sampled AS (
-         |  SELECT * FROM dedup WHERE ${chSqlOf("CAST(doc_id AS VARCHAR)")} % 100 < 50)
+         |  SELECT * FROM dedup WHERE ${CharHash.duckdbSql("CAST(doc_id AS VARCHAR)")} % 100 < 50)
          |SELECT lang, count(*) AS n,
          |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens
          |FROM sampled GROUP BY lang ORDER BY lang""".stripMargin,
@@ -2084,12 +2076,8 @@ object TextQueries {
     },
 
     "q40_charhash_native" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
+      s"""SELECT doc_id, ${CharHash.duckdbSql("text")} AS fp
+         |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
 
     "q28_dedup_exact" ->
       """SELECT count(*) AS n_unique, CAST(sum(doc_id) AS BIGINT) AS sum_min_ids FROM (

@@ -52,11 +52,9 @@ object SocialStream {
   def tumblingCounts(df: DataFrame, tsCol: String, keyCols: Seq[String],
                      windowLen: String = "15 minutes",
                      watermark: String = "2 days"): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy((window(col(tsCol), windowLen) +: keyCols.map(col)): _*)
-      .agg(count(lit(1)).as("n"))
-      .select((Seq(col("window.start").as("window_start"),
-        col("window.end").as("window_end")) ++ keyCols.map(col) :+ col("n")): _*)
+    // window(ts, d) is window(ts, d, d): a tumbling window is a sliding
+    // one whose slide equals its length, so the plan is the same
+    slidingCounts(df, tsCol, keyCols, windowLen, windowLen, watermark)
 
   /** Sliding-window twin of [[tumblingCounts]]: each event contributes to
     * windowLen/slide overlapping windows, so the state store holds that

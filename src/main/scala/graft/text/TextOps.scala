@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Text-analysis operators for a training-data pipeline: tokenization stats,
-  * quality scoring, language-ID heuristics, fingerprinting. All are pure
-  * column expressions (codegen'd, no UDFs) so they vectorize inside
+  * quality scoring, language-ID heuristics, boilerplate removal. All are
+  * pure column expressions (codegen'd, no UDFs) so they vectorize inside
   * whole-stage codegen and push through Catalyst untouched — at 100 TB these
-  * run at scan speed.
+  * run at scan speed. Where a column form evaluates interpreted, the
+  * operator runs a native expression instead and the column form stays as
+  * its `…Hof` executable spec (`qualityScoreHof`, `langIdHof`). Content
+  * fingerprints are `Dedup.charHash`, the engine's one rolling hash.
   *
   * Generalizes the reference's text handling (length caps
   * `reddit/lambda_function_initial.py:49-50`, content cleaning
@@ -113,29 +116,6 @@ object TextOps {
       when(s > 0 && s === best, lit(lang)).otherwise(acc)
     }
   }
-
-  /** Polynomial rolling-hash document fingerprint (Rabin-Karp style) over the
-    * character stream: fp = fold((acc*31 + code) mod p) with p = 1e9+7.
-    * Implemented with aggregate() over the char array so it stays an
-    * expression, and kept under 2^35 at every step so the identical fold is
-    * expressible in any ANSI engine without bigint overflow (DuckDB raises on
-    * int64 overflow where Java wraps). Used for cheap exact-dup candidate keys.
-    */
-  def fingerprint(text: Column): Column =
-    call_function("char_hash", text)
-
-  /** The original HOF form of [[fingerprint]] — the executable spec the
-    * native [[graft.expressions.CharHash]] is parity-tested against
-    * (TextOpsSpec). Equal for all BMP text: the HOF folds per-character
-    * `ascii()` code points, the native form folds UTF-16 units — they
-    * diverge only on supplementary-plane characters (same caveat as
-    * `Dedup.charHashStr`, and the corpus convention everywhere else).
-    */
-  def fingerprintHof(text: Column): Column =
-    aggregate(
-      split(text, ""),
-      lit(0L),
-      (acc, ch) => (acc * lit(31L) + coalesce(ascii(ch).cast(LongType), lit(0L))) % lit(1000000007L))
 
   /** PII scrub for training corpora: replace emails then URLs with typed
     * placeholder tokens. Patterns stay in the common RE2/Java regex subset
@@ -521,7 +501,7 @@ object TextOps {
     * headers, footers, and licence blocks vanish while unique prose
     * survives, the transformation a crawl pipeline actually applies.
     *
-    * Chunks travel as the 8-byte portable [[fingerprint]] (never the chunk
+    * Chunks travel as the 8-byte portable `Dedup.charHash` (never the chunk
     * string): the corpus count is a partial-aggregable hash agg keyed on
     * the fingerprint, and the count join back to the exploded chunks is an
     * 8-byte-keyed hash join whose skew is bounded by docs-per-boilerplate-
@@ -558,7 +538,7 @@ object TextOps {
           s"transform(sequence(0, int((size(__toks) + ${w - 1}) div $w) - 1)," +
           s" i -> concat_ws(' ', slice(__toks, i * $w + 1, $w)))"))): _*)
       .withColumnRenamed("pos", "__ci").withColumnRenamed("col", "__chunk")
-      .withColumn("__fp", fingerprint(col("__chunk")))
+      .withColumn("__fp", graft.dedup.Dedup.charHash(col("__chunk")))
       .localCheckpoint()
     val cnt = chunks.select(col(idCol), col("__fp")).distinct()
       .groupBy(col("__fp")).agg(count(lit(1)).as("__nd"))

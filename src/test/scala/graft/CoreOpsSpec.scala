@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.expressions.CharHash
 import graft.ops.CoreOps
 
 class CoreOpsSpec extends AnyFunSuite {
@@ -242,8 +243,8 @@ class CoreOpsSpec extends AnyFunSuite {
     // k=1 gets 300 rows, k=2 gets 250, everything else ≤ 30
     val fact = ((1L to 300L).map(_ => 1L) ++ (1L to 250L).map(_ => 2L) ++
       (1L to 3000L).map(i => 10L + i % 100)).toDF("k").repartition(6)
-    val hot = CoreOps.hotKeys(fact, "k", hotThreshold = 100L,
-      sampleFraction = 1.0)
+    val hot = CoreOps.hotKeyCounts(fact, "k", hotThreshold = 100L,
+      sampleFraction = 1.0).map(_._1)
     assert(hot.toSeq == Seq(1L, 2L))
   }
 
@@ -267,7 +268,7 @@ class CoreOpsSpec extends AnyFunSuite {
       .select("row_id", "k", "name")
     val plain = fact.join(dim, $"k" === $"dk").select("row_id", "k", "name")
     assert(salted.collect().toSet == plain.collect().toSet)
-    assert(CoreOps.hotKeys(fact, "k", hotThreshold = 1000000L).isEmpty)
+    assert(CoreOps.hotKeyCounts(fact, "k", hotThreshold = 1000000L).isEmpty)
   }
 
   test("saltedJoin replicates only hot dim rows, bounded by cap x salt") {
@@ -276,8 +277,8 @@ class CoreOpsSpec extends AnyFunSuite {
       .zipWithIndex.map { case (k, i) => (i.toLong, k) }
       .toDF("row_id", "k").repartition(4)
     val dim = (0L until 50L).map(i => (i, s"d$i")).toDF("dk", "name")
-    val hot = CoreOps.hotKeys(fact, "k", hotThreshold = 300L,
-      sampleFraction = 1.0)
+    val hot = CoreOps.hotKeyCounts(fact, "k", hotThreshold = 300L,
+      sampleFraction = 1.0).map(_._1)
     assert(hot.toSeq == Seq(1L))
     // reconstruct the dim side the way saltedJoin builds it: one copy per
     // cold key, `salt` copies per hot key
@@ -312,7 +313,6 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(all == 100L)
   }
   test("balancedSample: exactly min-stratum-count per stratum, largest-hash keys win") {
-    import graft.dedup.Dedup
     // A has 4 keys, B has 2 -> floor is 2 per stratum.
     val df = Seq(("A", 1L), ("A", 2L), ("A", 3L), ("A", 4L),
       ("B", 10L), ("B", 11L)).toDF("lang", "doc_id")
@@ -323,7 +323,7 @@ class CoreOpsSpec extends AnyFunSuite {
     // for same-length numeric ids, so "largest hash wins" would just
     // pick the largest ids (time-correlated at corpus scale)
     def mixed(id: Long) =
-      (654435747L * Dedup.charHashStr(id.toString) + 13904216L) % 1000000007L
+      (654435747L * CharHash.hash(id.toString) + 13904216L) % 1000000007L
     val expectA = Seq(1L, 2L, 3L, 4L)
       .sortBy(id => (-mixed(id), id)).take(2).sorted
     assert(out("A") == expectA)
@@ -333,7 +333,6 @@ class CoreOpsSpec extends AnyFunSuite {
   }
 
   test("temperatureSample: sub-equal-share strata keep everything, big ones damp by √(e/n)") {
-    import graft.dedup.Dedup
     // strata: big = 900 rows, small = 100 rows. e = 500.
     // rate(small) = min(1, √(500/100)) = 1 — every row survives.
     // rate(big) = √(500/900) = 0.745… → rate_bp = 7453.
@@ -344,13 +343,12 @@ class CoreOpsSpec extends AnyFunSuite {
       .groupBy("src").count().as[(String, Long)].collect().toMap
     assert(out("small") == 100L)
     val expectedBig = (0L until 900L).count(i =>
-      math.floorMod(Dedup.charHashStr(i.toString), 10000L) < 7453L)
+      math.floorMod(CharHash.hash(i.toString), 10000L) < 7453L)
     assert(out("big") == expectedBig)
     assert(out("big") < 900L && out("big") > 0L)
   }
 
   test("weightedSample: keep probability is exactly weight/denom under the hash") {
-    import graft.dedup.Dedup
     // weight 0 → nothing; weight = denom → everything; mid weights keep
     // exactly the rows whose MIXED hash falls under them (replayed here:
     // the affine (A·h + B) mod P spread is load-bearing — raw charHash
@@ -364,7 +362,7 @@ class CoreOpsSpec extends AnyFunSuite {
     var nMidKept = 0
     (0L until 1000L).foreach { i =>
       val w = (i % 5) * 250000L
-      val mixed = (654435747L * Dedup.charHashStr(i.toString) + 13904216L) %
+      val mixed = (654435747L * CharHash.hash(i.toString) + 13904216L) %
         1000000007L
       val expect = math.floorMod(mixed, 1000000L) < w
       assert(kept.contains(i) == expect, s"id $i weight $w")

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.{Dedup, PairJoin}
+import graft.expressions.{CharHash, MinhashKernels}
 
 class DedupSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -12,8 +14,10 @@ class DedupSpec extends AnyFunSuite {
   test("charHashStr (kernel) matches charHash (expression) exactly") {
     val inputs = Seq("hello", "", "a b c", "The quick brown fox!", "x" * 100)
     val exprVals = inputs.toDF("s").select(Dedup.charHash(col("s"))).collect().map(_.getLong(0))
-    val kernelVals = inputs.map(Dedup.charHashStr)
+    val hofVals = inputs.toDF("s").select(Dedup.charHashHof(col("s"))).collect().map(_.getLong(0))
+    val kernelVals = inputs.map(CharHash.hash)
     assert(exprVals.toSeq == kernelVals)
+    assert(hofVals.toSeq == kernelVals)
   }
 
   test("exactDedup keeps min id per key") {
@@ -74,7 +78,7 @@ class DedupSpec extends AnyFunSuite {
     // The wide mode votes bits 30..59 over a SECOND seed (one seeded hash
     // only has 30 random bits mod P). All three implementations — HOF
     // column, codegen'd simhash_sig expression (via simhashBands), and the
-    // mapPartitions kernel — must produce the identical 60-bit signature,
+    // JVM kernel it calls — must produce the identical 60-bit signature,
     // and the upper half must actually discriminate (not be all-zero).
     val docs = Seq((1L, "spark scala data pipeline"), (2L, "spark scala data pipeline"),
       (3L, "completely different words here"),
@@ -84,9 +88,8 @@ class DedupSpec extends AnyFunSuite {
     val expr = Dedup.simhashBands(docs, "doc_id", "text", 60, 4)
       .select("id", "sig").distinct().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val kern = Dedup.simhashBandsKernel(docs, "doc_id", "text", 60, 4)
-      .select("id", "sig").distinct().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val kern = docs.collect().map(r => r.getLong(0) ->
+      MinhashKernels.simhashSig(UTF8String.fromString(r.getString(1)), 60)).toMap
     assert(hof == expr && expr == kern)
     assert(hof(1L) == hof(2L))
     // upper 30 bits must differ somewhere across distinct docs

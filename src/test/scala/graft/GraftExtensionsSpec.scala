@@ -6,8 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.Dedup
-import graft.expressions.ContainsAnyTerm
+import graft.expressions.{CharHash, ContainsAnyTerm}
 
 /** SparkSessionExtensions registration: SQL function surface for the native
   * expressions + the blacklist-chain optimizer rule.
@@ -18,7 +17,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("char_hash is callable from SQL and matches the kernel arithmetic") {
     val got = spark.sql("SELECT char_hash('hello world') AS h").head().getLong(0)
-    assert(got == Dedup.charHashStr("hello world"))
+    assert(got == CharHash.hash("hello world"))
     // and composes inside expressions
     val via = spark.sql("SELECT char_hash(concat('hello', ' ', 'world')) AS h")
       .head().getLong(0)

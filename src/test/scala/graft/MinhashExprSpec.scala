@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 
-/** Native minhash expressions pinned bit-for-bit to the mapPartitions
-  * kernels (and, transitively, to the HOF forms and the DuckDB oracle).
+/** Native minhash expressions pinned bit-for-bit to the HOF reference
+  * forms in `Dedup` (the executable spec the DuckDB oracle mirrors).
   */
 class MinhashExprSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -21,12 +21,14 @@ class MinhashExprSpec extends AnyFunSuite {
     (6L, "the quick brown fox jumps over the lazy dog")) // dup of 1
     .toDF("doc_id", "text")
 
-  test("minhash_band_keys expression == mapPartitions kernel, all edge docs") {
+  test("minhash_band_keys expression == HOF reference, all edge docs") {
     val expr = Dedup.minhashBands(docs, "doc_id", "text", 3, 16, 4)
       .collect().map(r => (r.getLong(2), r.getInt(0), r.getLong(1))).toSet
-    val kernel = Dedup.minhashBandsKernel(docs, "doc_id", "text", 3, 16, 4)
-      .collect().map(r => (r.getLong(2), r.getInt(0), r.getLong(1))).toSet
-    assert(expr == kernel)
+    val sig = Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 3), 16)
+    val hof = docs.select(col("doc_id"), posexplode(
+        array((0 until 4).map(b => Dedup.bandHash(sig, b * 4, 4)): _*)))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(expr == hof)
     assert(expr.size == 6 * 4)
   }
 
@@ -56,12 +58,12 @@ class MinhashExprSpec extends AnyFunSuite {
     assert(err.getMessage.contains("containsNull"))
   }
 
-  test("shingle_hashes expression == mapPartitions kernel") {
+  test("shingle_hashes expression == HOF reference") {
     val expr = Dedup.shingleHashSets(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toMap
-    val kernel = Dedup.shingleHashSetsKernel(docs, "doc_id", "text", 3)
+    val hof = docs.select(col("doc_id"), Dedup.shingleHashes(col("text"), 3))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toMap
-    assert(expr == kernel)
+    assert(expr == hof)
     assert(expr(1L) == expr(6L)) // identical docs, identical sets
   }
 
@@ -101,12 +103,15 @@ class MinhashExprSpec extends AnyFunSuite {
       s"narrow local input must widen before hashing:\n$plan")
   }
 
-  test("simhash_sig expression == mapPartitions kernel, incl. sig payload") {
+  test("simhash_sig expression == HOF reference, incl. sig payload") {
     val expr = Dedup.simhashBands(docs, "doc_id", "text", 30, 3)
       .collect().map(r => (r.getLong(2), r.getInt(0), r.getLong(1), r.getLong(3))).toSet
-    val kernel = Dedup.simhashBandsKernel(docs, "doc_id", "text", 30, 3)
-      .collect().map(r => (r.getLong(2), r.getInt(0), r.getLong(1), r.getLong(3))).toSet
-    assert(expr == kernel)
+    // the HOF signature, banded the way simhashBands bands it: 10-bit slices
+    val sig = Dedup.simhash(col("text"), 30)
+    val hof = docs.select(col("doc_id"), sig.as("sig"), posexplode(array((0 until 3)
+        .map(b => shiftright(sig, b * 10).bitwiseAND(lit(1023L))): _*)))
+      .collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(3), r.getLong(1))).toSet
+    assert(expr == hof)
     assert(expr.size == 6 * 3)
   }
 

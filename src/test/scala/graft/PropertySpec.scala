@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.dedup.Dedup
+import graft.expressions.CharHash
 import graft.ops.{CoreOps, SocialOps}
 
 /** Property-based invariants (SURVEY.md §5.3), driver-side where the
@@ -25,9 +26,9 @@ class PropertySpec extends AnyFunSuite {
 
   test("charHashStr is total, stable, and within [0, P)") {
     for (s <- samples(asciiText, 200)) {
-      val h = Dedup.charHashStr(s)
+      val h = CharHash.hash(s)
       assert(h >= 0L && h < Dedup.P)
-      assert(h == Dedup.charHashStr(s))
+      assert(h == CharHash.hash(s))
     }
   }
 

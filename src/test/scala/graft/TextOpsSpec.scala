@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.dedup.Dedup
 import graft.text.TextOps
 import graft.enrich.Enrich
 
@@ -118,7 +119,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("fingerprint is deterministic and discriminates") {
     val df = Seq("same text", "same text", "other text").toDF("t")
-      .select(TextOps.fingerprint($"t").as("fp"))
+      .select(Dedup.charHash($"t").as("fp"))
     val fps = df.collect().map(_.getLong(0))
     assert(fps(0) == fps(1) && fps(0) != fps(2))
   }
@@ -256,8 +257,8 @@ class TextOpsSpec extends AnyFunSuite {
       "punct!@# 123", "éçü のテキスト 汉字", "x" * 1000)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
     val both = rows.select(
-      TextOps.fingerprint($"t").as("nat"),
-      TextOps.fingerprintHof($"t").as("hof")).collect()
+      Dedup.charHash($"t").as("nat"),
+      Dedup.charHashHof($"t").as("hof")).collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1),
       s"native ${r.getLong(0)} != hof ${r.getLong(1)}"))
   }
