@@ -484,7 +484,9 @@ object Dedup {
     * cluster, the canonical representative to keep) for every doc that
     * appears in at least one near-dup pair; docs with no near-dup are
     * implicitly their own cluster. This is the composition a real corpus
-    * dedup ships: pairs alone under-delete on chains of drift.
+    * dedup ships: pairs alone under-delete on chains of drift. Takes no
+    * `checkpointDir`: its materializations (shingle base, pair join,
+    * component fixpoint) are executor-local.
     */
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
                       shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Checkpoints
+
 /** Connected components over an edge list — the graph-serving query the
   * reference's mention/comment graph exists for (communities, spam rings,
   * conversation clusters) that Cypher answers with path matches
@@ -11,20 +13,21 @@ import org.apache.spark.sql.functions._
   * Hash-min label propagation: every node starts labeled with its own id;
   * each pass a node takes the min of its own and its neighbors' labels.
   * Settles in O(diameter) passes — one hash join + one min-aggregate per
-  * pass, both partial-aggregable, nothing driver-side but the convergence
-  * counter. Social graphs are small-diameter, so the pass count stays
-  * single-digit at any scale; for adversarial long-path graphs the
-  * large-star/small-star variant (Kiveris et al., "Connected Components in
-  * MapReduce and Beyond") drops it to O(log n) passes at the cost of
-  * rewiring shuffles — same state shape, drop-in replacement here.
+  * pass, both partial-aggregable, run through [[Checkpoints.fixpoint]].
+  * Social graphs are small-diameter, so the pass count stays single-digit
+  * at any scale; for adversarial long-path graphs the large-star/small-star
+  * variant (Kiveris et al., "Connected Components in MapReduce and Beyond")
+  * drops it to O(log n) passes at the cost of rewiring shuffles — same
+  * state shape, drop-in replacement here.
   */
 object Components {
 
   /** (node, component) for every node in `edges`, where component = the
-    * minimum node id reachable over undirected edges. State is
-    * localCheckpoint-ed per pass (lineage truncation, as in
-    * [[TreeOps.treeFlatten]]); settled exactly when no node's label moved
-    * in a pass (exact changed-row check, any id type).
+    * minimum node id reachable over undirected edges. Settled exactly when
+    * no node's label moved in a pass (exact changed-row check, any id
+    * type); throws after `maxIters` unsettled passes (graph diameter
+    * exceeds the cap). Takes no `checkpointDir`: its materializations
+    * are executor-local lazy checkpoints, lost with their executor.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 50): DataFrame = {
@@ -36,17 +39,13 @@ object Components {
     // list EVERY pass — at cluster scale that exchange was the dominant
     // per-pass shuffle (full edge list, every iteration); locally it was
     // one more AQE stage-job per pass.
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .distinct().repartition(col("b")).localCheckpoint(eager = false)
-    var labels = und.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(eager = false)
-    val labelType = labels.schema("label").dataType
-    var changed = true
-    var iter = 0
-    while (changed) {
-      if (iter >= maxIters) throw new IllegalStateException(
-        s"connectedComponents: not settled after $maxIters passes " +
-          "(graph diameter exceeds maxIters)")
+    val und = Checkpoints.materialize(e.union(e.select(col("b").as("a"), col("a").as("b")))
+      .distinct().repartition(col("b")), None)
+    val init = Checkpoints.materialize(und.select(col("a").as("node")).distinct()
+      .withColumn("label", col("node")), None)
+    val labelType = init.schema("label").dataType
+    val settled = Checkpoints.fixpoint("connectedComponents", init, maxIters, None) { s =>
+      val labels = s.select(col("node"), col("label"))
       val nbr = und.join(labels, col("b") === col("node"))
         .select(col("a").as("node"), col("label"),
           lit(null).cast(labelType).as("prev"))
@@ -55,21 +54,12 @@ object Components {
       // recovers it) — convergence becomes a filter over the checkpointed
       // pass output instead of a second join+shuffle job per pass. Exact
       // and type-agnostic: no sum-of-labels overflow, any id type.
-      // LAZY checkpoint + full-scan changed-count (r17): the count job
-      // computes every partition of `next`, which materializes the local
-      // checkpoint as a side effect — one job per pass where the eager
-      // checkpoint + separate limit-probe pair cost two. Exactness
-      // unchanged (same filter, full count instead of limit 1).
-      val next = labels.select(col("node"), col("label"), col("label").as("prev"))
+      labels.select(col("node"), col("label"), col("label").as("prev"))
         .union(nbr)
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"), min(col("prev")).as("prev"))
-        .localCheckpoint(eager = false)
-      changed = next.filter(col("label") =!= col("prev")).count() > 0
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    labels.select(col("node"), col("label").as("component"))
+    } { (_, next) => next.filter(col("label") =!= col("prev")).count() == 0 }
+    settled.select(col("node"), col("label").as("component"))
   }
 
   // ---------------------------------------------------- O(log n) variant
@@ -85,22 +75,25 @@ object Components {
     * Per round: two (agg + join) passes over the edge list, both hash
     * exchanges on node id — no collect_list (a star graph's hot node
     * never materializes its whole neighborhood in one buffer; min is a
-    * partial aggregate).
+    * partial aggregate). Throws after `maxIters` unsettled rounds.
+    * Materializations are executor-local.
     */
   def connectedComponentsLogN(edges: DataFrame, srcCol: String, dstCol: String,
                               maxIters: Int = 30): DataFrame = {
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
-    val nodes = e0.select(col("a").as("node"))
-      .union(e0.select(col("b").as("node"))).distinct().localCheckpoint(eager = false)
-    var cur = e0.select(least(col("a"), col("b")).as("a"),
+    val nodes = Checkpoints.materialize(e0.select(col("a").as("node"))
+      .union(e0.select(col("b").as("node"))).distinct(), None)
+    // The state is the round's compare table; its mx = 1 rows are the
+    // deduplicated edge set (the initial edges carry mx = 1 outright).
+    val init = Checkpoints.materialize(e0.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(eager = false)
-    var changed = true
-    var iter = 0
-    while (changed) {
-      if (iter >= maxIters) throw new IllegalStateException(
-        s"connectedComponentsLogN: not settled after $maxIters rounds")
+      .filter(col("a") =!= col("b")).distinct(), None)
+      .withColumn("mx", lit(1))
+    def edgeSet(s: DataFrame): DataFrame =
+      s.filter(col("mx") === 1).select(col("a"), col("b"))
+    val settled = Checkpoints.fixpoint("connectedComponentsLogN", init, maxIters, None) { s =>
+      val cur = edgeSet(s)
       // The stars emit a MULTISET (r18): their per-star distinct()s are
       // gone — star arithmetic (min per node, filters) is duplicate-
       // insensitive, and per round the row count stays ≤ |edges| + |nodes|
@@ -116,16 +109,12 @@ object Components {
       // (q82: 73 → ~50 AQE stage-jobs; at cluster scale, 2 fewer full
       // edge-list shuffles per round).
       val nextRaw = star(star(cur, large = true), large = false)
-      val cmp = nextRaw.select(col("a"), col("b"), lit(1).as("t"))
+      nextRaw.select(col("a"), col("b"), lit(1).as("t"))
         .union(cur.select(col("a"), col("b"), lit(-1).as("t")))
         .groupBy(col("a"), col("b"))
         .agg(max(col("t")).as("mx"), min(col("t")).as("mn"))
-        .localCheckpoint(eager = false)
-      // the count job materializes the lazy checkpoint (r17 pattern)
-      changed = cmp.filter(col("mx") === col("mn")).count() > 0
-      cur = cmp.filter(col("mx") === 1).select(col("a"), col("b"))
-      iter += 1
-    }
+    } { (_, cmp) => cmp.filter(col("mx") === col("mn")).count() == 0 }
+    val cur = edgeSet(settled)
     // Converged edges form a star in canonical (a < b) form: a = the
     // component minimum, b = a member. Roots and isolated nodes label
     // themselves.

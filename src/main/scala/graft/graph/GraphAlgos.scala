@@ -11,7 +11,8 @@ import graft.ops.Checkpoints
   * `glue/reddit_glue.py:112-125` COMMENTED_ON): influence ranking,
   * community structure, conversation reach. Re-expressed as relational
   * fixpoints: every pass is a hash join + partial-aggregable `min`/`sum`
-  * per key, nothing driver-side but the convergence counter.
+  * per key, and the iterative operators run their passes through
+  * [[Checkpoints.fixpoint]].
   */
 object GraphAlgos {
 
@@ -27,7 +28,8 @@ object GraphAlgos {
     * the naive a-b-c self-join never materializes. Ordering is by the
     * (degree, id) struct directly; no global rank assignment (a
     * row_number over a single ordering would serialize on one partition
-    * at 100 TB).
+    * at 100 TB). Takes no `checkpointDir`: its one materialization is
+    * executor-local.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
@@ -46,13 +48,12 @@ object GraphAlgos {
     // stores edge-grain (lo, hi, rhi) rows — the same rows the wedge
     // join must exchange anyway; at corpus scale each eliminated re-run
     // is a full edge-list canonicalization pass.
-    val dir = und
+    val dir = Checkpoints.materialize(und
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .filter(struct(col("da"), col("a")) < struct(col("db"), col("b")))
       .select(col("a").as("lo"), col("b").as("hi"),
-        struct(col("db"), col("b")).as("rhi"))
-      .localCheckpoint(eager = false)
+        struct(col("db"), col("b")).as("rhi")), None)
     // Wedges at the low endpoint, canonicalized rhi1 < rhi2; the closing
     // edge must then run hi1 → hi2 in the same ordering.
     val x = dir.select(col("lo"), col("hi").as("h1"), col("rhi").as("r1"))
@@ -133,13 +134,13 @@ object GraphAlgos {
     }
     // Rank table carries outdeg (and the seed flag) so each pass joins
     // once, not twice.
-    var r = Checkpoints.materialize(seedFlagged.join(outdeg, Seq("node"), "left")
+    val r0 = Checkpoints.materialize(seedFlagged.join(outdeg, Seq("node"), "left")
       .select(col("node"), lit(1000000L).as("r"),
         coalesce(col("outdeg"), lit(0L)).as("outdeg"),
         coalesce(col("is_seed"), lit(false)).as("is_seed")), checkpointDir)
-    var iter = 0
-    var converged = false
-    while (iter < iters && !converged) {
+    val ranks = Checkpoints.fixpoint("pageRank", r0, iters, checkpointDir,
+        mustSettle = false) { s =>
+      val r = s.drop("r_prev")
       val contrib = e.join(r, e("src") === r("node"))
         .filter(col("outdeg") > 0)
         .select(col("dst"), expr("r div outdeg").as("c"))
@@ -161,21 +162,17 @@ object GraphAlgos {
                 when(col("is_seed"), col("dshareAll")).otherwise(lit(0L))
               else col("dshareAll"))
         }
-      val next = Checkpoints.materialize(withShare
-        .select(col("node"),
-          (baseCol + expr(
-            s"($dampNum * (coalesce(s, CAST(0 AS BIGINT)) + dshare)) div 100")).as("r"),
-          col("outdeg"), col("is_seed"), col("r").as("r_prev")), checkpointDir)
-      converged = tolMicros match {
-        case Some(tol) =>
-          next.agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)).as("d"))
-            .head().getLong(0) <= tol
-        case None => false
+      withShare.select(col("node"),
+        (baseCol + expr(
+          s"($dampNum * (coalesce(s, CAST(0 AS BIGINT)) + dshare)) div 100")).as("r"),
+        col("outdeg"), col("is_seed"), col("r").as("r_prev"))
+    } { (_, next) =>
+      tolMicros.exists { tol =>
+        next.agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)).as("d"))
+          .head().getLong(0) <= tol
       }
-      r = next.drop("r_prev")
-      iter += 1
     }
-    r.select(col("node"), col("r").as("rank_micros"))
+    ranks.select(col("node"), col("r").as("rank_micros"))
   }
 
   /** Minimum hop-distance from a seed set over an undirected edge list —
@@ -200,30 +197,20 @@ object GraphAlgos {
       .distinct().repartition(col("a")), checkpointDir)
     val nodes = und.select(col("a").as("node")).distinct()
     val seed = seeds.select(col(seedCol).as("node")).distinct()
-    var d = Checkpoints.materialize(nodes.join(seed.withColumn("z", lit(0L)), Seq("node"), "left")
+    val d0 = Checkpoints.materialize(nodes.join(seed.withColumn("z", lit(0L)), Seq("node"), "left")
       .select(col("node"), col("z").as("depth")), checkpointDir)
-    var changed = true
-    var iter = 0
-    while (changed) {
-      if (iter >= maxIters) throw new IllegalStateException(
-        s"bfsDepths: not settled after $maxIters passes")
+    val settled = Checkpoints.fixpoint("bfsDepths", d0, maxIters, checkpointDir) { s =>
+      val d = s.select(col("node"), col("depth"))
       val nbr = und.join(d, col("a") === col("node"))
         .filter(col("depth").isNotNull)
         .select(col("b").as("node"), (col("depth") + 1).as("depth"),
           lit(null).cast("long").as("prev"))
-      val next = Checkpoints.materialize(
-        d.select(col("node"), col("depth"), col("depth").as("prev"))
-          .union(nbr)
-          .groupBy(col("node"))
-          .agg(min(col("depth")).as("depth"), min(col("prev")).as("prev")),
-        checkpointDir)
-      // full count, not limit(1): the scan doubles as the lazy
-      // checkpoint's materialization (computes every partition)
-      changed = next.filter(!(col("depth") <=> col("prev"))).count() > 0
-      d = next.select(col("node"), col("depth"))
-      iter += 1
-    }
-    d.filter(col("depth").isNotNull)
+      d.select(col("node"), col("depth"), col("depth").as("prev"))
+        .union(nbr)
+        .groupBy(col("node"))
+        .agg(min(col("depth")).as("depth"), min(col("prev")).as("prev"))
+    } { (_, next) => next.filter(!(col("depth") <=> col("prev"))).count() == 0 }
+    settled.select(col("node"), col("depth")).filter(col("depth").isNotNull)
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -236,11 +223,11 @@ object GraphAlgos {
     * the GraphX variant).
     *
     * `earlyStop` turns `iters` into a cap: the loop ends as soon as a
-    * pass changes no label (one extra keyed join + bounded `limit(1)`
-    * count per pass — the same delta contract PageRank's `tolMicros`
-    * has). `requireConverged` adds the loud-failure half: if the cap is
-    * hit while labels are still moving (oscillation, or a cap set too
-    * low), throw instead of returning a silently-unsettled labeling.
+    * pass changes no label (one extra keyed join + full count per pass —
+    * the same delta contract PageRank's `tolMicros` has).
+    * `requireConverged` adds the loud-failure half: if the cap is hit
+    * while labels are still moving (oscillation, or a cap set too low),
+    * throw instead of returning a silently-unsettled labeling.
     *
     * Per pass: one hash join (symmetrized edges × labels, keyed on the
     * neighbor) + one count aggregate keyed (node, label) + one argmax
@@ -261,31 +248,21 @@ object GraphAlgos {
       e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
         .repartition(col("b")), // per-pass join key (r17, see Components)
       checkpointDir)
-    var lab = Checkpoints.materialize(sym.select(col("a").as("node")).distinct()
+    val lab0 = Checkpoints.materialize(sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("lab")), checkpointDir)
-    var iter = 0
-    var converged = false
-    while (iter < iters && !converged) {
-      val cnt = sym.join(lab, sym("b") === lab("node"))
+    val labels = Checkpoints.fixpoint("labelPropagation", lab0, iters, checkpointDir,
+        mustSettle = requireConverged) { lab =>
+      sym.join(lab, sym("b") === lab("node"))
         .groupBy(sym("a").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      val next = Checkpoints.materialize(cnt.groupBy(col("node"))
-        .agg(max_by(col("lab"), struct(col("c"), -col("lab"))).as("lab")),
-        checkpointDir)
-      if (earlyStop) {
-        // full count (materializes the lazy checkpoint in the same job)
-        converged = next.join(
-            lab.select(col("node"), col("lab").as("lab_prev")), Seq("node"))
-          .filter(col("lab") =!= col("lab_prev")).count() == 0
-      }
-      lab = next
-      iter += 1
+        .groupBy(col("node"))
+        .agg(max_by(col("lab"), struct(col("c"), -col("lab"))).as("lab"))
+    } { (prev, next) =>
+      earlyStop && next.join(
+          prev.select(col("node"), col("lab").as("lab_prev")), Seq("node"))
+        .filter(col("lab") =!= col("lab_prev")).count() == 0
     }
-    if (requireConverged && !converged)
-      throw new IllegalStateException(
-        s"labelPropagation did not converge within $iters passes " +
-          "(synchronous LPA oscillates on bipartite structures)")
-    lab.select(col("node"), col("lab").as("label"))
+    labels.select(col("node"), col("lab").as("label"))
   }
 
   /** k-core decomposition by simultaneous peeling: repeatedly drop every
@@ -300,40 +277,33 @@ object GraphAlgos {
     * convergence scalar. Rounds are O(peel depth), which is O(log n) on
     * real social graphs (each round strips a whole shell, not one node —
     * the distributed form of Matula-Beck peeling). Loud failure at
-    * `maxIters` rather than a silent partial core.
+    * `maxIters` unsettled rounds rather than a silent partial core.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Long,
             maxIters: Int = 30,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    var e = Checkpoints.materialize(edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
+    val e0 = Checkpoints.materialize(edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct(), checkpointDir)
-    var nEdges = e.count()
-    var changed = true
-    var iter = 0
-    while (changed) {
-      if (iter >= maxIters)
-        throw new IllegalStateException(
-          s"kCore did not stabilize within $maxIters rounds")
+    var nEdges = e0.count()
+    val core = Checkpoints.fixpoint("kCore", e0, maxIters, checkpointDir) { e =>
       val keep = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val next = Checkpoints.materialize(
-        e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b")),
-        checkpointDir)
-      val n2 = next.count()
-      changed = n2 != nEdges
-      nEdges = n2
-      e = next
-      iter += 1
+      e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+        .select(col("a"), col("b"))
+    } { (_, next) =>
+      val n = next.count()
+      val same = n == nEdges
+      nEdges = n
+      same
     }
-    e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
+    core.select(col("a").as("node")).unionAll(core.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
   }
 
@@ -368,22 +338,22 @@ object GraphAlgos {
     * decrease, so Σf+Σg is a monotone convergence scalar): fixpoint sync
     * barriers are driver round-trips, and at 1000 executors a barrier
     * costs more than the ≤ stride−1 redundant post-convergence hops.
-    * Outer rounds ≤ depth of the SCC condensation DAG; inner strides
-    * are O(diameter / stride). Both caps are contracts: exhausting
-    * either throws loudly rather than returning a partial labeling.
+    * The strides run through [[Checkpoints.fixpoint]]. Outer rounds ≤
+    * depth of the SCC condensation DAG; inner strides are
+    * O(diameter / stride). Both caps are contracts: exhausting either
+    * throws loudly rather than returning a partial labeling.
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String, maxOuter: Int = 20,
                                   maxInner: Int = 60, stride: Int = 2,
                                   checkpointDir: Option[String] = None): DataFrame = {
     require(stride >= 1, "stride must be >= 1")
-    def tc(df: DataFrame): DataFrame = Checkpoints.materialize(df, checkpointDir)
-    var e = tc(edges.select(col(srcCol).cast("long").as("a"),
+    var e = Checkpoints.materialize(edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct())
-    var nodes = tc(e.select(col("a").as("node"))
-      .union(e.select(col("b").as("node"))).distinct())
+      .distinct(), checkpointDir)
+    var nodes = Checkpoints.materialize(e.select(col("a").as("node"))
+      .union(e.select(col("b").as("node"))).distinct(), checkpointDir)
     var nNodes = nodes.count()
     val spark = edges.sparkSession
     import spark.implicits._
@@ -401,20 +371,21 @@ object GraphAlgos {
       // distinct/intersect/semi chain paid ~4 exchanges for the same set.
       // Every survivor is in `nodes` by construction (e is semi-joined to
       // nodes on both sides each round), so no membership join is needed.
-      val survivors = tc(
+      val survivors = Checkpoints.materialize(
         e.select(col("a").as("node"), lit(1).as("o"), lit(0).as("i"))
           .union(e.select(col("b").as("node"), lit(0).as("o"), lit(1).as("i")))
           .groupBy(col("node")).agg(max(col("o")).as("o"), max(col("i")).as("i"))
           .filter(col("o") === 1 && col("i") === 1)
-          .select(col("node")))
+          .select(col("node")), checkpointDir)
       val nSurvivors = survivors.count()
       if (nSurvivors < nNodes) {
         done = done.union(nodes.join(survivors, Seq("node"), "left_anti")
           .select(col("node"), col("node").as("scc")))
         nodes = survivors
-        e = tc(e
+        e = Checkpoints.materialize(e
           .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"))
+          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"),
+          checkpointDir)
         nNodes = nSurvivors
       }
       if (nNodes > 0) {
@@ -424,9 +395,11 @@ object GraphAlgos {
         // (Three references per hop would cube the lazy plan per stride
         // level; two keeps the stride-deep plan ~2^stride leaves, which
         // Catalyst handles comfortably at stride ≤ 8.)
-        val ed = tc(e.select(col("a").as("s"), col("b").as("d"), lit(true).as("fwd"))
-          .union(e.select(col("b").as("s"), col("a").as("d"), lit(false).as("fwd")))
-          .repartition(col("s"))) // per-hop join key (r17)
+        val ed = Checkpoints.materialize(
+          e.select(col("a").as("s"), col("b").as("d"), lit(true).as("fwd"))
+            .union(e.select(col("b").as("s"), col("a").as("d"), lit(false).as("fwd")))
+            .repartition(col("s")), // per-hop join key (r17)
+          checkpointDir)
         def hop(c: DataFrame): DataFrame =
           c.select(col("node"), col("f"), col("g"))
             .union(ed.join(c, ed("s") === c("node"))
@@ -434,30 +407,29 @@ object GraphAlgos {
                 when(col("fwd"), c("f")).as("f"),
                 when(!col("fwd"), c("g")).as("g")))
             .groupBy(col("node")).agg(min(col("f")).as("f"), min(col("g")).as("g"))
-        var color = tc(nodes.select(col("node"),
-          col("node").as("f"), col("node").as("g")))
+        val color0 = Checkpoints.materialize(nodes.select(col("node"),
+          col("node").as("f"), col("node").as("g")), checkpointDir)
         def scalar(c: DataFrame): Long =
           c.agg((sum(col("f")) + sum(col("g"))).as("s")).head().getLong(0)
-        var cSum = scalar(color)
-        var inner = 0
-        var moving = true
-        while (moving) {
-          if (inner >= maxInner) throw new IllegalStateException(
-            "stronglyConnectedComponents: dual labeling still moving " +
-              s"after $maxInner strides")
-          color = tc(Iterator.iterate(color)(hop).drop(stride).next())
-          val s2 = scalar(color)
-          moving = s2 != cSum
+        var cSum = scalar(color0)
+        val color = Checkpoints.fixpoint("stronglyConnectedComponents", color0,
+            maxInner, checkpointDir) { c =>
+          Iterator.iterate(c)(hop).drop(stride).next()
+        } { (_, next) =>
+          val s2 = scalar(next)
+          val same = s2 == cSum
           cSum = s2
-          inner += 1
+          same
         }
         // 2. extract complete SCCs where f = g.
         val mark = color.filter(col("f") === col("g"))
         done = done.union(mark.select(col("node"), col("f").as("scc")))
-        nodes = tc(nodes.join(mark.select(col("node")), Seq("node"), "left_anti"))
-        e = tc(e
+        nodes = Checkpoints.materialize(
+          nodes.join(mark.select(col("node")), Seq("node"), "left_anti"), checkpointDir)
+        e = Checkpoints.materialize(e
           .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"))
+          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"),
+          checkpointDir)
         val nLeft = nodes.count()
         if (nLeft == nNodes) throw new IllegalStateException(
           "stronglyConnectedComponents: no component extracted in a round — " +
@@ -467,7 +439,7 @@ object GraphAlgos {
       }
       outer += 1
     }
-    tc(done)
+    Checkpoints.materialize(done, checkpointDir)
   }
 
   /** Neighborhood function via KMV sketch propagation — the HyperANF

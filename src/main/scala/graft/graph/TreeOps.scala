@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Checkpoints
+
 /** Recursive flatten of a parent-pointer forest (comment trees).
   *
   * The reference never walks the tree itself — praw pre-flattens Reddit
@@ -19,30 +21,22 @@ object TreeOps {
   /** Flatten `nodes` (one row per node: `idCol`, nullable `parentCol`;
     * roots have NULL parent) to (id, root_id, depth).
     *
-    * Each pass is one hash self-join on the jump pointer; the state is
-    * localCheckpoint-ed per pass to truncate lineage (on a real cluster
-    * with lineage-sensitive retry requirements, swap for
-    * `checkpoint()` against a reliable dir). Fixpoint detection: a node's
-    * depth strictly grows while its pointer is off-root, so the state is
-    * settled exactly when sum(depth) stops moving — one cheap aggregate
-    * on the already-materialized pass output.
+    * Each pass is one hash self-join on the jump pointer, run through
+    * [[Checkpoints.fixpoint]]. Fixpoint detection: a node's depth strictly
+    * grows while its pointer is off-root, so the state is settled exactly
+    * when sum(depth) stops moving — one aggregate per pass, which is also
+    * the job that fills the pass's lazy checkpoint. A cycle (or depth
+    * > 2^maxIters) never settles and throws after `maxIters` passes.
+    * Takes no `checkpointDir`: materializations are executor-local.
     */
   def treeFlatten(nodes: DataFrame, idCol: String, parentCol: String,
                   maxIters: Int = 40): DataFrame = {
-    var state = nodes.select(
+    val init = Checkpoints.materialize(nodes.select(
       col(idCol).as("id"),
       coalesce(col(parentCol), col(idCol)).as("jump"),
-      when(col(parentCol).isNull, lit(0L)).otherwise(lit(1L)).as("depth"))
-      .localCheckpoint()
-    var prevSum = -1L
-    var iter = 0
-    var curSum = sumDepth(state)
-    while (curSum != prevSum) {
-      // A cycle (or depth > 2^maxIters) never settles — fail loudly
-      // instead of returning a partially-resolved forest.
-      if (iter >= maxIters) throw new IllegalStateException(
-        s"treeFlatten: not settled after $maxIters passes — " +
-          "cycle in parent pointers or depth exceeds 2^maxIters")
+      when(col(parentCol).isNull, lit(0L)).otherwise(lit(1L)).as("depth")), None)
+    var depthSum = sumDepth(init)
+    val settled = Checkpoints.fixpoint("treeFlatten", init, maxIters, None) { state =>
       val t = state.select(col("id").as("t_id"), col("jump").as("t_jump"),
         col("depth").as("t_depth"))
       // LEFT join: a jump normally resolves to some node's row (roots
@@ -51,16 +45,17 @@ object TreeOps {
       // settle where they are (root_id = the missing ancestor's id) instead
       // of silently vanishing from the output, as an inner join would make
       // them.
-      state = state.join(t, col("jump") === col("t_id"), "left")
+      state.join(t, col("jump") === col("t_id"), "left")
         .select(col("id"),
           coalesce(col("t_jump"), col("jump")).as("jump"),
           (col("depth") + coalesce(col("t_depth"), lit(0L))).as("depth"))
-        .localCheckpoint()
-      prevSum = curSum
-      curSum = sumDepth(state)
-      iter += 1
+    } { (_, next) =>
+      val s = sumDepth(next)
+      val same = s == depthSum
+      depthSum = s
+      same
     }
-    state.select(col("id"), col("jump").as("root_id"), col("depth"))
+    settled.select(col("id"), col("jump").as("root_id"), col("depth"))
   }
 
   private def sumDepth(state: DataFrame): Long =

@@ -4,10 +4,14 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
 
 /** The one materialization choice of the multi-consumer and iterative
-  * operators that take a `checkpointDir` ([[materialize]]: PairJoin.selfPairs,
-  * EntityResolution's prefix and containment joins, TextOps.bpeTrain and the
-  * GraphAlgos fixpoints), and the shared reliable-checkpoint configuration
-  * behind it.
+  * operators ([[materialize]]: PairJoin.selfPairs, EntityResolution's
+  * prefix and containment joins, TextOps.bpeTrain and every graph
+  * operator), the one fixpoint loop of the iterative graph operators
+  * ([[fixpoint]]), and the shared reliable-checkpoint configuration
+  * behind both. Operators without a `checkpointDir` parameter
+  * (Components, TreeOps.treeFlatten, GraphAlgos.triangleCounts,
+  * Dedup.nearDupClusters) materialize under `None` only: executor-local,
+  * lost with their executor.
   *
   * `SparkContext.setCheckpointDir` is global mutable state: two concurrent
   * library calls passing different dirs would race, and re-setting it per
@@ -21,8 +25,8 @@ object Checkpoints {
 
   /** Materialize `ds` once. `Some(dir)`: a RELIABLE checkpoint under `dir`
     * (a distributed-FS root on a cluster), written eagerly, so a lost
-    * executor recomputes from it instead of aborting the job (FIXPOINT_LOSS_r16,
-    * FixpointFaultSpec). `None`: a LAZY executor-local checkpoint — the plan
+    * executor recomputes from it instead of aborting the job
+    * (FixpointFaultSpec). `None`: a LAZY executor-local checkpoint — the plan
     * is cut to a LogicalRDD at once (bounded optimizer work per fixpoint
     * pass), but the partitions persist on the first action over it instead
     * of in a dedicated job (r17): every caller follows it with a census,
@@ -36,6 +40,34 @@ object Checkpoints {
         ds.checkpoint()
       case None => ds.localCheckpoint(eager = false)
     }
+
+  /** Iterate `pass` from `init` to a fixpoint. Every pass's output is
+    * cut through [[materialize]], then `settled(prev, next)` runs: it is
+    * the first action over the pass output, so under `None` it is also the
+    * job that fills the lazy checkpoint — one job per pass (r17). The loop
+    * returns the first pass output whose test holds. After `maxPasses`
+    * unsettled passes it throws `IllegalStateException("<operator>: not
+    * settled after N passes")` when `mustSettle`, else returns the last
+    * output (fixed-pass operators whose test is an optional early stop).
+    * Scalar carries between passes (a count, a sum) live in the caller's
+    * `settled` closure.
+    */
+  def fixpoint[T](operator: String, init: Dataset[T], maxPasses: Int,
+      checkpointDir: Option[String], mustSettle: Boolean = true)(
+      pass: Dataset[T] => Dataset[T])(
+      settled: (Dataset[T], Dataset[T]) => Boolean): Dataset[T] = {
+    @annotation.tailrec
+    def run(state: Dataset[T], done: Int): Dataset[T] =
+      if (done >= maxPasses) {
+        if (mustSettle) throw new IllegalStateException(
+          s"$operator: not settled after $maxPasses passes")
+        state
+      } else {
+        val next = materialize(pass(state), checkpointDir)
+        if (settled(state, next)) next else run(next, done + 1)
+      }
+    run(init, 0)
+  }
 
   def ensureDir(sc: SparkContext, dir: String): Unit = synchronized {
     sc.getCheckpointDir match {

@@ -4,11 +4,11 @@ import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.ops.CoreOps
 
 /** S1/S2 via the DataSource V2 scrape source (`sources/ScrapeSource`):
   * the reference scraper's "newest first, stop at the limit, since the
@@ -21,8 +21,9 @@ object SourceQueries {
   private val DropRows = 400L
 
   /** Materialize events as a scrape-drop directory: rows get a unique
-    * scrape sequence `ts_u` (row_number over (ts, event_id) — both sides
-    * of the gate compute it identically), chunked into time-disjoint
+    * scrape sequence `ts_u` (the rank over (ts, event_id), a unique order —
+    * both sides of the gate compute it identically; `rangeRank`, not a
+    * one-partition window), chunked into time-disjoint
     * drops of [[DropRows]] rows. Spark writes one file per drop
     * (repartition by drop id + partitionBy); the driver then renames each
     * part file to the `drop-<maxTs>.json` layout. maxTs per drop is known
@@ -36,12 +37,13 @@ object SourceQueries {
   private def buildDropsInto(s: SparkSession, dir: String, out: String): Unit = {
     val staged = Files.createTempDirectory("graft_scrape_staged_").toString
     org.apache.spark.GraftSparkAccess.deleteAtExit(staged)
-    val seq = Window.orderBy(col("ts"), col("event_id"))
-    val flat = Tables.load(s, dir, "events").select(
+    val events = Tables.load(s, dir, "events").select(
         col("event_id"),
         col("event_type"),
         round(col("value") * 100, 0).cast("long").as("value_cents"),
-        row_number().over(seq).cast("long").as("ts_u"))
+        col("ts"))
+    val flat = CoreOps.rangeRank(events, Nil, Seq(col("ts"), col("event_id")), "ts_u")
+      .drop("ts")
       .withColumn("drop_id", ((col("ts_u") - 1) / DropRows).cast("long"))
     val n = flat.count()
     val nDrops = ((n + DropRows - 1) / DropRows).toInt

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Checkpoints
@@ -7,10 +10,12 @@ import graft.ops.Checkpoints
 /** Scheme-aware checkpoint-root compatibility (ADVICE r9/r10: the old
   * normalizer stripped scheme+authority, so a cross-FILESYSTEM redirect
   * passed the set-once guard silently). `ensureDir` itself mutates global
-  * SparkContext state, so the comparison is specced directly.
+  * SparkContext state, so the comparison is specced directly. Then the
+  * fixpoint loop every iterative graph operator runs its passes through.
   */
 class CheckpointsSpec extends AnyFunSuite {
-  private val conf = TestSpark.spark.sparkContext.hadoopConfiguration
+  private val spark = TestSpark.spark
+  private val conf = spark.sparkContext.hadoopConfiguration
 
   test("same root accepted: qualified existing vs scheme-less request") {
     // getCheckpointDir returns file:/… with a UUID child; callers pass
@@ -36,5 +41,58 @@ class CheckpointsSpec extends AnyFunSuite {
   test("sibling root still rejected (prefix is path-segment-aware)") {
     assert(!Checkpoints.compatible("file:/tmp/ck2", "/tmp/ck", conf))
     assert(!Checkpoints.compatible("file:/tmp/ckpt-other", "/tmp/ckpt", conf))
+  }
+
+  // ------------------------------------------------------------ fixpoint
+
+  /** Counts up by one per pass from x = 0..4; settles once max(x) reaches
+    * `target`. Returns the fixpoint's output and the passes it ran. */
+  private def countUp(target: Long, maxPasses: Int, dir: Option[String] = None,
+      mustSettle: Boolean = true): (DataFrame, Int) = {
+    var passes = 0
+    val out = Checkpoints.fixpoint("countUp", spark.range(5).toDF("x"), maxPasses,
+        dir, mustSettle) { s =>
+      passes += 1
+      s.select((col("x") + 1).as("x"))
+    } { (_, next) => next.agg(max(col("x"))).head().getLong(0) >= target }
+    (out, passes)
+  }
+
+  private def maxX(df: DataFrame): Long = df.agg(max(col("x"))).head().getLong(0)
+
+  test("fixpoint stops at the first pass whose test holds") {
+    val (out, passes) = countUp(target = 7L, maxPasses = 10)
+    assert(passes == 3)
+    assert(maxX(out) == 7L)
+  }
+
+  test("fixpoint at the cap: throws naming the operator and the cap, or returns the last pass") {
+    val e = intercept[IllegalStateException](countUp(target = 100L, maxPasses = 4))
+    assert(e.getMessage == "countUp: not settled after 4 passes")
+    val (out, passes) = countUp(target = 100L, maxPasses = 4, mustSettle = false)
+    assert(passes == 4)
+    assert(maxX(out) == 8L)
+  }
+
+  test("fixpoint cuts lineage every pass: the result is a LogicalRDD") {
+    val (out, _) = countUp(target = 6L, maxPasses = 10)
+    assert(out.queryExecution.logical.isInstanceOf[LogicalRDD])
+  }
+
+  test("fixpoint writes reliable checkpoints only under Some(dir)") {
+    // set-once root: reuse one an earlier suite pinned (GraphAlgosSpec)
+    val dir = spark.sparkContext.getCheckpointDir match {
+      case Some(existing) => new java.net.URI(existing).getPath
+      case None => TestSpark.tempDir("graft_ckpt_").toString
+    }
+    def written() = FixpointFaultSpec.rddCheckpointDirs(java.nio.file.Paths.get(dir))
+    val before = written()
+    val (local, _) = countUp(target = 7L, maxPasses = 10)
+    assert(maxX(local) == 7L)
+    assert(written() == before)
+    val (reliable, passes) = countUp(target = 7L, maxPasses = 10, dir = Some(dir))
+    assert(maxX(reliable) == 7L)
+    assert(reliable.queryExecution.logical.isInstanceOf[LogicalRDD])
+    assert((written() -- before).size == passes)
   }
 }
