@@ -127,13 +127,15 @@ object Bench {
     // Fixed ruler keys (ADVICE r15): "ruler_wide_sec" + "ruler_threads"
     // instead of the host-dependent "ruler_<N>t_sec", so artifact parsers
     // comparing legs across hosts/VM shapes read one field name.
-    val stealField = stealPct.map(p => s""""steal_pct":${ms(p)},""").getOrElse("")
-    val detailed = s"""{"metric":"total","value":${ms(total)},"unit":"sec","wall":${ms(wallSec)},"passes":$nPasses,"stat":"median","load1_at_start":${ms(load1)},"ruler_1t_sec":${ms(ruler1t)},"ruler_wide_sec":${ms(rulerWide)},"ruler_threads":$nThreads,$stealField"errors":$errs,"queries":$qs,"sf":"$sfName"}"""
+    val steal = stealPct.map(p => s""""steal_pct":${ms(p)}""")
+    val detailed = s"""{"metric":"total","value":${ms(total)},"unit":"sec","wall":${ms(wallSec)},"passes":$nPasses,"stat":"median","load1_at_start":${ms(load1)},"ruler_1t_sec":${ms(ruler1t)},"ruler_wide_sec":${ms(rulerWide)},"ruler_threads":$nThreads,${steal.map(_ + ",").getOrElse("")}"errors":$errs,"queries":$qs,"sf":"$sfName"}"""
     // The short line carries the errors array too: the driver's parsed
     // artifact itself must be red when any query threw — a leg with
     // failures can never read as a clean total (VERDICT r11 item 2: the
     // r11 sf1 leg recorded q271's failure yet shipped as "zero errors").
-    val short = s"""{"metric":"total","value":${ms(total)},"unit":"sec","errors":$errs,"queries":{"all":${ms(total)}},"sf":"$sfName"}"""
+    // The host keys follow the original ones, so a parser of the short line
+    // alone can tell host load and steal from a code regression.
+    val short = s"""{"metric":"total","value":${ms(total)},"unit":"sec","errors":$errs,"queries":{"all":${ms(total)}},"sf":"$sfName","load1_at_start":${ms(load1)},"ruler_wide_sec":${ms(rulerWide)},"ruler_threads":$nThreads${steal.map("," + _).getOrElse("")}}"""
     // The sf0.1 run is the driver contract and owns BENCH_LOCAL.json /
     // BENCH_DELTA.md; exploratory runs at other SFs write suffixed files
     // so they can never poison the regression baseline.

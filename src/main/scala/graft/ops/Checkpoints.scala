@@ -2,16 +2,22 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one materialization choice of the multi-consumer and iterative
   * operators ([[materialize]]: PairJoin.selfPairs, EntityResolution's
-  * prefix and containment joins, TextOps.bpeTrain and every graph
-  * operator), the one fixpoint loop of the iterative graph operators
-  * ([[fixpoint]]), and the shared reliable-checkpoint configuration
-  * behind both. Operators without a `checkpointDir` parameter
-  * (Components, TreeOps.treeFlatten, GraphAlgos.triangleCounts,
-  * Dedup.nearDupClusters) materialize under `None` only: executor-local,
-  * lost with their executor.
+  * prefix and containment joins, TextOps.bpeTrain, every graph operator,
+  * and SocialPipeline.writeSinks, which runs both `runDaily` and the
+  * `SocialStream.runPipeline` refresh), the one fixpoint loop of the
+  * iterative graph operators ([[fixpoint]]), and the shared
+  * reliable-checkpoint configuration behind both.
+  *
+  * Executor-local sites (they materialize under `None` only, and their
+  * blocks are lost with their executor): the operators without a
+  * `checkpointDir` parameter (Components, TreeOps.treeFlatten,
+  * GraphAlgos.triangleCounts, Dedup.nearDupClusters), and
+  * SocialPipeline.writeSinks, which fills its facts eagerly and
+  * [[release]]s them when it returns.
   *
   * `SparkContext.setCheckpointDir` is global mutable state: two concurrent
   * library calls passing different dirs would race, and re-setting it per
@@ -26,20 +32,41 @@ object Checkpoints {
   /** Materialize `ds` once. `Some(dir)`: a RELIABLE checkpoint under `dir`
     * (a distributed-FS root on a cluster), written eagerly, so a lost
     * executor recomputes from it instead of aborting the job
-    * (FixpointFaultSpec). `None`: a LAZY executor-local checkpoint — the plan
+    * (FixpointFaultSpec). `None`: an executor-local checkpoint — the plan
     * is cut to a LogicalRDD at once (bounded optimizer work per fixpoint
-    * pass), but the partitions persist on the first action over it instead
-    * of in a dedicated job (r17): every caller follows it with a census,
-    * count or scan that reads every partition anyway. Executor-local
-    * storage is lost with its executor.
+    * pass). By default it is LAZY: the partitions persist on the first
+    * action over it instead of in a dedicated job (r17), since every
+    * fixpoint caller follows it with a census, count or scan that reads
+    * every partition anyway. `eager = true` fills every partition in one
+    * job before returning, for a frame that several concurrent consumers
+    * read: a lazy fill would run inside the consumers' own jobs, whose
+    * tasks would all ship the full upstream lineage. A failed fill
+    * releases the blocks it had written before rethrowing. Executor-local
+    * storage is lost with its executor: a later read of a lost block fails
+    * its job instead of recomputing it.
     */
-  def materialize[T](ds: Dataset[T], checkpointDir: Option[String]): Dataset[T] =
+  def materialize[T](ds: Dataset[T], checkpointDir: Option[String],
+      eager: Boolean = false): Dataset[T] =
     checkpointDir match {
       case Some(d) =>
         ensureDir(ds.sparkSession.sparkContext, d)
         ds.checkpoint()
-      case None => ds.localCheckpoint(eager = false)
+      case None =>
+        val cut = ds.localCheckpoint(eager = false)
+        // the job's end marks the RDD checkpointed: its blocks are all there
+        if (eager) try rdds(cut).foreach(_.count())
+          catch { case e: Throwable => release(cut); throw e }
+        cut
     }
+
+  /** Drops the executor-local blocks behind a frame that [[materialize]]
+    * returned; reading the frame afterwards fails. A reliable checkpoint's
+    * files stay where they are.
+    */
+  def release(ds: Dataset[_]): Unit = rdds(ds).foreach(_.unpersist(blocking = false))
+
+  private def rdds(ds: Dataset[_]) =
+    ds.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 
   /** Iterate `pass` from `init` to a fixpoint. Every pass's output is
     * cut through [[materialize]], then `settled(prev, next)` runs: it is

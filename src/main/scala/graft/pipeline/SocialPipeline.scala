@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.enrich.Enrich
 import graft.graph.GraphBuilder
-import graft.ops.{CoreOps, SocialOps}
+import graft.ops.{Checkpoints, CoreOps, SocialOps}
 
 /** The reference's daily Glue ETL (SURVEY.md §3) as one distributed plan —
   * no `toPandas` driver collapse (`glue/twitter_glue.py:161`), no per-row
@@ -96,9 +96,10 @@ object SocialPipeline {
     * (`vertices`, `edges`) and the two rollups (`engagement_by_subreddit`,
     * `sentiment_by_topic`) as parquet under `outDir`. The three
     * scan → clean → enrich chains are built concurrently (each scan infers
-    * its schema with a Spark job). The enriched facts are cached only for the
-    * duration of the call and the four sinks are written concurrently from
-    * them ([[writeSinks]]), so every clean row is scored once.
+    * its schema with a Spark job). [[writeSinks]] then fills each enriched
+    * fact once, executor-local, and writes the four sinks concurrently from
+    * the filled facts: every clean row is scored once, and a lost executor
+    * fails the call instead of silently rescoring.
     */
   def runDaily(spark: SparkSession, postsRoot: String, commentsRoot: String,
                tweetsRoot: String, topic: String, dataload: String,
@@ -106,35 +107,56 @@ object SocialPipeline {
                scorer: Enrich.TextScorer): Unit = {
     def fact(root: String, clean: DataFrame => DataFrame): () => DataFrame =
       () => enrich(clean(scanPartition(spark, root, topic, dataload)), "content", scorer)
-    val Seq(posts, comments, tweets) = inParallel(Seq(
+    val facts = inParallel(Seq(
       fact(postsRoot, cleanPosts(_, blacklist)),
       fact(commentsRoot, cleanComments(_, blacklist)),
       fact(tweetsRoot, cleanComments(_, blacklist))))
-    val all = posts.unionByName(comments.drop("post_id", "parent_id"), allowMissingColumns = true)
-      .unionByName(tweets, allowMissingColumns = true)
-    def overwrite(df: DataFrame, name: String): () => Unit =
-      () => df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
-    writeSinks(Seq(posts, comments, tweets), Seq(
-      overwrite(GraphBuilder.vertices(posts, comments, tweets), "vertices"),
-      overwrite(GraphBuilder.edges(posts, comments, tweets), "edges"),
-      overwrite(engagementBySubreddit(posts), "engagement_by_subreddit"),
-      overwrite(sentimentByTopic(all), "sentiment_by_topic")))
+    def overwrite(name: String)(build: (DataFrame, DataFrame, DataFrame) => DataFrame)
+        : Seq[DataFrame] => Unit = { case Seq(p, c, t) =>
+      build(p, c, t).write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
+    }
+    writeSinks(facts, Seq(
+      overwrite("vertices")(GraphBuilder.vertices),
+      overwrite("edges")(GraphBuilder.edges),
+      overwrite("engagement_by_subreddit")((p, _, _) => engagementBySubreddit(p)),
+      overwrite("sentiment_by_topic")((p, c, t) => sentimentByTopic(
+        p.unionByName(c.drop("post_id", "parent_id"), allowMissingColumns = true)
+          .unionByName(t, allowMissingColumns = true)))))
   }
 
-  /** Writes several sinks built from the same `facts` while computing the
-    * facts once. Every Spark action re-plans and re-runs its whole input
-    * chain, so without the cache each sink would rescan, reclean and rescore
-    * every row. The facts are persisted at the
-    * default storage level, which Spark recomputes from lineage if an
-    * executor is lost; the sinks run concurrently, one pool thread each; the
-    * facts are unpersisted once every sink has finished. The first failing
-    * sink's own exception is rethrown.
+  /** Writes several sinks built from the same `facts` while computing each
+    * fact once. Every Spark action re-plans and re-runs its whole input
+    * chain, so each fact is first filled through
+    * [[graft.ops.Checkpoints.materialize]]'s eager executor-local path: one
+    * job per fact, the fills running concurrently, and every fill finished
+    * before any sink is planned. Each sink is a function that builds and
+    * writes its table from the filled frames (in the order of `facts`); its
+    * plan reads only them, so its tasks carry no scan, clean or enrich
+    * lineage. The sinks run concurrently, one pool thread each. The filled
+    * blocks are released when the call returns, whether it succeeds or
+    * fails; the first failing fill's or sink's own exception is rethrown.
+    * With no sinks the call is a no-op that submits no job.
+    *
+    * Recovery policy: executor-local. A retried sink task re-reads the
+    * filled blocks and never rescores a row (PipelineFaultSpec). If an
+    * executor is lost after the fill, a sink that reads its blocks fails the
+    * call with Spark's "Checkpoint block ... not found" error; nothing is
+    * recomputed from lineage, so a nondeterministic scorer can never leave
+    * the sinks disagreeing. A reliable policy waits for the shared
+    * materialization conf (ROADMAP item 5).
     */
-  def writeSinks(facts: Seq[DataFrame], sinks: Seq[() => Unit]): Unit = {
-    facts.foreach(_.persist())
-    try inParallel(sinks)
-    finally facts.foreach(_.unpersist())
-  }
+  def writeSinks(facts: Seq[DataFrame], sinks: Seq[Seq[DataFrame] => Unit]): Unit =
+    if (sinks.nonEmpty) {
+      val filled = new ConcurrentLinkedQueue[DataFrame]
+      try {
+        val frames = inParallel(facts.map(f => () => {
+          val m = Checkpoints.materialize(f, None, eager = true)
+          filled.add(m)
+          m
+        }))
+        inParallel(sinks.map(s => () => s(frames)))
+      } finally filled.forEach(Checkpoints.release(_))
+    }
 
   /** Runs `tasks` concurrently, one pool thread each, and returns their
     * results in order once all have finished; a failure rethrows its cause,

@@ -394,10 +394,14 @@ object DedupQueries {
         .groupBy(col("component"))
         .agg(max(struct(col("q_u"), (-col("node")).as("nid"))).as("b"))
         .select((-col("b.nid")).as("doc_id"))
-      val d1 = corpus.select(col("doc_id"))
+      // d1 feeds f1, d2, d2docs and both sides of the decontamination, so
+      // its subtree would repeat under every later stage's plan: serialized
+      // into each task binary, it grew them to 11.6 MiB at sf0.1. One eager
+      // fill cuts it to a single leaf.
+      val d1 = graft.ops.Checkpoints.materialize(corpus.select(col("doc_id"))
         .join(clusters.select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(keepers)
-        .join(qual, "doc_id")
+        .join(qual, "doc_id"), None, eager = true)
       val d2 = d1.filter(col("q_u") >= 700000L)
       val d2docs = d2.join(corpus.select(col("doc_id"), col("text")), "doc_id")
       val d3 = d2docs.join(

@@ -357,20 +357,22 @@ object SocialStream {
       .start()
 
   /** The full §3 lifecycle as one streaming job: JSON landing → clean →
-    * enrich → graph-as-tables, via foreachBatch. Each micro-batch enriches
-    * its posts once and appends them and their posts-only graph
-    * ([[graft.graph.GraphBuilder.postVertices]],
-    * [[graft.graph.GraphBuilder.postEdges]]) concurrently
-    * ([[graft.pipeline.SocialPipeline.writeSinks]]); `dropDuplicates` on
-    * the merge keys inside the batch keeps writes idempotent-shaped exactly
-    * like the Cypher MERGE the reference issues per record
-    * (`glue/twitter_glue.py:74-105`) — but as one distributed plan per
-    * batch, not per-row transactions.
+    * enrich → graph-as-tables, via foreachBatch. Each micro-batch fills its
+    * enriched posts once, executor-local, and appends them and their
+    * posts-only graph ([[graft.graph.GraphBuilder.postVertices]],
+    * [[graft.graph.GraphBuilder.postEdges]]) concurrently from the filled
+    * frame ([[graft.pipeline.SocialPipeline.writeSinks]]): every clean row
+    * is scored once, and a lost executor fails the batch instead of
+    * silently rescoring. `dropDuplicates` on the merge keys inside the batch
+    * keeps writes idempotent-shaped exactly like the Cypher MERGE the
+    * reference issues per record (`glue/twitter_glue.py:74-105`) — but as
+    * one distributed plan per batch, not per-row transactions.
     */
   def runPipeline(spark: SparkSession, postsLanding: String, outDir: String,
                   blacklist: Seq[String], scorer: graft.enrich.Enrich.TextScorer,
                   checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("15 minutes")): StreamingQuery = {
+    import graft.graph.GraphBuilder
     import graft.pipeline.SocialPipeline
     val stream = readJsonStream(spark, postsLanding, graft.schemas.Schemas.redditPosts)
     stream.writeStream
@@ -379,12 +381,10 @@ object SocialStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val enriched = SocialPipeline.enrich(
           SocialPipeline.cleanPosts(batch, blacklist), "content", scorer)
-        val v = graft.graph.GraphBuilder.postVertices(enriched)
-        val e = graft.graph.GraphBuilder.postEdges(enriched)
-        def append(df: DataFrame, name: String): () => Unit =
-          () => df.write.mode("append").parquet(s"$outDir/$name.parquet")
-        SocialPipeline.writeSinks(Seq(enriched), Seq(
-          append(enriched, "posts_enriched"), append(v, "vertices"), append(e, "edges")))
+        def append(name: String)(build: DataFrame => DataFrame): Seq[DataFrame] => Unit =
+          facts => build(facts.head).write.mode("append").parquet(s"$outDir/$name.parquet")
+        SocialPipeline.writeSinks(Seq(enriched), Seq(append("posts_enriched")(identity),
+          append("vertices")(GraphBuilder.postVertices), append("edges")(GraphBuilder.postEdges)))
       }
       .start()
   }

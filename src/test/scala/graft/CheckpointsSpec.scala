@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.ops.Checkpoints
 
@@ -11,7 +15,8 @@ import graft.ops.Checkpoints
   * normalizer stripped scheme+authority, so a cross-FILESYSTEM redirect
   * passed the set-once guard silently). `ensureDir` itself mutates global
   * SparkContext state, so the comparison is specced directly. Then the
-  * fixpoint loop every iterative graph operator runs its passes through.
+  * fixpoint loop every iterative graph operator runs its passes through,
+  * and the eager executor-local fill that SocialPipeline.writeSinks uses.
   */
 class CheckpointsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -95,4 +100,30 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(reliable.queryExecution.logical.isInstanceOf[LogicalRDD])
     assert((written() -- before).size == passes)
   }
+
+  test("eager local materialize fills in one job; a released frame fails instead of recomputing") {
+    val evals = udf((x: Long) => { CheckpointsSpec.evals.incrementAndGet(); x }).asNondeterministic()
+    val src = spark.range(0, 1000, 1, 4).select(evals(col("id")).as("x"))
+    CheckpointsSpec.evals.set(0L)
+    val (filled, jobs) = SinkProbes.jobCount(spark)(Checkpoints.materialize(src, None, eager = true))
+    assert(jobs == 1 && CheckpointsSpec.evals.get == 1000L)
+    assert(filled.queryExecution.logical.isInstanceOf[LogicalRDD])
+    assert(filled.agg(sum("x")).head().getLong(0) == 499500L)
+    assert(CheckpointsSpec.evals.get == 1000L) // read from the blocks
+    // a released frame stands in for a lost executor: its blocks are gone
+    Checkpoints.release(filled)
+    eventually(timeout(10.seconds)) {
+      val e = intercept[Exception](filled.count())
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+      assert(chain(e).exists(_.contains("Checkpoint block")), e)
+    }
+    assert(CheckpointsSpec.evals.get == 1000L) // never recomputed from lineage
+  }
+}
+
+object CheckpointsSpec {
+  /** Rows evaluated by the counting UDF; JVM-static, so local-mode tasks
+    * all add to it. */
+  val evals = new AtomicLong
 }

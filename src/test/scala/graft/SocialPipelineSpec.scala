@@ -1,8 +1,19 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftSparkAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enrich
 import graft.pipeline.SocialPipeline
@@ -23,6 +34,59 @@ class CountingScorer(failOn: String = null) extends Enrich.TextScorer {
 
 object CountingScorer {
   val rows = new AtomicLong
+}
+
+/** Probes of a `SocialPipeline.writeSinks` call: the jobs it submits, what
+  * its sinks read and what it leaves persisted. */
+object SinkProbes extends AdaptiveSparkPlanHelper {
+
+  /** Runs `body`; returns its result and the executed plans of the writes
+    * it made, in `spark` or in a session cloned from it after the call
+    * began (a streaming query's). */
+  def writePlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try body finally {
+      GraftSparkAccess.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    (result, plans.asScala.toSeq.filter(p => find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty))
+  }
+
+  /** The scans in `plan` that read a fact's lineage or a cache instead of
+    * its filled blocks. */
+  def lineageScans(plan: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(plan) {
+    case s: FileSourceScanExec => s
+    case s: InMemoryTableScanExec => s
+  }
+
+  /** Whether `plan` reads a filled (checkpointed) frame. */
+  def readsFilledFrame(plan: SparkPlan): Boolean =
+    collectWithSubqueries(plan) { case s: RDDScanExec => s }.nonEmpty
+
+  /** Runs `body`; returns its result and the number of Spark jobs it
+    * submitted. */
+  def jobCount[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result = try body finally {
+      GraftSparkAccess.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (result, jobs.get)
+  }
+
+  /** Ids of the RDDs persisted in `spark`'s context right now. */
+  def persistentRdds(spark: SparkSession): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 }
 
 class SocialPipelineSpec extends AnyFunSuite {
@@ -105,12 +169,21 @@ class SocialPipelineSpec extends AnyFunSuite {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
     val out = TestSpark.tempDir("graft-out").toString
     CountingScorer.rows.set(0L)
-    SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
-      "ukraine war", "25-03-2023", out, blacklist, new CountingScorer)
+    val before = SinkProbes.persistentRdds(spark)
+    val (_, writes) = SinkProbes.writePlans(spark) {
+      SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
+        "ukraine war", "25-03-2023", out, blacklist, new CountingScorer)
+    }
     // p1, c1 and the tweet pass clean; each is scored once for all four
-    // sinks, and the facts are cached only during the call
+    // sinks, and the filled facts are released when the call returns
     assert(CountingScorer.rows.get == 3L)
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
+    // every sink reads the filled facts, never a file scan or a cache
+    assert(writes.size == 4)
+    writes.foreach { p =>
+      assert(SinkProbes.lineageScans(p).isEmpty && SinkProbes.readsFilledFrame(p), p)
+    }
     val v = spark.read.parquet(s"$out/vertices.parquet")
     val e = spark.read.parquet(s"$out/edges.parquet")
     // p1 + c1 + tweet + users(alice, frank, grace) + subreddit(worldnews)
@@ -125,13 +198,19 @@ class SocialPipelineSpec extends AnyFunSuite {
   }
 
   test("writeSinks with no sinks is a no-op") {
-    SocialPipeline.writeSinks(Seq(spark.range(3).toDF()), Nil)
+    val before = SinkProbes.persistentRdds(spark)
+    val (_, jobs) = SinkProbes.jobCount(spark)(SocialPipeline.writeSinks(Seq(spark.range(3).toDF()), Nil))
+    assert(jobs == 0, s"$jobs jobs submitted")
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
   }
 
   test("runDaily rethrows a failing sink's own exception and cleans up") {
     val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
     val out = TestSpark.tempDir("graft-fail").toString
+    val before = SinkProbes.persistentRdds(spark)
+    // the sentinel fails the tweets fill; the posts and comments fills
+    // succeed, and all three must still be released
     val ex = intercept[Exception] {
       SocialPipeline.runDaily(spark, postsRoot, commentsRoot, tweetsRoot,
         "ukraine war", "25-03-2023", out, blacklist, new CountingScorer(failOn = "good tweet"))
@@ -141,6 +220,7 @@ class SocialPipelineSpec extends AnyFunSuite {
     assert(chain(ex).exists(t => Option(t.getMessage).exists(_.contains("scorer failed on 'good tweet'"))),
       s"sentinel failure missing from the cause chain of $ex")
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
     def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(t => t.getName == "social-pipeline-pool" && t.isAlive)
     val deadline = System.nanoTime() + 10000000000L

@@ -188,15 +188,25 @@ class SocialStreamSpec extends AnyFunSuite {
     val blacklist = Seq("badterm")
     val scorer = new CountingScorer
     CountingScorer.rows.set(0L)
-    val q = graft.streaming.SocialStream.runPipeline(spark, landing, s"$tmp/out",
-      blacklist, scorer, s"$tmp/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    val before = SinkProbes.persistentRdds(spark)
+    val (q, writes) = SinkProbes.writePlans(spark) {
+      val q = graft.streaming.SocialStream.runPipeline(spark, landing, s"$tmp/out",
+        blacklist, scorer, s"$tmp/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination(120000)
+      q
+    }
     // each micro-batch scores its clean rows (p1; p3) once, across all three
-    // sinks, and leaves nothing cached
+    // sinks, and leaves nothing cached or persisted
     assert(q.recentProgress.count(_.numInputRows > 0) == 2)
     assert(CountingScorer.rows.get == 2L)
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
+    // two batches × three sinks, each reading only its batch's filled posts
+    assert(writes.size == 6)
+    writes.foreach { p =>
+      assert(SinkProbes.lineageScans(p).isEmpty && SinkProbes.readsFilledFrame(p), p)
+    }
 
     // batch reference over the identical landing files
     val batchEnriched = SocialPipeline.enrich(
