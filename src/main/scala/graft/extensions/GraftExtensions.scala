@@ -25,9 +25,28 @@ import graft.expressions.{BloomMightContain, CharHash, ContainsAnyTerm, MinhashB
   *
   * and injects [[CollapseContainsChain]], which rewrites hand-written
   * blacklist disjunctions into the automaton form.
+  *
+  * It also installs the engine's local filesystem: it points the active
+  * context's `hadoopConfiguration` at [[NioLocalFileSystem]] for `file:`
+  * paths, both `fs.file.impl` (the `FileSystem` API: parquet writes and
+  * the output committer) and `fs.AbstractFileSystem.file.impl` (the
+  * `FileContext` API: the streaming checkpoint's offset, commit and source
+  * logs). Spark applies the
+  * extensions once per `getOrCreate` that starts a session, after the
+  * SparkContext is up and before the session's shared state copies the
+  * context's Hadoop configuration, so every later Hadoop conf of the
+  * session carries both keys. One ordering condition holds it together:
+  * Hadoop caches a `FileSystem` per scheme, authority and user — not per
+  * conf — so the install takes effect only if no `file:` `FileSystem` was
+  * created in the JVM before the first session applied this extension. A
+  * context start (no event log, no added jars) creates none; a `file:`
+  * filesystem made earlier keeps the stock class for the JVM's life (the
+  * `FileContext` side has no cache and follows the key at once).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.GraftSparkAccess.activeContext
+      .foreach(sc => NioLocalFileSystem.install(sc.hadoopConfiguration))
     GraftExtensions.registrations.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => CollapseContainsChain)
   }

@@ -8,6 +8,9 @@ object GraftSparkAccess {
     * complete before they are read. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 
+  /** The running SparkContext, if one is up (`SparkContext.getActive`). */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
+
   /** A fresh directory under the running context's local dir
     * (`spark.local.dir` / `SPARK_LOCAL_DIRS`, else `java.io.tmpdir`), which
     * Spark's shutdown hook deletes recursively at JVM exit. */
