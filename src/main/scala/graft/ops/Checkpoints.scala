@@ -2,7 +2,10 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one materialization choice of the multi-consumer and iterative
   * operators ([[materialize]]: PairJoin.selfPairs, EntityResolution's
@@ -44,6 +47,19 @@ object Checkpoints {
     * releases the blocks it had written before rethrowing. Executor-local
     * storage is lost with its executor: a later read of a lost block fails
     * its job instead of recomputing it.
+    *
+    * The eager fill also sizes its output. Its job sums the `UnsafeRow`
+    * bytes of every partition it stores, and the frame comes back
+    * coalesced to `n = max(1, ⌈bytes / advisory⌉)` partitions, where
+    * `advisory` is AQE's own target,
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. It is coalesced
+    * when `n` is 1 or below the filled partition count, else returned as
+    * filled. The filling itself keeps the upstream plan's parallelism; only
+    * the readers see `n` partitions. A one-partition frame plans as
+    * `SinglePartition`, so a consumer's aggregate, `dropDuplicates` or
+    * union of such frames needs no shuffle. The `LogicalRDD` stays the
+    * frame's leaf under at most one `Repartition(shuffle = false)`, and a
+    * coalesced task reads the filled blocks like any other reader.
     */
   def materialize[T](ds: Dataset[T], checkpointDir: Option[String],
       eager: Boolean = false): Dataset[T] =
@@ -53,11 +69,26 @@ object Checkpoints {
         ds.checkpoint()
       case None =>
         val cut = ds.localCheckpoint(eager = false)
-        // the job's end marks the RDD checkpointed: its blocks are all there
-        if (eager) try rdds(cut).foreach(_.count())
-          catch { case e: Throwable => release(cut); throw e }
-        cut
+        if (!eager) cut
+        else {
+          // the job's end marks the RDD checkpointed: its blocks are all there
+          val (bytes, parts) = try fill(cut)
+            catch { case e: Throwable => release(cut); throw e }
+          val advisory = cut.sparkSession.sessionState.conf
+            .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+          val n = math.max(1L, (bytes + advisory - 1) / advisory)
+          if (n == 1 || n < parts) cut.coalesce(n.toInt) else cut
+        }
     }
+
+  /** Fills the blocks of `cut`'s one `LogicalRDD` in one job; returns the
+    * `UnsafeRow` bytes stored and the partition count. A physical plan's
+    * rows are `UnsafeRow`s, as Spark's own shuffle serializer assumes. */
+  private def fill(cut: Dataset[_]): (Long, Int) = {
+    val bytes = cut.sparkSession.sparkContext.runJob(rdds(cut).head,
+      (rows: Iterator[InternalRow]) => rows.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum)
+    (bytes.sum, bytes.length)
+  }
 
   /** Drops the executor-local blocks behind a frame that [[materialize]]
     * returned; reading the frame afterwards fails. A reliable checkpoint's

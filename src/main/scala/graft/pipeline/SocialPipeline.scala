@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.enrich.Enrich
 import graft.graph.GraphBuilder
 import graft.ops.{Checkpoints, CoreOps, SocialOps}
+import graft.schemas.Schemas
 
 /** The reference's daily Glue ETL (SURVEY.md §3) as one distributed plan —
   * no `toPandas` driver collapse (`glue/twitter_glue.py:161`), no per-row
@@ -40,10 +42,14 @@ object SocialPipeline {
   def writeCsvSnapshot(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  /** S7 — catalog-style scan with partition pushdown. */
-  def scanPartition(spark: SparkSession, root: String,
-                    topic: String, dataload: String): DataFrame =
-    spark.read.parquet(root)
+  /** S7 — catalog-style scan with partition pushdown. With a `schema` the
+    * reader takes it as the landing's (data columns, then the `topic` and
+    * `dataload` partition columns, as strings); without one it infers the
+    * schema from the files, which costs a Spark job.
+    */
+  def scanPartition(spark: SparkSession, root: String, topic: String, dataload: String,
+                    schema: Option[StructType] = None): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(root)
       .where(col("topic") === topic && col("dataload") === dataload)
 
   /** Clean stage for posts: sentinel scrub + dropna (F8), author filters
@@ -94,23 +100,29 @@ object SocialPipeline {
   /** Full daily batch for one `topic`/`dataload` partition: scans, cleans and
     * enriches posts, comments and tweets, then writes the graph tables
     * (`vertices`, `edges`) and the two rollups (`engagement_by_subreddit`,
-    * `sentiment_by_topic`) as parquet under `outDir`. The three
-    * scan → clean → enrich chains are built concurrently (each scan infers
-    * its schema with a Spark job). [[writeSinks]] then fills each enriched
+    * `sentiment_by_topic`) as parquet under `outDir`. Each scan reads its
+    * landing with the pinned [[graft.schemas.Schemas]] type, so no scan
+    * infers its schema and building the three scan → clean → enrich chains
+    * submits no job; a landing must carry those types (a tweet id landed as
+    * a string fails the fill). The chains are built concurrently, each scan
+    * listing its landing's files. [[writeSinks]] then fills each enriched
     * fact once, executor-local, and writes the four sinks concurrently from
     * the filled facts: every clean row is scored once, and a lost executor
-    * fails the call instead of silently rescoring.
+    * fails the call instead of silently rescoring. A fact smaller than
+    * AQE's advisory partition size (64 MB by default) comes back as one
+    * partition, so no sink plans a shuffle: a call over such facts is 7
+    * jobs, three fills and four one-task writes.
     */
   def runDaily(spark: SparkSession, postsRoot: String, commentsRoot: String,
                tweetsRoot: String, topic: String, dataload: String,
                outDir: String, blacklist: Seq[String],
                scorer: Enrich.TextScorer): Unit = {
-    def fact(root: String, clean: DataFrame => DataFrame): () => DataFrame =
-      () => enrich(clean(scanPartition(spark, root, topic, dataload)), "content", scorer)
+    def fact(root: String, schema: StructType, clean: DataFrame => DataFrame): () => DataFrame =
+      () => enrich(clean(scanPartition(spark, root, topic, dataload, Some(schema))), "content", scorer)
     val facts = inParallel(Seq(
-      fact(postsRoot, cleanPosts(_, blacklist)),
-      fact(commentsRoot, cleanComments(_, blacklist)),
-      fact(tweetsRoot, cleanComments(_, blacklist))))
+      fact(postsRoot, Schemas.redditPosts, cleanPosts(_, blacklist)),
+      fact(commentsRoot, Schemas.redditComments, cleanComments(_, blacklist)),
+      fact(tweetsRoot, Schemas.tweets, cleanComments(_, blacklist))))
     def overwrite(name: String)(build: (DataFrame, DataFrame, DataFrame) => DataFrame)
         : Seq[DataFrame] => Unit = { case Seq(p, c, t) =>
       build(p, c, t).write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
@@ -132,10 +144,15 @@ object SocialPipeline {
     * before any sink is planned. Each sink is a function that builds and
     * writes its table from the filled frames (in the order of `facts`); its
     * plan reads only them, so its tasks carry no scan, clean or enrich
-    * lineage. The sinks run concurrently, one pool thread each. The filled
-    * blocks are released when the call returns, whether it succeeds or
-    * fails; the first failing fill's or sink's own exception is rethrown.
-    * With no sinks the call is a no-op that submits no job.
+    * lineage. Each filled frame comes back sized by the bytes its fill
+    * stored ([[graft.ops.Checkpoints.materialize]]): a fact smaller than
+    * AQE's advisory partition size is one partition, so a sink's aggregate,
+    * `dropDuplicates` or union over such facts plans no shuffle and its
+    * write is one job of one task. The sinks run concurrently, one pool
+    * thread each. The filled blocks are released when the call returns,
+    * whether it succeeds or fails; the first failing fill's or sink's own
+    * exception is rethrown. With no sinks the call is a no-op that submits
+    * no job.
     *
     * Recovery policy: executor-local. A retried sink task re-reads the
     * filled blocks and never rescores a row (PipelineFaultSpec). If an

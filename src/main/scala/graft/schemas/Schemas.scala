@@ -5,9 +5,11 @@ import org.apache.spark.sql.types._
 /** Fixed, explicit schemas for the social-media data model (FIXTURES.md,
   * SURVEY.md §1). The reference relies on crawler-inferred dynamic schemas
   * (`terraform/main.tf:301-319`); we pin `StructType` constants and use
-  * `spark.read.schema(...)` so the scan never pays inference and the plan is
-  * stable. Dates ingest as strings (`"YYYY-MM-DD HH:MM:SS"`,
-  * `twitter/lambda_function.py:32`) and normalize to TimestampType in ops.
+  * `spark.read.schema(...)` so the scan never pays inference (a Parquet
+  * inference is a Spark job: `SocialPipeline.runDaily` passes these to
+  * `scanPartition`) and the plan is stable. Dates ingest as strings
+  * (`"YYYY-MM-DD HH:MM:SS"`, `twitter/lambda_function.py:32`) and
+  * normalize to TimestampType in ops.
   */
 object Schemas {
 

@@ -79,12 +79,14 @@ object DataSkipping {
     // (nested-directory) layouts — a flat listStatus on such a layout
     // would see zero live files and silently empty the manifest
     // (ADVICE r6). Directory-level dot/underscore filtering matches
-    // Spark's own InMemoryFileIndex visibility rules.
+    // Spark's own InMemoryFileIndex visibility rules. The walk uses
+    // listStatus, not listFiles: listFiles' LocatedFileStatus loads every
+    // file's permission, which the local filesystem forks `ls -ld` for.
     val rootPath = fs.makeQualified(new Path(dir))
-    val liveIt = fs.listFiles(rootPath, true)
+    def walk(d: Path): Iterator[Path] = fs.listStatus(d).iterator.flatMap(s =>
+      if (s.isDirectory) walk(s.getPath) else Iterator(s.getPath))
     val liveBuf = Seq.newBuilder[String]
-    while (liveIt.hasNext) {
-      val p = liveIt.next().getPath
+    walk(rootPath).foreach { p =>
       // hidden if any component BELOW the listing root is dotted or
       // underscored (the root itself may legitimately be, e.g. /a/.cache)
       val hidden = Iterator.iterate(p)(_.getParent)

@@ -3,7 +3,10 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,9 +19,10 @@ import graft.ops.Checkpoints
   * passed the set-once guard silently). `ensureDir` itself mutates global
   * SparkContext state, so the comparison is specced directly. Then the
   * fixpoint loop every iterative graph operator runs its passes through,
-  * and the eager executor-local fill that SocialPipeline.writeSinks uses.
+  * and the eager executor-local fill that SocialPipeline.writeSinks uses,
+  * which sizes its output by the bytes it filled.
   */
-class CheckpointsSpec extends AnyFunSuite {
+class CheckpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   private val conf = spark.sparkContext.hadoopConfiguration
 
@@ -107,7 +111,10 @@ class CheckpointsSpec extends AnyFunSuite {
     CheckpointsSpec.evals.set(0L)
     val (filled, jobs) = SinkProbes.jobCount(spark)(Checkpoints.materialize(src, None, eager = true))
     assert(jobs == 1 && CheckpointsSpec.evals.get == 1000L)
-    assert(filled.queryExecution.logical.isInstanceOf[LogicalRDD])
+    // the cut, under at most the coalesce that sizes it
+    assert(PartialFunction.cond(filled.queryExecution.logical) {
+      case _: LogicalRDD | Repartition(_, false, _: LogicalRDD) => true
+    })
     assert(filled.agg(sum("x")).head().getLong(0) == 499500L)
     assert(CheckpointsSpec.evals.get == 1000L) // read from the blocks
     // a released frame stands in for a lost executor: its blocks are gone
@@ -119,6 +126,38 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(chain(e).exists(_.contains("Checkpoint block")), e)
     }
     assert(CheckpointsSpec.evals.get == 1000L) // never recomputed from lineage
+  }
+
+  test("an eager fill smaller than the advisory size is one partition: dropDuplicates plans no shuffle") {
+    val filled = Checkpoints.materialize(
+      spark.range(0, 1000, 1, 4).select((col("id") % 10).as("x")), None, eager = true)
+    try {
+      assert(filled.rdd.getNumPartitions == 1)
+      val distinct = filled.dropDuplicates()
+      assert(distinct.count() == 10)
+      val shuffles = collect(distinct.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.isEmpty, distinct.queryExecution.executedPlan)
+    } finally Checkpoints.release(filled)
+  }
+
+  test("an eager fill keeps ⌈bytes / advisory⌉ partitions, or its own count when that is fewer") {
+    // a row of one non-null long is 16 bytes (a null-bit word and the
+    // field): 1000 rows are 16,000 bytes over 8 filled partitions
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def fillAt(advisory: Int): (LogicalPlan, Seq[Long]) = {
+      spark.conf.set(key, advisory.toString)
+      val filled = Checkpoints.materialize(spark.range(0, 1000, 1, 8).toDF("x"), None, eager = true)
+      try (filled.queryExecution.logical, filled.collect().map(_.getLong(0)).toSeq.sorted)
+      finally Checkpoints.release(filled)
+    }
+    try {
+      val (coalesced, rows4) = fillAt(4096) // ⌈16,000 / 4,096⌉ = 4 < 8
+      assert(PartialFunction.cond(coalesced) { case Repartition(4, false, _: LogicalRDD) => true }, coalesced)
+      assert(rows4 == (0L until 1000L))
+      val (kept, rows16) = fillAt(1024) // ⌈16,000 / 1,024⌉ = 16 ≥ 8
+      assert(kept.isInstanceOf[LogicalRDD] && kept.asInstanceOf[LogicalRDD].rdd.getNumPartitions == 8, kept)
+      assert(rows16 == (0L until 1000L))
+    } finally spark.conf.unset(key)
   }
 }
 

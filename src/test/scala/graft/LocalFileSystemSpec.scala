@@ -17,12 +17,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enrich
 import graft.extensions.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 import graft.pipeline.SocialPipeline
+import graft.sources.DataSkipping
 import graft.streaming.SocialStream
 
 /** The engine's local filesystem: [[NioRawLocalFileSystem]] gives what
   * Hadoop's stock `RawLocalFileSystem` gives, every session resolves
-  * `file:` to it, and the daily batch and the stream refresh start no
-  * process.
+  * `file:` to it, and the daily batch, the stream refresh and a manifest
+  * update start no process.
   */
 class LocalFileSystemSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -163,7 +164,7 @@ class LocalFileSystemSpec extends AnyFunSuite {
         .toDF("id", "date", "content", "username", "score", "post_id", "parent_id", "topic", "dataload"),
         s"$tmp/comments")
       SocialPipeline.writeLanding(Seq(
-        ("900000000000000001", "2023-03-25 10:07:00", "good tweet", "grace", "alice", "ukraine war", "25-03-2023"))
+        (900000000000000001L, "2023-03-25 10:07:00", "good tweet", "grace", "alice", "ukraine war", "25-03-2023"))
         .toDF("id", "date", "content", "username", "mentionedUsers", "topic", "dataload"),
         s"$tmp/tweets")
       SocialPipeline.runDaily(spark, s"$tmp/posts", s"$tmp/comments", s"$tmp/tweets",
@@ -174,6 +175,16 @@ class LocalFileSystemSpec extends AnyFunSuite {
       assert(q.recentProgress.count(_.numInputRows > 0) == 2)
     }
     assert(spark.read.parquet(s"$tmp/refresh/posts_enriched.parquet").count() == 3)
+    assert(events.isEmpty, describe(events))
+  }
+
+  test("updateManifest lists a partitioned table without starting a process") {
+    val dir = TestSpark.tempDir("graft-manifest").toString
+    (0L until 100L).map(i => (i, i % 3)).toDF("v", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val m0 = DataSkipping.buildManifest(spark, dir, "v")
+    val n0 = m0.count()
+    val events = processStarts(assert(DataSkipping.updateManifest(spark, dir, m0, "v").count() == n0))
     assert(events.isEmpty, describe(events))
   }
 }

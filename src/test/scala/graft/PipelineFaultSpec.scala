@@ -102,7 +102,7 @@ object PipelineFaultSpec {
     val comments = rows(40000).select(Seq(concat(lit("c"), col("id")).as("id"), date,
       content("comment").as("content"), user, (col("id") % 5).cast("int").as("score"),
       postId.as("post_id"), postId.as("parent_id")) ++ day: _*)
-    val tweets = rows(20000).select(Seq((col("id") + 900000000000000000L).cast("string").as("id"),
+    val tweets = rows(20000).select(Seq((col("id") + 900000000000000000L).as("id"),
       date, text("tweet").as("content"), user,
       concat_ws(",", concat(lit("u"), col("id") % 7), concat(lit("u"), col("id") % 13))
         .as("mentionedUsers")) ++ day: _*)

@@ -12,11 +12,14 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDSc
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enrich
 import graft.pipeline.SocialPipeline
+import graft.schemas.Schemas
 
 /** Lexicon scorer that counts the texts it scores and fails on a sentinel
   * text. The counter is a JVM static, so in local mode the executors' copies
@@ -65,6 +68,9 @@ object SinkProbes extends AdaptiveSparkPlanHelper {
     case s: InMemoryTableScanExec => s
   }
 
+  /** The exchanges in `plan`: a sink over small filled facts has none. */
+  def exchanges(plan: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(plan) { case e: Exchange => e }
+
   /** Whether `plan` reads a filled (checkpointed) frame. */
   def readsFilledFrame(plan: SparkPlan): Boolean =
     collectWithSubqueries(plan) { case s: RDDScanExec => s }.nonEmpty
@@ -109,9 +115,9 @@ class SocialPipelineSpec extends AnyFunSuite {
       ("c1", "2023-03-25 10:05:00", "bad comment text", "frank", 1, "p1", "p1", "ukraine war", "25-03-2023"),
       ("c2", "2023-03-25 10:06:00", "auto text", "AutoModerator", 1, "p1", "p1", "ukraine war", "25-03-2023"))
       .toDF("id", "date", "content", "username", "score", "post_id", "parent_id", "topic", "dataload")
-    val tweets = Seq(
-      ("900000000000000001", "2023-03-25 10:07:00", "good tweet", "grace", "alice,bob", "ukraine war", "25-03-2023"))
-      .toDF("id", "date", "content", "username", "mentionedUsers", "topic", "dataload")
+    val tweets = Seq((900000000000000001L, "2023-03-25 10:07:00", "good tweet", "grace", 12,
+      "alice,bob", 0, 0, null: String, "2023-03-25 10:07:00", "ukraine war", "25-03-2023"))
+      .toDF(Schemas.tweets.fieldNames.toIndexedSeq: _*)
     SocialPipeline.writeLanding(posts, s"$tmp/posts")
     SocialPipeline.writeLanding(comments, s"$tmp/comments")
     SocialPipeline.writeLanding(tweets, s"$tmp/tweets")
@@ -179,10 +185,12 @@ class SocialPipelineSpec extends AnyFunSuite {
     assert(CountingScorer.rows.get == 3L)
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
-    // every sink reads the filled facts, never a file scan or a cache
+    // every sink reads the filled facts, never a file scan or a cache, and
+    // each fact is one partition, so no sink shuffles
     assert(writes.size == 4)
     writes.foreach { p =>
       assert(SinkProbes.lineageScans(p).isEmpty && SinkProbes.readsFilledFrame(p), p)
+      assert(SinkProbes.exchanges(p).isEmpty, p)
     }
     val v = spark.read.parquet(s"$out/vertices.parquet")
     val e = spark.read.parquet(s"$out/edges.parquet")
@@ -195,6 +203,21 @@ class SocialPipelineSpec extends AnyFunSuite {
     assert(eng.filter($"subreddit" === "worldnews").head().getAs[Long]("sum_score") == 10L)
     val sent = spark.read.parquet(s"$out/sentiment_by_topic.parquet")
     assert(sent.filter($"topic" === "ukraine war").head().getAs[Long]("n") == 3L)
+  }
+
+  test("runDaily scans with the pinned landing schemas, which equal the inferred ones: 7 jobs a call") {
+    val (postsRoot, commentsRoot, tweetsRoot) = mkLanding()
+    Seq(postsRoot -> Schemas.redditPosts, commentsRoot -> Schemas.redditComments,
+        tweetsRoot -> Schemas.tweets).foreach { case (root, schema) =>
+      def scan(s: Option[StructType]) =
+        SocialPipeline.scanPartition(spark, root, "ukraine war", "25-03-2023", s).schema
+      assert(scan(Some(schema)) == scan(None), root)
+    }
+    // three fills and four sink writes; no scan infers its schema
+    val out = TestSpark.tempDir("graft-jobs").toString
+    val (_, jobs) = SinkProbes.jobCount(spark)(SocialPipeline.runDaily(spark, postsRoot,
+      commentsRoot, tweetsRoot, "ukraine war", "25-03-2023", out, blacklist, scorer))
+    assert(jobs == 7, s"$jobs jobs submitted")
   }
 
   test("writeSinks with no sinks is a no-op") {

@@ -202,10 +202,12 @@ class SocialStreamSpec extends AnyFunSuite {
     assert(CountingScorer.rows.get == 2L)
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(SinkProbes.persistentRdds(spark) -- before == Set.empty)
-    // two batches × three sinks, each reading only its batch's filled posts
+    // two batches × three sinks, each reading only its batch's filled
+    // posts, one partition of them, so no sink shuffles
     assert(writes.size == 6)
     writes.foreach { p =>
       assert(SinkProbes.lineageScans(p).isEmpty && SinkProbes.readsFilledFrame(p), p)
+      assert(SinkProbes.exchanges(p).isEmpty, p)
     }
 
     // batch reference over the identical landing files
