@@ -49,17 +49,15 @@ object Checkpoints {
     * its job instead of recomputing it.
     *
     * The eager fill also sizes its output. Its job sums the `UnsafeRow`
-    * bytes of every partition it stores, and the frame comes back
-    * coalesced to `n = max(1, ⌈bytes / advisory⌉)` partitions, where
-    * `advisory` is AQE's own target,
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. It is coalesced
-    * when `n` is 1 or below the filled partition count, else returned as
-    * filled. The filling itself keeps the upstream plan's parallelism; only
-    * the readers see `n` partitions. A one-partition frame plans as
-    * `SinglePartition`, so a consumer's aggregate, `dropDuplicates` or
-    * union of such frames needs no shuffle. The `LogicalRDD` stays the
-    * frame's leaf under at most one `Repartition(shuffle = false)`, and a
-    * coalesced task reads the filled blocks like any other reader.
+    * bytes of every partition it stores. A frame of at most AQE's own
+    * target, `spark.sql.adaptive.advisoryPartitionSizeInBytes`, comes back
+    * as `coalesce(1)`; a larger one comes back as filled. The filling
+    * itself keeps the upstream plan's parallelism. A one-partition frame
+    * plans as `SinglePartition`, so a consumer's aggregate,
+    * `dropDuplicates` or union of such frames needs no shuffle. The
+    * `LogicalRDD` stays the frame's leaf under at most one
+    * `Repartition(1, shuffle = false)`, and the one coalesced task reads
+    * the filled blocks like any other reader.
     */
   def materialize[T](ds: Dataset[T], checkpointDir: Option[String],
       eager: Boolean = false): Dataset[T] =
@@ -72,23 +70,20 @@ object Checkpoints {
         if (!eager) cut
         else {
           // the job's end marks the RDD checkpointed: its blocks are all there
-          val (bytes, parts) = try fill(cut)
+          val bytes = try fill(cut)
             catch { case e: Throwable => release(cut); throw e }
           val advisory = cut.sparkSession.sessionState.conf
             .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-          val n = math.max(1L, (bytes + advisory - 1) / advisory)
-          if (n == 1 || n < parts) cut.coalesce(n.toInt) else cut
+          if (bytes <= advisory) cut.coalesce(1) else cut
         }
     }
 
   /** Fills the blocks of `cut`'s one `LogicalRDD` in one job; returns the
-    * `UnsafeRow` bytes stored and the partition count. A physical plan's
-    * rows are `UnsafeRow`s, as Spark's own shuffle serializer assumes. */
-  private def fill(cut: Dataset[_]): (Long, Int) = {
-    val bytes = cut.sparkSession.sparkContext.runJob(rdds(cut).head,
-      (rows: Iterator[InternalRow]) => rows.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum)
-    (bytes.sum, bytes.length)
-  }
+    * `UnsafeRow` bytes stored. A physical plan's rows are `UnsafeRow`s, as
+    * Spark's own shuffle serializer assumes. */
+  private def fill(cut: Dataset[_]): Long =
+    cut.sparkSession.sparkContext.runJob(rdds(cut).head,
+      (rows: Iterator[InternalRow]) => rows.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum).sum
 
   /** Drops the executor-local blocks behind a frame that [[materialize]]
     * returned; reading the frame afterwards fails. A reliable checkpoint's

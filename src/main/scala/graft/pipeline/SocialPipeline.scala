@@ -108,7 +108,7 @@ object SocialPipeline {
     * listing its landing's files. [[writeSinks]] then fills each enriched
     * fact once, executor-local, and writes the four sinks concurrently from
     * the filled facts: every clean row is scored once, and a lost executor
-    * fails the call instead of silently rescoring. A fact smaller than
+    * fails the call instead of silently rescoring. A fact no larger than
     * AQE's advisory partition size (64 MB by default) comes back as one
     * partition, so no sink plans a shuffle: a call over such facts is 7
     * jobs, three fills and four one-task writes.
@@ -145,7 +145,7 @@ object SocialPipeline {
     * writes its table from the filled frames (in the order of `facts`); its
     * plan reads only them, so its tasks carry no scan, clean or enrich
     * lineage. Each filled frame comes back sized by the bytes its fill
-    * stored ([[graft.ops.Checkpoints.materialize]]): a fact smaller than
+    * stored ([[graft.ops.Checkpoints.materialize]]): a fact no larger than
     * AQE's advisory partition size is one partition, so a sink's aggregate,
     * `dropDuplicates` or union over such facts plans no shuffle and its
     * write is one job of one task. The sinks run concurrently, one pool

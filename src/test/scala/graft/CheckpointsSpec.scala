@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -113,7 +113,7 @@ class CheckpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(jobs == 1 && CheckpointsSpec.evals.get == 1000L)
     // the cut, under at most the coalesce that sizes it
     assert(PartialFunction.cond(filled.queryExecution.logical) {
-      case _: LogicalRDD | Repartition(_, false, _: LogicalRDD) => true
+      case _: LogicalRDD | Repartition(1, false, _: LogicalRDD) => true
     })
     assert(filled.agg(sum("x")).head().getLong(0) == 499500L)
     assert(CheckpointsSpec.evals.get == 1000L) // read from the blocks
@@ -140,23 +140,18 @@ class CheckpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally Checkpoints.release(filled)
   }
 
-  test("an eager fill keeps ⌈bytes / advisory⌉ partitions, or its own count when that is fewer") {
+  test("an eager fill larger than the advisory size is returned as filled") {
     // a row of one non-null long is 16 bytes (a null-bit word and the
     // field): 1000 rows are 16,000 bytes over 8 filled partitions
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    def fillAt(advisory: Int): (LogicalPlan, Seq[Long]) = {
-      spark.conf.set(key, advisory.toString)
-      val filled = Checkpoints.materialize(spark.range(0, 1000, 1, 8).toDF("x"), None, eager = true)
-      try (filled.queryExecution.logical, filled.collect().map(_.getLong(0)).toSeq.sorted)
-      finally Checkpoints.release(filled)
-    }
+    spark.conf.set(key, "4096")
     try {
-      val (coalesced, rows4) = fillAt(4096) // ⌈16,000 / 4,096⌉ = 4 < 8
-      assert(PartialFunction.cond(coalesced) { case Repartition(4, false, _: LogicalRDD) => true }, coalesced)
-      assert(rows4 == (0L until 1000L))
-      val (kept, rows16) = fillAt(1024) // ⌈16,000 / 1,024⌉ = 16 ≥ 8
-      assert(kept.isInstanceOf[LogicalRDD] && kept.asInstanceOf[LogicalRDD].rdd.getNumPartitions == 8, kept)
-      assert(rows16 == (0L until 1000L))
+      val filled = Checkpoints.materialize(spark.range(0, 1000, 1, 8).toDF("x"), None, eager = true)
+      try {
+        val leaf = filled.queryExecution.logical
+        assert(PartialFunction.cond(leaf) { case r: LogicalRDD => r.rdd.getNumPartitions == 8 }, leaf)
+        assert(filled.collect().map(_.getLong(0)).toSeq.sorted == (0L until 1000L))
+      } finally Checkpoints.release(filled)
     } finally spark.conf.unset(key)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskKilled
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
@@ -16,8 +16,13 @@ import graft.pipeline.SocialPipeline
 /** Task death inside `runDaily`'s sinks against `writeSinks`' executor-local
   * fill (its scaladoc): once the enriched facts are filled, a killed sink
   * task is retried from the filled blocks, so the tables equal an
-  * undisturbed run's and no row is scored twice. Runs in the `faults` group
-  * (`local[4, 3]`) and fails if the kill never landed.
+  * undisturbed run's and no row is scored twice. Two cases: at the default
+  * advisory size every fact comes back as one partition, so the killed task
+  * is a one-task sink write that re-reads every filled block; with the
+  * advisory size lowered below the facts' bytes, the facts keep their filled
+  * partitions, so the killed task is one of a multi-task sink stage and
+  * re-reads only its own blocks. Runs in the `faults` group (`local[4, 3]`)
+  * and fails if the kill never landed.
   */
 class PipelineFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   import PipelineFaultSpec._
@@ -29,6 +34,21 @@ class PipelineFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val tables = Seq("vertices", "edges", "engagement_by_subreddit", "sentiment_by_topic")
 
   test("a killed sink task re-reads the filled facts and never rescores") {
+    assert(killOneSinkTask() == 1) // a one-task write over one-partition facts
+  }
+
+  test("a killed task of a multi-task sink stage re-reads its filled blocks and never rescores") {
+    // far below the facts' bytes: each fact is returned as filled, in its scan's partitions
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1024")
+    val width = try killOneSinkTask() finally spark.conf.unset(key)
+    assert(width > 1, s"the killed task's sink stage ran $width task")
+  }
+
+  /** Runs `runDaily` undisturbed, then again while killing a sink task;
+    * checks the second run, and returns the task count of the sink stage
+    * the kill landed on. */
+  private def killOneSinkTask(): Int = {
     val roots = land(spark, TestSpark.tempDir("pipeline_fault_landing").toString)
     val clean = cleanRows(spark, roots)
     def runDaily(): String = {
@@ -43,27 +63,27 @@ class PipelineFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // Sink stages are the ones whose lineage ends at a filled fact's
     // checkpoint; kill running attempts of them until one ends killed.
-    val sinkStages = ConcurrentHashMap.newKeySet[Int]()
+    val sinkStages = new ConcurrentHashMap[Int, Int]() // stage id -> its task count
     val kills = new AtomicInteger(0)
-    val landed = new AtomicBoolean(false)
+    val landedWidth = new AtomicInteger(0)
     val killer = new SparkListener {
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
         if (s.stageInfo.rddInfos.exists(_.name == "LocalCheckpointRDD"))
-          sinkStages.add(s.stageInfo.stageId): Unit
+          sinkStages.put(s.stageInfo.stageId, s.stageInfo.numTasks): Unit
       override def onTaskStart(t: SparkListenerTaskStart): Unit =
-        if (sinkStages.contains(t.stageId) && !landed.get && kills.incrementAndGet() <= 20)
+        if (sinkStages.containsKey(t.stageId) && landedWidth.get == 0 && kills.incrementAndGet() <= 20)
           spark.sparkContext.killTaskAttempt(t.taskInfo.taskId, true,
             "planted sink-task kill"): Unit
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (sinkStages.contains(e.stageId) && e.reason.isInstanceOf[TaskKilled])
-          landed.set(true)
+        if (sinkStages.containsKey(e.stageId) && e.reason.isInstanceOf[TaskKilled])
+          landedWidth.compareAndSet(0, sinkStages.get(e.stageId)): Unit
     }
     spark.sparkContext.addSparkListener(killer)
     val disturbed = try runDaily() finally {
       org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(killer)
     }
-    assert(landed.get, s"no planted kill landed on a sink task (${kills.get} tried)")
+    assert(landedWidth.get > 0, s"no planted kill landed on a sink task (${kills.get} tried)")
     assert(CountingScorer.rows.get == clean,
       s"${CountingScorer.rows.get} rows scored for $clean clean rows")
     tables.foreach { t =>
@@ -72,6 +92,7 @@ class PipelineFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a.count() > 0 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"$t differs from the undisturbed run")
     }
+    landedWidth.get
   }
 }
 
@@ -83,9 +104,9 @@ object PipelineFaultSpec {
   final case class Roots(posts: String, comments: String, tweets: String)
 
   /** Lands 20,000 posts, 40,000 comments and 20,000 tweets for one
-    * topic/day, four files each, so every sink stage runs tasks long
-    * enough to be killed. Every 10th post and comment is a sentinel the
-    * clean stage drops. */
+    * topic/day, four files each, so every sink task runs long enough to be
+    * killed. Every 10th post and comment is a sentinel the clean stage
+    * drops. */
   def land(spark: SparkSession, root: String): Roots = {
     def rows(n: Long) = spark.range(0, n, 1, 4)
     def text(kind: String) = concat(
